@@ -7,22 +7,26 @@ Run from the repository root. The first run compiles the engine and the
 benchmark's Scala code into `.bench_build/` (build.py) and records the JVM
 class-data archive (`ensure_archive`); later runs reuse both.
 
-One run is one JVM with at most `nproc` worker threads, driving the engine
-only through its public entry points (`ChangeLogGenerator`, `CdcJob`,
-`LakeTable`):
+One run drives the engine only through its public entry points
+(`ChangeLogGenerator`, `CdcJob`, `LakeTable`), in JVMs with at most `nproc`
+worker threads:
 
-1. the load generator writes the seeded change log, a warm-up log, the
-   oracle final state and the lookup keys (reported apart, as `gen_s`);
-2. set-up: session start plus a warm-up replay of the warm log;
-3. the measured levels, each replaying the identical log into a fresh table
-   (load model: backlog drain, AvailableNow, byte-bounded micro-batches),
-   then the read phase on the final table: full scans and closed-loop point
-   lookups from one client, keys a seeded mix of hot, cold, deleted and
-   absent keys.
+1. the load generator's JVM writes the seeded change log, the oracle final
+   state and the lookup keys (reported apart, as `gen_s`); the log's first
+   `batches` segments, linked apart, are the warm-up log;
+2. one measured JVM per level. Its set-up (`setup_s`: JVM start, session,
+   warm-up replay of the warm log in the measured number of batches) is
+   followed by the level: a replay of the log into a fresh table (load
+   model: backlog drain, AvailableNow, byte-bounded micro-batches), then,
+   for levels with reads, the read phase on the final table: full scans and
+   closed-loop point lookups from one client, keys a seeded mix of hot,
+   cold, deleted and absent keys.
    - `--trace 0`: one level at `nproc` threads -> the end-to-end metrics;
-   - `--trace 1`: `nproc` threads traced and untraced (order alternates with
-     the seed), then 1 thread -> the per-layer metrics, the tracing overhead
-     and the N=1 vs N=nproc scaling efficiency.
+   - `--trace 1`: `nproc` threads traced (with reads), `nproc` threads
+     untraced and 1 thread -> the per-layer metrics, the tracing overhead
+     and the N=1 vs N=nproc scaling efficiency. Every level is the first
+     after the same warm-up in a JVM of its own, so none runs warmer than
+     the one it is compared with.
 
 Every result is checked: each replayed table against
 `ChangeLogGenerator.oracleFinalState` (row count and per-row
@@ -40,7 +44,16 @@ The end-to-end metrics charge replay and lookups in process CPU time
 (`cpu_us_per_event`, `lookup_cpu_ms`), which excludes the time a shared
 host steals from the VM; wall-clock replay and read timings vary with that
 steal run to run, so they are kept in every artifact and reported by the
-traced run as per-layer rows.
+traced run as per-layer rows. The CPU of the JIT compiler threads is left
+out of both and recorded apart (`replay_jit_cpu_s`): it is about as large
+as the engine's own and falls from level to level as the JVM warms.
+
+`peak_rss_mb` is the measured JVM's resident peak from the start of its
+level. The inputs come from another JVM, and the heap is not pre-sized, so
+the figure follows what set-up and replay touch. The young generation has a
+fixed size (a quarter of the heap): G1's adaptive young sizing otherwise
+moves the peak by up to 40% from run to run, while with it fixed the
+figure moves with old-generation and native (RocksDB, off-heap) memory.
 
 The last line of standard output is one JSON object:
 {"correct", "attempted", "failed", "metrics": {name: {"value", "unit"}}}.
@@ -64,16 +77,20 @@ import build  # noqa: E402
 
 # Workload shapes. `events_per_core_s` sizes the log from the host and the
 # run length: events = events_per_core_s * nproc * seconds. replay_hot keeps
-# at most repos*paths = 100k winners; ingest_wide's keyspace (10M) makes
-# nearly every event a winner. ingest_wide's 3 buckets give two files per
-# bucket per batch at 4 threads, so minor compaction runs within its batches.
+# at most repos*paths = 100k winners: at 4 threads x 5 s its 150k events
+# leave ~62k (2.4 events per winner), so its batches are large and state,
+# merge, refetch and commit outweigh scan + combine (~8% of trigger time).
+# The run budget allows no log large enough for scan + combine to dominate.
+# ingest_wide's keyspace (10M) makes nearly every event a winner. Its 3
+# buckets give two files per bucket per batch at 4 threads, so minor
+# compaction runs within its batches.
 WORKLOADS = {
     "replay_hot": dict(
-        repos=500, paths=200, zipf=2.0, events_per_core_s=10000,
-        batches=3, segments=12, buckets=16, lookups=30, scans=2, warm_events=10000),
+        repos=500, paths=200, zipf=2.0, events_per_core_s=7500,
+        batches=3, segments=12, buckets=16, lookups=30, scans=2),
     "ingest_wide": dict(
         repos=20000, paths=500, zipf=1.0, events_per_core_s=800,
-        batches=8, segments=16, buckets=3, lookups=30, scans=2, warm_events=4000),
+        batches=6, segments=12, buckets=3, lookups=30, scans=2),
 }
 
 END_TO_END_UNITS = {
@@ -110,7 +127,9 @@ def jvm(cp, host, threads, args, out, archive="use"):
     """Runs one benchmark JVM to completion; returns its parsed JSON result.
 
     `archive="use"` maps the class-data archive when it exists; "dump"
-    writes it when the JVM exits.
+    writes it when the JVM exits. The heap is not pre-sized (-Xms); its
+    young generation is fixed (-Xmn), see `peak_rss_mb` above. The JIT
+    keeps a fixed set of compiler threads, whose CPU `cpuSeconds` leaves out.
     """
     opens = ["java.base/java.lang", "java.base/java.lang.invoke",
              "java.base/java.lang.reflect", "java.base/java.io", "java.base/java.net",
@@ -120,11 +139,9 @@ def jvm(cp, host, threads, args, out, archive="use"):
              "java.base/sun.security.action", "java.base/sun.util.calendar"]
     tmp = os.path.join(args["work"], "tmp")
     os.makedirs(tmp, exist_ok=True)
-    # the initial heap at half the maximum: fewer run-dependent heap
-    # expansions, so peak RSS and GC pauses repeat across runs
-    cmd = ["java", f"-Xmx{host['heap_gb']}g", f"-Xms{host['heap_gb'] // 2}g",
-           "-XX:MaxHeapFreeRatio=100", f"-XX:ParallelGCThreads={max(threads, 2)}",
-           f"-Djava.io.tmpdir={tmp}"]
+    cmd = ["java", f"-Xmx{host['heap_gb']}g", f"-Xmn{host['heap_gb'] * 256}m",
+           f"-XX:ParallelGCThreads={max(threads, 2)}",
+           "-XX:-UseDynamicNumberOfCompilerThreads", f"-Djava.io.tmpdir={tmp}"]
     cmd += [f"--add-opens={p}=ALL-UNNAMED" for p in opens]
     if archive == "dump":
         cmd += ["-XX:ArchiveClassesAtExit=" + build.ARCHIVE, "-Xlog:cds=off"]
@@ -148,8 +165,57 @@ def jvm(cp, host, threads, args, out, archive="use"):
         return json.load(f)
 
 
+def generate(cp, host, work, seed, wl):
+    """The load generator's JVM: writes the seeded log, the oracle and the
+    lookup keys under `work`; returns its facts."""
+    return jvm(cp, host, host["nproc"], dict(
+        mode="gen", work=work, seed=seed, events=wl["events"], repos=wl["repos"],
+        paths=wl["paths"], zipf=wl["zipf"], segments=wl["segments"],
+        lookups=wl["lookups"]),
+        os.path.join(work, "gen.json"))
+
+
+def warm_log(work, wl):
+    """Links the log's first `batches` segments into `work/warm`, the
+    warm-up log."""
+    segs = sorted(d for d in os.listdir(os.path.join(work, "log")) if d.startswith("seg="))
+    for seg in segs[:wl["batches"]]:
+        os.makedirs(os.path.join(work, "warm", seg))
+        for f in os.listdir(os.path.join(work, "log", seg)):
+            os.link(os.path.join(work, "log", seg, f), os.path.join(work, "warm", seg, f))
+
+
+def batch_bounds(work, wl):
+    """Byte bounds of a measured and of a warm-up batch. A batch admits
+    whole segment files while their sum stays within the bound, so the
+    bound is the largest of `batches` groups of consecutive segments (the
+    last group also takes the short tail segment that delivery jitter
+    pushes past the last full one), or the largest single segment for the
+    warm-up: every batch then takes one group, and the batch count does not
+    depend on how the seed sizes segments."""
+    log = os.path.join(work, "log")
+    sizes = [sum(os.path.getsize(os.path.join(log, d, f)) for f in os.listdir(os.path.join(log, d)))
+             for d in sorted(os.listdir(log)) if d.startswith("seg=")]
+    b = wl["batches"]
+    k = len(sizes) // b
+    groups = [sizes[i * k:(i + 1) * k] for i in range(b - 1)] + [sizes[(b - 1) * k:]]
+    return max(sum(g) for g in groups), max(sizes[:b])
+
+
+def replay(cp, host, work, gen, wl, threads, tag, traced, reads, trace_id, spans,
+           archive="use"):
+    """One measured JVM: set-up (session + warm-up), then the level `tag`
+    on the generated log."""
+    return jvm(cp, host, threads, dict(
+        mode="replay", work=work, buckets=wl["buckets"], scans=wl["scans"], tag=tag,
+        traced=traced, reads=reads,
+        batch_bytes=gen["batch_bytes"], warm_batch_bytes=gen["warm_batch_bytes"],
+        trace_id=trace_id, spans=spans),
+        os.path.join(work, f"replay-{tag}.json"), archive)
+
+
 def ensure_archive(cp, host):
-    """Once per build: a small traced run at both thread levels, whose JVM
+    """Once per build: a small generator JVM plus a traced replay JVM, which
     writes the class-data archive (the classes it loaded) on exit. Every
     measured JVM maps it, which takes class loading out of each run's
     set-up; it is part of the build, like the compiled classes."""
@@ -158,14 +224,14 @@ def ensure_archive(cp, host):
     work = os.path.join(OUT, "work", f"archive-{os.getpid()}")
     shutil.rmtree(work, ignore_errors=True)
     os.makedirs(work)
-    nproc = host["nproc"]
+    wl = dict(events=20000, repos=50, paths=20, zipf=1.5, segments=4,
+              lookups=5, batches=2, buckets=4, scans=1)
     try:
-        jvm(cp, host, nproc, dict(
-            work=work, seed=0, events=20000, repos=50, paths=20, zipf=1.5, segments=4,
-            warm_events=2000, lookups=5, batches=2, buckets=4, scans=1,
-            levels=f"n:{nproc}:1:1,one:1:0:0", trace_id="archive",
-            spans=os.path.join(work, "spans")),
-            os.path.join(work, "result.json"), archive="dump")
+        gen = generate(cp, host, work, 0, wl)
+        warm_log(work, wl)
+        gen["batch_bytes"], gen["warm_batch_bytes"] = batch_bounds(work, wl)
+        replay(cp, host, work, gen, wl, host["nproc"], "n", 1, 1, "archive",
+               os.path.join(work, "spans"), archive="dump")
     finally:
         shutil.rmtree(work, ignore_errors=True)
 
@@ -199,46 +265,43 @@ def main():
             os.path.isdir(os.path.join(ROOT, "src", "main", "scala"))):
         log(f"no engine sources (build.sbt, src/main/scala) under {ROOT}")
         sys.exit(2)
-    wl = WORKLOADS[a.workload]
     host = host_facts()
     nproc = host["nproc"]
     cp = build.build()
     ensure_archive(cp, host)
-    events = wl["events_per_core_s"] * nproc * a.seconds
+    wl = dict(WORKLOADS[a.workload])
+    wl["events"] = wl["events_per_core_s"] * nproc * a.seconds
     work = os.path.join(OUT, "work", f"{a.workload}-s{a.seed}-t{a.trace}-{os.getpid()}")
     shutil.rmtree(work, ignore_errors=True)
     os.makedirs(work)
     os.makedirs(os.path.join(OUT, "results"), exist_ok=True)
-    sizes = dict(events=events, repos=wl["repos"], paths=wl["paths"], zipf=wl["zipf"],
-                 segments=wl["segments"], buckets=wl["buckets"], lookups=wl["lookups"],
-                 scans=wl["scans"], target_batches=wl["batches"])
+    spans = os.path.join(OUT, "results", f"{a.workload}-s{a.seed}-spans")
+    # one JVM per level, each with its own set-up: trace 0 measures nproc
+    # threads with reads; trace 1 adds nproc untraced and 1 thread
+    if a.trace == 0:
+        jvms = [("n", nproc, 0, 1)]
+    else:
+        jvms = [("traced", nproc, 1, 1), ("untraced", nproc, 0, 0), ("one", 1, 0, 0)]
+    sizes = dict(wl, levels=[f"{t}: {n} threads, traced={tr}, reads={rd}"
+                             for t, n, tr, rd in jvms])
     artifact = dict(workload=a.workload, seed=a.seed, seconds=a.seconds, trace=a.trace,
                     host=host, sizes=sizes)
-    if a.trace == 0:
-        levels = [("n", nproc, 0, 1)]
-    else:
-        # alternate which side runs first, so the warmer JVM does not
-        # always favour the same side of the overhead ratio
-        levels = [("traced", nproc, 1, 1), ("untraced", nproc, 0, 0)][::1 - 2 * (a.seed % 2)]
-        levels.append(("one", 1, 0, 0))
-    sizes["levels"] = [f"{t}:{n}:{tr}:{rd}" for t, n, tr, rd in levels]
     try:
-        res = jvm(cp, host, nproc, dict(
-            work=work, seed=a.seed, events=events, repos=wl["repos"], paths=wl["paths"],
-            zipf=wl["zipf"], segments=wl["segments"], warm_events=wl["warm_events"],
-            lookups=wl["lookups"], batches=wl["batches"], buckets=wl["buckets"],
-            scans=wl["scans"], levels=",".join(sizes["levels"]),
-            trace_id=f"{a.workload}-s{a.seed}",
-            spans=os.path.join(OUT, "results", f"{a.workload}-s{a.seed}-spans")),
-            os.path.join(work, "result.json"))
+        gen = generate(cp, host, work, a.seed, wl)
+        warm_log(work, wl)
+        gen["batch_bytes"], gen["warm_batch_bytes"] = batch_bounds(work, wl)
+        runs = [replay(cp, host, work, gen, wl, n, t, tr, rd, f"{a.workload}-s{a.seed}",
+                       spans) for t, n, tr, rd in jvms]
     finally:
         shutil.rmtree(work, ignore_errors=True)
-    gen = res["gen"]
-    sizes["batch_bytes"] = res["batch_bytes"]
-    artifact.update(gen=gen, setup_s=res["setup_s"], levels=res["levels"])
+    sizes["batch_bytes"] = gen["batch_bytes"]
+    lv = {t: r["level"] for (t, _, _, _), r in zip(jvms, runs)}
+    artifact.update(gen=gen, setup_s=[r["setup_s"] for r in runs],
+                    session_s=[r["session_s"] for r in runs],
+                    warm_batches=[r["warm_batches"] for r in runs], levels=lv)
 
     attempted = failed = 0
-    for tag, r in res["levels"].items():
+    for tag, r in lv.items():
         attempted += 1
         if r["oracle_mismatches"] != 0 or r["visible_rows"] != gen["oracle_rows"]:
             failed += 1
@@ -251,11 +314,10 @@ def main():
             attempted += r["lookups"] + len(r["scan_s"])
             failed += r["lookup_failed"]
 
-    lv = res["levels"]
     if a.trace == 0:
         hi = lv["n"]
         metrics = dict(
-            setup_s=res["setup_s"][0],
+            setup_s=runs[0]["setup_s"],
             cpu_us_per_event=hi["replay_cpu_s"] * 1e6 / hi["events"],
             lookup_cpu_ms=hi["lookup_cpu_s"] * 1e3 / hi["lookups"],
             storage_amp=hi["table_bytes"] / hi["live_bytes"],
@@ -276,7 +338,6 @@ def main():
         # exceed the per-bucket file budget); the per-batch breakdown in the
         # artifact keeps it, lake.compactions/compact_bytes report the work
         del layers["lake.compact_ms"]
-        t = tails(tr)
         eps_n = un["events"] / un["replay_s"]
         eps_1 = one["events"] / one["replay_s"]
         layers.update({
@@ -284,13 +345,16 @@ def main():
             "replay.eps_1thread": eps_1,
             "replay.scaling_eff": eps_n / eps_1 / nproc,
             "job.batch_ms_p50": statistics.median(un["batch_ms"]),
-            "job.batch_ms_tail": t["batch_ms_tail"][1],
+            "job.batch_ms_tail": tail(un["batch_ms"])[1],
             "lake.scan_s": statistics.median(tr["scan_s"]),
             "lake.lookup_ms_p50": statistics.median(tr["lookup_ms"]),
-            "lake.lookup_ms_tail": t["lookup_ms_tail"][1],
+            "lake.lookup_ms_tail": tail(tr["lookup_ms"])[1],
             "trace.overhead_replay": tr["replay_s"] / un["replay_s"],
         })
-        artifact["tails"] = t
+        # batch rows from the untraced level, read rows from the traced
+        # one (the only level with a read phase)
+        artifact["tails"] = dict(batch_ms_tail=tail(un["batch_ms"]),
+                                 lookup_ms_tail=tail(tr["lookup_ms"]))
         out = {k: dict(value=v, unit=layer_unit(k)) for k, v in layers.items()}
     artifact.update(metrics=out, attempted=attempted, failed=failed,
                     failed_ratio=failed / attempted)

@@ -5,8 +5,11 @@ import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
 
-/** JVM entry point of the benchmark: one run ([[Replay.run]]) per JVM.
-  * Arguments are `key=value` pairs; `out=<file>` receives the JSON result.
+/** JVM entry point of the benchmark. `mode=gen` runs the load generator
+  * ([[Gen.run]]), `mode=replay` one measured level ([[Replay.run]]); each
+  * in a JVM of its own, so the measured JVM's memory and JIT state come
+  * from set-up and replay alone. Arguments are `key=value` pairs;
+  * `out=<file>` receives the JSON result.
   */
 object Main {
   def main(args: Array[String]): Unit = {
@@ -15,7 +18,15 @@ object Main {
       require(i > 0, s"expected key=value, got '$a'")
       a.take(i) -> a.drop(i + 1)
     }.toMap
-    Files.writeString(Paths.get(kv("out")), Json.write(Replay.run(Args(kv))))
+    val a = Args(kv)
+    val res = a.str("mode") match {
+      case "gen" =>
+        val spark = Host.session(a.int("threads"), a.str("work"))
+        try Gen.run(spark, a) finally spark.stop()
+      case "replay" => Replay.run(a)
+      case m => throw new IllegalArgumentException(s"unknown mode $m")
+    }
+    Files.writeString(Paths.get(kv("out")), Json.write(res))
   }
 }
 
@@ -60,17 +71,58 @@ object Host {
     s
   }
 
-  /** Resets this process's peak resident set (VmHWM) to its current RSS. */
-  def resetPeakRss(): Unit =
+  /** Resets this process's peak resident set (VmHWM) to its current RSS,
+    * and the peak usage of each heap pool to its current usage.
+    */
+  def resetPeaks(): Unit = {
+    java.lang.management.ManagementFactory.getMemoryPoolMXBeans.asScala
+      .foreach(_.resetPeakUsage())
     try Files.writeString(Paths.get("/proc/self/clear_refs"), "5")
     catch { case _: java.io.IOException => () }
+  }
 
-  /** CPU time of this process, all threads, in seconds. Unlike wall time it
-    * excludes the time the host took the CPU away (steal).
+  /** Peak usage of each heap pool since [[resetPeaks]], MB. */
+  def heapPeaksMb(): Map[String, Double] =
+    java.lang.management.ManagementFactory.getMemoryPoolMXBeans.asScala
+      .filter(_.getType == java.lang.management.MemoryType.HEAP)
+      .map(p => p.getName -> p.getPeakUsage.getUsed / 1048576.0).toMap
+
+  /** CPU time of this process in seconds, the JIT compiler threads'
+    * excepted. Unlike wall time it excludes the time the host took the CPU
+    * away (steal). Compilation is left out because it is the JVM's
+    * warm-up, not the engine's work: every level compiles the code the
+    * previous ones left hot, so the first timed level of a JVM pays more
+    * of it than the next (`jitCpuSeconds` records it apart).
     */
   def cpuSeconds(): Double =
     java.lang.management.ManagementFactory.getOperatingSystemMXBean
-      .asInstanceOf[com.sun.management.OperatingSystemMXBean].getProcessCpuTime / 1e9
+      .asInstanceOf[com.sun.management.OperatingSystemMXBean].getProcessCpuTime / 1e9 -
+      jitCpuSeconds()
+
+  /** CPU seconds of the JIT compiler threads, from `/proc/self/task` (the
+    * JVM keeps a fixed set of them: -XX:-UseDynamicNumberOfCompilerThreads).
+    */
+  def jitCpuSeconds(): Double = {
+    val st = Files.list(Paths.get("/proc/self/task"))
+    try st.iterator().asScala.map { t =>
+      try {
+        val stat = Files.readString(t.resolve("stat"))
+        val comm = stat.substring(stat.indexOf('(') + 1, stat.lastIndexOf(')'))
+        if (!comm.contains("CompilerThre")) 0L
+        else {
+          // fields after "(comm) ": state is 3rd, utime 14th, stime 15th
+          val f = stat.substring(stat.lastIndexOf(')') + 2).split(' ')
+          f(11).toLong + f(12).toLong
+        }
+      } catch { case _: java.io.IOException => 0L } // the thread has ended
+    }.sum / 100.0 // USER_HZ clock ticks
+    finally st.close()
+  }
+
+  /** Milliseconds this JVM spent in GC pauses. */
+  def gcMs(): Long =
+    java.lang.management.ManagementFactory.getGarbageCollectorMXBeans.asScala
+      .map(_.getCollectionTime).sum
 
   /** Peak resident set (VmHWM) of this JVM in MB. */
   def peakRssMb(): Double =
@@ -133,32 +185,8 @@ object Probes {
     Map("storage_mbps" -> storageMbps(dir), "cpu_probe_ms" -> cpuMs())
 }
 
-/** Minimal JSON writer for result files (maps, sequences, scalars). */
+/** JSON for result and span files, with the json4s the engine's snapshots use. */
 object Json {
-  def write(v: Any): String = v match {
-    case null | None => "null"
-    case Some(x) => write(x)
-    case s: String => quote(s)
-    case b: Boolean => b.toString
-    case d: Double => if (d.isNaN || d.isInfinite) "null" else d.toString
-    case f: Float => write(f.toDouble)
-    case n: Int => n.toString
-    case n: Long => n.toString
-    case m: scala.collection.Map[_, _] =>
-      m.map { case (k, x) => quote(k.toString) + ":" + write(x) }.mkString("{", ",", "}")
-    case a: Array[_] => write(a.toSeq)
-    case s: Iterable[_] => s.map(write).mkString("[", ",", "]")
-    case other => quote(other.toString)
-  }
-
-  private def quote(s: String): String = {
-    val sb = new StringBuilder("\"")
-    s.foreach {
-      case '"' => sb.append("\\\"")
-      case '\\' => sb.append("\\\\")
-      case c if c < ' ' => sb.append(f"\\u${c.toInt}%04x")
-      case c => sb.append(c)
-    }
-    sb.append('"').toString
-  }
+  def write(v: Map[String, Any]): String =
+    org.json4s.jackson.Serialization.write(v)(org.json4s.DefaultFormats)
 }

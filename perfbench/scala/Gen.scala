@@ -8,9 +8,9 @@ import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
 
 /** The load generator: everything a run consumes, derived from `seed`.
+  * It runs in a JVM of its own, before the measured ones.
   *
   *  - `log/`     the measured change log (`ChangeLogGenerator.writeSegments`);
-  *  - `warm/`    a small log of the same shape for the untimed warm-up;
   *  - `oracle/`  `oracleFinalState` as (repo, path, lsn, sha256(content));
   *  - `lookups.tsv` a seeded, shuffled mix of hot, cold, deleted and
   *               absent keys with the expected content hash ("-" = no row).
@@ -30,9 +30,6 @@ object Gen {
     val t0 = System.nanoTime()
     ChangeLogGenerator.writeSegments(spark, s"$work/log", cfg)
     val tLog = System.nanoTime()
-    ChangeLogGenerator.writeSegments(spark, s"$work/warm",
-      cfg.copy(nEvents = a.long("warm_events"), numSegments = 4, seed = seed + 1))
-    val tWarm = System.nanoTime()
 
     val oracle = ChangeLogGenerator.oracleFinalState(spark, cfg).toDF()
       .select(col("repo"), col("path"), col("lsn"), sha2(col("content"), 256).as("sha"))
@@ -76,7 +73,7 @@ object Gen {
       "log_bytes" -> Host.treeSize(Paths.get(s"$work/log"))._1,
       "lookup_mix" -> keys.groupBy(_._1).map { case (k, v) => k -> v.size },
       "gen_s" -> genS,
-      "phases_s" -> Map("log" -> (tLog - t0) / 1e9, "warm" -> (tWarm - tLog) / 1e9,
-        "oracle" -> (tOracle - tWarm) / 1e9, "keys" -> (System.nanoTime() - tOracle) / 1e9))
+      "phases_s" -> Map("log" -> (tLog - t0) / 1e9,
+        "oracle" -> (tOracle - tLog) / 1e9, "keys" -> (System.nanoTime() - tOracle) / 1e9))
   }
 }

@@ -12,24 +12,30 @@ import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 import scala.util.control.NonFatal
 
-/** One benchmark run in one JVM:
+/** The measured JVM, on the inputs the generator JVM ([[Gen]]) wrote:
   *
-  *  1. session at `threads` workers, then the seeded inputs ([[Gen]], timed
-  *     apart), then the warm-up: the same code paths on the small warm log;
-  *  2. the measured levels, each replaying the identical log into a fresh
-  *     table and checkpoint. A level's timed region runs from job start to
-  *     the converged visible read; after it come the untimed oracle check
-  *     and, when the level has `reads`, the read phase on the final table
-  *     (full scans, closed-loop single-client point lookups, storage
-  *     amplification).
+  *  1. set-up: session at `threads` workers, then the warm-up: an untimed
+  *     replay of the warm log (the log's first `batches` segments) in
+  *     `batches` micro-batches, so that merge onto existing files, state
+  *     reload and minor compaction run before any timed level; then, when
+  *     a level reads, a scan of its table and a few lookups;
+  *  2. the measured level (`tag`, traced or not, with `reads` or not): a
+  *     replay of the log into a fresh table and checkpoint. Its timed
+  *     region runs from job start to the converged visible read; after it
+  *     come the untimed oracle check and, with `reads`, the read phase on
+  *     the final table (full scans, closed-loop single-client point
+  *     lookups, storage amplification).
   *
-  * `levels` lists them as `tag:threads:traced:reads`. A level at a thread
-  * count other than the session's stops the session and starts a new one
-  * (plus its own warm-up) in the same JVM.
+  * One level per JVM, so that every level `run.py` compares is the first
+  * after the same warm-up: the JIT keeps compiling through a JVM's first
+  * two replays, and a level that followed another would run warmer.
   */
 object Replay {
 
-  /** Micro-batch progress: batch walls and consumed events come from here. */
+  /** Micro-batch progress, the one progress listener of a level: batch
+    * walls and consumed events come from here, and so do the traced
+    * level's progress phases.
+    */
   final class ProgressLog extends StreamingQueryListener {
     val progress = new java.util.concurrent.ConcurrentLinkedQueue[StreamingQueryProgress]()
     override def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit = ()
@@ -62,63 +68,44 @@ object Replay {
   def run(a: Args): Map[String, Any] = {
     val jvmStartMs = ManagementFactory.getRuntimeMXBean.getStartTime
     val work = a.str("work")
-    val buckets = a.int("buckets")
+    val threads = a.int("threads")
     def jobConfig(log: String, dir: String, batchBytes: Long) = CdcJobConfig(
       logDir = log,
       tablePath = s"$dir/lake",
       checkpointDir = s"$dir/ckpt",
-      numBuckets = buckets,
+      numBuckets = a.int("buckets"),
       maxBytesPerTrigger = Some(batchBytes),
       checkpointId = "perfbench")
 
-    var threads = a.int("threads")
-    var spark = Host.session(threads, work)
+    val spark = Host.session(threads, work)
     val sessionS = (System.currentTimeMillis() - jvmStartMs) / 1e3
-    val gen = Gen.run(spark, a)
     val lookups = Files.readAllLines(Paths.get(s"$work/lookups.tsv")).asScala.toSeq
       .map(_.split("\t")).map(f => Lookup(f(0), f(1), f(2), f(3)))
-    val logBytes = gen("log_bytes").asInstanceOf[Long]
-    val batchBytes = logBytes / a.int("batches") + logBytes / a.int("batches") / 100
+    val tag = a.str("tag")
+    val reads = a.str("reads") == "1"
 
-    /** Warm-up replay + scan + lookups on the warm log; seconds. */
-    def warmUp(tag: String): Double = {
-      val t = System.nanoTime()
-      val warm = CdcJob(spark, jobConfig(s"$work/warm", s"$work/warm-$tag", Long.MaxValue))
-      warm.runToCompletion()
+    val warm = CdcJob(spark,
+      jobConfig(s"$work/warm", s"$work/warm-up-$tag", a.long("warm_batch_bytes")))
+    val warmBatches = warm.runToCompletion().size
+    if (reads) {
       warm.lake.read().write.format("noop").mode("overwrite").save()
       lookups.take(3).foreach(k => warm.lake.lookup(Seq(k.repo, k.path)).collect())
-      (System.nanoTime() - t) / 1e9
     }
-    val setups = mutable.ArrayBuffer(sessionS + warmUp("first"))
-    /** A fresh session at `n` threads in this JVM plus its warm-up. */
-    def restart(n: Int, tag: String): Unit = {
-      val t = System.nanoTime()
-      spark.stop()
-      threads = n
-      spark = Host.session(threads, work)
-      setups += (System.nanoTime() - t) / 1e9 + warmUp(tag)
-    }
+    val setupS = (System.currentTimeMillis() - jvmStartMs) / 1e3
 
-    val levels = a.str("levels").split(",").toSeq.map(_.split(":")).map { l =>
-      val Array(tag, lvlThreads, traced, reads) = l
-      if (lvlThreads.toInt != threads) restart(lvlThreads.toInt, tag)
-      tag -> level(spark, work, tag, threads, jobConfig(s"$work/log", s"$work/$tag", batchBytes),
-        lookups, traced == "1", reads == "1", a)
-    }
+    val result = level(spark, work, tag, threads,
+      jobConfig(s"$work/log", s"$work/$tag", a.long("batch_bytes")),
+      lookups, a.str("traced") == "1", reads, a)
     spark.stop()
-    Map(
-      "gen" -> gen,
-      "batch_bytes" -> batchBytes,
-      "session_s" -> sessionS,
-      "setup_s" -> setups.toSeq,
-      "levels" -> levels.toMap)
+    Map("setup_s" -> setupS, "session_s" -> sessionS, "warm_batches" -> warmBatches,
+      "level" -> result)
   }
 
   private def level(spark: SparkSession, work: String, tag: String, threads: Int,
       cfg: CdcJobConfig, lookups: Seq[Lookup], traced: Boolean, reads: Boolean,
       a: Args): Map[String, Any] = {
     val probes = Probes.both(work)
-    Host.resetPeakRss()
+    Host.resetPeaks()
     val progress = new ProgressLog
     spark.streams.addListener(progress)
     val tracer = if (traced) Some(new Tracer(spark, s"${a.str("trace_id")}-$tag")) else None
@@ -130,6 +117,7 @@ object Replay {
     // timed region: job start to the converged visible read
     val job = CdcJob(spark, cfg)
     val cpu0 = Host.cpuSeconds()
+    val (gc0, jit0) = (Host.gcMs(), Host.jitCpuSeconds())
     val t0 = System.nanoTime()
     val visibleRows = span("replay") {
       span("job.run") { job.runToCompletion() }
@@ -137,22 +125,25 @@ object Replay {
     }
     val replayS = (System.nanoTime() - t0) / 1e9
     val replayCpuS = Host.cpuSeconds() - cpu0
+    val (gcMs, jitS) = (Host.gcMs() - gc0, Host.jitCpuSeconds() - jit0)
     spark.streams.removeListener(progress)
     val batches = progress.batches
 
     tracer.foreach(_.phase("oracle"))
     val mismatches = oracleMismatches(spark, job.lake, work)
     if (reads) {
-      // untimed: one scan and the first half of the lookups, so the read
-      // phase measures a warm read path rather than its first calls
+      // untimed: one scan and a few lookups, so the read phase measures a
+      // warm read path of this table rather than its first calls
       job.lake.read().write.format("noop").mode("overwrite").save()
-      lookups.take(lookups.size / 2).foreach(k => job.lake.lookup(Seq(k.repo, k.path)).collect())
+      lookups.take(3).foreach(k => job.lake.lookup(Seq(k.repo, k.path)).collect())
     }
     val out = mutable.LinkedHashMap[String, Any](
       "threads" -> threads,
       "probes" -> probes,
       "replay_s" -> replayS,
       "replay_cpu_s" -> replayCpuS,
+      "replay_gc_ms" -> gcMs,
+      "replay_jit_cpu_s" -> jitS,
       "events" -> batches.map(_.numInputRows).sum,
       "visible_rows" -> visibleRows,
       "oracle_mismatches" -> mismatches,
@@ -199,10 +190,11 @@ object Replay {
         "live_bytes" -> Host.treeSize(Paths.get(live))._1)
     }
     tracer.foreach { t =>
-      out += "layers" -> t.finish(job.lake, lookups.map(k => (k.repo, k.path)),
+      out += "layers" -> t.finish(batches, job.lake, lookups.map(k => (k.repo, k.path)),
         s"${a.str("spans")}-$tag.jsonl")
     }
     out += "peak_rss_mb" -> Host.peakRssMb()
+    out += "heap_peak_mb" -> Host.heapPeaksMb()
     out.toMap
   }
 }

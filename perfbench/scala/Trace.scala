@@ -4,12 +4,11 @@ import graft.lake.LakeTable
 import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobEnd,
   SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd, StageInfo}
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.execution.SparkPlanInfo
 import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQueryListener, StreamingQueryProgress}
+import org.apache.spark.sql.streaming.StreamingQueryProgress
 import org.apache.spark.sql.util.QueryExecutionListener
 
 import java.nio.file.{Files, Paths}
@@ -57,11 +56,8 @@ final class Tracer(spark: SparkSession, traceId: String) {
   private val jobs = new ConcurrentHashMap[Int, JobRec]()
   private val stages = new ConcurrentHashMap[Int, StageInfo]()
   private val execs = new ConcurrentHashMap[Long, ExecRec]()
-  private val progress = new ConcurrentLinkedQueue[StreamingQueryProgress]()
   private val queries = new ConcurrentLinkedQueue[QueryRec]()
   @volatile private var current = "replay"
-  private var codegenNs0 = 0L
-  private var codegenNs = 0L
 
   /** A span around one of the benchmark's own calls into the engine. */
   def span[T](name: String)(body: => T): T = {
@@ -81,11 +77,7 @@ final class Tracer(spark: SparkSession, traceId: String) {
     * "replay" (the timed region, the initial phase), "oracle", "read"
     * (scans + lookups: the `query` layer's sample) or "after".
     */
-  def phase(name: String): Unit = {
-    if (name == "read") codegenNs0 = CodeGenerator.compileTime
-    else if (current == "read") codegenNs += CodeGenerator.compileTime - codegenNs0
-    current = name
-  }
+  def phase(name: String): Unit = current = name
 
   private def nodeNames(p: SparkPlanInfo): Set[String] =
     p.children.flatMap(nodeNames).toSet + p.nodeName
@@ -116,13 +108,6 @@ final class Tracer(spark: SparkSession, traceId: String) {
   }
   private val taskRows = new ConcurrentHashMap[Int, ConcurrentLinkedQueue[Long]]()
 
-  private val streamListener = new StreamingQueryListener {
-    override def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit = ()
-    override def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit = ()
-    override def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit =
-      progress.add(e.progress)
-  }
-
   private val queryListener = new QueryExecutionListener {
     override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
       if (current == "read") queries.add(QueryRec(
@@ -131,7 +116,6 @@ final class Tracer(spark: SparkSession, traceId: String) {
   }
 
   spark.sparkContext.addSparkListener(sparkListener)
-  spark.streams.addListener(streamListener)
   spark.listenerManager.register(queryListener)
 
   // -- attribution -------------------------------------------------------------
@@ -166,11 +150,12 @@ final class Tracer(spark: SparkSession, traceId: String) {
   /** Parses a progress timestamp (ISO-8601, UTC) to epoch ms. */
   private def epochMs(ts: String): Long = java.time.Instant.parse(ts).toEpochMilli
 
-  /** Computes the per-layer metrics of the timed replay and read phase,
-    * writes every span to `spansFile`, and detaches the listeners.
+  /** Computes the per-layer metrics of the timed replay (whose micro-batch
+    * progress is `batches`) and read phase, writes every span to
+    * `spansFile`, and detaches the listeners.
     */
-  def finish(lake: LakeTable, lookupKeys: Seq[(String, String)], spansFile: String)
-      : Map[String, Any] = {
+  def finish(batches: Seq[StreamingQueryProgress], lake: LakeTable,
+      lookupKeys: Seq[(String, String)], spansFile: String): Map[String, Any] = {
     // listener events arrive asynchronously but in order (a job's stage and
     // task events precede its end): wait until every job seen has ended
     // and no new job has appeared for 200 ms
@@ -182,7 +167,6 @@ final class Tracer(spark: SparkSession, traceId: String) {
       Thread.sleep(200)
     }
     spark.sparkContext.removeSparkListener(sparkListener)
-    spark.streams.removeListener(streamListener)
     spark.listenerManager.unregister(queryListener)
 
     val allJobs = jobs.values.asScala.toSeq.sortBy(_.id)
@@ -207,7 +191,6 @@ final class Tracer(spark: SparkSession, traceId: String) {
     // per-batch self time: trigger = phases; addBatch = time covered by the
     // batch's jobs (split across the stages/jobs running in each instant)
     // + driver time covered by none
-    val batches = progress.asScala.toSeq.filter(_.numInputRows > 0).sortBy(_.batchId)
     val perBatch = batches.map { p =>
       val d = p.durationMs.asScala.map { case (k, v) => k -> v.toLong }.toMap
       val trigger = d.getOrElse("triggerExecution", 0L)
@@ -338,7 +321,6 @@ final class Tracer(spark: SparkSession, traceId: String) {
       "query.analysis_ms" -> qPhase(org.apache.spark.sql.catalyst.QueryPlanningTracker.ANALYSIS),
       "query.optimization_ms" -> qPhase(org.apache.spark.sql.catalyst.QueryPlanningTracker.OPTIMIZATION),
       "query.planning_ms" -> qPhase(org.apache.spark.sql.catalyst.QueryPlanningTracker.PLANNING),
-      "query.codegen_ms" -> codegenNs / 1e6,
       "query.exec_ms" -> qs.map(_.durationNs).sum / 1e6,
       "query.actions" -> qs.size.toDouble,
       "query.jobs" -> allJobs.count(_.phase == "read").toDouble,
