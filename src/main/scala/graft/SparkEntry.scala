@@ -472,7 +472,8 @@ object SparkEntry {
         when(col("event_type") === "purchase", "delete")
           .otherwise("upsert").as("op")), "lookup-q", 0L)
       val k = ev.agg(min(col("user_id"))).head().getLong(0)
-      localized(spark, lake.lookup(Seq(k)))
+      // lookup reads at call time: its local result outlives the rmTree
+      lake.lookup(Seq(k))
     } finally rmTree(new java.io.File(tmp))
   }
 

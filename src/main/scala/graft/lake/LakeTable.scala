@@ -1,6 +1,6 @@
 package graft.lake
 
-import org.apache.spark.sql.{Column, DataFrame, Observation, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -433,7 +433,17 @@ class LakeTable(
     * exact expression the writer uses (`xxhash64` over the key columns,
     * positive mod), so pruning can never miss.
     *
-    * Returns live rows (tombstoned keys absent), user columns only.
+    * One Spark job, no exchange: every file holds at most one row per key
+    * (a delta is a batch's winner set, a rewrite is already resolved), so
+    * after the key filter the bucket's scan yields at most one candidate
+    * per file — a handful, bounded by the compaction budget
+    * (`maxFilesPerBucket`). They are collected and the winner is picked
+    * on the driver with [[resolve]]'s rule (max `__lsn`, the tombstone
+    * wins an equal-lsn tie) instead of through a shuffled window.
+    *
+    * Reads at CALL time: the result is a local DataFrame holding the
+    * winner (live rows only, tombstoned keys absent; user columns), so
+    * collecting it runs no further job and later commits do not change it.
     */
   def lookup(keyValues: Seq[Any]): DataFrame = currentSnapshot match {
     case None => spark.emptyDataFrame
@@ -464,12 +474,19 @@ class LakeTable(
       val h = new org.apache.spark.sql.catalyst.expressions.XxHash64(keyLits)
         .eval(null).asInstanceOf[Long]
       val b = java.lang.Math.floorMod(h, s.numBuckets.toLong).toString
-      val resolved = resolveFiles(s, filesOf(s).filter(_._1 == b))
-      if (resolved.columns.isEmpty) resolved
-      else s.keyCols.zip(keyLits)
-        .foldLeft(resolved) { case (d, (c, v)) =>
+      val files = filesOf(s).getOrElse(b, Nil)
+      val scan = liftDrift(s, readFiles(extendedSchema(s, sch), files))
+      // user columns first, then the two meta columns the pick reads
+      val user = scan.columns.filterNot(c => c == LsnMeta || c == DeletedMeta)
+      val cand = s.keyCols.zip(keyLits)
+        .foldLeft(scan) { case (d, (c, v)) =>
           d.filter(col(c) === org.apache.spark.sql.graftbridge.ColumnBridge.column(v)) }
-        .filter(!col(DeletedMeta)).drop(LsnMeta, DeletedMeta)
+        .select((user :+ LsnMeta :+ DeletedMeta).toIndexedSeq.map(col): _*)
+      val n = user.length
+      val rows = if (files.isEmpty) Array.empty[Row] else cand.collect()
+      val live = rows.maxByOption(r => (r.getLong(n), r.getBoolean(n + 1)))
+        .filterNot(_.getBoolean(n + 1)).map(w => Row.fromSeq(w.toSeq.take(n)))
+      spark.createDataFrame(live.toSeq.asJava, StructType(cand.schema.fields.take(n)))
   }
 
   /** Raw rows of every referenced file, unresolved (deltas + tombstones

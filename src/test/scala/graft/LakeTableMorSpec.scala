@@ -155,15 +155,47 @@ class LakeTableMorSpec extends SparkSpec {
     lake.merge(Seq(ev(100, "update", 5), ev(101, "delete", 6)).toDS().toDF(), "t", 1L)
     assert(lake.filesOf(lake.currentSnapshot.get).size > 1, "need several buckets")
 
-    // hit: latest version of the key
-    val hit = lake.lookup(Seq("r2", "p5"))
-    val rows = hit.collect()
+    // hit: latest version of the key. The lookup's result is local, so
+    // the candidate scan's plan is captured from the execution listener
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val jobListener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        jobs.incrementAndGet(); ()
+      }
+    }
+    val planListener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(f: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, ns: Long): Unit = {
+        plans.add(qe.executedPlan.toString); ()
+      }
+      override def onFailure(f: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, e: Exception): Unit = ()
+    }
+    org.apache.spark.ListenerBusBridge.drain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(jobListener)
+    spark.listenerManager.register(planListener)
+    val rows =
+      try {
+        val r = lake.lookup(Seq("r2", "p5")).collect()
+        org.apache.spark.ListenerBusBridge.drain(spark.sparkContext)
+        r
+      } finally {
+        spark.sparkContext.removeSparkListener(jobListener)
+        spark.listenerManager.unregister(planListener)
+      }
     assert(rows.length === 1 && rows.head.getAs[String]("content") === "content-100-k5")
     // the scan must reference exactly ONE bucket's files
-    val buckets = "__bucket=(\\d+)".r
-      .findAllMatchIn(hit.queryExecution.executedPlan.toString)
-      .map(_.group(1)).toSet
+    val captured = plans.toArray(Array.empty[String]).toSeq
+    val scans = captured.filter(_.contains("FileScan"))
+    assert(scans.length === 1, s"expected one candidate scan, got:\n$captured")
+    val buckets = "__bucket=(\\d+)".r.findAllMatchIn(scans.head).map(_.group(1)).toSet
     assert(buckets.size === 1, s"lookup must prune to one bucket, scanned $buckets")
+    // one job for lookup + collect, and no shuffle in any of its plans
+    assert(jobs.get === 1, s"lookup + collect must run one Spark job, ran ${jobs.get}")
+    assert(!captured.exists(_.contains("Exchange")),
+      s"lookup must not shuffle:\n$captured")
 
     // tombstoned key and absent key both come back empty
     assert(lake.lookup(Seq("r0", "p6")).count() === 0L)

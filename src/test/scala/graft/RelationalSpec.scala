@@ -176,15 +176,17 @@ class RelationalSpec extends SparkSpec {
     // NTZ is accepted and must produce exactly the TIMESTAMP result.
     val lNtz = l.withColumn("t", col("t").cast("timestamp_ntz"))
     val rNtz = r.withColumn("t", col("t").cast("timestamp_ntz"))
-    val tzKey = "spark.sql.session.timeZone"
-    val savedTz = spark.conf.get(tzKey)
-    try {
-      spark.conf.set(tzKey, "America/Los_Angeles")
-      val e1 = intercept[IllegalArgumentException] {
-        Relational.rangeJoin(lNtz, r, "k", "k", "t", "t", -3600L, 0L, Seq("rid"))
-      }
-      assert(e1.getMessage.contains("must be TIMESTAMP"))
-    } finally spark.conf.set(tzKey, savedTz)
+    // the DST-rules zone lives in a child session: the shared session's
+    // zone is never touched, so no other spec can observe it
+    val la = spark.newSession()
+    la.conf.set("spark.sql.session.timeZone", "America/Los_Angeles")
+    val lNtzLa = la.sql(
+      "SELECT 1L AS lid, 'k' AS k, TIMESTAMP_NTZ '2024-01-01 12:00:00' AS t")
+    val e1 = intercept[IllegalArgumentException] {
+      Relational.rangeJoin(lNtzLa, r, "k", "k", "t", "t", -3600L, 0L, Seq("rid"))
+    }
+    assert(e1.getMessage.contains("must be TIMESTAMP"))
+    assert(spark.conf.get("spark.sql.session.timeZone") === "UTC")
     val wantPairs = Relational
       .rangeJoin(l, r, "k", "k", "t", "t", -3600L, 0L, Seq("rid"))
       .select("lid", "r_rid").collect().map(x => (x.getLong(0), x.getLong(1))).toSet
