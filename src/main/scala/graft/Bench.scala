@@ -2,16 +2,16 @@ package graft
 
 import graft.job.{CdcJob, CdcJobConfig, MetricsListener}
 import graft.log.ChangeLogGenerator
+import graft.util.Sessions
 import org.apache.spark.sql.SparkSession
 
 /** Benchmark main (driver contract). Three parts:
   *
   *  1. **North metric**: end-to-end CDC replay throughput (events/sec to
-  *     exact final-state convergence) at two cluster sizes — N=1 vs 4N=4
-  *     separate executor JVMs (`local-cluster[1,4,m]` vs
-  *     `local-cluster[4,4,m]`) on the identical input — plus scaling
-  *     efficiency = (rate_4N / rate_N) / 4 (BASELINE.md / BENCH.md
-  *     protocol).
+  *     exact final-state convergence) at two parallelism levels — N and
+  *     4N worker threads (`local[N]` vs `local[4N]`), each replay in a
+  *     fresh child JVM on the identical input — plus scaling efficiency
+  *     = (rate_4N / rate_N) / 4 (BASELINE.md / BENCH.md protocol).
   *  2. Incremental-merge profile (per-batch merge latency vs table size).
   *  3. Headline operator timings on `SPARK_GRAFT_SF_DIR`.
   *
@@ -31,48 +31,13 @@ object Bench {
     if (shm.isDirectory && shm.canWrite) "/dev/shm" else "/tmp"
   }
 
-  /** Replay sessions can run in **multi-executor** mode
-    * (`SPARK_GRAFT_EXEC_CORES=c`): `local-cluster[cores/c, c, memMB]`
-    * spawns real separate executor JVMs — each with its own heap, GC, and
-    * state store, talking over the block-transfer service. This is the
-    * faithful sandbox analog of "N vs 4N executors": a thread-count-only
-    * level comparison shares ONE driver heap across all tasks, so the 4N
-    * level pays 4x the allocation rate into the same collector and the
-    * measurement becomes a GC benchmark (measured: 18 s of GC at 4
-    * threads vs 64 s at 16 threads for identical work). Executors on a
-    * real cluster scale heaps/GC/memory bandwidth with N — local-cluster
-    * reproduces exactly that.
+  /** The shared session recipe (`Sessions.local`: `local[cores]`,
+    * cores shuffle partitions, RocksDB state) plus the bench's measurement
+    * settings. Every level is worker threads in ONE JVM; the replay levels
+    * each get a fresh child JVM (`replayIsolated`).
     */
-  private def session(cores: Int, name: String,
-      forceLocal: Boolean = false): SparkSession = {
-    val execMemMb = sys.env.getOrElse("SPARK_GRAFT_EXEC_MEM_MB", "10240")
-    // SPARK_GRAFT_EXEC_CORES=c > 0 opts into multi-executor-JVM replay;
-    // default is single-JVM worker threads: on THIS box the per-batch
-    // orchestration latency of a multi-process cluster (scheduling, netty
-    // block fetch, barrier latency per job) is tens of percent of a
-    // micro-batch and does not shrink with executors, so it drowns the
-    // scaling signal the bench exists to measure (see BENCH.md)
-    val execCores = sys.env.getOrElse("SPARK_GRAFT_EXEC_CORES", "0").toInt
-    val master =
-      if (forceLocal || execCores <= 0) s"local[$cores]"
-      else {
-        val execs = math.max(1, cores / execCores)
-        s"local-cluster[$execs,$execCores,$execMemMb]"
-      }
-    val b = SparkSession.builder()
-      .master(master)
-      .appName(name)
-      // shuffle/state partitions track the level's cores (weak scaling —
-      // each cluster size is tuned as an operator would tune it; state
-      // layout is only checkpoint-pinned on RESUME, and each level runs
-      // its own fresh checkpoint). Measured alternatives both lose: a
-      // fixed 32 at both levels costs the 16-core level ~2 s/batch (a
-      // second wave of RocksDB instance open/commit per stateful stage:
-      // 48.5 s vs 38.6 s wall, efficiency 0.61 → 0.47); partitions ≪
-      // cores idles the stateful stage. SPARK_GRAFT_SHUFFLE_PARTS
-      // overrides for A/B.
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTS", cores.toString))
+  private def session(cores: Int, name: String): SparkSession = {
+    val s = Sessions.local(cores, name)
       // one RocksDB get per put just to maintain a row-count metric —
       // measured in allUpdatesTimeMs on every batch; the dedup state
       // needs no exact row count
@@ -86,9 +51,6 @@ object Bench {
       // cluster maintenance IO rides each executor's own disk/network;
       // one box serializes them.
       .config("spark.sql.streaming.stateStore.maintenanceInterval", "600s")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
       .config("spark.local.dir", s"$shmRoot/graft-spark-local")
       // scan parallelism must come from row-group splits, not file count:
       // a micro-batch holds maxFilesPerTrigger files, and with the default
@@ -99,19 +61,6 @@ object Bench {
       // 2-4x wall to stateful micro-batches (measured); lineage integrity
       // is covered by the lake's own atomic snapshot commit
       .config("spark.sql.streaming.checkpoint.fileChecksum.enabled", "false")
-      // Raw local FS for file:// — Hadoop's default LocalFileSystem is
-      // ChecksumFileSystem: every file create (state changelog, offset
-      // WAL, delta parquet) ALSO creates+writes a .crc sidecar, doubling
-      // the small-file create/close traffic that this hypervisor
-      // serializes (measured: 16 concurrent RocksDB changelog commits
-      // spend 8-20 s SUMMED in commit file-sync vs 0.25 s at 4 —
-      // contention, not per-call cost). On a real cluster the DFS layer
-      // owns block integrity; a .crc per local file is pure overhead.
-      // SPARK_GRAFT_RAWFS=off restores the checksummed FS for A/B.
-      .config("spark.hadoop.fs.file.impl",
-        if (sys.env.get("SPARK_GRAFT_RAWFS").contains("off"))
-          "org.apache.hadoop.fs.LocalFileSystem"
-        else "org.apache.hadoop.fs.RawLocalFileSystem")
       // Off-heap parquet column vectors: the 4N level shares ONE heap
       // across all worker threads, so its allocation rate into the shared
       // collector is 4x the N level's — measured: the scan+combine stage
@@ -123,9 +72,8 @@ object Bench {
       // (spark.memory.offHeap) measured far worse here — the stateful
       // sort's off-heap pages hit the hypervisor's first-touch throttle
       // every batch (2-6x stateful-stage CPU + 2 min GC) — so only the
-      // vectors move off-heap. SPARK_GRAFT_OFFHEAP=off reverts for A/B.
-      .config("spark.sql.columnVector.offheap.enabled",
-        (!sys.env.get("SPARK_GRAFT_OFFHEAP").contains("off")).toString)
+      // vectors move off-heap.
+      .config("spark.sql.columnVector.offheap.enabled", "true")
       // Byte-frugal shuffle. Storage bytes are the scarce resource twice
       // over: on a real cluster shuffle bytes are network; on THIS box the
       // hypervisor throttles first-touch page provisioning to ~13 MB/s
@@ -144,95 +92,17 @@ object Bench {
       //    an entire replay's shuffles pile up); a 60s cadence recycles
       //    their pages while the replay still runs.
       .config("spark.cleaner.periodicGC.interval", "60s")
-    // RocksDB keyed-state store by default: the dedup state is one Long
-    // per live key, which the in-memory HDFS provider holds entirely on
-    // heap — at 10^10 keys that dies; RocksDB spills to local disk and
-    // bounds memory. Opt out with SPARK_GRAFT_STATE_STORE=hdfs.
-    if (!sys.env.get("SPARK_GRAFT_STATE_STORE").contains("hdfs"))
-      b.config("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-        // commit the per-batch CHANGELOG instead of uploading a full
-        // RocksDB snapshot every micro-batch; snapshots happen in the
-        // background — removes a serial seconds-scale term from every
-        // batch's commit phase (part of the scaling-efficiency floor).
-        // SPARK_GRAFT_CHANGELOG=off opts out (A/B diagnosis knob).
-        .config("spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled",
-          (!sys.env.get("SPARK_GRAFT_CHANGELOG").contains("off")).toString)
-    if (master.startsWith("local-cluster")) {
-      // executors are fresh JVMs: they need our classes (the spark distro
-      // jars come from SPARK_HOME), the JDK17 module opens, and tmpfs
-      // local dirs (burst-credit disk would swamp shuffle — BENCH.md)
-      // absolutize: executor JVMs start in the worker's scratch dir, so a
-      // relative `target/scala-2.13/classes` entry would silently vanish
-      val absCp = System.getProperty("java.class.path")
-        .split(java.io.File.pathSeparator)
-        .map(p => new java.io.File(p).getAbsolutePath)
-        .mkString(java.io.File.pathSeparator)
-      b.config("spark.executor.extraClassPath", absCp)
-        .config("spark.executor.memory", s"${execMemMb}m")
-        .config("spark.executor.extraJavaOptions",
-          jdk17Opens + " -XX:ParallelGCThreads=8")
-        .config("spark.executorEnv.SPARK_LOCAL_DIRS", s"$shmRoot/graft-spark-local")
-        // stateful tasks prefer the executor caching their state store;
-        // the default 3 s locality wait serializes micro-batches when
-        // those executors are momentarily busy — never worth it on a
-        // single box (state reload from tmpfs checkpoint is cheap)
-        .config("spark.locality.wait", "0s")
-    }
-    val s = b.getOrCreate()
+      .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
   }
 
-  private val jdk17Opens: String = Seq(
-    "java.base/java.lang", "java.base/java.lang.invoke",
-    "java.base/java.lang.reflect", "java.base/java.io",
-    "java.base/java.net", "java.base/java.nio",
-    "java.base/java.util", "java.base/java.util.concurrent",
-    "java.base/java.util.concurrent.atomic",
-    "java.base/sun.nio.ch", "java.base/sun.nio.cs",
-    "java.base/sun.security.action", "java.base/sun.util.calendar")
-    .map(p => s"--add-opens=$p=ALL-UNNAMED").mkString(" ")
-
-  /** One full CDC replay at the given core count inside THIS JVM;
-    * returns (events, secs, per-batch metrics).
+  /** One full CDC replay at the given core count on `spark`; returns
+    * (events, secs, per-batch metrics).
     */
-  private var stageProfile = false
-
-  private def replayHere(cores: Int, logDir: String, workDir: String,
-      existing: SparkSession = null): (Long, Double, Seq[(Long, Long, Long)]) = {
-    val spark =
-      if (existing != null) existing
-      else session(cores, s"graft-bench-replay-$cores")
-    if (stageProfile)
-      spark.sparkContext.addSparkListener(
-        new org.apache.spark.scheduler.SparkListener {
-          override def onStageCompleted(
-              sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-            val i = sc.stageInfo
-            val dur = for {
-              a <- i.completionTime; b <- i.submissionTime } yield a - b
-            val m = i.taskMetrics
-            System.err.println(f"[stage] ${i.stageId}%4d ${dur.getOrElse(-1L)}%7d ms " +
-              f"run=${m.executorRunTime}%6d cpu=${m.executorCpuTime / 1000000}%6d " +
-              f"gc=${m.jvmGCTime}%6d deser=${m.executorDeserializeTime}%5d " +
-              f"tasks=${i.numTasks}%4d ${i.name.take(70)}")
-          }
-        })
-    if (stageProfile)
-      // full progress JSON per micro-batch: durationMs breakdown
-      // (walCommit/stateCommit/addBatch/queryPlanning) + state operator
-      // commit times — the driver-side costs no stage ever shows
-      spark.streams.addListener(new org.apache.spark.sql.streaming.StreamingQueryListener {
-        override def onQueryStarted(
-            e: org.apache.spark.sql.streaming.StreamingQueryListener.QueryStartedEvent): Unit = ()
-        override def onQueryTerminated(
-            e: org.apache.spark.sql.streaming.StreamingQueryListener.QueryTerminatedEvent): Unit = ()
-        override def onQueryProgress(
-            e: org.apache.spark.sql.streaming.StreamingQueryListener.QueryProgressEvent): Unit =
-          System.err.println(s"[progress] ${e.progress.json}")
-      })
-    val listener = new MetricsListener(verbose = false)
+  private def replayHere(spark: SparkSession, cores: Int, logDir: String,
+      workDir: String): (Long, Double, Seq[(Long, Long, Long)]) = {
+    val listener = new MetricsListener()
     spark.streams.addListener(listener)
     // Bound each micro-batch by BYTES, not file count: log segments are
     // single ~uniform files, so a fixed maxFilesPerTrigger ties batch
@@ -291,7 +161,6 @@ object Bench {
     // throughput denominator = raw change events consumed (incl. dups)
     val events = ms.map(_.inputRows).sum
     spark.streams.removeListener(listener)
-    if (existing == null) spark.stop()
     (events, secs, ms.map(m => (m.batchId, m.inputRows, m.durationMs)))
   }
 
@@ -337,10 +206,6 @@ object Bench {
     val pb = new ProcessBuilder(cmd)
     pb.redirectErrorStream(false)
     pb.redirectError(ProcessBuilder.Redirect.INHERIT)
-    // multi-executor mode: the standalone launcher needs the dist's Scala
-    // version, and executor scratch space must stay on tmpfs
-    pb.environment().put("SPARK_SCALA_VERSION", "2.13")
-    pb.environment().put("SPARK_LOCAL_DIRS", s"$shmRoot/graft-spark-local")
     val p = pb.start()
     val out = new String(p.getInputStream.readAllBytes())
     val code = p.waitFor()
@@ -418,41 +283,22 @@ object Bench {
     r.probeMbps < 200.0 || r.probeCpuMs > 2.0 * minCpuMs
 
   def main(args: Array[String]): Unit = {
-    if (args.headOption.contains("__cpu")) {
-      // diagnostic: pure-CPU codegen scaling probe (no shuffle, no state)
-      val cores = args(1).toInt
-      val spark = session(cores, s"cpu-$cores", forceLocal = true)
-      import org.apache.spark.sql.functions._
-      def job(): Unit = {
-        val chained = (1 to 24).foldLeft(col("id"))((c, i) => xxhash64(c, col("id") + i))
-        spark.range(0, 1000000000L, 1, cores * 4).select(max(chained)).collect()
-        ()
-      }
-      val t0 = System.nanoTime(); job()
-      val t1 = System.nanoTime(); job()
-      val t2 = System.nanoTime()
-      println(f"__CPU_RESULT $cores cold=${(t1 - t0) / 1e9}%.2f warm=${(t2 - t1) / 1e9}%.2f")
-      spark.stop(); return
-    }
     if (args.headOption.contains("__replay")) {
       // child-JVM mode: warm-up replay on the small log (JIT, codegen,
-      // class loading — steady-state protocol), then one timed replay.
-      // ONE session for both: in multi-executor mode the executors are
-      // separate JVMs, and tearing the cluster down between warm-up and
-      // timed run would throw away exactly the warm-up we paid for.
-      if (sys.env.contains("SPARK_GRAFT_STAGE_PROFILE")) stageProfile = true
+      // class loading — steady-state protocol), then one timed replay on
+      // the same session.
       val cores = args(1).toInt
       val warmLog = args(4)
       val spark = session(cores, s"graft-bench-replay-$cores")
-      replayHere(cores, warmLog, args(3) + "/warm", spark)
-      val (events, secs, batches) = replayHere(cores, args(2), args(3), spark)
+      replayHere(spark, cores, warmLog, args(3) + "/warm")
+      val (events, secs, batches) = replayHere(spark, cores, args(2), args(3))
       spark.stop()
       println(s"__REPLAY_RESULT $events $secs " +
         batches.map { case (a, b, c) => s"$a,$b,$c" }.mkString(";"))
       return
     }
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val cpus = Sessions.cpus
     val nEvents = sys.env.getOrElse("SPARK_GRAFT_CDC_EVENTS", "40000000").toLong
     val mode = sys.env.getOrElse("SPARK_GRAFT_BENCH_MODE", "all") // all|cdc|queries
     val workDir = java.nio.file.Files.createTempDirectory(
@@ -484,7 +330,7 @@ object Bench {
       def mark(d: String) =
         java.nio.file.Files.writeString(java.nio.file.Paths.get(s"$d/_GRAFT_DONE"), "ok")
       if (!haveMarker(cachedLog) || !haveMarker(cachedWarm)) {
-        val gen = session(cpus, "graft-bench-gen", forceLocal = true)
+        val gen = session(cpus, "graft-bench-gen")
         if (!haveMarker(cachedLog)) {
           rmTree(new java.io.File(cachedLog))
           ChangeLogGenerator.writeSegments(gen, cachedLog, ChangeLogGenerator.Config(
@@ -601,7 +447,7 @@ object Bench {
         val incLog = s"$shmRoot/graft-benchlog-inc2m-s42-rg16"
         if (!new java.io.File(s"$incLog/_GRAFT_DONE").isFile) {
           rmTree(new java.io.File(incLog))
-          val gen = session(cpus, "graft-bench-gen-inc", forceLocal = true)
+          val gen = session(cpus, "graft-bench-gen-inc")
           ChangeLogGenerator.writeSegments(gen, incLog, ChangeLogGenerator.Config(
             nEvents = 2000000, nRepos = 500, pathsPerRepo = 200,
             numSegments = 16, zipfExponent = 2.0))
@@ -609,8 +455,8 @@ object Bench {
           java.nio.file.Files.writeString(
             java.nio.file.Paths.get(s"$incLog/_GRAFT_DONE"), "ok")
         }
-        val spark = session(n4Cores, "graft-bench-incremental", forceLocal = true)
-        val listener = new MetricsListener(verbose = false)
+        val spark = session(n4Cores, "graft-bench-incremental")
+        val listener = new MetricsListener()
         spark.streams.addListener(listener)
         val job = CdcJob(spark, CdcJobConfig(
           logDir = incLog, tablePath = s"$workDir/inclake",
@@ -642,7 +488,7 @@ object Bench {
       if (mode == "cdc") Seq.empty[(String, Double)]
       else {
         val before = probeStorageMbps()
-        val spark = session(cpus, "graft-bench-queries", forceLocal = true)
+        val spark = session(cpus, "graft-bench-queries")
         def runOnce(dir: String, name: String,
             fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Unit =
           try fn(spark, dir).write.format("noop").mode("overwrite").save()

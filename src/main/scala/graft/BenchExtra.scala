@@ -4,16 +4,15 @@ import org.apache.spark.sql.SparkSession
 
 /** Optimization-round measurement harness (guide §1). `Bench.scala` is the
   * frozen driver contract; this separate main exists so per-query
-  * iteration, plan dumps, and job-level attribution never touch it.
+  * iteration and job-level attribution never touch it (plan dumps are
+  * `graft.Plans`).
   *
   * Usage:
   *   sbt "runMain graft.BenchExtra time [reps] [query ...]"
   *     — timed noop-sink runs (same session shape as Bench's query phase:
-  *       local[$SPARK_GRAFT_CPUS], 32 shuffle partitions, AQE, zstd),
-  *       warm-up pass at sf0.001 first, prints per-query min/median.
-  *   sbt "runMain graft.BenchExtra plan <outDir> [query ...]"
-  *     — writes <outDir>/<query>.txt with explain("formatted") at
-  *       $SPARK_GRAFT_SF_DIR.
+  *       the shared `Sessions.local` recipe plus zstd and off-heap
+  *       vectors), warm-up pass at sf0.001 first, prints per-query
+  *       min/median.
   *   sbt "runMain graft.BenchExtra jobs <query>"
   *     — one timed run with a job listener printing per-job wall time and
   *       description (attribution for multi-job operators).
@@ -21,21 +20,11 @@ import org.apache.spark.sql.SparkSession
 object BenchExtra {
 
   private def session(): SparkSession = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
-    val s = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-bench-extra")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTS", cpus.toString))
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
+    val s = graft.util.Sessions.local(graft.util.Sessions.cpus, "graft-bench-extra")
       .config("spark.io.compression.codec", "zstd")
       .config("spark.shuffle.sort.bypassMergeThreshold", "1")
       .config("spark.sql.files.maxPartitionBytes", (16 * 1024 * 1024).toString)
       .config("spark.sql.columnVector.offheap.enabled", "true")
-      .config("spark.hadoop.fs.file.impl",
-        "org.apache.hadoop.fs.RawLocalFileSystem")
       .config("spark.local.dir", {
         val shm = new java.io.File("/dev/shm")
         if (shm.isDirectory && shm.canWrite) "/dev/shm/graft-spark-local"
@@ -58,19 +47,6 @@ object BenchExtra {
         System.err.println(s"[benchextra] $name FAILED: ${e.getMessage}") }
 
     mode match {
-      case "plan" =>
-        val outDir = args(1)
-        val names = if (args.length > 2) args.drop(2).toSeq else all.map(_._1)
-        new java.io.File(outDir).mkdirs()
-        names.foreach { n =>
-          val df = SparkEntry.queries(n)(spark, sfDir)
-          val plan = df.queryExecution.explainString(
-            org.apache.spark.sql.execution.FormattedMode)
-          java.nio.file.Files.writeString(
-            java.nio.file.Paths.get(s"$outDir/$n.txt"), plan)
-          println(s"[benchextra] wrote $outDir/$n.txt")
-        }
-
       case "jobs" =>
         val names = args.drop(1).toSeq
         val jobs = new java.util.concurrent.ConcurrentHashMap[Int, (Long, String)]()

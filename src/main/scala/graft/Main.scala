@@ -20,35 +20,7 @@ import org.apache.spark.sql.functions._
 object Main {
 
   private def session(name: String): SparkSession = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      math.min(Runtime.getRuntime.availableProcessors(), 32).toString)
-    val b = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName(name)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // raw local FS for file:// paths: Hadoop's default LocalFileSystem
-      // is ChecksumFileSystem, which writes a .crc sidecar per file —
-      // per-batch checkpoint/changelog/delta commits create 2x the files
-      // for integrity the engine already gets from the lake's atomic
-      // snapshot commit (and, on a cluster, from the DFS block layer).
-      // SPARK_GRAFT_RAWFS=off restores checksummed local files.
-      .config("spark.hadoop.fs.file.impl",
-        if (sys.env.get("SPARK_GRAFT_RAWFS").contains("off"))
-          "org.apache.hadoop.fs.LocalFileSystem"
-        else "org.apache.hadoop.fs.RawLocalFileSystem")
-    // RocksDB keyed state by default (BENCH.md "State store"): bounded
-    // memory at any key cardinality; SPARK_GRAFT_STATE_STORE=hdfs opts out
-    if (!sys.env.get("SPARK_GRAFT_STATE_STORE").contains("hdfs"))
-      b.config("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-        // changelog checkpointing: per-batch commit uploads the changelog,
-        // full snapshots happen in the background (BENCH.md "State store")
-        .config("spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled",
-          "true")
-    val s = b.getOrCreate()
+    val s = graft.util.Sessions.local(graft.util.Sessions.cpus, name).getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
   }
@@ -417,7 +389,7 @@ object Main {
         // 82-90 (the reference serves promhttp + healthchecks regardless
         // of source type). http-source pipelines already expose them on
         // the ingest port; changelog pipelines get a dedicated server.
-        val listener = new graft.job.MetricsListener(verbose = false)
+        val listener = new graft.job.MetricsListener()
         spark.streams.addListener(listener)
         @volatile var queryLive = false
         val ops =

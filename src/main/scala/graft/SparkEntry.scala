@@ -449,63 +449,63 @@ object SparkEntry {
     else java.nio.file.Files.createTempDirectory(prefix).toString
   }
 
-  /** The lake MERGE + bucket-pruned point lookup as an oracle-checked
-    * row: ingest the events changelog into a fresh LakeTable (key =
-    * user_id, purchase ⇒ delete) in one merge commit, then `lookup` the
-    * smallest user id. The oracle recomputes that user's final state in
-    * SQL — green iff the merge winner reduction, the manifest fold, the
-    * typed bucket hash, AND the bucket pruning all agree with the
-    * declarative semantics.
+  /** Shared fixture of the four lake queries: ingest the events
+    * changelog into a fresh LakeTable (key = user_id, purchase ⇒ delete)
+    * as `batches` merge commits (events split by `event_id % batches`;
+    * one batch merges them all), then evaluate `query` on the table and
+    * the events. The table directory is removed afterwards, so `query`
+    * must return a result that no longer reads it.
     */
-  private def lakeLookup(spark: SparkSession, dir: String): DataFrame = {
+  private def lakeFixture(spark: SparkSession, dir: String, name: String,
+      batches: Int)(query: (graft.lake.LakeTable, DataFrame) => DataFrame): DataFrame = {
     val ev = t(spark, dir, "events")
-    val tmp = fixtureTmpDir("graft-lake-lookup")
+    val tmp = fixtureTmpDir(s"graft-lake-$name")
     try {
       val lake = graft.lake.LakeTable(spark, tmp, Seq("user_id"), numBuckets = 8)
       lake.createIfAbsent(org.apache.spark.sql.types.StructType.fromDDL(
         "user_id BIGINT, last_op STRING, last_value DOUBLE"))
-      lake.merge(ev.select(
-        col("user_id"),
-        col("event_type").as("last_op"),
-        col("value").as("last_value"),
-        col("event_id").as("lsn"),
-        when(col("event_type") === "purchase", "delete")
-          .otherwise("upsert").as("op")), "lookup-q", 0L)
-      val k = ev.agg(min(col("user_id"))).head().getLong(0)
-      // lookup reads at call time: its local result outlives the rmTree
-      lake.lookup(Seq(k))
-    } finally rmTree(new java.io.File(tmp))
-  }
-
-  /** The lake incremental change feed as an oracle-checked row: three
-    * merge commits (events split by event_id mod 3), then
-    * `changeFeed(0, 3)` — per version, exactly that batch's winner set
-    * with upserts AND tombstones and `__lsn`/`__deleted`/`__version`
-    * provenance. The oracle recomputes each batch's per-key winner in
-    * SQL. Also pins the single-scan feed plan's `__version` derivation
-    * from file paths.
-    */
-  private def lakeChangeFeed(spark: SparkSession, dir: String): DataFrame = {
-    val ev = t(spark, dir, "events")
-    val tmp = fixtureTmpDir("graft-lake-feed")
-    try {
-      val lake = graft.lake.LakeTable(spark, tmp, Seq("user_id"), numBuckets = 8)
-      lake.createIfAbsent(org.apache.spark.sql.types.StructType.fromDDL(
-        "user_id BIGINT, last_op STRING, last_value DOUBLE"))
-      (0 until 3).foreach { b =>
-        lake.merge(ev.filter(pmod(col("event_id"), lit(3)) === b).select(
+      (0 until batches).foreach { b =>
+        val slice =
+          if (batches == 1) ev
+          else ev.filter(pmod(col("event_id"), lit(batches)) === b)
+        lake.merge(slice.select(
           col("user_id"),
           col("event_type").as("last_op"),
           col("value").as("last_value"),
           col("event_id").as("lsn"),
           when(col("event_type") === "purchase", "delete")
-            .otherwise("upsert").as("op")), "feed-q", b.toLong)
+            .otherwise("upsert").as("op")), s"$name-q", b.toLong)
       }
+      query(lake, ev)
+    } finally rmTree(new java.io.File(tmp))
+  }
+
+  /** The lake MERGE + bucket-pruned point lookup as an oracle-checked
+    * row: one merge commit, then `lookup` the smallest user id. The
+    * oracle recomputes that user's final state in SQL — green iff the
+    * merge winner reduction, the manifest fold, the typed bucket hash,
+    * AND the bucket pruning all agree with the declarative semantics.
+    */
+  private def lakeLookup(spark: SparkSession, dir: String): DataFrame =
+    lakeFixture(spark, dir, "lookup", 1) { (lake, ev) =>
+      val k = ev.agg(min(col("user_id"))).head().getLong(0)
+      // lookup reads at call time: its local result outlives the rmTree
+      lake.lookup(Seq(k))
+    }
+
+  /** The lake incremental change feed as an oracle-checked row: three
+    * merge commits, then `changeFeed(0, 3)` — per version, exactly that
+    * batch's winner set with upserts AND tombstones and
+    * `__lsn`/`__deleted`/`__version` provenance. The oracle recomputes
+    * each batch's per-key winner in SQL. Also pins the single-scan feed
+    * plan's `__version` derivation from file paths.
+    */
+  private def lakeChangeFeed(spark: SparkSession, dir: String): DataFrame =
+    lakeFixture(spark, dir, "feed", 3) { (lake, _) =>
       localized(spark, lake.changeFeed(0L, lake.currentVersion.get)
         .select("user_id", "last_op", "last_value",
           "__lsn", "__deleted", "__version"))
-    } finally rmTree(new java.io.File(tmp))
-  }
+    }
 
   /** Time travel as an oracle-checked row: the same three-merge fixture
     * as `lake_change_feed`, read back AS OF version 2 (after the second
@@ -515,26 +515,11 @@ object SparkEntry {
     * files live at v2 and the MOR resolve over them matches the
     * declarative latest-lsn-wins / tombstone-drop semantics.
     */
-  private def lakeTimeTravel(spark: SparkSession, dir: String): DataFrame = {
-    val ev = t(spark, dir, "events")
-    val tmp = fixtureTmpDir("graft-lake-tt")
-    try {
-      val lake = graft.lake.LakeTable(spark, tmp, Seq("user_id"), numBuckets = 8)
-      lake.createIfAbsent(org.apache.spark.sql.types.StructType.fromDDL(
-        "user_id BIGINT, last_op STRING, last_value DOUBLE"))
-      (0 until 3).foreach { b =>
-        lake.merge(ev.filter(pmod(col("event_id"), lit(3)) === b).select(
-          col("user_id"),
-          col("event_type").as("last_op"),
-          col("value").as("last_value"),
-          col("event_id").as("lsn"),
-          when(col("event_type") === "purchase", "delete")
-            .otherwise("upsert").as("op")), "tt-q", b.toLong)
-      }
+  private def lakeTimeTravel(spark: SparkSession, dir: String): DataFrame =
+    lakeFixture(spark, dir, "tt", 3) { (lake, _) =>
       localized(spark, lake.readVersion(2L)
         .select("user_id", "last_op", "last_value"))
-    } finally rmTree(new java.io.File(tmp))
-  }
+    }
 
   /** Major compaction + snapshot expiry as an oracle-checked row: three
     * merge commits, `compact(dropTombstones = true)` (rewrites every
@@ -545,28 +530,13 @@ object SparkEntry {
     * the vacuum deleted only dead files (a live-file delete would surface
     * as missing rows or a read error).
     */
-  private def lakeCompactedState(spark: SparkSession, dir: String): DataFrame = {
-    val ev = t(spark, dir, "events")
-    val tmp = fixtureTmpDir("graft-lake-compact")
-    try {
-      val lake = graft.lake.LakeTable(spark, tmp, Seq("user_id"), numBuckets = 8)
-      lake.createIfAbsent(org.apache.spark.sql.types.StructType.fromDDL(
-        "user_id BIGINT, last_op STRING, last_value DOUBLE"))
-      (0 until 3).foreach { b =>
-        lake.merge(ev.filter(pmod(col("event_id"), lit(3)) === b).select(
-          col("user_id"),
-          col("event_type").as("last_op"),
-          col("value").as("last_value"),
-          col("event_id").as("lsn"),
-          when(col("event_type") === "purchase", "delete")
-            .otherwise("upsert").as("op")), "compact-q", b.toLong)
-      }
+  private def lakeCompactedState(spark: SparkSession, dir: String): DataFrame =
+    lakeFixture(spark, dir, "compact", 3) { (lake, _) =>
       lake.compact(dropTombstones = true)
       lake.expireSnapshots(keepLast = 1)
       localized(spark, lake.read()
         .select("user_id", "last_op", "last_value"))
-    } finally rmTree(new java.io.File(tmp))
-  }
+    }
 
   /** Materialize a (small, query-result-sized) frame into a local
     * DataFrame so the temp LakeTable directory backing it can be deleted

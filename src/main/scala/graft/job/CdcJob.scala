@@ -39,15 +39,6 @@ final case class CdcJobConfig(
     // copy): json | xml (native expressions) | yaml (transcoded to JSON
     // per partition, then the JSON path)
     codec: String = "json",
-    // what the dedup key-shuffle carries (parquet changelogs only):
-    //  - "skinny" (default): ordering fields + a (file, row-index) handle;
-    //    winner payloads are re-materialized after dedup by a broadcast
-    //    semi-join against the page-cached batch files. ~10× less shuffle
-    //    under CDC duplication (many updates per key per batch).
-    //  - "full": rows carry their payload through the shuffle — the right
-    //    shape when keys/batch ≈ rows/batch (no duplication to exploit)
-    //    or when re-reading the source is expensive (remote cold store).
-    carry: String = "skinny",
     // per-key dedup-state TTL (ProcessingTimeTimeout): bounds state when
     // most of a 10^10-key space goes cold; expiry re-admits stale
     // duplicates as idempotent rows the lake's monotone merge absorbs
@@ -120,7 +111,7 @@ class CdcJob(spark: SparkSession, cfg: CdcJobConfig) {
       "dedupStateTtlMs requires a ProcessingTime trigger (runFollowing); " +
         "AvailableNow never terminates under ProcessingTimeTimeout")
     if (cfg.jdbcSink.isEmpty) lake.createIfAbsent(baseSchema)
-    if (cfg.carry == "skinny" && cfg.format == "parquet") startSkinny(trigger)
+    if (cfg.format == "parquet") startSkinny(trigger)
     else startFull(trigger)
   }
 
@@ -131,7 +122,10 @@ class CdcJob(spark: SparkSession, cfg: CdcJobConfig) {
     * CDC duplication (the 10^10-event log averages ~100 updates per key
     * per 10M-row batch) this cuts the pipeline's dominant shuffle ~10×;
     * the payload re-read is a page-cached scan the cluster already paid
-    * for. "Shuffle what you deduplicate; fetch payloads late."
+    * for. "Shuffle what you deduplicate; fetch payloads late." Whether
+    * carrying full payloads would win when keys/batch ≈ rows/batch (no
+    * duplication to exploit) is unmeasured; a full-carry path for parquet
+    * should be chosen from an observed property of the log, not a flag.
     */
   private def startSkinny(trigger: Trigger): StreamingQuery = {
     import spark.implicits._
@@ -184,7 +178,7 @@ class CdcJob(spark: SparkSession, cfg: CdcJobConfig) {
         .withColumn("extra", coalesce(col("extra"), map()))
   }
 
-  /** Ledger-gated sink dispatch shared by both carry pipelines: skip the
+  /** Ledger-gated sink dispatch shared by both pipelines: skip the
     * SINK for crash-replayed batches (exactly-once for the DLQ and
     * stats, not just the table), otherwise materialize the batch and
     * apply it.
@@ -238,48 +232,40 @@ class CdcJob(spark: SparkSession, cfg: CdcJobConfig) {
     }
   }
 
-  /** Full-payload pipeline: rows carry their payload through the dedup
-    * shuffle. Used for text changelogs (no parquet row index to refetch
-    * by) and `carry = "full"`.
+  /** Full-payload pipeline for text changelogs (`jsonl`): rows carry their
+    * payload through the dedup shuffle — text has no row index to refetch
+    * by.
     */
   private def startFull(trigger: Trigger): StreamingQuery = {
     import spark.implicits._
-    val events: org.apache.spark.sql.Dataset[ChangeEvent] = cfg.format match {
-      case "parquet" =>
-        bounded(spark.readStream.schema(ChangeEvent.schema))
-          .parquet(s"${cfg.logDir}/seg=*")
-          .withColumn("extra", coalesce(col("extra"), map()))
-          .as[ChangeEvent]
-      case "jsonl" =>
-        // raw text + codec ≙ the draethos kafka-source + codec path
-        // (`internal/source/kafka.go:130`, `internal/codec/{json,xml,
-        // yaml}.go`); a line that fails to decode becomes a DLQ-tagged
-        // event instead of being logged-and-dropped like the reference
-        // (`kafka.go:93-97`). json/xml decode through native expressions
-        // (codegen'd); yaml — which has no SQL expression — transcodes to
-        // JSON lines per partition and rides the same path, so malformed
-        // yaml reaches the DLQ as the original line too.
-        val raw0 = bounded(spark.readStream)
-          .text(s"${cfg.logDir}/seg=*")
-        val raw =
-          if (cfg.codec == "yaml") CdcJob.yamlToJsonLines(spark, raw0) else raw0
-        raw
-          .withColumn("__p", CdcJob.decodeEnvelope(cfg.codec, col("value")))
-          .select(
-            when(valid, col("__p.lsn")).otherwise(lit(0L)).as("lsn"),
-            when(valid, col("__p.op")).otherwise(lit(DlqOp)).as("op"),
-            coalesce(col("__p.ts"), lit(new java.sql.Timestamp(0))).as("ts"),
-            when(valid, col("__p.repo")).otherwise(lit("__dlq")).as("repo"),
-            when(valid, col("__p.path")).otherwise(md5(col("value"))).as("path"),
-            coalesce(col("__p.commit"), lit("")).as("commit"),
-            coalesce(col("__p.lang"), lit("")).as("lang"),
-            when(valid, coalesce(col("__p.content"), lit("")))
-              .otherwise(col("value")).as("content"),
-            coalesce(col("__p.extra"), map()).as("extra"))
-          .as[ChangeEvent]
-      case other =>
-        throw new IllegalArgumentException(s"changelog format $other not implemented")
-    }
+    if (cfg.format != "jsonl")
+      throw new IllegalArgumentException(s"changelog format ${cfg.format} not implemented")
+    // raw text + codec ≙ the draethos kafka-source + codec path
+    // (`internal/source/kafka.go:130`, `internal/codec/{json,xml,
+    // yaml}.go`); a line that fails to decode becomes a DLQ-tagged
+    // event instead of being logged-and-dropped like the reference
+    // (`kafka.go:93-97`). json/xml decode through native expressions
+    // (codegen'd); yaml — which has no SQL expression — transcodes to
+    // JSON lines per partition and rides the same path, so malformed
+    // yaml reaches the DLQ as the original line too.
+    val raw0 = bounded(spark.readStream)
+      .text(s"${cfg.logDir}/seg=*")
+    val raw =
+      if (cfg.codec == "yaml") CdcJob.yamlToJsonLines(spark, raw0) else raw0
+    val events = raw
+      .withColumn("__p", CdcJob.decodeEnvelope(cfg.codec, col("value")))
+      .select(
+        when(valid, col("__p.lsn")).otherwise(lit(0L)).as("lsn"),
+        when(valid, col("__p.op")).otherwise(lit(DlqOp)).as("op"),
+        coalesce(col("__p.ts"), lit(new java.sql.Timestamp(0))).as("ts"),
+        when(valid, col("__p.repo")).otherwise(lit("__dlq")).as("repo"),
+        when(valid, col("__p.path")).otherwise(md5(col("value"))).as("path"),
+        coalesce(col("__p.commit"), lit("")).as("commit"),
+        coalesce(col("__p.lang"), lit("")).as("lang"),
+        when(valid, coalesce(col("__p.content"), lit("")))
+          .otherwise(col("value")).as("content"),
+        coalesce(col("__p.extra"), map()).as("extra"))
+      .as[ChangeEvent]
 
     LsnDedup(events, cfg.dedupStateTtlMs).writeStream
       .queryName(s"graft-cdc-${cfg.checkpointId}")
@@ -288,20 +274,18 @@ class CdcJob(spark: SparkSession, cfg: CdcJobConfig) {
       .trigger(trigger)
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[ChangeEvent], batchId: Long) =>
         sinkBatch(batchId, () => batch.foreach(_ => ())) { () =>
-          if (cfg.format == "jsonl") {
-            // materialize once so the DLQ split doesn't re-execute the
-            // stateful upstream; parquet-format batches skip these jobs.
-            // Crash-replayed batches never reach here (sinkBatch gates on
-            // the ledger), so the DLQ stays exactly-once like the table.
-            val df = graft.util.Materialize.barrier(batch.toDF())
-            cfg.dlqDir.foreach { dir =>
-              df.filter(col("op") === DlqOp)
-                .select(col("content").as("raw"),
-                  current_timestamp().as("dlq_ts"))
-                .write.mode("append").parquet(dir)
-            }
-            df.filter(col("op") =!= DlqOp)
-          } else batch.toDF()
+          // materialize once so the DLQ split doesn't re-execute the
+          // stateful upstream. Crash-replayed batches never reach here
+          // (sinkBatch gates on the ledger), so the DLQ stays exactly-once
+          // like the table.
+          val df = graft.util.Materialize.barrier(batch.toDF())
+          cfg.dlqDir.foreach { dir =>
+            df.filter(col("op") === DlqOp)
+              .select(col("content").as("raw"),
+                current_timestamp().as("dlq_ts"))
+              .write.mode("append").parquet(dir)
+          }
+          df.filter(col("op") =!= DlqOp)
         }
       }
       .start()

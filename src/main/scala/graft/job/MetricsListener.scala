@@ -2,15 +2,13 @@ package graft.job
 
 import org.apache.spark.sql.streaming.StreamingQueryListener
 import java.util.concurrent.ConcurrentLinkedQueue
-import scala.jdk.CollectionConverters._
 
 /** Per-micro-batch throughput metrics — the analog of the reference's
-  * Prometheus endpoint (`internal/worker.go:93-108`), emitted as JSON
-  * lines per micro-batch and retained for BENCH artifacts.
+  * Prometheus endpoint (`internal/worker.go:93-108`), retained for the
+  * ops endpoint's counters and for BENCH artifacts.
   */
-class MetricsListener(verbose: Boolean = false) extends StreamingQueryListener {
-  final case class BatchMetric(
-      batchId: Long, inputRows: Long, durationMs: Long, rowsPerSec: Double)
+class MetricsListener extends StreamingQueryListener {
+  final case class BatchMetric(batchId: Long, inputRows: Long, durationMs: Long)
 
   val metrics = new ConcurrentLinkedQueue[BatchMetric]()
 
@@ -39,17 +37,11 @@ class MetricsListener(verbose: Boolean = false) extends StreamingQueryListener {
     val dur = Option(p.durationMs.get("triggerExecution"))
       .map(_.longValue).getOrElse(0L)
     if (p.numInputRows > 0 || dur > 0) {
-      val m = BatchMetric(p.batchId, p.numInputRows, dur,
-        if (dur > 0) p.numInputRows * 1000.0 / dur else 0.0)
+      val m = BatchMetric(p.batchId, p.numInputRows, dur)
       totalBatches.incrementAndGet()
       totalRows.addAndGet(p.numInputRows)
       lastBatchId.set(p.batchId)
       metrics.add(m)
-      if (verbose)
-        System.err.println(
-          s"""{"metric":"micro_batch","batchId":${m.batchId},""" +
-          s""""inputRows":${m.inputRows},"durationMs":${m.durationMs},""" +
-          s""""rowsPerSec":${"%.1f".format(m.rowsPerSec)}}""")
     }
   }
 

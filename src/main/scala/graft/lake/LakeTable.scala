@@ -513,7 +513,8 @@ class LakeTable(
     * the pathological distinct-payload case batching-independent too).
     *
     * Callers pass only rows that genuinely need resolution —
-    * `resolveSnapshot` routes single-file buckets around the window.
+    * `resolveFiles` routes single-file buckets around the window; the
+    * merge's minor compaction resolves each rewritten tail.
     */
   private def resolve(s: Snapshot, df: DataFrame): DataFrame =
     if (df.columns.isEmpty) df
@@ -544,11 +545,13 @@ class LakeTable(
     * @param batch   envelope rows: keyCols ++ value cols ++ lsn, op, extra
     * @param checkpointId identity of the writing stream (runId-agnostic)
     * @param batchId streaming micro-batch id (monotone per checkpoint)
-    * @param preReduced the caller guarantees at most one row per key (the
-    *   streaming dedup's winner-only emission) — skips the winner window
-    *   and its whole key-shuffle + sort. Safe even if a duplicate slipped
-    *   through: deltas are resolved max-`__lsn`-per-key (delete-wins tie)
-    *   at read, the same reduction the window performs eagerly.
+    * @param preReduced skips the winner window and its whole key-shuffle +
+    *   sort. PRECONDITION, not checked (a check would cost a Spark job):
+    *   `batch` holds at most one row per key. `CdcJob` meets it through
+    *   `LsnDedup`'s winner-only emission. Every reader relies on it: a
+    *   bucket referencing a single file is read without the window
+    *   (`resolveFiles`), and `lookup` bounds its candidates at one row
+    *   per file — a duplicate key in a delta is NOT resolved at read.
     */
   def merge(batch: DataFrame, checkpointId: String, batchId: Long,
       preReduced: Boolean = false): MergeStats = {
@@ -751,15 +754,11 @@ class LakeTable(
       if (tails.isEmpty) (grown, Nil, Nil)
       else {
         val rewriteRel = s"data/v$newVersion/rewrite"
-        val resolveW = Window.partitionBy(keyCols.map(col): _*)
-          .orderBy(col(LsnMeta).desc, col(DeletedMeta).desc)
         val afterSnapshot = cur.copy(schemaDdl = newSchema.toDDL)
-        liftDrift(afterSnapshot,
+        resolve(afterSnapshot, liftDrift(afterSnapshot,
             readFiles(extendedSchema(afterSnapshot, newSchema),
-              tails.values.flatten.map(_.path).toSeq))
+              tails.values.flatten.map(_.path).toSeq)))
           .withColumn("__bucket", bucketExpr)
-          .withColumn("__mrn", row_number().over(resolveW))
-          .filter(col("__mrn") === 1).drop("__mrn")
           .repartition(tails.size, col("__bucket"))
           .write.mode(SaveMode.Overwrite)
           .partitionBy("__bucket")

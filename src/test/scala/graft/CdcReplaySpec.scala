@@ -42,31 +42,6 @@ class CdcReplaySpec extends SparkSpec {
     assert(diff === 0L, s"$diff differing rows vs oracle")
   }
 
-  test("carry=full and carry=skinny pipelines converge to identical state") {
-    // Same log through both dedup-shuffle shapes (full payload vs
-    // (file, row-index) handle + refetch): final table state must be
-    // bit-identical — the carry knob is a performance choice, never a
-    // semantics choice.
-    val cfg = ChangeLogGenerator.Config(nEvents = 8000L, nRepos = 40,
-      pathsPerRepo = 10, numSegments = 6)
-    val logDir = tmpDir("carrylog")
-    ChangeLogGenerator.writeSegments(spark, logDir, cfg)
-    def replay(carry: String) = {
-      val job = CdcJob(spark, CdcJobConfig(
-        logDir = logDir, tablePath = tmpDir(s"carrylake-$carry"),
-        checkpointDir = tmpDir(s"carryckpt-$carry"),
-        maxFilesPerTrigger = 2, carry = carry, checkpointId = s"carry-$carry"))
-      job.runToCompletion()
-      job.lake.read().select(col("repo"), col("path"), col("commit"),
-        col("lang"), sha2(col("content"), 256).as("sha"))
-    }
-    val skinny = replay("skinny")
-    val full = replay("full")
-    assert(skinny.count() > 0)
-    val diff = skinny.exceptAll(full).count() + full.exceptAll(skinny).count()
-    assert(diff === 0L, s"$diff rows differ between carry modes")
-  }
-
   test("byte-bounded micro-batches (maxBytesPerTrigger) converge to the oracle") {
     val cfg = ChangeLogGenerator.Config(nEvents = 10000L, nRepos = 40,
       pathsPerRepo = 20, numSegments = 8)
