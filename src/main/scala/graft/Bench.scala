@@ -1,557 +1,110 @@
 package graft
 
-import graft.job.{CdcJob, CdcJobConfig, MetricsListener}
-import graft.log.ChangeLogGenerator
 import graft.util.Sessions
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Benchmark main (driver contract). Three parts:
+/** Query-suite timer. The CDC replay benchmark is `perfbench/run.py`.
   *
-  *  1. **North metric**: end-to-end CDC replay throughput (events/sec to
-  *     exact final-state convergence) at two parallelism levels — N and
-  *     4N worker threads (`local[N]` vs `local[4N]`), each replay in a
-  *     fresh child JVM on the identical input — plus scaling efficiency
-  *     = (rate_4N / rate_N) / 4 (BASELINE.md / BENCH.md protocol).
-  *  2. Incremental-merge profile (per-batch merge latency vs table size).
-  *  3. Headline operator timings on `SPARK_GRAFT_SF_DIR`.
-  *
-  * Prints ONE JSON line with the driver-required keys
-  * (metric/value/unit/queries/sf) plus a `cdc_replay` object, and writes
-  * the same line to BENCH_LATEST.json.
+  * Usage: `sbt "runMain graft.Bench [reps] [query ...]"` — one warm-up
+  * pass of every `SparkEntry.queries` entry on the `sf0.001` directory
+  * next to `SPARK_GRAFT_SF_DIR`, then `reps` (default 1) timed passes of
+  * the named queries (default all) on `SPARK_GRAFT_SF_DIR`. Prints ONE
+  * JSON line with the keys metric/value/unit/queries/sf (`queries` holds
+  * each query's minimum, `value` their sum) plus each query's median
+  * under `queries_median`, and writes the same line to
+  * `SPARK_GRAFT_BENCH_OUT` (default BENCH_LATEST.json).
   */
 object Bench {
 
-  /** Bench storage root. This VM's virtio disk throttles from 258 MB/s to
-    * ~12 MB/s once burst credits exhaust (measured), which swamps any
-    * compute signal; tmpfs gives NVMe-class, steady storage — the realistic
-    * analog of local SSD shuffle volumes on a production executor.
-    */
-  private val shmRoot: String = {
-    val shm = new java.io.File("/dev/shm")
-    if (shm.isDirectory && shm.canWrite) "/dev/shm" else "/tmp"
-  }
+  type Query = (SparkSession, String) => DataFrame
 
-  /** The shared session recipe (`Sessions.local`: `local[cores]`,
-    * cores shuffle partitions, RocksDB state) plus the bench's measurement
-    * settings. Every level is worker threads in ONE JVM; the replay levels
-    * each get a fresh child JVM (`replayIsolated`).
+  /** The shared session recipe (`Sessions.local`) plus the bench's
+    * measurement settings.
     */
-  private def session(cores: Int, name: String): SparkSession = {
-    val s = Sessions.local(cores, name)
-      // one RocksDB get per put just to maintain a row-count metric —
-      // measured in allUpdatesTimeMs on every batch; the dedup state
-      // needs no exact row count
-      .config("spark.sql.streaming.stateStore.rocksdb.trackTotalNumberOfRows",
-        "false")
-      // background snapshot maintenance off the timed window: the default
-      // 60 s interval lands a full-snapshot upload mid-replay, and its
-      // fsyncs contend with the per-batch changelog commits on the
-      // hypervisor's serialized fsync path (measured: 9-10 s commit
-      // fsync on the batches it collides with vs 1-3 s clean). On a real
-      // cluster maintenance IO rides each executor's own disk/network;
-      // one box serializes them.
-      .config("spark.sql.streaming.stateStore.maintenanceInterval", "600s")
-      .config("spark.local.dir", s"$shmRoot/graft-spark-local")
-      // scan parallelism must come from row-group splits, not file count:
-      // a micro-batch holds maxFilesPerTrigger files, and with the default
-      // 128 MB partition size that caps the heaviest stage (scan + combine)
-      // at ~4 tasks — the 4N level would idle 3/4 of its cores
+  private def session(): SparkSession = {
+    val s = Sessions.local(Sessions.cpus, "graft-bench-queries")
+      // shuffle and spill scratch on tmpfs: the bench host's virtio disk
+      // throttles from 258 MB/s to ~12 MB/s once its burst credits run
+      // out (BENCH.md "Environment facts"), which times the disk
+      .config("spark.local.dir", s"${SparkEntry.scratchRoot}/graft-spark-local")
+      // each sf table is one parquet file, so scan parallelism must come
+      // from row-group splits; the default 128 MB partition size caps a
+      // table's scan at a few tasks
       .config("spark.sql.files.maxPartitionBytes", (16 * 1024 * 1024).toString)
-      // checkpoint checksum sidecar files triple small-file IO and added
-      // 2-4x wall to stateful micro-batches (measured); lineage integrity
-      // is covered by the lake's own atomic snapshot commit
-      .config("spark.sql.streaming.checkpoint.fileChecksum.enabled", "false")
-      // Off-heap parquet column vectors: the 4N level shares ONE heap
-      // across all worker threads, so its allocation rate into the shared
-      // collector is 4x the N level's — measured: the scan+combine stage
-      // burns 1.6-1.8x the CPU per row at 16 threads vs 4, with
-      // intermittent GC storms. The vectorized reader's column batches
-      // are the biggest short-lived bulk allocation; off-heap vectors
-      // take them out of GC (measured: scan-stage CPU 58-70 -> 41-57
-      // core-s/batch at 16 threads). Full off-heap EXECUTION memory
-      // (spark.memory.offHeap) measured far worse here — the stateful
-      // sort's off-heap pages hit the hypervisor's first-touch throttle
-      // every batch (2-6x stateful-stage CPU + 2 min GC) — so only the
-      // vectors move off-heap.
+      // parquet column batches are the biggest short-lived bulk
+      // allocation; off-heap vectors take them out of GC (measured on the
+      // CDC replay's scan stage, where it cut scan CPU by about a quarter)
       .config("spark.sql.columnVector.offheap.enabled", "true")
-      // Byte-frugal shuffle. Storage bytes are the scarce resource twice
-      // over: on a real cluster shuffle bytes are network; on THIS box the
-      // hypervisor throttles first-touch page provisioning to ~13 MB/s
-      // (measured: dd to tmpfs 13 MB/s fresh vs 618-949 MB/s on recycled
-      // pages — BENCH.md "Host page throttle"), so every shuffle byte
-      // written to a fresh page costs ~50x a recycled one.
-      //  - zstd halves shuffle/spill bytes vs lz4 on this envelope data;
+      // zstd halves shuffle/spill bytes vs lz4
       .config("spark.io.compression.codec", "zstd")
-      //  - the bypass writer writes partition files then CONCATENATES them
-      //    into the final map output - every shuffle byte hits storage
-      //    twice; forcing the serialized (Unsafe) writer buffers in
-      //    execution memory and writes once;
+      // the bypass writer writes partition files then CONCATENATES them
+      // into the final map output - every shuffle byte hits storage
+      // twice; forcing the serialized (Unsafe) writer buffers in
+      // execution memory and writes once
       .config("spark.shuffle.sort.bypassMergeThreshold", "1")
-      //  - shuffle files of completed micro-batches are deleted only when
-      //    their ShuffleDependency is GC'd (default periodic GC 30 min -
-      //    an entire replay's shuffles pile up); a 60s cadence recycles
-      //    their pages while the replay still runs.
+      // shuffle files are deleted only when their ShuffleDependency is
+      // GC'd (default periodic GC 30 min); a 60 s cadence frees them
+      // while the suite still runs
       .config("spark.cleaner.periodicGC.interval", "60s")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
   }
 
-  /** One full CDC replay at the given core count on `spark`; returns
-    * (events, secs, per-batch metrics).
+  /** Runs each query of `queries` on `dir` `reps` times, in name order,
+    * and returns its wall seconds per pass. Each run forces full column
+    * materialization through a noop-format write (`count()` lets column
+    * pruning delete the measured work, e.g. csv_md5_key never computed
+    * its md5 under count()). A query that throws stops the run with an
+    * error that names it.
     */
-  private def replayHere(spark: SparkSession, cores: Int, logDir: String,
-      workDir: String): (Long, Double, Seq[(Long, Long, Long)]) = {
-    val listener = new MetricsListener()
-    spark.streams.addListener(listener)
-    // Bound each micro-batch by BYTES, not file count: log segments are
-    // single ~uniform files, so a fixed maxFilesPerTrigger ties batch
-    // size to TOTAL log size — at 40M events (16 × 718 MB segments) one
-    // trigger ingested the whole 12 GB log as a single batch inside what
-    // was then a 12 GiB child heap (now 20 GiB — see replayIsolated),
-    // and the replay collapsed into a GC/spill storm
-    // (measured: 582 s @16 vs 162 s for the same log with bounded
-    // batches in a big heap). No streaming job should ingest its entire
-    // backlog as one micro-batch — bounded batches are the backpressure
-    // analog of the reference's batchSize (`pgsql.go:120-125`).
-    // ~6 GB of parquet (~20M events) per batch: large enough that the
-    // per-batch fixed floor (planning, per-fsync hypervisor latency on
-    // offset WAL + state changelog commits, bucketed-write task overhead
-    // — ~1.5-2.5 s measured at 16 cores) stays small against per-batch
-    // work at BOTH levels; memory-safe because the skinny pipeline never
-    // materializes payloads through the dedup shuffle (the r2 3 GB bound
-    // protected a localCheckpoint of the FULL batch, which no longer
-    // exists)
-    // 6e9 measured WORSE at 16 threads (single shared heap: the scan
-    // stage alone paid 22 s of GC on a 23M-row batch; a real cluster's
-    // per-executor heaps would absorb it, one JVM's collector does not)
-    val targetBatchBytes = sys.env.get("SPARK_GRAFT_BATCH_BYTES")
-      .map(_.toLong).getOrElse(3000000000L)
-    // balance triggers so no near-empty straggler batch pays a full
-    // planning/state-commit floor: pick the batch COUNT from the byte
-    // budget, then divide the log evenly — e.g. an 11.6 GB log at a 3 GB
-    // budget runs 4 × 2.9 GB batches, not 3 × 3 GB + one 1.6 GB tail.
-    val totalBytes = segmentFileSizes(logDir).sum
-    val balancedBytes =
-      if (totalBytes <= 0) targetBatchBytes
-      else {
-        val nBatches = math.max(1,
-          math.ceil(totalBytes.toDouble / targetBatchBytes).toLong)
-        // +1% slack: the source takes files only while they FIT under the
-        // cap (takeFilesUntilMax), so an exact divide can round the last
-        // just-fitting file into the next batch and recreate the straggler
-        totalBytes / nBatches + totalBytes / nBatches / 100
+  def timeQueries(spark: SparkSession, dir: String, queries: Map[String, Query],
+      reps: Int): Map[String, Seq[Double]] = {
+    val names = queries.keys.toSeq.sorted
+    val passes = Seq.fill(reps) {
+      names.map { name =>
+        val t0 = System.nanoTime()
+        try queries(name)(spark, dir).write.format("noop").mode("overwrite").save()
+        catch { case e: Exception =>
+          throw new RuntimeException(s"query $name failed on $dir: ${e.getMessage}", e) }
+        (System.nanoTime() - t0) / 1e9
       }
-    val cfg = CdcJobConfig(
-      logDir = logDir,
-      tablePath = s"$workDir/lake$cores",
-      checkpointDir = s"$workDir/ckpt$cores",
-      numBuckets = 64,
-      maxBytesPerTrigger = Some(balancedBytes),
-      checkpointId = s"bench$cores")
-    val job = CdcJob(spark, cfg)
-    val t0 = System.nanoTime()
-    job.runToCompletion()
-    // convergence barrier: the metric is to *final state*, so include the
-    // visible read of the result
-    val rows = job.lake.read().count()
-    val secs = (System.nanoTime() - t0) / 1e9
-    require(rows > 0, "empty final state")
-    val ms = listener.drain()
-    // throughput denominator = raw change events consumed (incl. dups)
-    val events = ms.map(_.inputRows).sum
-    spark.streams.removeListener(listener)
-    (events, secs, ms.map(m => (m.batchId, m.inputRows, m.durationMs)))
-  }
-
-  /** Run one replay in a fresh, cold child JVM — both parallelism levels
-    * get identical conditions (no shared JIT warm-up, GC debt, or state
-    * store maintenance threads from earlier runs — the in-JVM variant
-    * showed ±2x cross-contamination between consecutive sessions).
-    */
-  private def replayIsolated(cores: Int, logDir: String, workDir: String,
-      warmLog: String): (Long, Double, Seq[(Long, Long, Long)]) = {
-    val javaBin = s"${System.getProperty("java.home")}/bin/java"
-    val jvmArgs = java.lang.management.ManagementFactory
-      .getRuntimeMXBean.getInputArguments
-    val cmd = new java.util.ArrayList[String]()
-    cmd.add(javaBin)
-    // fixed, moderate heap: big enough for a ~3 GB-parquet micro-batch's
-    // localCheckpoint blocks, small enough to avoid the hypervisor's
-    // page-fault pathology (AlwaysPreTouch at 48 GiB = 322 CPU-min of
-    // kernel time, measured); children run one at a time, so 20g is
-    // never multiplied
-    jvmArgs.forEach(a => if (!a.startsWith("-Xmx") && !a.startsWith("-Xms")) cmd.add(a))
-    cmd.add("-Xmx20g")
-    // NO -Xms/-XX:+AlwaysPreTouch: committing the heap upfront makes G1
-    // touch heap-wide metadata at JVM start, which under the hypervisor's
-    // throttled first-touch page provisioning costs MINUTES (measured:
-    // -Xms20g slowed every replay ~6x, -Xms48g+pretouch cost 322 CPU-min).
-    // The 4M-event warm-up replay grows and recycles the heap off-clock
-    // instead — and MaxHeapFreeRatio=100 stops G1 from UNCOMMITTING what
-    // the warm-up grew (default 70 shrinks the heap after idle GC cycles,
-    // so the timed replay would re-fault those pages mid-batch at the
-    // throttled first-touch rate: the intermittent 10-25 s GC storms on
-    // otherwise-identical batches).
-    cmd.add("-XX:MaxHeapFreeRatio=100")
-    // GC parallelism follows the level's compute parallelism — on a real
-    // cluster a 4N-executor fleet brings 4x the GC threads of N, and a
-    // fixed count turns the higher level into a GC benchmark (measured:
-    // 64 s of GC at 16 worker threads with 8 GC threads vs 22-28 s with 16)
-    cmd.add(s"-XX:ParallelGCThreads=${math.max(cores, 4)}")
-    cmd.add("-cp"); cmd.add(System.getProperty("java.class.path"))
-    cmd.add("graft.Bench")
-    cmd.add("__replay"); cmd.add(cores.toString); cmd.add(logDir)
-    cmd.add(workDir); cmd.add(warmLog)
-    val pb = new ProcessBuilder(cmd)
-    pb.redirectErrorStream(false)
-    pb.redirectError(ProcessBuilder.Redirect.INHERIT)
-    val p = pb.start()
-    val out = new String(p.getInputStream.readAllBytes())
-    val code = p.waitFor()
-    require(code == 0, s"isolated replay at $cores cores failed (exit $code)")
-    val line = out.linesIterator.find(_.startsWith("__REPLAY_RESULT ")).getOrElse(
-      throw new IllegalStateException(s"no result line in child output: $out"))
-    val parts = line.split(" ", 4)
-    val batches = parts(3).split(";").filter(_.nonEmpty).toSeq.map { b =>
-      val Array(x, y, z) = b.split(","); (x.toLong, y.toLong, z.toLong)
     }
-    (parts(1).toLong, parts(2).toDouble, batches)
+    names.zip(passes.transpose).toMap
   }
-
-  /** One interleaved-protocol replay sample plus the host-weather probes
-    * taken immediately before it.
-    */
-  private final case class Rep(
-      cores: Int, events: Long, secs: Double,
-      batches: Seq[(Long, Long, Long)],
-      probeMbps: Double, probeCpuMs: Double) {
-    def rate: Double = events / secs
-  }
-
-  /** Fresh-page storage-provisioning probe — the resource this hypervisor
-    * throttles in sustained bursts (BENCH.md "Host page throttle";
-    * measured healthy 0.6–2.7 GB/s vs ~13 MB/s throttled). Writes up to
-    * 512 MB of NEW tmpfs pages (large enough to outrun the recycled-page
-    * pool and hit first-touch provisioning) with a 3 s budget so a
-    * throttled probe costs seconds, not minutes. The result is recorded
-    * per rep in the bench JSON: it lets a reader tell a throttled sample
-    * from a slow engine WITHOUT re-running anything — the round-4 official
-    * artifact's 0.759 had exactly this ambiguity.
-    */
-  private def probeStorageMbps(): Double = {
-    val f = new java.io.File(s"$shmRoot/graft-probe-${System.nanoTime()}")
-    val buf = new Array[Byte](8 * 1024 * 1024)
-    java.util.Arrays.fill(buf, 7.toByte)
-    val budgetNs = 3000000000L
-    val out = new java.io.FileOutputStream(f)
-    val t0 = System.nanoTime()
-    var written = 0L
-    try {
-      var i = 0
-      while (i < 64 && System.nanoTime() - t0 < budgetNs) {
-        out.write(buf); written += buf.length; i += 1
-      }
-      out.getFD.sync()
-    } finally { out.close(); f.delete(); () }
-    val secs = math.max((System.nanoTime() - t0) / 1e9, 1e-6)
-    written / 1e6 / secs
-  }
-
-  /** Single-thread CPU probe (fixed work, ~100-300 ms unconteded): bursty
-    * CPU steal inflates it. Reported per rep; a rep whose probe is far
-    * above the session minimum ran contended.
-    */
-  private def probeCpuMs(): Double = {
-    var acc = 0x9E3779B97F4A7C15L
-    val t0 = System.nanoTime()
-    var i = 0L
-    while (i < 200000000L) {
-      acc = (acc ^ i) * 0xC2B2AE3D27D4EB4FL
-      acc ^= (acc >>> 31)
-      i += 1
-    }
-    if (acc == 42L) System.err.println("") // keep the loop un-eliminable
-    (System.nanoTime() - t0) / 1e6
-  }
-
-  /** Rep throttle flag for the JSON sentinel: storage probe below
-    * 200 MB/s (healthy ≥ ~600, throttled ~13 — a wide, stable split) or
-    * CPU probe ≥ 2x the session's best.
-    */
-  private def throttled(r: Rep, minCpuMs: Double): Boolean =
-    r.probeMbps < 200.0 || r.probeCpuMs > 2.0 * minCpuMs
 
   def main(args: Array[String]): Unit = {
-    if (args.headOption.contains("__replay")) {
-      // child-JVM mode: warm-up replay on the small log (JIT, codegen,
-      // class loading — steady-state protocol), then one timed replay on
-      // the same session.
-      val cores = args(1).toInt
-      val warmLog = args(4)
-      val spark = session(cores, s"graft-bench-replay-$cores")
-      replayHere(spark, cores, warmLog, args(3) + "/warm")
-      val (events, secs, batches) = replayHere(spark, cores, args(2), args(3))
-      spark.stop()
-      println(s"__REPLAY_RESULT $events $secs " +
-        batches.map { case (a, b, c) => s"$a,$b,$c" }.mkString(";"))
-      return
-    }
+    val reps = args.headOption.map(_.toInt).getOrElse(1)
+    require(reps >= 1, s"reps must be at least 1, got $reps")
+    val names = args.drop(1).toSet
+    val unknown = names.filterNot(SparkEntry.queries.contains)
+    require(unknown.isEmpty, s"unknown queries: ${unknown.toSeq.sorted.mkString(", ")}")
+    val timed =
+      if (names.isEmpty) SparkEntry.queries
+      else SparkEntry.queries.filter { case (n, _) => names.contains(n) }
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = Sessions.cpus
-    val nEvents = sys.env.getOrElse("SPARK_GRAFT_CDC_EVENTS", "40000000").toLong
-    val mode = sys.env.getOrElse("SPARK_GRAFT_BENCH_MODE", "all") // all|cdc|queries
-    val workDir = java.nio.file.Files.createTempDirectory(
-      java.nio.file.Paths.get(shmRoot), "graftbench").toString
-    val logDir = s"$workDir/log"
+    val spark = session()
+    val samples =
+      try {
+        // warm-up pass (codegen, session, broadcast machinery — round 1's
+        // alphabetically-first query absorbed all of it)
+        timeQueries(spark, java.nio.file.Paths.get(sfDir).resolveSibling("sf0.001").toString,
+          SparkEntry.queries, 1)
+        timeQueries(spark, sfDir, timed, reps)
+      } finally spark.stop()
 
-    var allReps = Vector.empty[Rep]
-    var extraPairs = 0
-    // N and 4N worker threads. Both levels must sit inside the machine's
-    // LINEAR region, or the ratio measures the box, not the job. Measured
-    // saturation curve for this pipeline (40M-event replay, same input,
-    // warmed child JVMs): 2 threads 173k events/s, 4: 405k, 8: 704k,
-    // 16: 766k — the box tops out around 8-10 threads (memory bandwidth +
-    // shared-heap GC: identical scan stages burn 1.4x the CPU per row at
-    // 16 threads vs 4; the hypervisor also only provides ~24-27 bursty
-    // vCPUs of the 32 advertised). So N=2 / 4N=8 is the honest pair; the
-    // 4/16 pair is reported in BENCH.md as the saturated-region
-    // comparison. SPARK_GRAFT_BENCH_N overrides.
-    val nCores = sys.env.getOrElse("SPARK_GRAFT_BENCH_N", "2").toInt
-    val n4Cores = nCores * 4
-    if (mode != "queries") {
-      // phase 0: synthesize the bench change log once (not timed as
-      // replay), plus a small warm-up log for steady-state measurement.
-      // The log is a pure function of (seed, config), so it is cached on
-      // tmpfs across bench invocations within this boot.
-      val cachedLog = s"$shmRoot/graft-benchlog-$nEvents-s42-rg16"
-      val cachedWarm = s"$shmRoot/graft-benchlog-warm12m-s42-rg16"
-      def haveMarker(d: String) = new java.io.File(s"$d/_GRAFT_DONE").isFile
-      def mark(d: String) =
-        java.nio.file.Files.writeString(java.nio.file.Paths.get(s"$d/_GRAFT_DONE"), "ok")
-      if (!haveMarker(cachedLog) || !haveMarker(cachedWarm)) {
-        val gen = session(cpus, "graft-bench-gen")
-        if (!haveMarker(cachedLog)) {
-          rmTree(new java.io.File(cachedLog))
-          ChangeLogGenerator.writeSegments(gen, cachedLog, ChangeLogGenerator.Config(
-            nEvents = nEvents, nRepos = 500, pathsPerRepo = 200,
-            // ~2.5M events (~720 MB parquet) per segment at any log size
-            numSegments = math.max(4, (nEvents / 2500000L).toInt),
-            zipfExponent = 2.0))
-          mark(cachedLog)
-        }
-        if (!haveMarker(cachedWarm)) {
-          rmTree(new java.io.File(cachedWarm))
-          // 12M events (~3.4 GB ≈ ONE timed micro-batch): the warm-up
-          // replay must grow the child's working set — heap, JIT, AND
-          // shuffle/scratch pages — to the TIMED batch size. A 4M-event
-          // warm-up left the first timed batches paying 80-150 core-s of
-          // off-CPU block (stage profile run≫cpu) provisioning the
-          // remaining shuffle pages against the hypervisor's throttled
-          // first-touch path; with the working set pre-grown the first
-          // batch runs like the steady-state ones.
-          ChangeLogGenerator.writeSegments(gen, cachedWarm, ChangeLogGenerator.Config(
-            nEvents = 12000000, nRepos = 500, pathsPerRepo = 200,
-            numSegments = 4, zipfExponent = 2.0))
-          mark(cachedWarm)
-        }
-        gen.stop()
-      }
-      val warmLog = cachedWarm
-
-      // phase 1+2: identical cold-JVM, warmed-up replays at N and 4N
-      // threads, interleaved and repeated — this VM's CPU steal is bursty
-      // (single runs vary +-2x), so the per-level minimum over interleaved
-      // reps estimates uncontended capability for both levels equally.
-      // The 4N level gets EXTRA reps: its wall is ~4x shorter, so one
-      // steal burst corrupts a 4N sample far more than an N sample (a
-      // 20 s burst is ~60% of a 33 s run but ~17% of a 115 s run) — the
-      // min estimator needs more samples exactly where per-sample
-      // corruption is likeliest. Measured r4: 4N reps spread 40.8-62.6 s
-      // (1.5x) within one throttled protocol run while N spread 9%.
-      val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt
-      val reps4N = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS_4N",
-        (reps + 2).toString).toInt
-      def one(cores: Int, tag: String): Rep = {
-        // host-weather probes IMMEDIATELY before the sample, so every rep
-        // in the artifact carries its own throttle evidence
-        val mbps = probeStorageMbps()
-        val cpu = probeCpuMs()
-        val d = s"$workDir/r$cores-$tag"
-        val r = replayIsolated(cores, cachedLog, d, warmLog)
-        rmTree(new java.io.File(d)) // keep tmpfs bounded across reps
-        System.err.println(f"[bench] rep cores=$cores secs=${r._2}%.1f " +
-          f"probe_mbps=$mbps%.0f probe_cpu_ms=$cpu%.0f")
-        Rep(cores, r._1, r._2, r._3, mbps, cpu)
-      }
-      (0 until math.max(reps, reps4N)).foreach { i =>
-        if (i < reps) allReps :+= one(nCores, s"i$i")
-        if (i < reps4N) allReps :+= one(n4Cores, s"i$i")
-      }
-      // SELF-DEFENDING EXTENSION: the per-level minimum is a monotone
-      // estimator of uncontended capability (steal/throttle only ever ADD
-      // time), so extra interleaved pairs strictly improve it — never bias
-      // it. When the pooled estimate lands under the north bar AND the
-      // probes show the session ran through a throttle burst, take up to
-      // SPARK_GRAFT_BENCH_EXTRA (3) more N + 2x4N pair rounds rather than
-      // recording weather as the engine's number (the round-4 official
-      // artifact did exactly that: 0.759 recorded while 8 of 9 in-session
-      // protocol runs measured 0.78-0.91). Every sample — initial and
-      // extension — is recorded in the JSON with its probes.
-      def minAt(c: Int) = allReps.filter(_.cores == c).map(_.secs).min
-      def effNow: Double =
-        (allReps.find(_.cores == n4Cores).get.events / minAt(n4Cores)) /
-          (allReps.find(_.cores == nCores).get.events / minAt(nCores)) / 4.0
-      val effTarget = sys.env.getOrElse("SPARK_GRAFT_EFF_TARGET", "0.8").toDouble
-      val maxExtra = sys.env.getOrElse("SPARK_GRAFT_BENCH_EXTRA", "3").toInt
-      while (effNow < effTarget && extraPairs < maxExtra) {
-        extraPairs += 1
-        System.err.println(f"[bench] efficiency ${effNow}%.3f < $effTarget%.2f " +
-          s"after ${allReps.size} reps - extension pass $extraPairs/$maxExtra")
-        allReps :+= one(nCores, s"x$extraPairs")
-        allReps :+= one(n4Cores, s"x$extraPairs-a")
-        allReps :+= one(n4Cores, s"x$extraPairs-b")
-      }
-      System.err.println(s"[bench] replay secs " +
-        s"local$nCores=${allReps.filter(_.cores == nCores)
-          .map(r => f"${r.secs}%.1f").mkString(",")} " +
-        s"local$n4Cores=${allReps.filter(_.cores == n4Cores)
-          .map(r => f"${r.secs}%.1f").mkString(",")}")
-    }
-    val bestN = allReps.filter(_.cores == nCores).minByOption(_.secs)
-    val best4N = allReps.filter(_.cores == n4Cores).minByOption(_.secs)
-    val (ev8, t8) = bestN.map(r => (r.events, r.secs)).getOrElse((0L, 1.0))
-    val (ev32, t32) = best4N.map(r => (r.events, r.secs)).getOrElse((0L, 1.0))
-    val m32: Seq[(Long, Long, Long)] = best4N.map(_.batches).getOrElse(Nil)
-    val rate8 = ev8 / t8
-    val rate32 = ev32 / t32
-    // 0.0 (not NaN — invalid JSON) when the replay phases were skipped
-    val eff = if (rate8 > 0) (rate32 / rate8) / 4.0 else 0.0
-    // throttle sentinel: per-rep probe evidence + session-level flags
-    val minCpu = if (allReps.isEmpty) 0.0 else allReps.map(_.probeCpuMs).min
-    val throttledCount = allReps.count(r => throttled(r, minCpu))
-    val repsJson = allReps.map { r =>
-      f"""{"cores":${r.cores},"secs":${r.secs}%.2f,""" +
-        f""""probe_mbps":${r.probeMbps}%.0f,"probe_cpu_ms":${r.probeCpuMs}%.0f,""" +
-        s""""throttled":${throttled(r, minCpu)}}"""
-    }.mkString("[", ",", "]")
-
-    // phase 2.5: incremental-merge profile — many small micro-batches
-    // (maxFilesPerTrigger=1 over 16 segments) against a growing table;
-    // merge-on-read keeps per-batch time flat as the table grows (the
-    // copy-on-write shape grew linearly: each batch re-wrote every
-    // touched bucket). Reported as first-half vs second-half mean ms.
-    val incremental =
-      if (mode == "queries") ""
-      else {
-        val incLog = s"$shmRoot/graft-benchlog-inc2m-s42-rg16"
-        if (!new java.io.File(s"$incLog/_GRAFT_DONE").isFile) {
-          rmTree(new java.io.File(incLog))
-          val gen = session(cpus, "graft-bench-gen-inc")
-          ChangeLogGenerator.writeSegments(gen, incLog, ChangeLogGenerator.Config(
-            nEvents = 2000000, nRepos = 500, pathsPerRepo = 200,
-            numSegments = 16, zipfExponent = 2.0))
-          gen.stop()
-          java.nio.file.Files.writeString(
-            java.nio.file.Paths.get(s"$incLog/_GRAFT_DONE"), "ok")
-        }
-        val spark = session(n4Cores, "graft-bench-incremental")
-        val listener = new MetricsListener()
-        spark.streams.addListener(listener)
-        val job = CdcJob(spark, CdcJobConfig(
-          logDir = incLog, tablePath = s"$workDir/inclake",
-          checkpointDir = s"$workDir/incckpt", numBuckets = 64,
-          maxFilesPerTrigger = 1, checkpointId = "inc"))
-        job.runToCompletion()
-        val ms = listener.drain().filter(_.inputRows > 0)
-          .map(m => (m.batchId, m.inputRows, m.durationMs))
-        spark.streams.removeListener(listener)
-        spark.stop()
-        val half = ms.length / 2
-        def mean(xs: Seq[(Long, Long, Long)]) =
-          if (xs.isEmpty) 0.0 else xs.map(_._3).sum.toDouble / xs.length
-        val batches = ms.map { case (id, rows, d) =>
-          s"""{"batchId":$id,"rows":$rows,"ms":$d}""" }.mkString("[", ",", "]")
-        f""","incremental_merge":{"batches":$batches,""" +
-          f""""first_half_mean_ms":${mean(ms.take(half))}%.0f,""" +
-          f""""second_half_mean_ms":${mean(ms.drop(half))}%.0f}"""
-      }
-
-    // phase 3: headline operator timings on the sf tables. A warm-up pass
-    // at sf0.001 first (codegen, session, broadcast machinery — round-1's
-    // alphabetically-first query absorbed all of it); timed runs force
-    // full column materialization through a noop-format write (count()
-    // lets column pruning delete the measured work, e.g. csv_md5_key
-    // never computed its md5 under count()).
-    var queryProbes = ""
-    val results =
-      if (mode == "cdc") Seq.empty[(String, Double)]
-      else {
-        val before = probeStorageMbps()
-        val spark = session(cpus, "graft-bench-queries")
-        def runOnce(dir: String, name: String,
-            fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Unit =
-          try fn(spark, dir).write.format("noop").mode("overwrite").save()
-          catch { case _: Throwable => () }
-        val ordered = SparkEntry.queries.toSeq.sortBy(_._1)
-        ordered.foreach { case (n, fn) => runOnce("/root/testdata/sf0.001", n, fn) }
-        val rs = ordered.map { case (name, fn) =>
-          val t0 = System.nanoTime()
-          runOnce(sfDir, name, fn)
-          name -> (System.nanoTime() - t0) / 1e9
-        }
-        spark.stop()
-        // throttle evidence for the QUERY phase too: a burst here shows up
-        // as untouched pure-scan queries regressing together (the r4 run-1
-        // artifact's 6-10x sample_stratified spike) — the probes let a
-        // reader confirm that from the artifact alone
-        val after = probeStorageMbps()
-        queryProbes =
-          f""","query_probe_mbps":[$before%.0f,$after%.0f]"""
-        rs
-      }
-
-    val qs = results.map { case (k, v) => "\"" + k + f"\":$v%.3f" }
-      .mkString("{", ",", "}")
-    val total = results.map(_._2).sum
-    val batches = m32.map { case (id, rows, ms) =>
-      s"""{"batchId":$id,"rows":$rows,"ms":$ms}""" }
-      .mkString("[", ",", "]")
-    val cdc =
-      f"""{"events":$nEvents,"n_cores":$nCores,"n4_cores":$n4Cores,""" +
-      f""""consumed_n":$ev8,"consumed_4n":$ev32,""" +
-      f""""secs_localN":$t8%.2f,"secs_local4N":$t32%.2f,""" +
-      f""""eps_localN":$rate8%.0f,"eps_local4N":$rate32%.0f,""" +
-      f""""scaling_efficiency":$eff%.3f,""" +
-      s""""reps":$repsJson,"throttled_reps":$throttledCount,""" +
-      s""""extension_passes":$extraPairs,""" +
-      f""""micro_batches_local4N":$batches""" +
-      incremental + "}"
+    def perQuery(stat: Seq[Double] => Double): String =
+      samples.toSeq.sortBy(_._1).map { case (n, xs) => "\"" + n + f"\":${stat(xs)}%.3f" }
+        .mkString("{", ",", "}")
+    val total = samples.values.map(_.min).sum
     val json =
-      f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":$qs,""" +
-      f""""sf":"$sfDir"$queryProbes,"cdc_replay":$cdc}"""
+      f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":${perQuery(_.min)},""" +
+      s""""sf":"$sfDir","queries_median":${perQuery(xs => xs.sorted.apply(xs.length / 2))}}"""
     // stdout for the driver AND a file copy — round 1's driver failed to
     // extract the line from sbt-prefixed output ("parsed": null)
     println(json)
     java.nio.file.Files.writeString(
       java.nio.file.Paths.get(sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT",
-        "/root/repo/BENCH_LATEST.json")), json + "\n")
-    // don't leave gigabytes behind on tmpfs
-    rmTree(new java.io.File(workDir))
-  }
-
-  /** Sizes of the parquet files under `logDir/seg=*`. */
-  private def segmentFileSizes(logDir: String): Seq[Long] = {
-    val root = new java.io.File(logDir)
-    Option(root.listFiles()).getOrElse(Array.empty)
-      .filter(d => d.isDirectory && d.getName.startsWith("seg="))
-      .flatMap(d => Option(d.listFiles()).getOrElse(Array.empty))
-      .filter(_.getName.endsWith(".parquet"))
-      .map(_.length()).toSeq
-  }
-
-  private def rmTree(f: java.io.File): Unit = {
-    if (f.isDirectory) Option(f.listFiles()).getOrElse(Array.empty).foreach(rmTree)
-    f.delete(); ()
+        "BENCH_LATEST.json")), json + "\n")
   }
 }

@@ -434,19 +434,18 @@ object SparkEntry {
       "doc_id", "text", n = 4)
   }
 
-  /** Scratch root for the transient lake fixtures below: tmpfs when
-    * available (same storage class Bench pins `spark.local.dir` to).
-    * These queries measure the merge/read computation; on this sandbox
-    * the default java.io.tmpdir disk throttles from ~258 MB/s to
+  /** Scratch root of the transient lake fixtures below and of Bench's
+    * `spark.local.dir`: tmpfs (`/dev/shm`) when writable, else
+    * `java.io.tmpdir`. These queries measure the merge/read computation;
+    * on the bench host the virtio disk throttles from ~258 MB/s to
     * ~12 MB/s once burst credits exhaust (BENCH.md), which times the
     * hypervisor, not the engine — the production analog is a lake on
-    * NVMe/object storage, not a depleted burst volume (guide §6).
+    * NVMe/object storage, not a depleted burst volume.
     */
-  private def fixtureTmpDir(prefix: String): String = {
+  private[graft] val scratchRoot: String = {
     val shm = new java.io.File("/dev/shm")
-    if (shm.isDirectory && shm.canWrite)
-      java.nio.file.Files.createTempDirectory(shm.toPath, prefix).toString
-    else java.nio.file.Files.createTempDirectory(prefix).toString
+    if (shm.isDirectory && shm.canWrite) shm.getPath
+    else System.getProperty("java.io.tmpdir")
   }
 
   /** Shared fixture of the four lake queries: ingest the events
@@ -459,7 +458,8 @@ object SparkEntry {
   private def lakeFixture(spark: SparkSession, dir: String, name: String,
       batches: Int)(query: (graft.lake.LakeTable, DataFrame) => DataFrame): DataFrame = {
     val ev = t(spark, dir, "events")
-    val tmp = fixtureTmpDir(s"graft-lake-$name")
+    val tmp = java.nio.file.Files.createTempDirectory(
+      java.nio.file.Paths.get(scratchRoot), s"graft-lake-$name").toString
     try {
       val lake = graft.lake.LakeTable(spark, tmp, Seq("user_id"), numBuckets = 8)
       lake.createIfAbsent(org.apache.spark.sql.types.StructType.fromDDL(

@@ -1,22 +1,15 @@
 package graft.job
 
 import org.apache.spark.sql.streaming.StreamingQueryListener
-import java.util.concurrent.ConcurrentLinkedQueue
+import java.util.concurrent.atomic.AtomicLong
 
-/** Per-micro-batch throughput metrics — the analog of the reference's
-  * Prometheus endpoint (`internal/worker.go:93-108`), retained for the
-  * ops endpoint's counters and for BENCH artifacts.
+/** Cumulative micro-batch counters for the ops endpoint — the analog of
+  * the reference's Prometheus endpoint (`internal/worker.go:93-108`).
   */
 class MetricsListener extends StreamingQueryListener {
-  final case class BatchMetric(batchId: Long, inputRows: Long, durationMs: Long)
-
-  val metrics = new ConcurrentLinkedQueue[BatchMetric]()
-
-  // cumulative counters for the ops endpoint (drain() empties the queue,
-  // so scrapes can't ride on it)
-  val totalBatches = new java.util.concurrent.atomic.AtomicLong(0L)
-  val totalRows = new java.util.concurrent.atomic.AtomicLong(0L)
-  val lastBatchId = new java.util.concurrent.atomic.AtomicLong(-1L)
+  val totalBatches = new AtomicLong(0L)
+  val totalRows = new AtomicLong(0L)
+  val lastBatchId = new AtomicLong(-1L)
 
   /** Prometheus text rendering ≙ the reference's promhttp route
     * (`internal/worker.go:106-108`).
@@ -37,18 +30,9 @@ class MetricsListener extends StreamingQueryListener {
     val dur = Option(p.durationMs.get("triggerExecution"))
       .map(_.longValue).getOrElse(0L)
     if (p.numInputRows > 0 || dur > 0) {
-      val m = BatchMetric(p.batchId, p.numInputRows, dur)
       totalBatches.incrementAndGet()
       totalRows.addAndGet(p.numInputRows)
       lastBatchId.set(p.batchId)
-      metrics.add(m)
     }
-  }
-
-  def drain(): Seq[BatchMetric] = {
-    val out = scala.collection.mutable.ArrayBuffer.empty[BatchMetric]
-    var m = metrics.poll()
-    while (m != null) { out += m; m = metrics.poll() }
-    out.toSeq
   }
 }

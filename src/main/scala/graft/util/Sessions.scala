@@ -2,9 +2,9 @@ package graft.util
 
 import org.apache.spark.sql.SparkSession
 
-/** The one Spark session recipe every main starts from: the CLI, the
-  * driver mains (`Verify`, `Bench`), and the measurement harnesses add
-  * their own settings on top of the builder it returns.
+/** The one Spark session recipe every main starts from: the CLI
+  * (`Main`), `Verify`, `Plans` and the query-suite timer (`Bench`, which
+  * adds its measurement settings on top of the builder it returns).
   */
 object Sessions {
 

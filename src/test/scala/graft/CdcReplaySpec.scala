@@ -1,8 +1,9 @@
 package graft
 
 import graft.envelope.ChangeEvent
-import graft.job.{CdcJob, CdcJobConfig}
+import graft.job.{CdcJob, CdcJobConfig, MetricsListener}
 import graft.log.ChangeLogGenerator
+import org.apache.spark.ListenerBusBridge
 import org.apache.spark.sql.functions._
 
 /** End-to-end: deterministic seeded change log → streaming replay →
@@ -22,9 +23,23 @@ class CdcReplaySpec extends SparkSpec {
     val job = CdcJob(spark, CdcJobConfig(
       logDir = logDir, tablePath = tableDir, checkpointDir = ckptDir,
       maxFilesPerTrigger = 2))
-    val stats = job.runToCompletion()
+    // the ops endpoint's counters ride along on this replay; flush earlier
+    // queries' events first so the counters see this replay's only
+    ListenerBusBridge.drain(spark.sparkContext)
+    val listener = new MetricsListener()
+    spark.streams.addListener(listener)
+    val stats =
+      try job.runToCompletion()
+      finally {
+        ListenerBusBridge.drain(spark.sparkContext)
+        spark.streams.removeListener(listener)
+      }
     assert(stats.nonEmpty, "no micro-batches ran")
     assert(stats.forall(!_.skippedAsApplied))
+    val logRows = spark.read.parquet(logDir).count()
+    val metrics = listener.prometheusText.linesIterator.toSet
+    assert(metrics.contains(s"graft_input_rows_total $logRows"), metrics)
+    assert(metrics.contains(s"graft_micro_batches_total ${stats.size}"), metrics)
 
     val finalState = job.lake.read()
     val oracle = ChangeLogGenerator.oracleFinalState(spark, cfg)
