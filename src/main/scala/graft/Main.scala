@@ -229,7 +229,7 @@ object Main {
       |        trigger: availableNow  # availableNow (replay+exit) | processingTime=500ms (tail)
       |        maxFilesPerTrigger: 8
       |        # maxBytesPerTrigger: 3000000000  # byte-bounded batches (overrides file count)
-      |        # dedupStateTtlMs: 3600000        # tailing only: expire idle keys' dedup state
+      |        # dedupStateTtlMs: 3600000        # jsonl/jdbc tailing only: expire idle keys' dedup state
       |        # http source only:
       |        # endpoint: /ingest
       |        # methods: [GET, POST]

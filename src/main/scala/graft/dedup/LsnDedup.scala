@@ -10,42 +10,11 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   */
 final case class KeyProgress(maxEmittedLsn: Long)
 
-/** Skinny dedup row for the late-materialization pipeline: the dedup
-  * shuffle carries only the ordering fields plus a (file, row-index)
-  * handle into the batch's parquet files; winner payloads (content,
-  * commit, drift map, …) are re-fetched AFTER dedup by a broadcast
-  * semi-join against the page-cached batch files (`CdcJob.start`). With
-  * wide payloads and hot keys (10^10-event CDC: ~100 updates per key per
-  * batch) this cuts the key-shuffle volume ~10× — shuffle what you
-  * deduplicate, fetch payloads late.
-  *
-  * The handle stays byte-frugal on purpose: `del` is a Boolean (the full
-  * `op` string never needs to ride the shuffle), and `file` is the
-  * segment-relative suffix of `_metadata.file_path` (everything after
-  * the last `/seg=`), not the absolute URI — both sides of the refetch
-  * join derive it the same way, so no path-format assumptions leak in.
-  */
-final case class SkinnyEvent(
-    lsn: Long, del: Boolean, repo: String, path: String,
-    file: String, idx: Long)
-
-object SkinnyEvent {
-  implicit val encoder: Encoder[SkinnyEvent] = Encoders.product[SkinnyEvent]
-  implicit val keyed: LsnDedup.LsnKeyed[SkinnyEvent] =
-    new LsnDedup.LsnKeyed[SkinnyEvent] {
-      def repo(e: SkinnyEvent): String = e.repo
-      def path(e: SkinnyEvent): String = e.path
-      def lsn(e: SkinnyEvent): Long = e.lsn
-      def isDelete(e: SkinnyEvent): Boolean = e.del
-    }
-}
-
-/** Commit-sequence dedup — the idempotence/ordering layer the reference
-  * lacks entirely (draethos is order-blind and at-least-once; duplicates
-  * are absorbed only by key-idempotent sinks, `internal/source/kafka.go:
-  * 103-109` + `internal/target/mysql.go:23`). Per the north rule we make
-  * it explicit: `flatMapGroupsWithState` keyed on `(repo, path)` holding
-  * the max emitted LSN per key.
+/** Commit-sequence dedup in keyed state: `flatMapGroupsWithState` keyed
+  * on `(repo, path)` holding the max emitted LSN per key. draethos keeps
+  * no such state (it is order-blind and at-least-once; duplicates are
+  * absorbed only by key-idempotent sinks, `internal/source/kafka.go:
+  * 103-109` + `internal/target/mysql.go:23`).
   *
   * Semantics (order-independent convergence):
   *  - within a group-batch, events are sorted by `lsn` (group iterator
@@ -58,46 +27,32 @@ object SkinnyEvent {
   *    and the final merged state equals the one-batch oracle reducer
   *    regardless of delivery order or duplication.
   *
-  * The dedup is generic over the row type via [[LsnDedup.LsnKeyed]]: the
-  * fat pipeline runs it on full [[ChangeEvent]]s, the skinny pipeline on
-  * [[SkinnyEvent]] handles (same state, same semantics, ~10× less shuffle).
+  * Who needs it: a parquet changelog into a lake table does NOT — the
+  * lake's merge picks one max-`__lsn` winner per key per batch, and every
+  * reader and compaction resolves stale rows across batches, so keyed
+  * state there only added a state stage and its commit to every batch
+  * (`CdcJob.startLake`). The state stays where it carries a guarantee:
+  *  - jsonl changelogs: malformed lines ride the stream keyed by content
+  *    hash, and the state is what drops a redelivered bad line in a later
+  *    batch, keeping the DLQ free of cross-batch duplicates;
+  *  - JDBC targets: the upsert has no LSN column to compare, so the state
+  *    is their only per-key monotonicity (`JdbcUpsert.applyCdcBatch`).
   *
-  * State is hash-partitioned by key (shuffle #1 of the pipeline) and
-  * checkpointed by the engine — resume-safe. At 10^10 scale the state is
-  * one Long per live key; bench/CLI sessions run the **RocksDB state
-  * store provider** (off-heap, spills to executor-local disk), so state
-  * size is bounded by disk, not heap — measured in BENCH.md ("State
-  * store"): the on-heap HDFS provider additionally failed to scale with
-  * cores. Remaining trade-off, deliberately NOT taken: a watermark/TTL
-  * (`GroupStateTimeout`) would cap state for abandoned keys but would
-  * re-admit a stale duplicate arriving after the timeout; the lake's
-  * monotone merge would still converge (tombstones + max-__lsn resolve),
-  * so a TTL is safe to enable when key cardinality demands it — it costs
-  * only extra idempotent rows, never correctness.
+  * State is hash-partitioned by key and checkpointed by the engine —
+  * resume-safe. CLI sessions run the RocksDB state store provider
+  * (off-heap, spills to executor-local disk), so state size is bounded by
+  * disk, not heap (BENCH.md "State store"). A TTL (`stateTtlMs`) caps
+  * state for abandoned keys at the price of re-admitting a stale
+  * duplicate after expiry: for a lake target the monotone merge still
+  * converges, so it costs only extra idempotent rows, never correctness.
   */
 object LsnDedup {
-
-  /** Field access the dedup needs, abstracted over the row type. Instances
-    * are tiny and serializable (they ride task closures).
-    */
-  trait LsnKeyed[T] extends Serializable {
-    def repo(t: T): String
-    def path(t: T): String
-    def lsn(t: T): Long
-    def isDelete(t: T): Boolean
-  }
 
   implicit val keyProgressEnc: Encoder[KeyProgress] = Encoders.product[KeyProgress]
   implicit val keyEnc: Encoder[(String, String)] =
     Encoders.tuple(Encoders.STRING, Encoders.STRING)
 
-  implicit val changeEventKeyed: LsnKeyed[ChangeEvent] =
-    new LsnKeyed[ChangeEvent] {
-      def repo(e: ChangeEvent): String = e.repo
-      def path(e: ChangeEvent): String = e.path
-      def lsn(e: ChangeEvent): Long = e.lsn
-      def isDelete(e: ChangeEvent): Boolean = e.op == ChangeEvent.Delete
-    }
+  private def isDelete(e: ChangeEvent): Boolean = e.op == ChangeEvent.Delete
 
   /** @param stateTtlMs when set, per-key state expires after this long
     *   without activity (`ProcessingTimeTimeout`) — the knob that bounds
@@ -105,30 +60,29 @@ object LsnDedup {
     *   by construction: a stale duplicate arriving after its key expired
     *   is re-admitted and re-emitted, but the lake's monotone max-`__lsn`
     *   merge resolves it away — the cost is one idempotent extra row,
-    *   never a wrong final state (asserted by DedupOpsSpec's TTL test).
+    *   never a wrong final state (asserted by DedupTtlSpec).
     */
-  def apply[T](events: Dataset[T], stateTtlMs: Option[Long] = None)(
-      implicit enc: Encoder[T], k: LsnKeyed[T]): Dataset[T] = {
-    val grouped = preCombine(events).groupByKey(e => (k.repo(e), k.path(e)))
+  def apply(events: Dataset[ChangeEvent],
+      stateTtlMs: Option[Long] = None): Dataset[ChangeEvent] = {
+    val grouped = preCombine(events).groupByKey(e => (e.repo, e.path))
     stateTtlMs match {
       case None =>
         grouped.flatMapGroupsWithState(
-          OutputMode.Update, GroupStateTimeout.NoTimeout)(dedupGroup[T])
+          OutputMode.Update, GroupStateTimeout.NoTimeout)(dedupGroup)
       case Some(ttl) =>
         grouped.flatMapGroupsWithState(
           OutputMode.Update, GroupStateTimeout.ProcessingTimeTimeout)(
-          dedupGroupTtl[T](ttl))
+          dedupGroupTtl(ttl))
     }
   }
 
   /** TTL wrapper around [[dedupGroup]]: drop expired state; refresh the
     * timeout on any activity for a still-live key.
     */
-  private[graft] def dedupGroupTtl[T](ttlMs: Long)(
+  private[graft] def dedupGroupTtl(ttlMs: Long)(
       key: (String, String),
-      events: Iterator[T],
-      state: GroupState[KeyProgress])(
-      implicit k: LsnKeyed[T]): Iterator[T] =
+      events: Iterator[ChangeEvent],
+      state: GroupState[KeyProgress]): Iterator[ChangeEvent] =
     if (state.hasTimedOut) {
       state.remove()
       Iterator.empty
@@ -146,13 +100,13 @@ object LsnDedup {
     * capacity-capped and flushed so task memory stays bounded at any
     * scale (a flush only means some extra rows shuffle — still correct).
     */
-  private[graft] def preCombine[T](events: Dataset[T], cap: Int = 1 << 16)(
-      implicit enc: Encoder[T], k: LsnKeyed[T]): Dataset[T] =
+  private[graft] def preCombine(events: Dataset[ChangeEvent],
+      cap: Int = 1 << 16): Dataset[ChangeEvent] =
     events.mapPartitions { it =>
-      val m = new java.util.HashMap[(String, String), T](1 << 12)
-      val flushed = scala.collection.mutable.ArrayBuffer.empty[T]
+      val m = new java.util.HashMap[(String, String), ChangeEvent](1 << 12)
+      val flushed = scala.collection.mutable.ArrayBuffer.empty[ChangeEvent]
       it.foreach { e =>
-        val key = (k.repo(e), k.path(e))
+        val key = (e.repo, e.path)
         val cur = m.get(key)
         if (cur == null || beats(e, cur)) m.put(key, e)
         if (m.size > cap) {
@@ -168,27 +122,24 @@ object LsnDedup {
     * the same tie-break as the lake's merge/resolve windows, so the dedup
     * layer can never mask a tombstone the merge would have preferred.
     */
-  private def beats[T](a: T, b: T)(implicit k: LsnKeyed[T]): Boolean =
-    k.lsn(a) > k.lsn(b) ||
-      (k.lsn(a) == k.lsn(b) && k.isDelete(a) && !k.isDelete(b))
+  private def beats(a: ChangeEvent, b: ChangeEvent): Boolean =
+    a.lsn > b.lsn || (a.lsn == b.lsn && isDelete(a) && !isDelete(b))
 
   /** Batch analog (for tests / batch replay): same semantics, no state. */
-  def batch(events: Dataset[ChangeEvent]): Dataset[ChangeEvent] = {
-    implicit val evEnc: Encoder[ChangeEvent] = ChangeEvent.encoder
+  def batch(events: Dataset[ChangeEvent]): Dataset[ChangeEvent] =
     events.groupByKey(e => (e.repo, e.path)).flatMapGroups {
       (_: (String, String), it: Iterator[ChangeEvent]) =>
         var last = Long.MinValue
         var lastDelete = false
         it.toArray
-          .sortBy(e => (e.lsn, if (e.op == ChangeEvent.Delete) 1 else 0))
+          .sortBy(e => (e.lsn, if (isDelete(e)) 1 else 0))
           .iterator.filter { e =>
-            val del = e.op == ChangeEvent.Delete
+            val del = isDelete(e)
             val keep = e.lsn > last || (e.lsn == last && del && !lastDelete)
             if (keep) { last = e.lsn; lastDelete = del }
             keep
           }
     }
-  }
 
   /** Emits at most ONE event per key per micro-batch: the key's highest
     * new LSN. Intermediate events within a batch can never surface in the
@@ -201,19 +152,17 @@ object LsnDedup {
     * tombstone the lake's delete-wins tie-break would have preferred,
     * making final state depend on batching.
     */
-  private[graft] def dedupGroup[T](
+  private[graft] def dedupGroup(
       key: (String, String),
-      events: Iterator[T],
-      state: GroupState[KeyProgress])(
-      implicit k: LsnKeyed[T]): Iterator[T] = {
+      events: Iterator[ChangeEvent],
+      state: GroupState[KeyProgress]): Iterator[ChangeEvent] = {
     val already = state.getOption.map(_.maxEmittedLsn).getOrElse(Long.MinValue)
-    var winner: T = null.asInstanceOf[T]
+    var winner: ChangeEvent = null
     var max = already
     events.foreach { e =>
-      val beats = k.lsn(e) > max ||
-        (k.lsn(e) == max && k.isDelete(e) &&
-          (winner == null || !k.isDelete(winner)))
-      if (beats) { max = k.lsn(e); winner = e }
+      val beats = e.lsn > max ||
+        (e.lsn == max && isDelete(e) && (winner == null || !isDelete(winner)))
+      if (beats) { max = e.lsn; winner = e }
     }
     if (winner != null) {
       if (max > already) state.update(KeyProgress(max))

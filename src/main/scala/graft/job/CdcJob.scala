@@ -1,9 +1,9 @@
 package graft.job
 
-import graft.dedup.{LsnDedup, SkinnyEvent}
+import graft.dedup.LsnDedup
 import graft.envelope.ChangeEvent
 import graft.lake.{LakeTable, MergeStats}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
@@ -39,10 +39,12 @@ final case class CdcJobConfig(
     // copy): json | xml (native expressions) | yaml (transcoded to JSON
     // per partition, then the JSON path)
     codec: String = "json",
-    // per-key dedup-state TTL (ProcessingTimeTimeout): bounds state when
-    // most of a 10^10-key space goes cold; expiry re-admits stale
-    // duplicates as idempotent rows the lake's monotone merge absorbs
-    // (see LsnDedup.apply scaladoc). None = keep state forever.
+    // per-key dedup-state TTL (ProcessingTimeTimeout) for the pipelines
+    // that keep dedup state (jsonl sources, JDBC targets): bounds state
+    // when most of a 10^10-key space goes cold; expiry re-admits stale
+    // duplicates as idempotent rows (see LsnDedup.apply scaladoc).
+    // None = keep state forever. A parquet changelog into a lake keeps no
+    // state, and `start` refuses the option there.
     dedupStateTtlMs: Option[Long] = None,
     // runId-agnostic identity of this pipeline for the exactly-once ledger
     checkpointId: String = "cdc",
@@ -52,9 +54,18 @@ final case class CdcJobConfig(
     jdbcSink: Option[graft.sinks.JdbcUpsert.Config] = None)
 
 /** The flagship job: tail the ordered change log with a Structured
-  * Streaming file source, LSN-dedup per key via keyed state, and MERGE
-  * each micro-batch into the LakeTable inside `foreachBatch` with an
-  * idempotent commit.
+  * Streaming file source and MERGE each micro-batch into the LakeTable
+  * inside `foreachBatch` with an idempotent commit. Two start paths:
+  *
+  *  - parquet changelog → lake ([[startLake]]): no keyed state. The lake
+  *    is the dedup state, as draethos's key-idempotent sinks are: the
+  *    merge's one exchange and winner window reduce each batch to one
+  *    max-`lsn` row per key, and a stale event from a later batch lands
+  *    as an idempotent delta row that loses at read and in compaction;
+  *  - jsonl changelogs, and every JDBC target ([[startDeduped]]): per-key
+  *    max-LSN dedup in keyed state ([[LsnDedup]]) ahead of the sink —
+  *    the DLQ's cross-batch dedup and the JDBC upsert's only per-key
+  *    monotonicity.
   *
   * Pipeline ≙ draethos `source → codec → Attach → CanFlush → Flush →
   * commit offsets` (`internal/source/kafka.go:84-118`), with the same
@@ -100,6 +111,13 @@ class CdcJob(spark: SparkSession, cfg: CdcJobConfig) {
 
   /** Build (but do not await) the streaming query. */
   def start(trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
+    if (stateless) {
+      require(cfg.dedupStateTtlMs.isEmpty,
+        "dedupStateTtlMs: a parquet changelog into a lake table keeps no " +
+          "dedup state (the lake's max-lsn merge absorbs duplicates), so " +
+          "there is no state to expire; remove the option")
+      refuseStatefulCheckpoint()
+    }
     // ProcessingTimeTimeout makes FlatMapGroupsWithStateExec report
     // "should run another batch" on EVERY batch (processing time always
     // advances), so an AvailableNow run would never terminate — it spins
@@ -111,88 +129,74 @@ class CdcJob(spark: SparkSession, cfg: CdcJobConfig) {
       "dedupStateTtlMs requires a ProcessingTime trigger (runFollowing); " +
         "AvailableNow never terminates under ProcessingTimeTimeout")
     if (cfg.jdbcSink.isEmpty) lake.createIfAbsent(baseSchema)
-    if (cfg.format == "parquet") startSkinny(trigger)
-    else startFull(trigger)
+    if (stateless) startLake(trigger) else startDeduped(trigger)
   }
 
-  /** Skinny pipeline (parquet changelogs): the dedup key-shuffle carries
-    * only `(lsn, op, repo, path)` plus a `(file, row-index)` handle —
-    * ~70 B/row instead of the full payload (content alone is ~400 B).
-    * Winner payloads are re-materialized AFTER dedup by [[refetch]]. Under
-    * CDC duplication (the 10^10-event log averages ~100 updates per key
-    * per 10M-row batch) this cuts the pipeline's dominant shuffle ~10×;
-    * the payload re-read is a page-cached scan the cluster already paid
-    * for. "Shuffle what you deduplicate; fetch payloads late." Whether
-    * carrying full payloads would win when keys/batch ≈ rows/batch (no
-    * duplication to exploit) is unmeasured; a full-carry path for parquet
-    * should be chosen from an observed property of the log, not a flag.
+  /** Parquet changelog into a lake table: the path that keeps no state. */
+  private def stateless: Boolean = cfg.format == "parquet" && cfg.jdbcSink.isEmpty
+
+  /** A checkpoint written while this path kept keyed dedup state has a
+    * `state/` directory whose operator metadata the stateless plan cannot
+    * match; Spark would fail the restart with an opaque
+    * `STREAMING_STATEFUL_OPERATOR_NOT_MATCH_IN_STATE_METADATA`.
     */
-  private def startSkinny(trigger: Trigger): StreamingQuery = {
-    import spark.implicits._
-    val skinny = bounded(spark.readStream.schema(ChangeEvent.schema))
+  private def refuseStatefulCheckpoint(): Unit = {
+    val state = new org.apache.hadoop.fs.Path(cfg.checkpointDir, "state")
+    val fs = state.getFileSystem(spark.sessionState.newHadoopConf())
+    if (fs.exists(state))
+      throw new IllegalStateException(
+        s"checkpoint ${cfg.checkpointDir} was written by the stateful " +
+          "dedup pipeline (it has a state/ directory); a parquet changelog " +
+          "into a lake table runs without dedup state and cannot resume " +
+          "it. Restart with a new checkpointDir AND a new checkpointId: the " +
+          "log replays from the start and the lake's max-lsn merge " +
+          "converges, while a reused checkpointId would make the lake's " +
+          "ledger skip the restarted batch ids.")
+  }
+
+  /** The changelog's parquet segments as full envelope rows. */
+  private def parquetEvents: DataFrame =
+    bounded(spark.readStream.schema(ChangeEvent.schema))
       .parquet(s"${cfg.logDir}/seg=*")
-      .select(col("lsn"),
-        (col("op") === ChangeEvent.Delete).as("del"),
-        col("repo"), col("path"),
-        // segment-relative handle: shorter shuffle bytes + smaller combiner
-        // allocations than the absolute URI; refetch derives the same
-        // suffix from its own _metadata, so the join is format-agnostic
-        substring_index(col("_metadata.file_path"), "/seg=", -1).as("file"),
-        col("_metadata.row_index").as("idx"))
-      .as[SkinnyEvent]
-    LsnDedup(skinny, cfg.dedupStateTtlMs).writeStream
+      .withColumn("extra", coalesce(col("extra"), map()))
+
+  /** Parquet changelog → lake with no keyed state: each micro-batch goes
+    * straight into `lake.merge`, whose one `(__bucket, __salt)` exchange
+    * and winner window keep one max-`lsn` row per key (the delete wins an
+    * equal-lsn tie). Across batches the lake is the dedup state: a stale
+    * or redelivered event in a later batch becomes a delta row with a
+    * lower `__lsn`, which loses to the stored winner (or tombstone) in
+    * every read, lookup and minor compaction. A non-compacting batch runs
+    * the merge's map stage and its write, nothing else.
+    *
+    * Exactly-once needs no separate ledger probe: `merge` returns a
+    * skipped no-op for a batch id the ledger already holds (the crash
+    * window between the lake commit and the engine's batch commit), and
+    * there is no state store to re-commit.
+    */
+  private def startLake(trigger: Trigger): StreamingQuery =
+    parquetEvents.writeStream
       .queryName(s"graft-cdc-${cfg.checkpointId}")
-      .outputMode(OutputMode.Update())
       .option("checkpointLocation", cfg.checkpointDir)
       .trigger(trigger)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[SkinnyEvent], batchId: Long) =>
-        sinkBatch(batchId, () => batch.foreach(_ => ()))(() => refetch(batch))
+      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+        stats.add(lake.merge(batch, cfg.checkpointId, batchId)); ()
       }
       .start()
-  }
 
-  /** Re-materialize full winner rows from the batch's parquet files: the
-    * winner set (≤ one row per live key per batch — small) is collected
-    * once via a cheap `localCheckpoint`, its distinct files (≤
-    * maxFilesPerTrigger) drive a page-cached batch re-read, and a
-    * broadcast LEFT SEMI join on `(file, row-index)` selects exactly the
-    * winning rows — codegen'd, zero additional shuffle. Deletes and drift
-    * `extra` maps ride along like any other row.
-    */
-  private def refetch(batch: org.apache.spark.sql.Dataset[SkinnyEvent]): DataFrame = {
-    // one compute of the stateful upstream; the winners are tiny (≤ live
-    // keys per batch), so this checkpoint is KBs–MBs, not the batch
-    val w = graft.util.Materialize.barrier(batch.toDF())
-    val files = w.select("file").distinct().collect().map(_.getString(0))
-    if (files.isEmpty)
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], ChangeEvent.schema)
-    else
-      spark.read.schema(ChangeEvent.schema)
-        .parquet(files.toSeq.map(f => s"${cfg.logDir}/seg=$f"): _*)
-        .select(col("*"),
-          substring_index(col("_metadata.file_path"), "/seg=", -1).as("__file"),
-          col("_metadata.row_index").as("__idx"))
-        .join(broadcast(w.select(col("file").as("__file"), col("idx").as("__idx"))),
-          Seq("__file", "__idx"), "leftsemi")
-        .withColumn("extra", coalesce(col("extra"), map()))
-  }
-
-  /** Ledger-gated sink dispatch shared by both pipelines: skip the
+  /** Ledger-gated sink dispatch of the deduped pipeline: skip the
     * SINK for crash-replayed batches (exactly-once for the DLQ and
     * stats, not just the table), otherwise materialize the batch and
     * apply it.
     *
     * @param consume full pass over the raw batch Dataset with NO sink
     *   effects. The applied-skip path must still run it: a ledger hit
-    *   means the crash landed between the lake commit and the engine's
+    *   means the crash landed between the sink commit and the engine's
     *   batch commit, so on restart the STATE STORES are rolled back and
     *   this re-run is what re-commits the batch's dedup-state updates.
     *   Returning without touching the Dataset would silently lose those
-    *   updates (stale events re-admitted later — only idempotent rows,
-    *   but still) and trips Spark's state-store commit validation
-    *   ("expected N commits but got 0" — caught by CrashResumeSpec's
-    *   SIGKILL e2e).
+    *   updates (stale events re-admitted later) and trips Spark's
+    *   state-store commit validation ("expected N commits but got 0").
     */
   private def sinkBatch(batchId: Long, consume: () => Unit)(
       materialize: () => DataFrame): Unit = {
@@ -223,8 +227,7 @@ class CdcJob(spark: SparkSession, cfg: CdcJobConfig) {
         case Some(j) => stats.add(applyJdbc(good, j, batchId))
         case None =>
           // preReduced: LsnDedup emits at most one winner per key per
-          // micro-batch, so the merge can skip its winner window (a
-          // whole key-shuffle + sort per batch)
+          // micro-batch, so the merge can skip its winner window
           stats.add(lake.merge(good, cfg.checkpointId, batchId,
             preReduced = true))
       }
@@ -232,47 +235,23 @@ class CdcJob(spark: SparkSession, cfg: CdcJobConfig) {
     }
   }
 
-  /** Full-payload pipeline for text changelogs (`jsonl`): rows carry their
-    * payload through the dedup shuffle — text has no row index to refetch
-    * by.
+  /** Pipeline with per-key dedup state: jsonl changelogs (any target) and
+    * parquet changelogs into a JDBC target. Rows carry their full payload
+    * through the state's key shuffle.
     */
-  private def startFull(trigger: Trigger): StreamingQuery = {
-    import spark.implicits._
-    if (cfg.format != "jsonl")
-      throw new IllegalArgumentException(s"changelog format ${cfg.format} not implemented")
-    // raw text + codec ≙ the draethos kafka-source + codec path
-    // (`internal/source/kafka.go:130`, `internal/codec/{json,xml,
-    // yaml}.go`); a line that fails to decode becomes a DLQ-tagged
-    // event instead of being logged-and-dropped like the reference
-    // (`kafka.go:93-97`). json/xml decode through native expressions
-    // (codegen'd); yaml — which has no SQL expression — transcodes to
-    // JSON lines per partition and rides the same path, so malformed
-    // yaml reaches the DLQ as the original line too.
-    val raw0 = bounded(spark.readStream)
-      .text(s"${cfg.logDir}/seg=*")
-    val raw =
-      if (cfg.codec == "yaml") CdcJob.yamlToJsonLines(spark, raw0) else raw0
-    val events = raw
-      .withColumn("__p", CdcJob.decodeEnvelope(cfg.codec, col("value")))
-      .select(
-        when(valid, col("__p.lsn")).otherwise(lit(0L)).as("lsn"),
-        when(valid, col("__p.op")).otherwise(lit(DlqOp)).as("op"),
-        coalesce(col("__p.ts"), lit(new java.sql.Timestamp(0))).as("ts"),
-        when(valid, col("__p.repo")).otherwise(lit("__dlq")).as("repo"),
-        when(valid, col("__p.path")).otherwise(md5(col("value"))).as("path"),
-        coalesce(col("__p.commit"), lit("")).as("commit"),
-        coalesce(col("__p.lang"), lit("")).as("lang"),
-        when(valid, coalesce(col("__p.content"), lit("")))
-          .otherwise(col("value")).as("content"),
-        coalesce(col("__p.extra"), map()).as("extra"))
-      .as[ChangeEvent]
-
+  private def startDeduped(trigger: Trigger): StreamingQuery = {
+    val events: Dataset[ChangeEvent] = cfg.format match {
+      case "parquet" => parquetEvents.as[ChangeEvent]
+      case "jsonl" => jsonlEvents
+      case other =>
+        throw new IllegalArgumentException(s"changelog format $other not implemented")
+    }
     LsnDedup(events, cfg.dedupStateTtlMs).writeStream
       .queryName(s"graft-cdc-${cfg.checkpointId}")
       .outputMode(OutputMode.Update())
       .option("checkpointLocation", cfg.checkpointDir)
       .trigger(trigger)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[ChangeEvent], batchId: Long) =>
+      .foreachBatch { (batch: Dataset[ChangeEvent], batchId: Long) =>
         sinkBatch(batchId, () => batch.foreach(_ => ())) { () =>
           // materialize once so the DLQ split doesn't re-execute the
           // stateful upstream. Crash-replayed batches never reach here
@@ -289,6 +268,37 @@ class CdcJob(spark: SparkSession, cfg: CdcJobConfig) {
         }
       }
       .start()
+  }
+
+  /** Text changelog lines decoded by `codec`: raw text + codec ≙ the
+    * draethos kafka-source + codec path (`internal/source/kafka.go:130`,
+    * `internal/codec/{json,xml,yaml}.go`). A line that fails to decode
+    * becomes a DLQ-tagged event instead of being logged-and-dropped like
+    * the reference (`kafka.go:93-97`). json/xml decode through native
+    * expressions (codegen'd); yaml — which has no SQL expression —
+    * transcodes to JSON lines per partition and rides the same path, so
+    * malformed yaml reaches the DLQ as the original line too.
+    */
+  private def jsonlEvents: Dataset[ChangeEvent] = {
+    import spark.implicits._
+    val raw0 = bounded(spark.readStream)
+      .text(s"${cfg.logDir}/seg=*")
+    val raw =
+      if (cfg.codec == "yaml") CdcJob.yamlToJsonLines(spark, raw0) else raw0
+    raw
+      .withColumn("__p", CdcJob.decodeEnvelope(cfg.codec, col("value")))
+      .select(
+        when(valid, col("__p.lsn")).otherwise(lit(0L)).as("lsn"),
+        when(valid, col("__p.op")).otherwise(lit(DlqOp)).as("op"),
+        coalesce(col("__p.ts"), lit(new java.sql.Timestamp(0))).as("ts"),
+        when(valid, col("__p.repo")).otherwise(lit("__dlq")).as("repo"),
+        when(valid, col("__p.path")).otherwise(md5(col("value"))).as("path"),
+        coalesce(col("__p.commit"), lit("")).as("commit"),
+        coalesce(col("__p.lang"), lit("")).as("lang"),
+        when(valid, coalesce(col("__p.content"), lit("")))
+          .otherwise(col("value")).as("content"),
+        coalesce(col("__p.extra"), map()).as("extra"))
+      .as[ChangeEvent]
   }
 
   /** JDBC micro-batch apply ≙ a reference pgsql/mysql Flush: lift drift

@@ -249,11 +249,11 @@ class LakeTable(
   /** Internal per-row columns: the applied commit sequence and a tombstone
     * flag. Storing them makes the MERGE itself monotone per key — a stale
     * event (lower lsn than the stored row, including a stored tombstone)
-    * can never win, for ANY batching/ordering of the log. The streaming
-    * dedup state remains the shuffle-volume optimization and first line of
-    * defense; the table is safe even without it (state loss, ad-hoc batch
-    * imports). Tombstones are dropped by `compact()` once no replayer can
-    * be behind them.
+    * can never win, for ANY batching/ordering of the log. This is the
+    * only cross-batch dedup of a parquet changelog replay (`CdcJob` keeps
+    * no keyed state on that path): a stale event lands as a delta row
+    * that loses at read and in compaction. Tombstones are dropped by
+    * `compact(dropTombstones = true)` only (see its precondition).
     */
   val LsnMeta = "__lsn"
   val DeletedMeta = "__deleted"
@@ -534,24 +534,42 @@ class LakeTable(
   // -- merge (the sink) --------------------------------------------------------
 
   /** Bucket assignment — deterministic hash partition on the key columns. */
-  private def bucketExpr = pmod(xxhash64(keyCols.map(col): _*), lit(numBuckets))
+  private[graft] def bucketExpr: Column =
+    pmod(xxhash64(keyCols.map(col): _*), lit(numBuckets))
 
-  /** Apply one micro-batch of change events (already LSN-deduped upstream;
-    * this still reduces to one winner per key for safety/determinism) to
-    * the table as an idempotent MERGE commit. The hot path costs ONE
-    * Spark job (the delta write — see the class doc's "one Spark job"
-    * bullet for how stats/lineage/drift discovery piggyback on it).
+  /** Write salts per bucket: enough that the fleet is busy when it is
+    * wider than the bucket count (see merge step 4), 1 otherwise.
+    */
+  private[graft] def saltFactor: Int = math.max(1, math.ceil(
+    spark.sparkContext.defaultParallelism.toDouble / numBuckets).toInt)
+
+  /** Salt of a key: a pure function of the key columns, hashed behind a
+    * tag so it is independent of [[bucketExpr]]. Hashing the bare keys
+    * again would tie the salt to the bucket (with 2 buckets and salt
+    * factor 2 the salt would equal the bucket), leaving half of the
+    * `(bucket, salt)` groups, and the merge window's tasks, empty.
+    */
+  private[graft] def saltExpr(factor: Int): Column =
+    pmod(xxhash64((lit("__salt") +: keyCols.map(col)): _*), lit(factor))
+
+  /** Apply one micro-batch of change events to the table as an idempotent
+    * MERGE commit; the batch is reduced to one winner per key first (the
+    * only per-batch dedup on the stateless parquet → lake path). The hot
+    * path costs ONE Spark job (the delta write — see the class doc's "one
+    * Spark job" bullet for how stats/lineage/drift discovery piggyback on
+    * it).
     *
     * @param batch   envelope rows: keyCols ++ value cols ++ lsn, op, extra
     * @param checkpointId identity of the writing stream (runId-agnostic)
     * @param batchId streaming micro-batch id (monotone per checkpoint)
-    * @param preReduced skips the winner window and its whole key-shuffle +
-    *   sort. PRECONDITION, not checked (a check would cost a Spark job):
-    *   `batch` holds at most one row per key. `CdcJob` meets it through
-    *   `LsnDedup`'s winner-only emission. Every reader relies on it: a
-    *   bucket referencing a single file is read without the window
-    *   (`resolveFiles`), and `lookup` bounds its candidates at one row
-    *   per file — a duplicate key in a delta is NOT resolved at read.
+    * @param preReduced skips the winner window (its per-partition sort;
+    *   the bucketed exchange stays for the write). PRECONDITION, not checked (a check would cost a Spark job):
+    *   `batch` holds at most one row per key. `CdcJob`'s deduped
+    *   pipeline meets it through `LsnDedup`'s winner-only emission.
+    *   Every reader relies on it: a bucket referencing a single file is
+    *   read without the window (`resolveFiles`), and `lookup` bounds its
+    *   candidates at one row per file — a duplicate key in a delta is NOT
+    *   resolved at read.
     */
   def merge(batch: DataFrame, checkpointId: String, batchId: Long,
       preReduced: Boolean = false): MergeStats = {
@@ -580,27 +598,28 @@ class LakeTable(
     //    already clusters every key's rows into one task, and the window
     //    partitions by (__bucket, __salt, keys) — a superset of the
     //    exchange's keys, which Catalyst recognises as satisfied (the
-    //    subset rule), planning only the per-partition sort. The
-    //    previous shape shuffled the batch TWICE per merge: once for the
-    //    key window, then again to repartition the winners for the
-    //    write. The winner set is identical — partitioning a window by
-    //    extra functions of its own keys refines nothing.
-    //    Write parallelism policy (salt/fleet bound) is unchanged; see
-    //    the step-4 comment.
+    //    subset rule), planning only the per-partition sort. The winner
+    //    set is identical — partitioning a window by extra functions of
+    //    its own keys refines nothing.
+    //    With salt factor 1 there is no `__salt` column at all: a
+    //    literal salt is folded out of the window's partitioning but not
+    //    out of the exchange's, `hashpartitioning(__bucket, 0)` then no
+    //    longer satisfies the window, and the planner adds a second full
+    //    exchange on (__bucket, keys) — which also splits every bucket's
+    //    write over several tasks (several files per bucket per batch).
+    //    Write parallelism policy (salt/fleet bound): see step 4.
     import org.apache.spark.sql.expressions.Window
-    val saltFactor = math.max(1, math.ceil(
-      spark.sparkContext.defaultParallelism.toDouble / numBuckets).toInt)
-    val saltCol =
-      if (saltFactor == 1) lit(0)
-      else pmod(xxhash64(keyCols.map(col): _*), lit(saltFactor))
-    val writeParts = math.max(1, math.min(numBuckets * saltFactor,
+    val salts = saltFactor
+    val writeParts = math.max(1, math.min(numBuckets * salts,
       spark.sparkContext.defaultParallelism * 2))
-    val bucketed = batch
-      .withColumn("__bucket", bucketExpr)
-      .withColumn("__salt", saltCol)
-      .repartition(writeParts, col("__bucket"), col("__salt"))
+    val withBucket = batch.withColumn("__bucket", bucketExpr)
+    val (keyed, partCols) =
+      if (salts == 1) (withBucket, Seq(col("__bucket")))
+      else (withBucket.withColumn("__salt", saltExpr(salts)),
+        Seq(col("__bucket"), col("__salt")))
+    val bucketed = keyed.repartition(writeParts, partCols: _*)
     val w = Window
-      .partitionBy((col("__bucket") +: col("__salt") +: keyCols.map(col)): _*)
+      .partitionBy((partCols ++ keyCols.map(col)): _*)
       .orderBy(col(lsnCol).desc, (col(opCol) === "delete").desc, col(opCol).desc)
     val winners =
       if (preReduced) bucketed
@@ -658,11 +677,11 @@ class LakeTable(
     //    bucket count (small tables, test tables), rows are salted by key
     //    hash so no single task serializes a bucket's write; when buckets
     //    ≥ cores (the 100 TB shape: thousands of buckets) the salt factor
-    //    is 1 and each bucket stays one file. Post-dedup batches hold one
-    //    row per key, so per-bucket volume is hash-uniform — the earlier
-    //    hot-bucket salting (which needed a per-batch stats job to find
-    //    skew) guarded raw event skew that the dedup/winner stages have
-    //    already flattened by this point.
+    //    is 1 and each bucket stays one file. Winner sets hold one row
+    //    per key, so per-bucket write volume is hash-uniform — the
+    //    earlier hot-bucket salting (which needed a per-batch stats job
+    //    to find skew) guarded raw event skew that the winner window
+    //    flattens before the write.
     //    Write parallelism ∝ the fleet, not the bucket count:
     //    `partitionBy` routes rows into per-bucket directories regardless
     //    of task count (a task holding k buckets writes k files — file
@@ -983,10 +1002,16 @@ class LakeTable(
 
   /** Compact the table: rewrite every bucket into one file, materializing
     * drift columns (and dropping the delta-side `extra` carrier). With
-    * `dropTombstones=true` also garbage-collects deleted keys (safe once
-    * no replayer can deliver events with lsn below the per-bucket lineage
-    * watermark). Same snapshot mechanics. After compaction every bucket
-    * holds one resolved file, so reads skip the winner window entirely.
+    * `dropTombstones=true` also garbage-collects deleted keys.
+    * PRECONDITION of `dropTombstones = true`, not checked: no event for a
+    * dropped key with an lsn below its tombstone's can still arrive. It is
+    * the only guard against a resurrected key — the stateless parquet →
+    * lake replay lets a stale event through as a delta row, and once the
+    * tombstone it loses to is gone, that row wins. (Kept tombstones make
+    * any stale event lose.) Enforcing it needs a tombstone horizon over a
+    * declared reorder bound, which this table does not have. Same
+    * snapshot mechanics. After compaction every bucket holds one resolved
+    * file, so reads skip the winner window entirely.
     *
     * **Typed drift materialization** ≙ the reference sink's DDL ladder
     * (`pgsql.go:170-229,326-363`): a still-string drift column whose

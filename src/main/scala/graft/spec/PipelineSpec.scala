@@ -32,10 +32,11 @@ final case class SourceSpec(
     // byte-bounded micro-batches (overrides maxFilesPerTrigger when set):
     // the backpressure knob that stays meaningful across segment layouts
     maxBytesPerTrigger: Option[Long] = None,
-    // per-key dedup-state TTL for TAILING pipelines (requires a
-    // processingTime trigger — see CdcJob.start): bounds keyed state
-    // when most of the key space goes cold; expiry only re-admits
-    // idempotent duplicates
+    // per-key dedup-state TTL for TAILING pipelines that keep dedup
+    // state — jsonl sources, jdbc targets (requires a processingTime
+    // trigger; a parquet changelog into a lake keeps no state and is
+    // refused — see CdcJob.start): bounds keyed state when most of the
+    // key space goes cold; expiry only re-admits idempotent duplicates
     dedupStateTtlMs: Option[Long] = None,
     configurations: Map[String, String] = Map.empty) {
 

@@ -15,20 +15,24 @@ object Sessions {
   /** `local[cpus]` with AQE, UTC session time, no UI, and:
     *
     *  - shuffle (and state) partitions = cpus. Measured against a fixed
-    *    32 at both levels of the CDC replay, the 16-thread level paid
-    *    ~2 s/batch more (a second wave of RocksDB instance open/commit per
-    *    stateful stage: 48.5 s vs 38.6 s wall); partitions ≪ cpus idles
-    *    the stateful stage. State layout is pinned by the checkpoint only
-    *    on resume.
+    *    32 at both levels of the then-stateful CDC replay, the 16-thread
+    *    level paid ~2 s/batch more (a second wave of RocksDB instance
+    *    open/commit per stateful stage: 48.5 s vs 38.6 s wall);
+    *    partitions ≪ cpus idles a stateful stage. A stateful query's
+    *    checkpoint pins its state partitions on resume; the parquet →
+    *    lake replay keeps no state, so its resume at another cpu count
+    *    moves nothing.
     *  - raw local FS for file:// paths. Hadoop's default LocalFileSystem
     *    is a ChecksumFileSystem: every file create (state changelog,
     *    offset WAL, delta parquet) also writes a .crc sidecar, doubling
     *    the small-file traffic of each micro-batch commit, for integrity
     *    the lake's atomic snapshot commit (and, on a cluster, the DFS
     *    block layer) already provides.
-    *  - the RocksDB keyed state store (BENCH.md "State store"): the dedup
-    *    state is one Long per live key, which the in-memory HDFS provider
-    *    holds entirely on heap; RocksDB bounds memory at any key count.
+    *  - the RocksDB keyed state store (BENCH.md "State store") for the
+    *    stateful pipelines: `LsnDedup` on jsonl sources and JDBC targets
+    *    (one Long per live key), `SessionizeStream` and `EventRollup`.
+    *    The in-memory HDFS provider holds all of it on heap; RocksDB
+    *    bounds memory at any key count.
     *    Changelog checkpointing commits each batch's state changelog and
     *    leaves full snapshots to background maintenance. The raw FS needs
     *    it: RocksDB's snapshot upload goes through Hadoop's

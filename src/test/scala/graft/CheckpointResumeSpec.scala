@@ -93,4 +93,18 @@ class CheckpointResumeSpec extends SparkSpec {
     val after = lake.read().select("repo", "path").collect().map(r => (r.getString(0), r.getString(1)))
     assert(after.toSet === Set(("r2", "b")))
   }
+
+  test("a checkpoint written by the stateful pipeline is refused with a restart recipe") {
+    // an empty state/ directory is what marks it: no streaming run needed
+    val root = tmpDir("stateful-ckpt")
+    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(root, "ckpt", "state"))
+    val job = CdcJob(spark, CdcJobConfig(logDir = s"$root/log",
+      tablePath = s"$root/lake", checkpointDir = s"$root/ckpt"))
+    val e = intercept[IllegalStateException](job.start())
+    assert(e.getMessage.contains("state/") &&
+      e.getMessage.contains("new checkpointDir") &&
+      e.getMessage.contains("new checkpointId"), e.getMessage)
+    // refused before anything is written: no table was created
+    assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(root, "lake")))
+  }
 }

@@ -9,7 +9,9 @@ import org.apache.spark.sql.streaming.Trigger
   * inactivity, bounding state at 10^10-key scale — and expiry is SAFE:
   * a stale duplicate arriving after its key expired is re-admitted as an
   * idempotent extra row that the lake's monotone max-`__lsn` merge
-  * resolves away.
+  * resolves away. The TTL exists only where dedup state does: the specs
+  * tail a jsonl log, and a parquet changelog into a lake (no state) is
+  * refused.
   *
   * The TTL is a TAILING-mode feature: under `ProcessingTimeTimeout` the
   * engine reports should-run-another-batch on every batch, so an
@@ -24,15 +26,29 @@ class DedupTtlSpec extends SparkSpec {
     ChangeEvent(lsn, "update", new java.sql.Timestamp(lsn * 1000L),
       "r", key, f"c$lsn%040d", "scala", content, Map.empty)
 
+  /** One jsonl segment: an envelope JSON object per line. */
   private def writeSeg(logDir: String, seg: Int, events: Seq[ChangeEvent]): Unit = {
     import spark.implicits._
-    events.toDS().coalesce(1).write.parquet(f"$logDir/seg=$seg%03d")
+    events.toDS().select(to_json(struct(col("*"))).as("value"))
+      .coalesce(1).write.text(f"$logDir/seg=$seg%03d")
+  }
+
+  test("TTL on a parquet changelog into a lake is refused: that path keeps no dedup state") {
+    val root = tmpDir("ttl-stateless")
+    val cfg = CdcJobConfig(logDir = s"$root/log", tablePath = s"$root/lake",
+      checkpointDir = s"$root/ckpt", dedupStateTtlMs = Some(1000L))
+    val e = intercept[IllegalArgumentException] {
+      CdcJob(spark, cfg).start(Trigger.ProcessingTime(200L))
+    }
+    assert(e.getMessage.contains("dedupStateTtlMs") &&
+      e.getMessage.contains("no dedup state"))
   }
 
   test("TTL + AvailableNow is refused fail-fast (the engine would never terminate)") {
     val root = tmpDir("ttl-reject")
     val cfg = CdcJobConfig(logDir = s"$root/log", tablePath = s"$root/lake",
-      checkpointDir = s"$root/ckpt", dedupStateTtlMs = Some(1000L))
+      checkpointDir = s"$root/ckpt", format = "jsonl",
+      dedupStateTtlMs = Some(1000L))
     val e = intercept[IllegalArgumentException] {
       CdcJob(spark, cfg).start(Trigger.AvailableNow())
     }
@@ -44,7 +60,7 @@ class DedupTtlSpec extends SparkSpec {
     val logDir = s"$root/log"
     val cfg = CdcJobConfig(logDir = logDir, tablePath = s"$root/lake",
       checkpointDir = s"$root/ckpt", numBuckets = 2,
-      maxFilesPerTrigger = 4, dedupStateTtlMs = Some(700L),
+      maxFilesPerTrigger = 4, format = "jsonl", dedupStateTtlMs = Some(700L),
       checkpointId = "ttl")
 
     // key A advances to lsn 3 before the stream starts

@@ -435,31 +435,74 @@ class LakeTableMorSpec extends SparkSpec {
     }
     spark.sparkContext.addSparkListener(listener)
     try {
-      // pre-materialized input so the job count is the MERGE's, not the
-      // fixture's
-      val batch = Seq(ev(2, "update", 1), ev(3, "insert", 2))
-        .toDS().toDF().localCheckpoint()
-      // the listener bus is async: settle = count unchanged for 500 ms
-      def settle(): Int = {
-        var last = -1
-        var cur = jobs.get()
-        var spins = 0
-        while (cur != last && spins < 20) {
-          last = cur; Thread.sleep(500); cur = jobs.get(); spins += 1
-        }
-        cur
+      // preReduced = false is the stateless replay's merge (its window is
+      // the per-batch dedup); true is the deduped pipeline's
+      Seq(true -> 1L, false -> 2L).foreach { case (preReduced, batchId) =>
+        // pre-materialized input so the job count is the MERGE's, not
+        // the fixture's
+        val batch = Seq(ev(2 * batchId, "update", 1), ev(2 * batchId + 1, "insert", 2))
+          .toDS().toDF().localCheckpoint()
+        org.apache.spark.ListenerBusBridge.drain(spark.sparkContext)
+        jobs.set(0)
+        // AQE materializes each query stage as its own job, which makes
+        // the job count a stage count; disable it here so one action = one
+        // job and the assertion measures ACTIONS (data passes over the
+        // batch)
+        spark.conf.set("spark.sql.adaptive.enabled", "false")
+        try lake.merge(batch, "t", batchId, preReduced = preReduced)
+        finally spark.conf.set("spark.sql.adaptive.enabled", "true")
+        org.apache.spark.ListenerBusBridge.drain(spark.sparkContext)
+        val n = jobs.get
+        assert(n === 1,
+          s"merge commit (preReduced=$preReduced) must be exactly one Spark action, saw $n")
       }
-      settle()
-      jobs.set(0)
-      // AQE materializes each query stage as its own job, which makes the
-      // job count a stage count; disable it here so one action = one job
-      // and the assertion measures ACTIONS (data passes over the batch)
-      spark.conf.set("spark.sql.adaptive.enabled", "false")
-      try lake.merge(batch, "t", 1L, preReduced = true)
-      finally spark.conf.set("spark.sql.adaptive.enabled", "true")
-      val n = settle()
-      assert(n === 1, s"merge commit must be exactly one Spark action, saw $n")
     } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  test("a merge of a parquet-read batch plans exactly ONE exchange, with salt factor 1 and > 1") {
+    // 16 buckets on local[4] → salt factor 1; 2 buckets → 2. With a
+    // literal salt the planner added a second full exchange on
+    // (__bucket, keys) ahead of the winner window.
+    import spark.implicits._
+    val src = tmpDir("mor-onex-src") + "/in"
+    (1 to 200).map(i => ev(i.toLong, if (i % 9 == 0) "delete" else "update", i % 37))
+      .toDS().repartition(3).write.parquet(src)
+    object Plans extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    Seq(16 -> 1, 2 -> 2).foreach { case (buckets, salts) =>
+      val lake = LakeTable(spark, tmpDir(s"mor-onex-$buckets"), Seq("repo", "path"), buckets)
+      lake.createIfAbsent(StructType.fromDDL(baseDdl))
+      assert(lake.saltFactor === salts)
+      val plans = new java.util.concurrent.ConcurrentLinkedQueue[
+        org.apache.spark.sql.execution.SparkPlan]()
+      val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+        override def onSuccess(f: String,
+            qe: org.apache.spark.sql.execution.QueryExecution, ns: Long): Unit = {
+          plans.add(qe.executedPlan); ()
+        }
+        override def onFailure(f: String,
+            qe: org.apache.spark.sql.execution.QueryExecution, e: Exception): Unit = ()
+      }
+      org.apache.spark.ListenerBusBridge.drain(spark.sparkContext)
+      spark.listenerManager.register(listener)
+      try {
+        lake.merge(spark.read.parquet(src), "t", 0L)
+        org.apache.spark.ListenerBusBridge.drain(spark.sparkContext)
+      } finally spark.listenerManager.unregister(listener)
+      val captured = plans.toArray(Array.empty[org.apache.spark.sql.execution.SparkPlan]).toSeq
+      val exchanges = captured.flatMap(p => Plans.collect(p) {
+        case e: org.apache.spark.sql.execution.exchange.ShuffleExchangeLike => e
+      })
+      assert(exchanges.size === 1,
+        s"$buckets buckets: expected one exchange, got:\n${captured.mkString("\n")}")
+      // one delta file per touched bucket per salt at most
+      val files = lake.filesOf(lake.currentSnapshot.get)
+      assert(files.values.forall(_.size <= salts), files)
+      // and the winners are right
+      val want = (1 to 200).groupBy(_ % 37).map { case (k, is) => k -> is.max }
+        .collect { case (k, i) if i % 9 != 0 => (s"p$k", s"content-$i-k$k") }.toSet
+      assert(lake.read().select("path", "content").collect()
+        .map(r => (r.getString(0), r.getString(1))).toSet === want)
+    }
   }
 
   test("snapshot codec names format incompatibilities instead of opaque mapping errors") {
@@ -537,7 +580,8 @@ class LakeTableMorSpec extends SparkSpec {
     // of the keys, so the winner per key must be EXACTLY what a plain
     // key window picks — pinned here over a batch with multi-row keys,
     // equal-lsn delete/upsert ties, and enough keys to populate every
-    // bucket and salt group (local[4] fleet over 2 buckets ⇒ salt > 1).
+    // bucket and salt group (local[4] fleet over 2 buckets ⇒ salt > 1;
+    // the salt is hashed independently of the bucket, asserted below).
     import spark.implicits._
     val dir = tmpDir("mor-fusedwin")
     val lake = LakeTable(spark, dir, Seq("repo", "path"), 2, maxFilesPerBucket = 32)
@@ -553,6 +597,12 @@ class LakeTableMorSpec extends SparkSpec {
       ChangeEvent(lsn, op, new java.sql.Timestamp(0), s"r${k % 5}", s"p$k",
         f"c$lsn%040d", "scala", s"c-$k-$lsn-$op", Map.empty)
     }
+    val salts = lake.saltFactor
+    assert(salts > 1)
+    val groups = evs.toDS().select(lake.bucketExpr, lake.saltExpr(salts))
+      .distinct().count()
+    assert(groups === 2L * salts,
+      s"(bucket, salt) pairs must cover all ${2 * salts} groups, got $groups")
     lake.merge(evs.toDS().toDF(), "t", 0L)
     // reference winner per key: max by (lsn, delete-wins, op) — the same
     // total order the merge window sorts descending
