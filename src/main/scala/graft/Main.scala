@@ -43,8 +43,11 @@ object Main {
         "usage: graft start -f pipeline.yaml [--verify-oracle]\n" +
         "       graft generate-log --out DIR [--events N] [--segments K] [--seed S] [--zipf Z]\n" +
         "       graft compact --table DIR [--drop-tombstones]\n" +
+        "           (--drop-tombstones only when no event older than the\n" +
+        "           dropped tombstones can still be delivered)\n" +
         "       graft lookup --table DIR --key V1[,V2...]\n" +
         "       graft changes --table DIR --from V [--to V]\n" +
+        "           (apply per key by max __lsn, not in __version order)\n" +
         "       graft vacuum --table DIR [--keep N]\n" +
         "       graft config-template [--source-type T --target-type T ...]\n" +
         "           [--export-path F] (no flags: print the annotated skeleton)")
@@ -53,7 +56,7 @@ object Main {
 
   /** Incremental change feed `(from, to]` as JSON lines — what a
     * downstream consumer tails instead of re-reading the table
-    * (`LakeTable.changeFeed`).
+    * (`LakeTable.changeFeed`, which states how to apply it).
     */
   private def changes(args: Array[String]): Unit = {
     val table = flag(args, "--table").getOrElse {

@@ -34,7 +34,8 @@ final case class KeyProgress(maxEmittedLsn: Long)
   * (`CdcJob.startLake`). The state stays where it carries a guarantee:
   *  - jsonl changelogs: malformed lines ride the stream keyed by content
   *    hash, and the state is what drops a redelivered bad line in a later
-  *    batch, keeping the DLQ free of cross-batch duplicates;
+  *    batch, keeping the DLQ free of cross-batch duplicates
+  *    (JsonlChangelogSpec pins it);
   *  - JDBC targets: the upsert has no LSN column to compare, so the state
   *    is their only per-key monotonicity (`JdbcUpsert.applyCdcBatch`).
   *

@@ -196,7 +196,8 @@ class CdcJob(spark: SparkSession, cfg: CdcJobConfig) {
     *   this re-run is what re-commits the batch's dedup-state updates.
     *   Returning without touching the Dataset would silently lose those
     *   updates (stale events re-admitted later) and trips Spark's
-    *   state-store commit validation ("expected N commits but got 0").
+    *   state-store commit validation ("expected N commits but got 0");
+    *   JsonlChangelogSpec's ledger-hit spec pins it.
     */
   private def sinkBatch(batchId: Long, consume: () => Unit)(
       materialize: () => DataFrame): Unit = {

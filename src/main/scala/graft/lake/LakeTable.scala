@@ -859,9 +859,13 @@ class LakeTable(
     * is what a downstream incremental consumer tails instead of
     * re-reading a 100 TB table: per version it returns exactly that
     * batch's winner set (one row per key — upserts AND tombstones, with
-    * `__lsn`/`__deleted`/`__version`), so applying the feed in version
-    * order (or idempotently by max `__lsn`) reconstructs the table delta
-    * for the range.
+    * `__lsn`/`__deleted`/`__version`). Apply it per key by max `__lsn`
+    * (a tombstone wins an equal-lsn tie), NOT by version order: the
+    * stateless parquet → lake replay commits a stale redelivery as a row
+    * of a LATER version with a LOWER `__lsn` than the key already holds,
+    * and applying that row in version order would roll the key back (or
+    * bring a deleted key back). By max `__lsn` the feed reconstructs the
+    * table delta for the range.
     *
     * Versions created by compaction contribute nothing (they rewrite,
     * they don't change state) — their absence from the feed is the

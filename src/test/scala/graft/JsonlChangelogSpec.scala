@@ -4,12 +4,35 @@ import graft.envelope.ChangeEvent
 import graft.job.{CdcJob, CdcJobConfig}
 import graft.log.ChangeLogGenerator
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** JSONL-codec changelog: raw text + JSON codec with malformed lines
   * routed to a real DLQ (the reference logs-and-drops,
   * `internal/source/kafka.go:93-97`; its configured DLQ is never written).
+  * This path keeps `LsnDedup`'s keyed state; the last two specs pin what
+  * that state carries across micro-batches.
   */
 class JsonlChangelogSpec extends SparkSpec {
+
+  private def ev(lsn: Long, op: String, key: String, content: String): ChangeEvent =
+    ChangeEvent(lsn, op, new java.sql.Timestamp(lsn * 1000L),
+      "r", key, f"c$lsn%040d", "scala", content, Map.empty)
+
+  private def json(events: ChangeEvent*): Seq[String] = {
+    import spark.implicits._
+    events.toDS().toJSON.collect().toSeq
+  }
+
+  /** One text file per segment, its mtime stepped by `seg` so that the
+    * file source admits segments in order (one per micro-batch at
+    * `maxFilesPerTrigger = 1`).
+    */
+  private def writeLines(logDir: String, seg: Int, lines: Seq[String]): Unit = {
+    import spark.implicits._
+    val dir = new java.io.File(f"$logDir/seg=$seg%03d")
+    lines.toDS().coalesce(1).write.text(dir.getPath)
+    dir.listFiles().foreach(_.setLastModified(1000000000000L + seg * 2000L))
+  }
 
   test("jsonl changelog replays to oracle; malformed lines land in the DLQ") {
     val every = 100
@@ -49,5 +72,49 @@ class JsonlChangelogSpec extends SparkSpec {
     assert(dlq.count() > 0)
     assert(dlq.columns.toSet === Set("raw", "dlq_ts"))
     assert(dlq.filter(col("raw").startsWith("{\"oops\":")).count() === dlq.count())
+  }
+
+  test("a malformed line redelivered in a later batch lands in the DLQ once") {
+    val root = tmpDir("jl-dlq-redeliver")
+    val bad = "{\"oops\": truncated"
+    writeLines(s"$root/log", 0, json(ev(1, "insert", "A", "a1")) :+ bad)
+    writeLines(s"$root/log", 1, json(ev(2, "update", "A", "a2")) :+ bad)
+    val job = CdcJob(spark, CdcJobConfig(logDir = s"$root/log",
+      tablePath = s"$root/lake", checkpointDir = s"$root/ckpt",
+      dlqDir = Some(s"$root/dlq"), format = "jsonl", maxFilesPerTrigger = 1,
+      numBuckets = 2))
+    assert(job.runToCompletion().size === 2, "one micro-batch per segment")
+    // both copies key on the line's hash at lsn 0: the state drops the
+    // second one, which a per-batch dedup alone would let through
+    assert(spark.read.parquet(s"$root/dlq").select("raw").collect()
+      .map(_.getString(0)).toSeq === Seq(bad))
+    assert(job.lake.read().select("content").collect()
+      .map(_.getString(0)).toSeq === Seq("a2"))
+  }
+
+  test("a batch the lake's ledger already holds still commits its dedup state") {
+    // the crash window between the lake commit and the engine's batch
+    // commit: the ledger holds batch 0, the checkpoint does not
+    val root = tmpDir("jl-ledger-hit")
+    val cfg = CdcJobConfig(logDir = s"$root/log", tablePath = s"$root/lake",
+      checkpointDir = s"$root/ckpt", format = "jsonl", maxFilesPerTrigger = 1,
+      numBuckets = 2, checkpointId = "jl-ledger")
+    val job = CdcJob(spark, cfg)
+    job.lake.createIfAbsent(StructType(ChangeEvent.schema.fields.filter(f =>
+      ChangeEvent.lakeCols.contains(f.name))))
+    val first = Seq(ev(5, "insert", "A", "a5"))
+    import spark.implicits._
+    assert(!job.lake.merge(first.toDS().toDF(), cfg.checkpointId, 0L).skippedAsApplied)
+    writeLines(s"$root/log", 0, json(first: _*))
+    writeLines(s"$root/log", 1, json(ev(3, "update", "A", "a3-stale"), ev(7, "insert", "B", "b7")))
+
+    val stats = job.runToCompletion()
+    assert(stats.map(_.skippedAsApplied) === Seq(true, false))
+    // the skipped batch still ran through the state, so the stale A in
+    // the next batch is dropped before it reaches the lake
+    assert(job.lake.readRaw().filter(col("path") === "A").select("__lsn")
+      .collect().map(_.getLong(0)).toSeq === Seq(5L))
+    assert(job.lake.read().orderBy("path").select("content").collect()
+      .map(_.getString(0)).toSeq === Seq("a5", "b7"))
   }
 }

@@ -38,9 +38,10 @@ class StatelessReplaySpec extends SparkSpec {
     writeSeg(s"$root/log", 0, Seq(
       ev(1, "insert", "A", "a-v1"), ev(2, "update", "A", "a-v2"),
       ev(3, "update", "A", "a-v3"), ev(10, "insert", "B", "b-v10")))
-    replay(root)
+    val v1 = replay(root).lake.currentVersion.get
     writeSeg(s"$root/log", 1, Seq(ev(2, "update", "A", "a-v2"), ev(11, "update", "B", "b-v11")))
     val job = replay(root)
+    val v2 = job.lake.currentVersion.get
 
     // no state dropped the redelivery: it is stored, with its own lsn...
     assert(rawLsns(job, "A") === Seq(2L, 3L))
@@ -52,6 +53,15 @@ class StatelessReplaySpec extends SparkSpec {
     assert(content("B") === Seq("b-v11"))
     assert(job.lake.lookup(Seq("r", "A")).collect().map(_.getAs[String]("content"))
       .toSeq === Seq("a-v3"))
+
+    // the change feed carries the redelivery under the LATER version with
+    // a LOWER lsn: applied in version order it would roll A back to a-v2,
+    // applied per key by max __lsn it yields a-v3
+    val feedA = job.lake.changeFeed(0L, v2).filter(col("path") === "A")
+      .select("__version", "__lsn", "content").collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getString(2))).toSeq.sortBy(_._1)
+    assert(feedA === Seq((v1, 3L, "a-v3"), (v2, 2L, "a-v2")))
+    assert(feedA.maxBy(_._2)._3 === "a-v3")
   }
 
   test("delete, stale insert, compact (tombstones kept), stale insert: the key stays absent") {
