@@ -93,10 +93,9 @@ object Main {
   }
 
   /** Point lookup of one key's current state — bucket-pruned, so it
-    * scans 1/numBuckets of the table (`LakeTable.lookup`) in one Spark
-    * job with no exchange; the at most one candidate row per file of the
-    * key's bucket is resolved on the driver when the lookup is called.
-    * Key values are positional against the table's key columns.
+    * reads 1/numBuckets of the table (`LakeTable.lookup`), on the driver
+    * and with no Spark job. Key values are positional against the table's
+    * key columns.
     */
   private def lookup(args: Array[String]): Unit = {
     val table = flag(args, "--table").getOrElse {

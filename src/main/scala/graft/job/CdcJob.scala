@@ -388,11 +388,16 @@ class CdcJob(spark: SparkSession, cfg: CdcJobConfig) {
             lastData = System.nanoTime()
           }
           if (idleExceeded && !q.status.isDataAvailable && p != null) {
-            // drain any in-flight trigger (bounded) — if it was a DATA
+            // drain the batch in flight NOW (bounded) — if it was a DATA
             // batch, its completion shows up as fresh progress in the
-            // grace re-check below and we keep running
+            // grace re-check below and we keep running. Wait for that one
+            // batch only, not for an idle trigger: under a state TTL the
+            // next no-data tick starts at once, so the trigger may never
+            // be idle again.
             val drainDeadline = System.nanoTime() + 30L * 1000000000L
-            while (q.status.isTriggerActive && System.nanoTime() < drainDeadline)
+            def drained = !q.status.isTriggerActive ||
+              Option(q.lastProgress).exists(_.batchId > p.batchId)
+            while (!drained && System.nanoTime() < drainDeadline)
               Thread.sleep(50)
             // grace re-check: files that landed in the last instants may
             // not have been seen by a source poll yet — give the engine

@@ -1,7 +1,15 @@
 package graft.lake
 
-import org.apache.spark.sql.{Column, DataFrame, Observation, Row, SaveMode, SparkSession}
+import org.apache.spark.paths.SparkPath
+import org.apache.spark.sql.{Column, DataFrame, Observation, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.catalyst.types.DataTypeUtils
+import org.apache.spark.sql.execution.datasources.{FileFormat, PartitionedFile}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.PlanBridge
 import org.apache.spark.sql.types._
 
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
@@ -132,6 +140,12 @@ final case class MergeStats(
 class LakeTable(
     val spark: SparkSession,
     val tablePath: String,
+    /** Key columns and bucket count apply only at creation
+      * ([[createIfAbsent]]): for an existing table the SNAPSHOT is
+      * authoritative (a reader opening with different defaults must not
+      * re-hash rows into the wrong buckets), and every operation takes
+      * both from the one snapshot it reads.
+      */
     requestedKeyCols: Seq[String],
     requestedNumBuckets: Int,
     /** Compaction budget: max delta files per bucket before the merge
@@ -140,16 +154,6 @@ class LakeTable(
       * Operational knob, not table identity — safe to vary per writer.
       */
     val maxFilesPerBucket: Int = 8) {
-
-  /** For an existing table the SNAPSHOT is authoritative for key columns
-    * and bucket count (a reader opening with different defaults must not
-    * re-hash rows into the wrong buckets); constructor values apply only
-    * at creation.
-    */
-  def keyCols: Seq[String] =
-    currentSnapshot.map(_.keyCols).getOrElse(requestedKeyCols)
-  def numBuckets: Int =
-    currentSnapshot.map(_.numBuckets).getOrElse(requestedNumBuckets)
 
   import LakeTable._
 
@@ -274,8 +278,8 @@ class LakeTable(
     val s = Snapshot(
       version = 0L,
       schemaDdl = StructType(baseSchema.fields ++ metaFields).toDDL,
-      numBuckets = numBuckets,
-      keyCols = keyCols, manifests = Nil, appliedUpTo = Map.empty,
+      numBuckets = requestedNumBuckets,
+      keyCols = requestedKeyCols, manifests = Nil, appliedUpTo = Map.empty,
       lineage = Map.empty, parentVersion = -1L,
       baseCols = baseSchema.fieldNames.toSeq)
     commitSnapshot(s)
@@ -402,48 +406,53 @@ class LakeTable(
     * value no longer parses reads as NULL instead of failing the scan —
     * the Spark-side analog of the reference sink's per-value DDL ladder
     * feeding an already-typed column (`pgsql.go:326-363`).
+    *
+    * One `select` (columns in place, the carrier dropped), so a caller
+    * pays one analysis step however many drift columns the table has.
     */
   private def liftDrift(s: Snapshot, df: DataFrame): DataFrame = {
     val sch = StructType.fromDDL(s.schemaDdl)
-    val drift = driftCols(s)
-    val hasCarrier = df.columns.contains(ExtraMeta) &&
-      !sch.fieldNames.contains(ExtraMeta)
-    def fromExtra(c: String): Column = {
-      val raw = element_at(col(ExtraMeta), c)
-      sch(c).dataType match {
-        case StringType => raw
-        case DateType => try_to_date(raw)
-        case TimestampType => try_to_timestamp(regexp_replace(raw, "T", " "))
-        case other => raw.try_cast(other)
+    if (!df.columns.contains(ExtraMeta) || sch.fieldNames.contains(ExtraMeta)) df
+    else {
+      val drift = driftCols(s).toSet
+      def named(c: String): Column = col(s"`${c.replace("`", "``")}`")
+      def fromExtra(c: String): Column = {
+        val raw = element_at(col(ExtraMeta), c)
+        sch(c).dataType match {
+          case StringType => raw
+          case DateType => try_to_date(raw)
+          case TimestampType => try_to_timestamp(regexp_replace(raw, "T", " "))
+          case other => raw.try_cast(other)
+        }
       }
+      df.select(df.columns.toSeq.collect {
+        case c if drift(c) => coalesce(named(c), fromExtra(c)).as(c)
+        case c if c != ExtraMeta => named(c)
+      }: _*)
     }
-    val lifted =
-      if (drift.isEmpty || !hasCarrier) df
-      else drift.foldLeft(df) { (d, c) =>
-        d.withColumn(c, coalesce(col(c), fromExtra(c)))
-      }
-    if (hasCarrier) lifted.drop(ExtraMeta) else lifted
   }
 
   /** Point lookup by full key: prune to the ONE hash bucket the key
-    * lives in before scanning. On a 100 TB table this reads
+    * lives in before reading. On a 100 TB table this reads
     * 1/`numBuckets` of the files (times the bucket's MOR depth) instead
     * of the whole table — the CDC serving path for "current state of
     * this repo/path". The bucket id is computed driver-side with the
     * exact expression the writer uses (`xxhash64` over the key columns,
     * positive mod), so pruning can never miss.
     *
-    * One Spark job, no exchange: every file holds at most one row per key
-    * (a delta is a batch's winner set, a rewrite is already resolved), so
-    * after the key filter the bucket's scan yields at most one candidate
-    * per file — a handful, bounded by the compaction budget
-    * (`maxFilesPerBucket`). They are collected and the winner is picked
-    * on the driver with [[resolve]]'s rule (max `__lsn`, the tombstone
-    * wins an equal-lsn tie) instead of through a shuffled window.
+    * No Spark job and no query plan over the files: the DRIVER reads the
+    * bucket's files (at most `maxFilesPerBucket` after compaction) with
+    * Spark's own Parquet reader, one file after another on the calling
+    * thread — a cost of O(bucket bytes), which sizing buckets through
+    * `numBuckets` keeps small. Each row is matched against the typed key;
+    * every file holds at most one row per key (a delta is a batch's
+    * winner set, a rewrite is already resolved), and the winner among the
+    * matches is picked with [[resolve]]'s rule (max `__lsn`, the
+    * tombstone wins an equal-lsn tie).
     *
     * Reads at CALL time: the result is a local DataFrame holding the
     * winner (live rows only, tombstoned keys absent; user columns), so
-    * collecting it runs no further job and later commits do not change it.
+    * collecting it runs no job and later commits do not change it.
     */
   def lookup(keyValues: Seq[Any]): DataFrame = currentSnapshot match {
     case None => spark.emptyDataFrame
@@ -455,7 +464,8 @@ class LakeTable(
       // so a raw Literal of the caller's runtime type would prune to the
       // wrong bucket and silently return "not found" for a present key
       val sch = StructType.fromDDL(s.schemaDdl)
-      import org.apache.spark.sql.catalyst.expressions.{Cast, Literal => CLit}
+      import org.apache.spark.sql.catalyst.expressions.{And, BoundReference,
+        Cast, EqualTo, Expression, Predicate, Literal => CLit}
       val keyLits = s.keyCols.zip(keyValues).map { case (c, v) =>
         val dt = sch(c).dataType
         val raw = CLit(v)
@@ -474,20 +484,76 @@ class LakeTable(
       val h = new org.apache.spark.sql.catalyst.expressions.XxHash64(keyLits)
         .eval(null).asInstanceOf[Long]
       val b = java.lang.Math.floorMod(h, s.numBuckets.toLong).toString
-      val files = filesOf(s).getOrElse(b, Nil)
-      val scan = liftDrift(s, readFiles(extendedSchema(s, sch), files))
-      // user columns first, then the two meta columns the pick reads
-      val user = scan.columns.filterNot(c => c == LsnMeta || c == DeletedMeta)
-      val cand = s.keyCols.zip(keyLits)
-        .foldLeft(scan) { case (d, (c, v)) =>
-          d.filter(col(c) === org.apache.spark.sql.graftbridge.ColumnBridge.column(v)) }
-        .select((user :+ LsnMeta :+ DeletedMeta).toIndexedSeq.map(col): _*)
-      val n = user.length
-      val rows = if (files.isEmpty) Array.empty[Row] else cand.collect()
-      val live = rows.maxByOption(r => (r.getLong(n), r.getBoolean(n + 1)))
-        .filterNot(_.getBoolean(n + 1)).map(w => Row.fromSeq(w.toSeq.take(n)))
-      spark.createDataFrame(live.toSeq.asJava, StructType(cand.schema.fields.take(n)))
+      val r = fileReader(extendedSchema(s, sch))
+      val isKey = Predicate.createInterpreted(s.keyCols.zip(keyLits)
+        .map { case (c, v) =>
+          EqualTo(BoundReference(r.schema.fieldIndex(c), v.dataType, nullable = true), v)
+        }.reduce[Expression](And(_, _)))
+      var winner: Option[(Long, Boolean, InternalRow)] = None
+      entriesOf(s).getOrElse(b, Nil).foreach { f =>
+        r.foreachRow(f) { row =>
+          if (isKey.eval(row)) {
+            val lsn = row.getLong(r.lsn)
+            val deleted = row.getBoolean(r.deleted)
+            if (winner.forall { case (l, d, _) => lsn > l || (lsn == l && deleted && !d) })
+              winner = Some((lsn, deleted, r.keep(row)))
+          }
+        }
+      }
+      val live = winner.collect { case (_, false, row) => row }.toSeq
+      liftDrift(s, PlanBridge.ofRows(spark,
+        LocalRelation(DataTypeUtils.toAttributes(r.out), live)))
   }
+
+  /** Spark's Parquet reader for raw table files on the driver, built for
+    * one extended schema (it broadcasts its Hadoop conf and fixes the
+    * row layout) and kept until drift or a compaction retype changes
+    * that schema. Rows come one at a time (no columnar batches), are
+    * read as file sources read a user schema (every column nullable), and
+    * a file missing a column reads it as null.
+    */
+  private final class FileReader(val schema: StructType) {
+    private val readSchema = PlanBridge.asNullable(schema)
+    private val read: PartitionedFile => Iterator[InternalRow] =
+      new ParquetFileFormat().buildReaderWithPartitionValues(spark,
+        readSchema, StructType(Nil), readSchema, Nil,
+        Map(FileFormat.OPTION_RETURNING_BATCH -> "false"),
+        spark.sessionState.newHadoopConf())
+    val lsn: Int = schema.fieldIndex(LsnMeta)
+    val deleted: Int = schema.fieldIndex(DeletedMeta)
+    private val kept: Array[Int] =
+      schema.indices.filterNot(i => i == lsn || i == deleted).toArray
+    /** Result schema: every column but the two meta columns. */
+    val out: StructType = StructType(kept.map(readSchema(_)))
+
+    /** Feed every row of one file to `fn`, then close the reader (outside
+      * a task nothing else would). The file's size comes from its
+      * manifest entry, so the footer read needs no stat. A row is only
+      * valid until the next one is read: keep it through [[keep]].
+      */
+    def foreachRow(f: ManifestFile)(fn: InternalRow => Unit): Unit = {
+      val it = read(PartitionedFile(InternalRow.empty,
+        SparkPath.fromUri(root.resolve(f.path).toAbsolutePath.toUri),
+        0L, f.size, Array.empty[String], 0L, f.size, Map.empty))
+      try it.foreach(fn)
+      finally it match {
+        case c: java.io.Closeable => c.close()
+        case _ => ()
+      }
+    }
+
+    /** A copy of `row`'s [[out]] columns that outlives the reader. */
+    def keep(row: InternalRow): InternalRow = new GenericInternalRow(kept.map[Any] { i =>
+      if (row.isNullAt(i)) null else InternalRow.copyValue(row.get(i, readSchema(i).dataType))
+    })
+  }
+  @volatile private var cachedReader: Option[FileReader] = None
+  private def fileReader(ext: StructType): FileReader =
+    cachedReader.filter(_.schema == ext).getOrElse {
+      val r = new FileReader(ext)
+      cachedReader = Some(r)
+      r
+    }
 
   /** Raw rows of every referenced file, unresolved (deltas + tombstones
     * as stored, including the `extra` drift carrier) — lineage checks,
@@ -533,15 +599,17 @@ class LakeTable(
 
   // -- merge (the sink) --------------------------------------------------------
 
-  /** Bucket assignment — deterministic hash partition on the key columns. */
-  private[graft] def bucketExpr: Column =
-    pmod(xxhash64(keyCols.map(col): _*), lit(numBuckets))
+  /** Bucket assignment — deterministic hash partition on the snapshot's
+    * key columns.
+    */
+  private[graft] def bucketExpr(s: Snapshot): Column =
+    pmod(xxhash64(s.keyCols.map(col): _*), lit(s.numBuckets))
 
   /** Write salts per bucket: enough that the fleet is busy when it is
     * wider than the bucket count (see merge step 4), 1 otherwise.
     */
-  private[graft] def saltFactor: Int = math.max(1, math.ceil(
-    spark.sparkContext.defaultParallelism.toDouble / numBuckets).toInt)
+  private[graft] def saltFactor(s: Snapshot): Int = math.max(1, math.ceil(
+    spark.sparkContext.defaultParallelism.toDouble / s.numBuckets).toInt)
 
   /** Salt of a key: a pure function of the key columns, hashed behind a
     * tag so it is independent of [[bucketExpr]]. Hashing the bare keys
@@ -549,8 +617,8 @@ class LakeTable(
     * factor 2 the salt would equal the bucket), leaving half of the
     * `(bucket, salt)` groups, and the merge window's tasks, empty.
     */
-  private[graft] def saltExpr(factor: Int): Column =
-    pmod(xxhash64((lit("__salt") +: keyCols.map(col)): _*), lit(factor))
+  private[graft] def saltExpr(s: Snapshot, factor: Int): Column =
+    pmod(xxhash64((lit("__salt") +: s.keyCols.map(col)): _*), lit(factor))
 
   /** Apply one micro-batch of change events to the table as an idempotent
     * MERGE commit; the batch is reduced to one winner per key first (the
@@ -609,17 +677,17 @@ class LakeTable(
     //    write over several tasks (several files per bucket per batch).
     //    Write parallelism policy (salt/fleet bound): see step 4.
     import org.apache.spark.sql.expressions.Window
-    val salts = saltFactor
-    val writeParts = math.max(1, math.min(numBuckets * salts,
+    val salts = saltFactor(cur)
+    val writeParts = math.max(1, math.min(cur.numBuckets * salts,
       spark.sparkContext.defaultParallelism * 2))
-    val withBucket = batch.withColumn("__bucket", bucketExpr)
+    val withBucket = batch.withColumn("__bucket", bucketExpr(cur))
     val (keyed, partCols) =
       if (salts == 1) (withBucket, Seq(col("__bucket")))
-      else (withBucket.withColumn("__salt", saltExpr(salts)),
+      else (withBucket.withColumn("__salt", saltExpr(cur, salts)),
         Seq(col("__bucket"), col("__salt")))
     val bucketed = keyed.repartition(writeParts, partCols: _*)
     val w = Window
-      .partitionBy((partCols ++ keyCols.map(col)): _*)
+      .partitionBy((partCols ++ cur.keyCols.map(col)): _*)
       .orderBy(col(lsnCol).desc, (col(opCol) === "delete").desc, col(opCol).desc)
     val winners =
       if (preReduced) bucketed
@@ -663,7 +731,7 @@ class LakeTable(
       // they write the delta (a ≤numBuckets-entry map) — no second job,
       // no driver-side parquet footer reads at commit time
       graft.functions.BucketMaxLsn
-        .bucketMaxLsn(col("__bucket"), col(LsnMeta), numBuckets).as("lin")) ++
+        .bucketMaxLsn(col("__bucket"), col(LsnMeta), cur.numBuckets).as("lin")) ++
       (if (hasExtra)
         Seq(array_distinct(flatten(collect_set(map_keys(col(ExtraMeta)))))
           .as("ks"))
@@ -777,7 +845,7 @@ class LakeTable(
         resolve(afterSnapshot, liftDrift(afterSnapshot,
             readFiles(extendedSchema(afterSnapshot, newSchema),
               tails.values.flatten.map(_.path).toSeq)))
-          .withColumn("__bucket", bucketExpr)
+          .withColumn("__bucket", bucketExpr(cur))
           .repartition(tails.size, col("__bucket"))
           .write.mode(SaveMode.Overwrite)
           .partitionBy("__bucket")
@@ -1039,15 +1107,15 @@ class LakeTable(
       throw new IllegalStateException("no table"))
     val newVersion = cur.version + 1
     val dataRel = s"data/v$newVersion"
-    val base = if (dropTombstones) readMeta().filter(!col(DeletedMeta))
-      else readMeta()
+    val all = resolveFiles(cur, filesOf(cur))
+    val base = if (dropTombstones) all.filter(!col(DeletedMeta)) else all
     val sniffable = driftCols(cur).filter(c =>
       StructType.fromDDL(cur.schemaDdl)(c).dataType == StringType)
     val typed =
       if (sniffable.isEmpty) base
       else graft.sources.Sources.sniffTypes(base, Some(sniffable))
-    typed.withColumn("__bucket", bucketExpr)
-      .repartition(numBuckets, col("__bucket"))
+    typed.withColumn("__bucket", bucketExpr(cur))
+      .repartition(cur.numBuckets, col("__bucket"))
       .write.mode(SaveMode.Overwrite).partitionBy("__bucket")
       .parquet(s"$tablePath/$dataRel")
     val newBucketFiles = enumerateBucketEntries(dataRel)

@@ -99,4 +99,21 @@ class LakeLookupSpec extends SparkSpec {
     finally w.close()
     assert(hit.select("content").collect().map(_.getString(0)).toSeq === Seq("content-2-k1"))
   }
+
+  test("a lookup after a drift column appears sees it: the reader follows the schema") {
+    import spark.implicits._
+    val dir = tmpDir("lookup-drift")
+    val lake = LakeTable(spark, dir, Seq("repo", "path"), 2)
+    lake.createIfAbsent(StructType.fromDDL(baseDdl))
+    lake.merge(Seq(ev(1, "insert", 1), ev(2, "insert", 2)).toDS().toDF(), "t", 0L)
+    val before = lake.lookup(Seq("r1", "p1"))
+    assert(before.select("content").collect().map(_.getString(0)).toSeq === Seq("content-1-k1"))
+    assert(!before.columns.contains("stars"))
+    // a new drift column lands in the same key's bucket
+    lake.merge(Seq(ev(3, "update", 1, Map("stars" -> "7"))).toDS().toDF(), "t", 1L)
+    val after = lake.lookup(Seq("r1", "p1"))
+    assert(after.select("content", "stars").collect()
+      .map(r => (r.getString(0), r.getString(1))).toSeq === Seq(("content-3-k1", "7")))
+    assertLookupMatchesRead(lake, Seq(key(1), key(2)))
+  }
 }

@@ -150,56 +150,53 @@ class LakeTableMorSpec extends SparkSpec {
     import spark.implicits._
     val dir = tmpDir("mor-lookup")
     val lake = LakeTable(spark, dir, Seq("repo", "path"), 4)
-    lake.createIfAbsent(StructType.fromDDL(baseDdl))
+    val created = lake.createIfAbsent(StructType.fromDDL(baseDdl))
+    def bucketOf(repo: String, path: String): Long =
+      Seq((repo, path)).toDF("repo", "path").select(lake.bucketExpr(created))
+        .head().getLong(0)
+    def key(k: Int): (String, String) = (s"r${k % 3}", s"p$k")
+    // the hit, a tombstoned key and an absent key, all in one bucket
+    val hit = key(5)
+    val bucket = bucketOf(hit._1, hit._2)
+    val tomb = (1 to 16).filter(_ != 5).find { k =>
+      val (r, p) = key(k); bucketOf(r, p) == bucket }.get
+    val absent = Iterator.from(0).map(i => ("nope", s"n$i"))
+      .find { case (r, p) => bucketOf(r, p) == bucket }.get
     lake.merge((1 to 16).map(k => ev(k.toLong, "insert", k)).toDS().toDF(), "t", 0L)
-    lake.merge(Seq(ev(100, "update", 5), ev(101, "delete", 6)).toDS().toDF(), "t", 1L)
-    assert(lake.filesOf(lake.currentSnapshot.get).size > 1, "need several buckets")
+    lake.merge(Seq(ev(100, "update", 5), ev(101, "delete", tomb)).toDS().toDF(), "t", 1L)
+    val files = lake.filesOf(lake.currentSnapshot.get)
+    assert(files.size > 1, "need several buckets")
 
-    // hit: latest version of the key. The lookup's result is local, so
-    // the candidate scan's plan is captured from the execution listener
+    // lookup + collect runs no Spark job: the driver reads the bucket
     val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     val jobListener = new org.apache.spark.scheduler.SparkListener {
       override def onJobStart(
           j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
         jobs.incrementAndGet(); ()
       }
     }
-    val planListener = new org.apache.spark.sql.util.QueryExecutionListener {
-      override def onSuccess(f: String,
-          qe: org.apache.spark.sql.execution.QueryExecution, ns: Long): Unit = {
-        plans.add(qe.executedPlan.toString); ()
-      }
-      override def onFailure(f: String,
-          qe: org.apache.spark.sql.execution.QueryExecution, e: Exception): Unit = ()
-    }
     org.apache.spark.ListenerBusBridge.drain(spark.sparkContext)
     spark.sparkContext.addSparkListener(jobListener)
-    spark.listenerManager.register(planListener)
     val rows =
       try {
-        val r = lake.lookup(Seq("r2", "p5")).collect()
+        val r = lake.lookup(Seq(hit._1, hit._2)).collect()
         org.apache.spark.ListenerBusBridge.drain(spark.sparkContext)
         r
-      } finally {
-        spark.sparkContext.removeSparkListener(jobListener)
-        spark.listenerManager.unregister(planListener)
-      }
+      } finally spark.sparkContext.removeSparkListener(jobListener)
     assert(rows.length === 1 && rows.head.getAs[String]("content") === "content-100-k5")
-    // the scan must reference exactly ONE bucket's files
-    val captured = plans.toArray(Array.empty[String]).toSeq
-    val scans = captured.filter(_.contains("FileScan"))
-    assert(scans.length === 1, s"expected one candidate scan, got:\n$captured")
-    val buckets = "__bucket=(\\d+)".r.findAllMatchIn(scans.head).map(_.group(1)).toSet
-    assert(buckets.size === 1, s"lookup must prune to one bucket, scanned $buckets")
-    // one job for lookup + collect, and no shuffle in any of its plans
-    assert(jobs.get === 1, s"lookup + collect must run one Spark job, ran ${jobs.get}")
-    assert(!captured.exists(_.contains("Exchange")),
-      s"lookup must not shuffle:\n$captured")
+    assert(jobs.get === 0, s"lookup + collect must run no Spark job, ran ${jobs.get}")
 
-    // tombstoned key and absent key both come back empty
-    assert(lake.lookup(Seq("r0", "p6")).count() === 0L)
-    assert(lake.lookup(Seq("nope", "nothing")).count() === 0L)
+    // pruning: with every file outside the key's bucket deleted, the
+    // lookups still answer from that bucket alone (opening a deleted
+    // file would fail) — the hit, the tombstoned key and the absent key
+    files.foreach { case (b, fs) =>
+      if (b != bucket.toString) fs.foreach(f =>
+        java.nio.file.Files.delete(java.nio.file.Paths.get(dir, f)))
+    }
+    assert(lake.lookup(Seq(hit._1, hit._2)).select("content").collect()
+      .map(_.getString(0)).toSeq === Seq("content-100-k5"))
+    assert(lake.lookup(Seq(key(tomb)._1, key(tomb)._2)).collect().isEmpty)
+    assert(lake.lookup(Seq(absent._1, absent._2)).collect().isEmpty)
   }
 
   test("change feed returns each merge's winner set with provenance; compaction versions contribute nothing") {
@@ -471,7 +468,7 @@ class LakeTableMorSpec extends SparkSpec {
     Seq(16 -> 1, 2 -> 2).foreach { case (buckets, salts) =>
       val lake = LakeTable(spark, tmpDir(s"mor-onex-$buckets"), Seq("repo", "path"), buckets)
       lake.createIfAbsent(StructType.fromDDL(baseDdl))
-      assert(lake.saltFactor === salts)
+      assert(lake.saltFactor(lake.currentSnapshot.get) === salts)
       val plans = new java.util.concurrent.ConcurrentLinkedQueue[
         org.apache.spark.sql.execution.SparkPlan]()
       val listener = new org.apache.spark.sql.util.QueryExecutionListener {
@@ -597,9 +594,10 @@ class LakeTableMorSpec extends SparkSpec {
       ChangeEvent(lsn, op, new java.sql.Timestamp(0), s"r${k % 5}", s"p$k",
         f"c$lsn%040d", "scala", s"c-$k-$lsn-$op", Map.empty)
     }
-    val salts = lake.saltFactor
+    val snap = lake.currentSnapshot.get
+    val salts = lake.saltFactor(snap)
     assert(salts > 1)
-    val groups = evs.toDS().select(lake.bucketExpr, lake.saltExpr(salts))
+    val groups = evs.toDS().select(lake.bucketExpr(snap), lake.saltExpr(snap, salts))
       .distinct().count()
     assert(groups === 2L * salts,
       s"(bucket, salt) pairs must cover all ${2 * salts} groups, got $groups")
