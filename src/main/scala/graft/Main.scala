@@ -231,7 +231,6 @@ object Main {
       |        trigger: availableNow  # availableNow (replay+exit) | processingTime=500ms (tail)
       |        maxFilesPerTrigger: 8
       |        # maxBytesPerTrigger: 3000000000  # byte-bounded batches (overrides file count)
-      |        # dedupStateTtlMs: 3600000        # jsonl/jdbc tailing only: expire idle keys' dedup state
       |        # http source only:
       |        # endpoint: /ingest
       |        # methods: [GET, POST]
@@ -383,7 +382,6 @@ object Main {
           maxBytesPerTrigger = spec.instance.source.maxBytesPerTrigger,
           format = format,
           codec = spec.instance.source.codec,
-          dedupStateTtlMs = spec.instance.source.dedupStateTtlMs,
           checkpointId = spec.name,
           jdbcSink = jdbcSink)
         val job = CdcJob(spark, cfg)

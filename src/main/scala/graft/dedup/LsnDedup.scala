@@ -42,10 +42,9 @@ final case class KeyProgress(maxEmittedLsn: Long)
   * State is hash-partitioned by key and checkpointed by the engine —
   * resume-safe. CLI sessions run the RocksDB state store provider
   * (off-heap, spills to executor-local disk), so state size is bounded by
-  * disk, not heap (BENCH.md "State store"). A TTL (`stateTtlMs`) caps
-  * state for abandoned keys at the price of re-admitting a stale
-  * duplicate after expiry: for a lake target the monotone merge still
-  * converges, so it costs only extra idempotent rows, never correctness.
+  * disk, not heap (BENCH.md "State store"). State never expires: an
+  * expired key would re-admit a stale redelivery, which the JDBC upsert
+  * would write over the newer row and the DLQ would record twice.
   */
 object LsnDedup {
 
@@ -55,43 +54,10 @@ object LsnDedup {
 
   private def isDelete(e: ChangeEvent): Boolean = e.op == ChangeEvent.Delete
 
-  /** @param stateTtlMs when set, per-key state expires after this long
-    *   without activity (`ProcessingTimeTimeout`) — the knob that bounds
-    *   state at 10^10-key scale where most keys go cold. Expiry is SAFE
-    *   by construction: a stale duplicate arriving after its key expired
-    *   is re-admitted and re-emitted, but the lake's monotone max-`__lsn`
-    *   merge resolves it away — the cost is one idempotent extra row,
-    *   never a wrong final state (asserted by DedupTtlSpec).
-    */
-  def apply(events: Dataset[ChangeEvent],
-      stateTtlMs: Option[Long] = None): Dataset[ChangeEvent] = {
-    val grouped = preCombine(events).groupByKey(e => (e.repo, e.path))
-    stateTtlMs match {
-      case None =>
-        grouped.flatMapGroupsWithState(
-          OutputMode.Update, GroupStateTimeout.NoTimeout)(dedupGroup)
-      case Some(ttl) =>
-        grouped.flatMapGroupsWithState(
-          OutputMode.Update, GroupStateTimeout.ProcessingTimeTimeout)(
-          dedupGroupTtl(ttl))
-    }
-  }
-
-  /** TTL wrapper around [[dedupGroup]]: drop expired state; refresh the
-    * timeout on any activity for a still-live key.
-    */
-  private[graft] def dedupGroupTtl(ttlMs: Long)(
-      key: (String, String),
-      events: Iterator[ChangeEvent],
-      state: GroupState[KeyProgress]): Iterator[ChangeEvent] =
-    if (state.hasTimedOut) {
-      state.remove()
-      Iterator.empty
-    } else {
-      val out = dedupGroup(key, events, state)
-      if (state.exists) state.setTimeoutDuration(ttlMs)
-      out
-    }
+  def apply(events: Dataset[ChangeEvent]): Dataset[ChangeEvent] =
+    preCombine(events).groupByKey(e => (e.repo, e.path))
+      .flatMapGroupsWithState(
+        OutputMode.Update, GroupStateTimeout.NoTimeout)(dedupGroup)
 
   /** Partition-local pre-reduce (map-side combiner): keep only each key's
     * winner within an input partition before the key shuffle. Winner-max

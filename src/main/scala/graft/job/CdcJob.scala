@@ -39,13 +39,6 @@ final case class CdcJobConfig(
     // copy): json | xml (native expressions) | yaml (transcoded to JSON
     // per partition, then the JSON path)
     codec: String = "json",
-    // per-key dedup-state TTL (ProcessingTimeTimeout) for the pipelines
-    // that keep dedup state (jsonl sources, JDBC targets): bounds state
-    // when most of a 10^10-key space goes cold; expiry re-admits stale
-    // duplicates as idempotent rows (see LsnDedup.apply scaladoc).
-    // None = keep state forever. A parquet changelog into a lake keeps no
-    // state, and `start` refuses the option there.
-    dedupStateTtlMs: Option[Long] = None,
     // runId-agnostic identity of this pipeline for the exactly-once ledger
     checkpointId: String = "cdc",
     // when set, micro-batches upsert into a JDBC table (≙ the reference's
@@ -109,25 +102,11 @@ class CdcJob(spark: SparkSession, cfg: CdcJobConfig) {
     */
   private val DlqOp = "__dlq"
 
-  /** Build (but do not await) the streaming query. */
+  /** Build (but do not await) the streaming query. A parquet → lake run
+    * first refuses a checkpoint that the stateful pipeline wrote.
+    */
   def start(trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
-    if (stateless) {
-      require(cfg.dedupStateTtlMs.isEmpty,
-        "dedupStateTtlMs: a parquet changelog into a lake table keeps no " +
-          "dedup state (the lake's max-lsn merge absorbs duplicates), so " +
-          "there is no state to expire; remove the option")
-      refuseStatefulCheckpoint()
-    }
-    // ProcessingTimeTimeout makes FlatMapGroupsWithStateExec report
-    // "should run another batch" on EVERY batch (processing time always
-    // advances), so an AvailableNow run would never terminate — it spins
-    // empty micro-batches forever (measured: 1000+ versions/minute).
-    // The TTL is a tailing-mode feature; replay-to-completion runs keep
-    // full state (bounded by the run's key set anyway).
-    require(cfg.dedupStateTtlMs.isEmpty || !trigger.isInstanceOf[
-        org.apache.spark.sql.execution.streaming.AvailableNowTrigger.type],
-      "dedupStateTtlMs requires a ProcessingTime trigger (runFollowing); " +
-        "AvailableNow never terminates under ProcessingTimeTimeout")
+    if (stateless) refuseStatefulCheckpoint()
     if (cfg.jdbcSink.isEmpty) lake.createIfAbsent(baseSchema)
     if (stateless) startLake(trigger) else startDeduped(trigger)
   }
@@ -185,9 +164,8 @@ class CdcJob(spark: SparkSession, cfg: CdcJobConfig) {
       .start()
 
   /** Ledger-gated sink dispatch of the deduped pipeline: skip the
-    * SINK for crash-replayed batches (exactly-once for the DLQ and
-    * stats, not just the table), otherwise materialize the batch and
-    * apply it.
+    * SINK for crash-replayed batches the sink's ledger holds, otherwise
+    * materialize the batch and apply it.
     *
     * @param consume full pass over the raw batch Dataset with NO sink
     *   effects. The applied-skip path must still run it: a ledger hit
@@ -213,25 +191,10 @@ class CdcJob(spark: SparkSession, cfg: CdcJobConfig) {
       ()
     } else {
       val good = materialize()
-      // under a state TTL the engine runs a no-data batch per trigger
-      // tick (ProcessingTimeTimeout always reports should-run-another-
-      // batch); skip the sink entirely for those so ticks stay cheap and
-      // the idle-exit's quiescence windows exist. Replay runs (no TTL)
-      // never pay the extra isEmpty probe.
-      if (cfg.dedupStateTtlMs.isDefined && good.isEmpty) {
-        stats.add(MergeStats(
-          if (cfg.jdbcSink.isDefined) -1L else lake.currentVersion.getOrElse(-1L),
-          batchId, skippedAsApplied = false, 0L, 0L, 0L, 0, Nil))
-        return
-      }
-      cfg.jdbcSink match {
-        case Some(j) => stats.add(applyJdbc(good, j, batchId))
-        case None =>
-          // preReduced: LsnDedup emits at most one winner per key per
-          // micro-batch, so the merge can skip its winner window
-          stats.add(lake.merge(good, cfg.checkpointId, batchId,
-            preReduced = true))
-      }
+      stats.add(cfg.jdbcSink match {
+        case Some(j) => applyJdbc(good, j, batchId)
+        case None => lake.merge(good, cfg.checkpointId, batchId)
+      })
       ()
     }
   }
@@ -247,7 +210,7 @@ class CdcJob(spark: SparkSession, cfg: CdcJobConfig) {
       case other =>
         throw new IllegalArgumentException(s"changelog format $other not implemented")
     }
-    LsnDedup(events, cfg.dedupStateTtlMs).writeStream
+    LsnDedup(events).writeStream
       .queryName(s"graft-cdc-${cfg.checkpointId}")
       .outputMode(OutputMode.Update())
       .option("checkpointLocation", cfg.checkpointDir)
@@ -255,9 +218,11 @@ class CdcJob(spark: SparkSession, cfg: CdcJobConfig) {
       .foreachBatch { (batch: Dataset[ChangeEvent], batchId: Long) =>
         sinkBatch(batchId, () => batch.foreach(_ => ())) { () =>
           // materialize once so the DLQ split doesn't re-execute the
-          // stateful upstream. Crash-replayed batches never reach here
-          // (sinkBatch gates on the ledger), so the DLQ stays exactly-once
-          // like the table.
+          // stateful upstream. The DLQ is at-least-once: this append runs
+          // before the sink commit that writes the ledger, so a batch
+          // replayed after a crash between the two (or any all-malformed
+          // batch, whose lake merge commits no ledger entry) appends its
+          // DLQ rows again.
           val df = graft.util.Materialize.barrier(batch.toDF())
           cfg.dlqDir.foreach { dir =>
             df.filter(col("op") === DlqOp)
@@ -308,24 +273,27 @@ class CdcJob(spark: SparkSession, cfg: CdcJobConfig) {
     * The ledger row is recorded after the data commit — same
     * sink-before-offsets order as the reference, exactly-once at batch
     * granularity, residual overlap absorbed by key idempotence.
+    *
+    * `batch` is a filter over the barrier `startDeduped` already built,
+    * so its several passes (drift keys, count, write) re-read those
+    * blocks rather than the stateful upstream.
     */
   private def applyJdbc(batch: DataFrame, j: graft.sinks.JdbcUpsert.Config,
       batchId: Long): MergeStats = {
-    val input = graft.util.Materialize.barrier(batch) // two passes (keys agg + write), one compute
     val driftKeys: Seq[String] =
-      if (!input.columns.contains("extra")) Nil
-      else input
+      if (!batch.columns.contains("extra")) Nil
+      else batch
         .select(explode(map_keys(coalesce(col("extra"), map()))).as("k"))
         .distinct().collect().map(_.getString(0)).toSeq.sorted
         // a drift key named like an envelope/key column (lsn, op, repo, …)
         // must not overwrite it — that would corrupt the winner reduction
         // and the JDBC key columns. Same guard as the lake side, where
         // base columns always win over the extra map.
-        .filterNot(input.columns.contains)
-    val lifted = driftKeys.foldLeft(input) { (d, k) =>
+        .filterNot(batch.columns.contains)
+    val lifted = driftKeys.foldLeft(batch) { (d, k) =>
       d.withColumn(k, element_at(col("extra"), k))
     }.drop("extra")
-    val n = input.count()
+    val n = batch.count()
     val (up, del) = graft.sinks.JdbcUpsert.applyCdcBatch(lifted, j)
     graft.sinks.JdbcUpsert.recordApplied(j.url, cfg.checkpointId, batchId)
     MergeStats(-1L, batchId, skippedAsApplied = false, n, up, del, 0, driftKeys)
@@ -372,14 +340,10 @@ class CdcJob(spark: SparkSession, cfg: CdcJobConfig) {
         // reported at least one (possibly empty) batch — a cold first
         // batch can take longer than the idle window.
         //
-        // The exit gate is "no UNPROCESSED data" (isDataAvailable), NOT
-        // "trigger idle": under a state TTL the engine legitimately runs
-        // a (possibly slow) no-data batch every tick, so the trigger is
-        // almost always mid-flight and a trigger-idle gate would never
-        // open (measured: the follow loop span no-data ticks forever).
-        // Stopping during a NO-DATA batch is safe — it replays as a
-        // no-op; the drain loop below keeps the catch-up guarantee for
-        // data batches.
+        // The exit gate is "no UNPROCESSED data" (isDataAvailable); the
+        // drain loop below keeps the catch-up guarantee for a data batch
+        // still in flight. Stopping during a no-data batch is safe too —
+        // it replays as a no-op.
         var stopping = false
         while (q.isActive && !stopping) {
           val p = q.lastProgress
@@ -391,9 +355,8 @@ class CdcJob(spark: SparkSession, cfg: CdcJobConfig) {
             // drain the batch in flight NOW (bounded) — if it was a DATA
             // batch, its completion shows up as fresh progress in the
             // grace re-check below and we keep running. Wait for that one
-            // batch only, not for an idle trigger: under a state TTL the
-            // next no-data tick starts at once, so the trigger may never
-            // be idle again.
+            // batch only: it ends when the trigger goes idle or a later
+            // batch has reported.
             val drainDeadline = System.nanoTime() + 30L * 1000000000L
             def drained = !q.status.isTriggerActive ||
               Option(q.lastProgress).exists(_.batchId > p.batchId)

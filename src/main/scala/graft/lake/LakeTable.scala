@@ -621,8 +621,11 @@ class LakeTable(
     pmod(xxhash64((lit("__salt") +: s.keyCols.map(col)): _*), lit(factor))
 
   /** Apply one micro-batch of change events to the table as an idempotent
-    * MERGE commit; the batch is reduced to one winner per key first (the
-    * only per-batch dedup on the stateless parquet → lake path). The hot
+    * MERGE commit; the batch is always reduced to one winner per key
+    * first. That is the only per-batch dedup on the stateless parquet →
+    * lake path, and it keeps every delta at one row per key, which the
+    * readers rely on: `resolveFiles` scans a single-file bucket without
+    * the window, and `lookup` takes at most one candidate per file. The hot
     * path costs ONE Spark job (the delta write — see the class doc's "one
     * Spark job" bullet for how stats/lineage/drift discovery piggyback on
     * it).
@@ -630,17 +633,8 @@ class LakeTable(
     * @param batch   envelope rows: keyCols ++ value cols ++ lsn, op, extra
     * @param checkpointId identity of the writing stream (runId-agnostic)
     * @param batchId streaming micro-batch id (monotone per checkpoint)
-    * @param preReduced skips the winner window (its per-partition sort;
-    *   the bucketed exchange stays for the write). PRECONDITION, not checked (a check would cost a Spark job):
-    *   `batch` holds at most one row per key. `CdcJob`'s deduped
-    *   pipeline meets it through `LsnDedup`'s winner-only emission.
-    *   Every reader relies on it: a bucket referencing a single file is
-    *   read without the window (`resolveFiles`), and `lookup` bounds its
-    *   candidates at one row per file — a duplicate key in a delta is NOT
-    *   resolved at read.
     */
-  def merge(batch: DataFrame, checkpointId: String, batchId: Long,
-      preReduced: Boolean = false): MergeStats = {
+  def merge(batch: DataFrame, checkpointId: String, batchId: Long): MergeStats = {
     val cur = currentSnapshot.getOrElse(
       throw new IllegalStateException(s"table $tablePath not initialized"))
     if (cur.appliedUpTo.get(checkpointId).exists(batchId <= _)) {
@@ -658,7 +652,6 @@ class LakeTable(
     //    state for pathological duplicate-lsn delete/upsert pairs is
     //    independent of how the log was batched. (LSNs are normally
     //    unique per logical event; equal-lsn rows are redeliveries.)
-    //    Skipped when the streaming dedup already emitted winners-only.
     //
     //    ONE exchange serves both the winner window and the bucketed
     //    write (guide §2.4): `__bucket` and `__salt` are pure functions
@@ -689,11 +682,9 @@ class LakeTable(
     val w = Window
       .partitionBy((partCols ++ cur.keyCols.map(col)): _*)
       .orderBy(col(lsnCol).desc, (col(opCol) === "delete").desc, col(opCol).desc)
-    val winners =
-      if (preReduced) bucketed
-      else bucketed
-        .withColumn("__rn", row_number().over(w))
-        .filter(col("__rn") === 1).drop("__rn")
+    val winners = bucketed
+      .withColumn("__rn", row_number().over(w))
+      .filter(col("__rn") === 1).drop("__rn")
 
     // 2. delta row shape: user columns the batch carries (missing base
     //    columns → typed nulls; drift columns it doesn't carry stay in
@@ -787,10 +778,10 @@ class LakeTable(
     val newCols = driftKeys.filterNot(k => oldSchema.fieldNames.contains(k))
     // empty batch → version-neutral no-op: no snapshot, no ledger entry
     // (a replayed empty batch re-applies as another no-op — idempotent).
-    // Matters under state-timeout tailing, where the engine runs a
-    // no-data batch per trigger tick: committing those would churn a
-    // version per tick forever. The written (empty) delta dir is reused
-    // by the next real merge's SaveMode.Overwrite.
+    // Empty batches reach here from the deduped jsonl pipeline: a batch
+    // whose lines are all malformed (they go to the DLQ), or one whose
+    // events `LsnDedup` dropped as stale. The written (empty) delta dir
+    // is reused by the next real merge's SaveMode.Overwrite.
     if (nRows == 0 && newCols.isEmpty)
       return MergeStats(cur.version, batchId, skippedAsApplied = false,
         0L, 0L, 0L, 0, Nil)

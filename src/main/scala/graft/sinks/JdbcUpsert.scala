@@ -107,7 +107,9 @@ object JdbcUpsert {
     * last-write-wins. Key-idempotent, so at-least-once replay converges.
     * The winner reduction means each key is written once per batch — the
     * REPLACE path needs no cross-batch LSN check because the streaming
-    * dedup state upstream already enforces monotone LSNs per key.
+    * dedup state upstream (`LsnDedup`, whose state never expires) drops
+    * every stale or redelivered event of a key, so a later batch never
+    * rolls a row back (JdbcUpsertSpec pins it across micro-batches).
     */
   def applyCdcBatch(batch: DataFrame, cfg: Config): (Long, Long) = {
     import org.apache.spark.sql.expressions.Window

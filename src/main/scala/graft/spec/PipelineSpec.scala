@@ -32,12 +32,6 @@ final case class SourceSpec(
     // byte-bounded micro-batches (overrides maxFilesPerTrigger when set):
     // the backpressure knob that stays meaningful across segment layouts
     maxBytesPerTrigger: Option[Long] = None,
-    // per-key dedup-state TTL for TAILING pipelines that keep dedup
-    // state — jsonl sources, jdbc targets (requires a processingTime
-    // trigger; a parquet changelog into a lake keeps no state and is
-    // refused — see CdcJob.start): bounds keyed state when most of the
-    // key space goes cold; expiry only re-admits idempotent duplicates
-    dedupStateTtlMs: Option[Long] = None,
     configurations: Map[String, String] = Map.empty) {
 
   /** Tail interval in ms when trigger is processingTime, else None. */
@@ -136,6 +130,14 @@ object PipelineSpec {
     if (trigger != "availableNow" && ProcessingTimeRe.findFirstIn(trigger).isEmpty)
       throw new IllegalArgumentException(
         s"trigger $trigger not implemented (availableNow | processingTime=<N>ms)")
+    // unknown keys are otherwise ignored; a removed option must not
+    // vanish silently from a spec that still sets it
+    if (sp.contains("dedupStateTtlMs"))
+      throw new IllegalArgumentException(
+        "source option dedupStateTtlMs was removed: dedup state never " +
+          "expires, because an expired key re-admits a stale redelivery " +
+          "that a jdbc target writes over the newer row and a jsonl DLQ " +
+          "records twice; delete the option from the spec")
     SourceSpec(
       tpe = tpe,
       path = str(sp, "path").getOrElse(""),
@@ -149,7 +151,6 @@ object PipelineSpec {
       trigger = trigger,
       maxFilesPerTrigger = int(sp, "maxFilesPerTrigger").getOrElse(2),
       maxBytesPerTrigger = str(sp, "maxBytesPerTrigger").map(_.toLong),
-      dedupStateTtlMs = str(sp, "dedupStateTtlMs").map(_.toLong),
       configurations = strMap(sp, "configurations"))
   }
 

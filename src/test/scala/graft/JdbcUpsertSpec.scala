@@ -178,6 +178,34 @@ class JdbcUpsertSpec extends SparkSpec {
 
   private def ts(l: Long) = new java.sql.Timestamp(1735689600000L + l * 1000)
 
+  test("streaming jdbc sink: a stale event in a later micro-batch never rolls a row back") {
+    import spark.implicits._
+    val root = tmpDir("jdbc-monotone")
+    val url = freshUrl("monotone")
+    // one parquet file per segment, its mtime stepped so that the file
+    // source admits seg 0 then seg 1, one per micro-batch
+    Seq(
+      ChangeEvent(5, "update", ts(5), "r", "A", "c5", "scala", "v5", Map.empty),
+      ChangeEvent(3, "update", ts(3), "r", "A", "c3", "scala", "v3", Map.empty))
+      .zipWithIndex.foreach { case (e, seg) =>
+        val dir = new java.io.File(s"$root/log/seg=$seg")
+        Seq(e).toDS().coalesce(1).write.parquet(dir.getPath)
+        dir.listFiles().foreach(_.setLastModified(1000000000000L + seg * 2000L))
+      }
+    val job = graft.job.CdcJob(spark, graft.job.CdcJobConfig(
+      logDir = s"$root/log", tablePath = "", checkpointDir = s"$root/ckpt",
+      maxFilesPerTrigger = 1, checkpointId = "jdbc-monotone",
+      jdbcSink = Some(JdbcUpsert.Config(url, "repos",
+        keyColumns = Seq("repo", "path")))))
+    val stats = job.runToCompletion()
+    assert(stats.size === 2 && stats.forall(!_.skippedAsApplied),
+      "one applied micro-batch per segment")
+    // the upsert has no lsn to compare: only the dedup state, which
+    // remembers A's lsn 5 from batch 0, keeps the stale lsn 3 out
+    assert(queryAll(url, "SELECT \"path\", \"content\" FROM \"repos\"") ===
+      Seq(Seq("A", "v5")))
+  }
+
   test("duplicate-key detection is dialect-aware: 23505 always; 23000 only " +
       "with MySQL vendor code 1062; other integrity violations propagate") {
     def ex(state: String, vendor: Int) =

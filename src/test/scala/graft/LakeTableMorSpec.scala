@@ -432,9 +432,8 @@ class LakeTableMorSpec extends SparkSpec {
     }
     spark.sparkContext.addSparkListener(listener)
     try {
-      // preReduced = false is the stateless replay's merge (its window is
-      // the per-batch dedup); true is the deduped pipeline's
-      Seq(true -> 1L, false -> 2L).foreach { case (preReduced, batchId) =>
+      // two steady-state merges, each with its winner window
+      Seq(1L, 2L).foreach { batchId =>
         // pre-materialized input so the job count is the MERGE's, not
         // the fixture's
         val batch = Seq(ev(2 * batchId, "update", 1), ev(2 * batchId + 1, "insert", 2))
@@ -446,14 +445,36 @@ class LakeTableMorSpec extends SparkSpec {
         // job and the assertion measures ACTIONS (data passes over the
         // batch)
         spark.conf.set("spark.sql.adaptive.enabled", "false")
-        try lake.merge(batch, "t", batchId, preReduced = preReduced)
+        try lake.merge(batch, "t", batchId)
         finally spark.conf.set("spark.sql.adaptive.enabled", "true")
         org.apache.spark.ListenerBusBridge.drain(spark.sparkContext)
         val n = jobs.get
         assert(n === 1,
-          s"merge commit (preReduced=$preReduced) must be exactly one Spark action, saw $n")
+          s"merge commit (batch $batchId) must be exactly one Spark action, saw $n")
       }
     } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  test("merging an empty batch commits no version; the next batch id commits") {
+    // empty batches reach merge from the deduped jsonl pipeline: a batch
+    // whose lines are all malformed, or one whose events LsnDedup dropped
+    // as stale
+    import spark.implicits._
+    val dir = tmpDir("mor-empty")
+    val lake = LakeTable(spark, dir, Seq("repo", "path"), 2)
+    lake.createIfAbsent(StructType.fromDDL(baseDdl))
+    lake.merge(Seq(ev(1, "insert", 1)).toDS().toDF(), "t", 0L)
+    val before = lake.currentSnapshot.get
+    val empty = lake.merge(Seq.empty[ChangeEvent].toDS().toDF(), "t", 1L)
+    assert(!empty.skippedAsApplied && empty.inputRows === 0L)
+    val after = lake.currentSnapshot.get
+    assert(after.version === before.version)
+    assert(after.appliedUpTo === before.appliedUpTo)
+    val next = lake.merge(Seq(ev(2, "update", 1)).toDS().toDF(), "t", 2L)
+    assert(!next.skippedAsApplied && next.version === before.version + 1)
+    assert(lake.currentSnapshot.get.appliedUpTo === Map("t" -> 2L))
+    assert(lake.read().select("content").collect().map(_.getString(0)).toSeq ===
+      Seq("content-2-k1"))
   }
 
   test("a merge of a parquet-read batch plans exactly ONE exchange, with salt factor 1 and > 1") {

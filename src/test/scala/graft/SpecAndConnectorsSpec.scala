@@ -47,12 +47,11 @@ class SpecAndConnectorsSpec extends SparkSpec {
         |  instance:
         |    source:
         |      type: changelog
-        |      specs: { path: /data/log, dedupStateTtlMs: 3600000 }
+        |      specs: { path: /data/log }
         |    target:
         |      type: rollup
         |      specs: { path: /data/out, window: 15 minutes, watermark: 2 minutes }
         |""".stripMargin)
-    assert(s.instance.source.dedupStateTtlMs === Some(3600000L))
     assert(s.instance.target.tpe === "rollup")
     assert(s.instance.target.window === "15 minutes")
     assert(s.instance.target.watermark === "2 minutes")
@@ -65,6 +64,15 @@ class SpecAndConnectorsSpec extends SparkSpec {
         |    target: { type: rollup, specs: { window: 1 hour } }
         |""".stripMargin))
     assert(bad.getMessage.contains("rollup target requires specs.path"))
+    // the removed dedup-state TTL fails fast instead of vanishing
+    val ttl = intercept[IllegalArgumentException](PipelineSpec.fromYaml(
+      """stream:
+        |  name: roll
+        |  instance:
+        |    source: { type: changelog, specs: { path: /data/log, format: jsonl, dedupStateTtlMs: 3600000 } }
+        |    target: { type: lake, specs: { path: /data/lake } }
+        |""".stripMargin))
+    assert(ttl.getMessage.contains("dedupStateTtlMs was removed"))
   }
 
   test("unknown source/target/codec types fail fast like the reference dispatchers") {
