@@ -295,21 +295,29 @@ object Main {
         val df = graft.sources.Sources.csv(spark, spec.instance.source.path)
         batchTarget(spark, df, spec, args)
       case "jsonl" =>
-        val src = spec.instance.source.path
-        val schema = graft.sources.Sources.inferJsonlSchema(spark, src)
-        val (good, bad) = graft.sources.Sources.jsonlSplit(spark, src, schema)
-        spec.instance.dlq.map(_.path).filter(_.nonEmpty).foreach { dlq =>
-          val nBad = bad.count()
-          if (nBad > 0) {
-            bad.write.mode("append").parquet(dlq)
-            println(s"[graft] routed $nBad malformed lines to DLQ $dlq")
-          }
-        }
+        val good = jsonlImport(spark, spec,
+          flag(args, "--batch-id").map(_.toLong).getOrElse(0L))
         batchTarget(spark, good, spec, args)
       case t =>
         System.err.println(s"source type $t not implemented"); sys.exit(2)
     }
     spark.stop()
+  }
+
+  /** The parsed rows of a batch jsonl import. Its malformed lines go to
+    * the DLQ as the file of (pipeline, batch id), so re-running an import
+    * adds no second copy (`graft.sinks.Dlq`).
+    */
+  private[graft] def jsonlImport(spark: SparkSession, spec: PipelineSpec,
+      batchId: Long): org.apache.spark.sql.DataFrame = {
+    val src = spec.instance.source.path
+    val schema = graft.sources.Sources.inferJsonlSchema(spark, src)
+    val (good, bad) = graft.sources.Sources.jsonlSplit(spark, src, schema)
+    spec.instance.dlq.map(_.path).filter(_.nonEmpty).foreach { dlq =>
+      val n = graft.sinks.Dlq.write(bad, dlq, spec.name, batchId)
+      if (n > 0) println(s"[graft] routed $n malformed lines to DLQ $dlq")
+    }
+    good
   }
 
   /** Streaming rollup pipeline: changelog → watermarked tumbling-window

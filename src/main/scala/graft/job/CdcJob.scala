@@ -1,15 +1,13 @@
 package graft.job
 
-import graft.dedup.LsnDedup
 import graft.envelope.ChangeEvent
 import graft.lake.{LakeTable, MergeStats}
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
 
 import java.util.concurrent.ConcurrentLinkedQueue
-import scala.jdk.CollectionConverters._
 
 /** Configuration of the flagship CDC replay job — the Spark-native analog
   * of a draethos pipeline spec (`pkg/streams/specs/stream.go:3-65`):
@@ -47,18 +45,20 @@ final case class CdcJobConfig(
     jdbcSink: Option[graft.sinks.JdbcUpsert.Config] = None)
 
 /** The flagship job: tail the ordered change log with a Structured
-  * Streaming file source and MERGE each micro-batch into the LakeTable
-  * inside `foreachBatch` with an idempotent commit. Two start paths:
+  * Streaming file source and apply each micro-batch to the sink inside
+  * `foreachBatch` with an idempotent commit. One start path for every
+  * source format and target: `readStream → foreachBatch { DLQ split
+  * (jsonl only) → sink }`, with no keyed state. The sinks hold the
+  * per-key max-LSN guarantee, as draethos's key-idempotent sinks do
+  * (`internal/target/pgsql.go:22-33`, `mysql.go:22-35`):
   *
-  *  - parquet changelog → lake ([[startLake]]): no keyed state. The lake
-  *    is the dedup state, as draethos's key-idempotent sinks are: the
-  *    merge's one exchange and winner window reduce each batch to one
-  *    max-`lsn` row per key, and a stale event from a later batch lands
-  *    as an idempotent delta row that loses at read and in compaction;
-  *  - jsonl changelogs, and every JDBC target ([[startDeduped]]): per-key
-  *    max-LSN dedup in keyed state ([[LsnDedup]]) ahead of the sink —
-  *    the DLQ's cross-batch dedup and the JDBC upsert's only per-key
-  *    monotonicity.
+  *  - lake: the merge's one exchange and winner window reduce each batch
+  *    to one max-`lsn` row per key, and a stale event from a later batch
+  *    lands as an idempotent delta row that loses at read and in
+  *    compaction;
+  *  - JDBC: the guarded upsert and delete of
+  *    [[graft.sinks.JdbcUpsert.applyCdcBatch]] compare the stored row's
+  *    `lsn` and the key's tombstone.
   *
   * Pipeline ≙ draethos `source → codec → Attach → CanFlush → Flush →
   * commit offsets` (`internal/source/kafka.go:84-118`), with the same
@@ -96,27 +96,47 @@ class CdcJob(spark: SparkSession, cfg: CdcJobConfig) {
       case None => r.option("maxFilesPerTrigger", cfg.maxFilesPerTrigger)
     }
 
-  /** Marker op for malformed-envelope rows riding the stream to the DLQ.
-    * They are keyed by content hash, so redelivered bad lines dedup like
-    * any other event (lsn pinned to 0).
+  /** Marker op of a malformed text-changelog line riding the stream to
+    * the DLQ split; such rows never reach a sink.
     */
   private val DlqOp = "__dlq"
 
-  /** Build (but do not await) the streaming query. A parquet → lake run
-    * first refuses a checkpoint that the stateful pipeline wrote.
+  /** Build (but do not await) the streaming query, after refusing a
+    * checkpoint that the stateful pipeline wrote.
+    *
+    * A parquet changelog into a lake hands each micro-batch straight to
+    * `lake.merge`: a non-compacting batch runs the merge's map stage and
+    * its write, nothing else. Exactly-once needs no separate ledger
+    * probe: `merge` (and [[applyJdbc]]) returns a skipped no-op for a
+    * batch id the sink's ledger already holds — the crash window between
+    * the sink commit and the engine's batch commit.
     */
   def start(trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
-    if (stateless) refuseStatefulCheckpoint()
+    refuseStatefulCheckpoint()
+    val events = cfg.format match {
+      case "parquet" => parquetEvents
+      case "jsonl" => jsonlEvents
+      case other =>
+        throw new IllegalArgumentException(s"changelog format $other not implemented")
+    }
     if (cfg.jdbcSink.isEmpty) lake.createIfAbsent(baseSchema)
-    if (stateless) startLake(trigger) else startDeduped(trigger)
+    events.writeStream
+      .queryName(s"graft-cdc-${cfg.checkpointId}")
+      .option("checkpointLocation", cfg.checkpointDir)
+      .trigger(trigger)
+      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+        val good = if (cfg.format == "jsonl") dropMalformed(batch, batchId) else batch
+        stats.add(cfg.jdbcSink match {
+          case Some(j) => applyJdbc(good, j, batchId)
+          case None => lake.merge(good, cfg.checkpointId, batchId)
+        }); ()
+      }
+      .start()
   }
 
-  /** Parquet changelog into a lake table: the path that keeps no state. */
-  private def stateless: Boolean = cfg.format == "parquet" && cfg.jdbcSink.isEmpty
-
-  /** A checkpoint written while this path kept keyed dedup state has a
-    * `state/` directory whose operator metadata the stateless plan cannot
-    * match; Spark would fail the restart with an opaque
+  /** A checkpoint written while CDC pipelines kept keyed dedup state has
+    * a `state/` directory whose operator metadata the stateless plan
+    * cannot match; Spark would fail the restart with an opaque
     * `STREAMING_STATEFUL_OPERATOR_NOT_MATCH_IN_STATE_METADATA`.
     */
   private def refuseStatefulCheckpoint(): Unit = {
@@ -125,12 +145,12 @@ class CdcJob(spark: SparkSession, cfg: CdcJobConfig) {
     if (fs.exists(state))
       throw new IllegalStateException(
         s"checkpoint ${cfg.checkpointDir} was written by the stateful " +
-          "dedup pipeline (it has a state/ directory); a parquet changelog " +
-          "into a lake table runs without dedup state and cannot resume " +
-          "it. Restart with a new checkpointDir AND a new checkpointId: the " +
-          "log replays from the start and the lake's max-lsn merge " +
-          "converges, while a reused checkpointId would make the lake's " +
-          "ledger skip the restarted batch ids.")
+          "dedup pipeline (it has a state/ directory); CDC pipelines now " +
+          "run without dedup state and cannot resume it. Restart with a " +
+          "new checkpointDir AND a new checkpointId: the log replays from " +
+          "the start and the sink's max-lsn apply converges, while a " +
+          "reused checkpointId would make the sink's ledger skip the " +
+          "restarted batch ids.")
   }
 
   /** The changelog's parquet segments as full envelope rows. */
@@ -139,101 +159,18 @@ class CdcJob(spark: SparkSession, cfg: CdcJobConfig) {
       .parquet(s"${cfg.logDir}/seg=*")
       .withColumn("extra", coalesce(col("extra"), map()))
 
-  /** Parquet changelog → lake with no keyed state: each micro-batch goes
-    * straight into `lake.merge`, whose one `(__bucket, __salt)` exchange
-    * and winner window keep one max-`lsn` row per key (the delete wins an
-    * equal-lsn tie). Across batches the lake is the dedup state: a stale
-    * or redelivered event in a later batch becomes a delta row with a
-    * lower `__lsn`, which loses to the stored winner (or tombstone) in
-    * every read, lookup and minor compaction. A non-compacting batch runs
-    * the merge's map stage and its write, nothing else.
-    *
-    * Exactly-once needs no separate ledger probe: `merge` returns a
-    * skipped no-op for a batch id the ledger already holds (the crash
-    * window between the lake commit and the engine's batch commit), and
-    * there is no state store to re-commit.
+  /** A jsonl micro-batch minus its malformed lines. With a DLQ they go
+    * there first, exactly once per batch ([[graft.sinks.Dlq]]); the batch
+    * is materialized once so the DLQ split and the sink share one decode.
     */
-  private def startLake(trigger: Trigger): StreamingQuery =
-    parquetEvents.writeStream
-      .queryName(s"graft-cdc-${cfg.checkpointId}")
-      .option("checkpointLocation", cfg.checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        stats.add(lake.merge(batch, cfg.checkpointId, batchId)); ()
-      }
-      .start()
-
-  /** Ledger-gated sink dispatch of the deduped pipeline: skip the
-    * SINK for crash-replayed batches the sink's ledger holds, otherwise
-    * materialize the batch and apply it.
-    *
-    * @param consume full pass over the raw batch Dataset with NO sink
-    *   effects. The applied-skip path must still run it: a ledger hit
-    *   means the crash landed between the sink commit and the engine's
-    *   batch commit, so on restart the STATE STORES are rolled back and
-    *   this re-run is what re-commits the batch's dedup-state updates.
-    *   Returning without touching the Dataset would silently lose those
-    *   updates (stale events re-admitted later) and trips Spark's
-    *   state-store commit validation ("expected N commits but got 0");
-    *   JsonlChangelogSpec's ledger-hit spec pins it.
-    */
-  private def sinkBatch(batchId: Long, consume: () => Unit)(
-      materialize: () => DataFrame): Unit = {
-    val applied = cfg.jdbcSink match {
-      case Some(j) => graft.sinks.JdbcUpsert.isApplied(j.url, cfg.checkpointId, batchId)
-      case None => lake.isApplied(cfg.checkpointId, batchId)
-    }
-    if (applied) {
-      consume()
-      stats.add(MergeStats(
-        if (cfg.jdbcSink.isDefined) -1L else lake.currentVersion.getOrElse(-1L),
-        batchId, skippedAsApplied = true, 0L, 0L, 0L, 0, Nil))
-      ()
-    } else {
-      val good = materialize()
-      stats.add(cfg.jdbcSink match {
-        case Some(j) => applyJdbc(good, j, batchId)
-        case None => lake.merge(good, cfg.checkpointId, batchId)
-      })
-      ()
-    }
-  }
-
-  /** Pipeline with per-key dedup state: jsonl changelogs (any target) and
-    * parquet changelogs into a JDBC target. Rows carry their full payload
-    * through the state's key shuffle.
-    */
-  private def startDeduped(trigger: Trigger): StreamingQuery = {
-    val events: Dataset[ChangeEvent] = cfg.format match {
-      case "parquet" => parquetEvents.as[ChangeEvent]
-      case "jsonl" => jsonlEvents
-      case other =>
-        throw new IllegalArgumentException(s"changelog format $other not implemented")
-    }
-    LsnDedup(events).writeStream
-      .queryName(s"graft-cdc-${cfg.checkpointId}")
-      .outputMode(OutputMode.Update())
-      .option("checkpointLocation", cfg.checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: Dataset[ChangeEvent], batchId: Long) =>
-        sinkBatch(batchId, () => batch.foreach(_ => ())) { () =>
-          // materialize once so the DLQ split doesn't re-execute the
-          // stateful upstream. The DLQ is at-least-once: this append runs
-          // before the sink commit that writes the ledger, so a batch
-          // replayed after a crash between the two (or any all-malformed
-          // batch, whose lake merge commits no ledger entry) appends its
-          // DLQ rows again.
-          val df = graft.util.Materialize.barrier(batch.toDF())
-          cfg.dlqDir.foreach { dir =>
-            df.filter(col("op") === DlqOp)
-              .select(col("content").as("raw"),
-                current_timestamp().as("dlq_ts"))
-              .write.mode("append").parquet(dir)
-          }
-          df.filter(col("op") =!= DlqOp)
-        }
-      }
-      .start()
+  private def dropMalformed(batch: DataFrame, batchId: Long): DataFrame = {
+    val bad = col("op") === DlqOp
+    cfg.dlqDir.fold(batch) { dir =>
+      val df = graft.util.Materialize.barrier(batch)
+      graft.sinks.Dlq.write(df.filter(bad).select(col("content").as("raw")),
+        dir, cfg.checkpointId, batchId)
+      df
+    }.filter(!bad)
   }
 
   /** Text changelog lines decoded by `codec`: raw text + codec ≙ the
@@ -245,8 +182,7 @@ class CdcJob(spark: SparkSession, cfg: CdcJobConfig) {
     * transcodes to JSON lines per partition and rides the same path, so
     * malformed yaml reaches the DLQ as the original line too.
     */
-  private def jsonlEvents: Dataset[ChangeEvent] = {
-    import spark.implicits._
+  private def jsonlEvents: DataFrame = {
     val raw0 = bounded(spark.readStream)
       .text(s"${cfg.logDir}/seg=*")
     val raw =
@@ -254,32 +190,30 @@ class CdcJob(spark: SparkSession, cfg: CdcJobConfig) {
     raw
       .withColumn("__p", CdcJob.decodeEnvelope(cfg.codec, col("value")))
       .select(
-        when(valid, col("__p.lsn")).otherwise(lit(0L)).as("lsn"),
+        col("__p.lsn").as("lsn"),
         when(valid, col("__p.op")).otherwise(lit(DlqOp)).as("op"),
         coalesce(col("__p.ts"), lit(new java.sql.Timestamp(0))).as("ts"),
-        when(valid, col("__p.repo")).otherwise(lit("__dlq")).as("repo"),
-        when(valid, col("__p.path")).otherwise(md5(col("value"))).as("path"),
+        col("__p.repo").as("repo"),
+        col("__p.path").as("path"),
         coalesce(col("__p.commit"), lit("")).as("commit"),
         coalesce(col("__p.lang"), lit("")).as("lang"),
         when(valid, coalesce(col("__p.content"), lit("")))
           .otherwise(col("value")).as("content"),
         coalesce(col("__p.extra"), map()).as("extra"))
-      .as[ChangeEvent]
   }
 
   /** JDBC micro-batch apply ≙ a reference pgsql/mysql Flush: lift drift
     * fields out of `extra` into top-level columns (they become ALTERed
-    * columns, `pgsql.go:162-238`), then key-idempotent upsert + delete.
-    * The ledger row is recorded after the data commit — same
-    * sink-before-offsets order as the reference, exactly-once at batch
-    * granularity, residual overlap absorbed by key idempotence.
-    *
-    * `batch` is a filter over the barrier `startDeduped` already built,
-    * so its several passes (drift keys, count, write) re-read those
-    * blocks rather than the stateful upstream.
+    * columns, `pgsql.go:162-238`), then the lsn-guarded upsert + delete.
+    * A batch id the ledger already holds is a skipped no-op, as in
+    * `LakeTable.merge`. The ledger row is recorded after the data commit
+    * — same sink-before-offsets order as the reference, exactly-once at
+    * batch granularity, residual overlap absorbed by the lsn guards.
     */
   private def applyJdbc(batch: DataFrame, j: graft.sinks.JdbcUpsert.Config,
       batchId: Long): MergeStats = {
+    if (graft.sinks.JdbcUpsert.isApplied(j.url, cfg.checkpointId, batchId))
+      return MergeStats(-1L, batchId, skippedAsApplied = true, 0L, 0L, 0L, 0, Nil)
     val driftKeys: Seq[String] =
       if (!batch.columns.contains("extra")) Nil
       else batch

@@ -242,21 +242,13 @@ class LakeTable(
   def filesOf(s: Snapshot): Map[String, Seq[String]] =
     entriesOf(s).map { case (b, fs) => b -> fs.map(_.path) }
 
-  /** Exactly-once ledger probe: has this (checkpointId, batchId) already
-    * been committed? Lets callers skip side-effects (DLQ appends, stats)
-    * for crash-replayed batches, keeping every output exactly-once — not
-    * just the table.
-    */
-  def isApplied(checkpointId: String, batchId: Long): Boolean =
-    currentSnapshot.exists(_.appliedUpTo.get(checkpointId).exists(batchId <= _))
-
   /** Internal per-row columns: the applied commit sequence and a tombstone
     * flag. Storing them makes the MERGE itself monotone per key — a stale
     * event (lower lsn than the stored row, including a stored tombstone)
     * can never win, for ANY batching/ordering of the log. This is the
-    * only cross-batch dedup of a parquet changelog replay (`CdcJob` keeps
-    * no keyed state on that path): a stale event lands as a delta row
-    * that loses at read and in compaction. Tombstones are dropped by
+    * only cross-batch dedup of a changelog replay (`CdcJob` keeps no
+    * keyed state): a stale event lands as a delta row that loses at read
+    * and in compaction. Tombstones are dropped by
     * `compact(dropTombstones = true)` only (see its precondition).
     */
   val LsnMeta = "__lsn"
@@ -622,8 +614,8 @@ class LakeTable(
 
   /** Apply one micro-batch of change events to the table as an idempotent
     * MERGE commit; the batch is always reduced to one winner per key
-    * first. That is the only per-batch dedup on the stateless parquet →
-    * lake path, and it keeps every delta at one row per key, which the
+    * first. That is the only per-batch dedup of a changelog replay into
+    * the lake, and it keeps every delta at one row per key, which the
     * readers rely on: `resolveFiles` scans a single-file bucket without
     * the window, and `lookup` takes at most one candidate per file. The hot
     * path costs ONE Spark job (the delta write — see the class doc's "one
@@ -778,10 +770,9 @@ class LakeTable(
     val newCols = driftKeys.filterNot(k => oldSchema.fieldNames.contains(k))
     // empty batch → version-neutral no-op: no snapshot, no ledger entry
     // (a replayed empty batch re-applies as another no-op — idempotent).
-    // Empty batches reach here from the deduped jsonl pipeline: a batch
-    // whose lines are all malformed (they go to the DLQ), or one whose
-    // events `LsnDedup` dropped as stale. The written (empty) delta dir
-    // is reused by the next real merge's SaveMode.Overwrite.
+    // Empty batches reach here from a jsonl changelog: a batch whose
+    // lines are all malformed (they go to the DLQ). The written (empty)
+    // delta dir is reused by the next real merge's SaveMode.Overwrite.
     if (nRows == 0 && newCols.isEmpty)
       return MergeStats(cur.version, batchId, skippedAsApplied = false,
         0L, 0L, 0L, 0, Nil)
@@ -919,12 +910,12 @@ class LakeTable(
     * re-reading a 100 TB table: per version it returns exactly that
     * batch's winner set (one row per key — upserts AND tombstones, with
     * `__lsn`/`__deleted`/`__version`). Apply it per key by max `__lsn`
-    * (a tombstone wins an equal-lsn tie), NOT by version order: the
-    * stateless parquet → lake replay commits a stale redelivery as a row
-    * of a LATER version with a LOWER `__lsn` than the key already holds,
-    * and applying that row in version order would roll the key back (or
-    * bring a deleted key back). By max `__lsn` the feed reconstructs the
-    * table delta for the range.
+    * (a tombstone wins an equal-lsn tie), NOT by version order: a
+    * changelog replay (it keeps no dedup state) commits a stale
+    * redelivery as a row of a LATER version with a LOWER `__lsn` than the
+    * key already holds, and applying that row in version order would roll
+    * the key back (or bring a deleted key back). By max `__lsn` the feed
+    * reconstructs the table delta for the range.
     *
     * Versions created by compaction contribute nothing (they rewrite,
     * they don't change state) — their absence from the feed is the
@@ -1068,11 +1059,12 @@ class LakeTable(
     * `dropTombstones=true` also garbage-collects deleted keys.
     * PRECONDITION of `dropTombstones = true`, not checked: no event for a
     * dropped key with an lsn below its tombstone's can still arrive. It is
-    * the only guard against a resurrected key — the stateless parquet →
-    * lake replay lets a stale event through as a delta row, and once the
-    * tombstone it loses to is gone, that row wins. (Kept tombstones make
-    * any stale event lose.) Enforcing it needs a tombstone horizon over a
-    * declared reorder bound, which this table does not have. Same
+    * the only guard against a resurrected key — a changelog replay
+    * (it keeps no dedup state) lets a stale event through as a delta
+    * row, and once the tombstone it loses to is gone, that row wins.
+    * (Kept tombstones make any stale event lose.) Enforcing it needs a
+    * tombstone horizon over a declared reorder bound, which this table
+    * does not have. Same
     * snapshot mechanics. After compaction every bucket holds one resolved
     * file, so reads skip the winner window entirely.
     *

@@ -23,7 +23,9 @@ import java.sql.{Connection, DriverManager, PreparedStatement}
   * possible, so UPDATE-then-INSERT needs no retry loop. Delivery is the
   * reference's model exactly: at-least-once transport + key-idempotent
   * writes = converged final state (plus an optional applied-batch ledger
-  * for exactly-once skip of whole replayed batches).
+  * for exactly-once skip of whole replayed batches). The CDC apply adds
+  * per-key monotonicity in the database itself: lsn-guarded writes and a
+  * tombstone table ([[applyCdcBatch]]).
   *
   * Type ladder (≙ the value-sniffing ladder `pgsql.go:170-229`, but
   * driven by the DataFrame schema — we have one, the reference doesn't):
@@ -59,7 +61,12 @@ object JdbcUpsert {
     * text, create/evolve the table DDL, repartition on the key, write all
     * partitions in parallel. Returns the number of rows written.
     */
-  def write(df: DataFrame, cfg: Config): Long = {
+  def write(df: DataFrame, cfg: Config): Long = writeRows(df, cfg, guarded = false)
+
+  /** [[write]]; `guarded` rows carry an `lsn` and only replace an older
+    * stored row of a key no newer tombstone covers (see [[applyCdcBatch]]).
+    */
+  private def writeRows(df: DataFrame, cfg: Config, guarded: Boolean): Long = {
     require(cfg.keyColumns.forall(df.columns.contains),
       s"key columns ${cfg.keyColumns.mkString(",")} missing from " +
         s"batch columns ${df.columns.mkString(",")}")
@@ -85,7 +92,7 @@ object JdbcUpsert {
           val conn = DriverManager.getConnection(url)
           try {
             conn.setAutoCommit(false)
-            val w = new PartitionWriter(conn, table, cols, keyCols, mode)
+            val w = new PartitionWriter(conn, table, cols, keyCols, mode, guarded)
             var n = 0
             it.foreach { row =>
               w.upsert(row)
@@ -103,18 +110,26 @@ object JdbcUpsert {
 
   /** CDC apply ≙ the flagship merge, against a JDBC table: per-batch
     * winner per key (same delete-wins-on-equal-lsn tie-break as
-    * LakeTable), deletes issue DELETE, everything else upserts
-    * last-write-wins. Key-idempotent, so at-least-once replay converges.
-    * The winner reduction means each key is written once per batch — the
-    * REPLACE path needs no cross-batch LSN check because the streaming
-    * dedup state upstream (`LsnDedup`, whose state never expires) drops
-    * every stale or redelivered event of a key, so a later batch never
-    * rolls a row back (JdbcUpsertSpec pins it across micro-batches).
+    * LakeTable), then writes guarded by lsn, so each key moves only
+    * forward across batches, replays and redeliveries — the pipeline
+    * keeps no dedup state. The table stores each row's `lsn` (only `op`
+    * is dropped), and the tombstone table `graft_tombstones`, kept next
+    * to the ledger, holds the highest lsn a delete of each key carried:
+    *
+    *  - an upsert is `UPDATE … WHERE <keys> AND "lsn" < ?`; when that
+    *    updates nothing it is skipped if the key's tombstone is at or
+    *    above its lsn, else INSERTed, and a duplicate key is swallowed
+    *    (the stored row is newer);
+    *  - a delete is `DELETE … WHERE <keys> AND "lsn" <= ?` (the delete
+    *    wins an equal-lsn tie) and raises the key's tombstone, also when
+    *    no row is there.
+    *
+    * JdbcUpsertSpec pins both across micro-batches.
     */
   def applyCdcBatch(batch: DataFrame, cfg: Config): (Long, Long) = {
     import org.apache.spark.sql.expressions.Window
     val w = Window.partitionBy(cfg.keyColumns.map(col): _*)
-      .orderBy(col("lsn").desc, (col("op") === "delete").desc, col("op").desc)
+      .orderBy(col(LsnCol).desc, (col("op") === "delete").desc, col("op").desc)
     // checkpoint the winner set: upserts and deletes below are two
     // separate actions, and without materialization each would re-execute
     // the window (a key-shuffle + sort) over the batch
@@ -122,23 +137,23 @@ object JdbcUpsert {
       batch.withColumn("__rn", row_number().over(w))
         .filter(col("__rn") === 1).drop("__rn"))
     val deletes = winners.filter(col("op") === "delete")
-      .select(cfg.keyColumns.map(col): _*)
+      .select((cfg.keyColumns :+ LsnCol).map(col): _*)
     val upserts = winners.filter(col("op") =!= "delete").drop("op")
+    withConnection(cfg.url)(ensureTombstones)
     // winners are one-per-key, so upsert/delete key sets are disjoint and
     // order within the batch is free; upserts go first because their DDL
-    // pass creates the table on the very first batch
-    val nUp = write(upserts, cfg.copy(mode = Replace))
+    // pass creates the table on the very first batch, even a delete-only one
+    val nUp = writeRows(upserts, cfg.copy(mode = Replace), guarded = true)
     val nDel = delete(deletes, cfg)
     (nUp, nDel)
   }
 
-  /** Delete by key, distributed like `write`. A key absent from the table
-    * (or a table not yet created — delete-only first batch) deletes 0
-    * rows, matching MERGE WHEN MATCHED DELETE semantics.
+  /** Guarded delete by key (see [[applyCdcBatch]], whose upsert pass has
+    * created the table), distributed like `write`. A key absent from the
+    * table deletes 0 rows, matching MERGE WHEN MATCHED DELETE semantics,
+    * and still raises its tombstone.
     */
-  def delete(keys: DataFrame, cfg: Config): Long = {
-    val exists = withConnection(cfg.url)(c => tableExists(c, cfg.table))
-    if (!exists) return 0L
+  private def delete(keys: DataFrame, cfg: Config): Long = {
     val deleted = keys.sparkSession.sparkContext.longAccumulator("jdbc_deletes")
     val url = cfg.url; val table = cfg.table; val keyCols = cfg.keyColumns
     val commitEvery = cfg.batchSize
@@ -148,24 +163,23 @@ object JdbcUpsert {
           val conn = DriverManager.getConnection(url)
           try {
             conn.setAutoCommit(false)
-            val sql = s"DELETE FROM ${q(table)} WHERE " +
-              keyCols.map(k => s"${q(k)} = ?").mkString(" AND ")
-            val st = conn.prepareStatement(sql)
+            val st = conn.prepareStatement(
+              s"DELETE FROM ${q(table)} WHERE ${keyMatch(keyCols)} AND ${q(LsnCol)} <= ?")
+            val tombstones = new Tombstones(conn, table, keyCols)
             var n = 0
             var issued = 0
             it.foreach { row =>
-              keyCols.zipWithIndex.foreach { case (k, i) =>
-                // typed bind like PartitionWriter — a string bind against
-                // e.g. a BIGINT key would lean on driver-specific coercion
-                st.setObject(i + 1, jdbcValue(row.getAs[Any](k)))
-              }
+              // typed bind like PartitionWriter — a string bind against
+              // e.g. a BIGINT key would lean on driver-specific coercion
+              bind(st, keyCols :+ LsnCol, row)
               n += st.executeUpdate()
+              tombstones.raise(row)
               issued += 1
               // cadence counts statements, not matched rows: a run of
               // absent keys must not commit per miss (0 % k == 0)
               if (issued % commitEvery == 0) conn.commit()
             }
-            conn.commit(); st.close()
+            conn.commit(); st.close(); tombstones.close()
             deleted.add(n)
           } finally conn.close()
         }
@@ -176,7 +190,7 @@ object JdbcUpsert {
   /** Exactly-once batch ledger in the target DB itself (analog of the
     * LakeTable `appliedUpTo` ledger): whole replayed batches are skipped.
     * The window between data commit and ledger insert is at-least-once —
-    * absorbed by key idempotence, same as the reference's offsets-after-
+    * absorbed by the lsn guards, same as the reference's offsets-after-
     * flush order (`source/kafka.go:103-109`).
     */
   def isApplied(url: String, pipeline: String, batchId: Long): Boolean =
@@ -201,6 +215,8 @@ object JdbcUpsert {
     }
 
   private val LedgerTable = "graft_applied_batches"
+  private val TombstoneTable = "graft_tombstones"
+  private val LsnCol = "lsn"
 
   // -- DDL -------------------------------------------------------------------
 
@@ -309,6 +325,13 @@ object JdbcUpsert {
         s"${q("pipeline")} VARCHAR(128) NOT NULL, ${q("batch_id")} BIGINT NOT NULL, " +
         s"PRIMARY KEY (${q("pipeline")}, ${q("batch_id")}))")
 
+  private def ensureTombstones(conn: Connection): Unit =
+    if (!tableExists(conn, TombstoneTable))
+      execute(conn, s"CREATE TABLE ${q(TombstoneTable)} (" +
+        s"${q("table_name")} VARCHAR(128) NOT NULL, ${q("key_hash")} CHAR(64) NOT NULL, " +
+        s"${q(LsnCol)} BIGINT NOT NULL, " +
+        s"PRIMARY KEY (${q("table_name")}, ${q("key_hash")}))")
+
   private def tableExists(conn: Connection, table: String): Boolean = {
     val rs = conn.getMetaData.getTables(null, null, table, null)
     try rs.next() finally rs.close()
@@ -358,6 +381,15 @@ object JdbcUpsert {
       case _ => false
     }
 
+  private def keyMatch(keyCols: Seq[String]): String =
+    keyCols.map(k => s"${q(k)} = ?").mkString(" AND ")
+
+  /** Bind `row`'s `names` columns to `st`'s parameters 1..n. */
+  private def bind(st: PreparedStatement, names: Seq[String], row: Row): Unit =
+    names.zipWithIndex.foreach { case (c, i) =>
+      st.setObject(i + 1, jdbcValue(row.getAs[Any](c)))
+    }
+
   // Spark Row values are already java.sql-friendly for our ladder
   private def jdbcValue(v: Any): AnyRef = v match {
     case null => null
@@ -368,14 +400,66 @@ object JdbcUpsert {
     case other => other.asInstanceOf[AnyRef]
   }
 
+  /** The tombstone rows of one target table, keyed by a SHA-256 of the
+    * row's key values (length-prefixed, so no two keys share a hash
+    * input): a fixed-width primary key whatever the key columns' types
+    * and widths.
+    */
+  private final class Tombstones(conn: Connection, table: String,
+      keyCols: Seq[String]) {
+    private val where = s"${q("table_name")} = ? AND ${q("key_hash")} = ?"
+    private val covering = conn.prepareStatement(
+      s"SELECT 1 FROM ${q(TombstoneTable)} WHERE $where AND ${q(LsnCol)} >= ?")
+    private val raising = conn.prepareStatement(
+      s"UPDATE ${q(TombstoneTable)} SET ${q(LsnCol)} = ? WHERE $where AND ${q(LsnCol)} < ?")
+    private val inserting = conn.prepareStatement(
+      s"INSERT INTO ${q(TombstoneTable)} VALUES (?, ?, ?)")
+
+    private def keyHash(row: Row): String = {
+      val md = java.security.MessageDigest.getInstance("SHA-256")
+      keyCols.foreach { k =>
+        val v = String.valueOf(row.getAs[Any](k))
+        md.update(s"${v.length}:$v".getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      }
+      md.digest().map(b => f"$b%02x").mkString
+    }
+
+    /** Does a delete at or above `row`'s lsn cover its key? */
+    def covers(row: Row): Boolean = {
+      covering.setString(1, table); covering.setString(2, keyHash(row))
+      covering.setLong(3, row.getAs[Long](LsnCol))
+      val rs = covering.executeQuery()
+      try rs.next() finally rs.close()
+    }
+
+    /** Raise the key's tombstone to `row`'s lsn unless it is higher. */
+    def raise(row: Row): Unit = {
+      val h = keyHash(row); val lsn = row.getAs[Long](LsnCol)
+      raising.setLong(1, lsn); raising.setString(2, table)
+      raising.setString(3, h); raising.setLong(4, lsn)
+      if (raising.executeUpdate() == 0) {
+        inserting.setString(1, table); inserting.setString(2, h)
+        inserting.setLong(3, lsn)
+        try inserting.executeUpdate()
+        catch { case e: java.sql.SQLException if isDuplicateKey(e) => () }
+      }
+    }
+
+    def close(): Unit = { covering.close(); raising.close(); inserting.close() }
+  }
+
   /** Per-partition writer: UPDATE-then-INSERT for last-write-wins,
     * INSERT-swallow-duplicate for insert-if-absent. Keys are disjoint
     * across partitions (hash repartition on key), so no retry loop.
+    * `guarded` (CDC apply, Replace only): the UPDATE also requires an
+    * older stored `lsn`, and an INSERT happens only when no tombstone
+    * covers the key.
     */
   private final class PartitionWriter(conn: Connection, table: String,
-      cols: Seq[String], keyCols: Seq[String], mode: String) {
+      cols: Seq[String], keyCols: Seq[String], mode: String, guarded: Boolean) {
 
     private val dataCols = cols.filterNot(keyCols.contains)
+    private val guardCols = if (guarded) Seq(LsnCol) else Nil
     private val insertSql = s"INSERT INTO ${q(table)} (" +
       cols.map(q).mkString(", ") + ") VALUES (" +
       cols.map(_ => "?").mkString(", ") + ")"
@@ -383,40 +467,42 @@ object JdbcUpsert {
       if (dataCols.isEmpty) "" // key-only table: nothing to update
       else s"UPDATE ${q(table)} SET " +
         dataCols.map(c => s"${q(c)} = ?").mkString(", ") +
-        " WHERE " + keyCols.map(k => s"${q(k)} = ?").mkString(" AND ")
+        " WHERE " + keyMatch(keyCols) + guardCols.map(c => s" AND ${q(c)} < ?").mkString
     private val insert = conn.prepareStatement(insertSql)
     private val update =
       if (updateSql.isEmpty) null else conn.prepareStatement(updateSql)
+    private val tombstones =
+      if (guarded) new Tombstones(conn, table, keyCols) else null
 
     def upsert(row: Row): Unit = mode match {
       case Replace if update == null =>
         // key-only table: a present key IS the converged state, so
         // replace degenerates to insert-if-absent
-        try doInsert(row)
-        catch { case e: java.sql.SQLException if isDuplicateKey(e) => () }
+        insertIfAbsent(row)
       case Replace =>
-        dataCols.zipWithIndex.foreach { case (c, i) =>
-          update.setObject(i + 1, jdbcValue(row.getAs[Any](c)))
+        bind(update, dataCols ++ keyCols ++ guardCols, row)
+        if (update.executeUpdate() == 0) {
+          if (!guarded) doInsert(row)
+          // nothing updated: the key is absent, or stored with a newer
+          // lsn (then the INSERT's duplicate key is swallowed)
+          else if (!tombstones.covers(row)) insertIfAbsent(row)
         }
-        keyCols.zipWithIndex.foreach { case (k, i) =>
-          update.setObject(dataCols.size + i + 1, jdbcValue(row.getAs[Any](k)))
-        }
-        if (update.executeUpdate() == 0) doInsert(row)
-      case _ => // InsertIfAbsent: first write wins ≙ ON CONFLICT DO NOTHING
-        try doInsert(row)
-        catch { case e: java.sql.SQLException if isDuplicateKey(e) => () }
+      case _ => insertIfAbsent(row) // first write wins ≙ ON CONFLICT DO NOTHING
     }
 
+    private def insertIfAbsent(row: Row): Unit =
+      try doInsert(row)
+      catch { case e: java.sql.SQLException if isDuplicateKey(e) => () }
+
     private def doInsert(row: Row): Unit = {
-      cols.zipWithIndex.foreach { case (c, i) =>
-        insert.setObject(i + 1, jdbcValue(row.getAs[Any](c)))
-      }
+      bind(insert, cols, row)
       insert.executeUpdate()
     }
 
     def close(): Unit = {
       insert.close()
       if (update != null) update.close()
+      if (tombstones != null) tombstones.close()
     }
   }
 }

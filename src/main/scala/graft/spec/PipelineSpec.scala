@@ -134,10 +134,9 @@ object PipelineSpec {
     // vanish silently from a spec that still sets it
     if (sp.contains("dedupStateTtlMs"))
       throw new IllegalArgumentException(
-        "source option dedupStateTtlMs was removed: dedup state never " +
-          "expires, because an expired key re-admits a stale redelivery " +
-          "that a jdbc target writes over the newer row and a jsonl DLQ " +
-          "records twice; delete the option from the spec")
+        "source option dedupStateTtlMs was removed: CDC pipelines keep " +
+          "no dedup state (the sinks hold the max-lsn guarantee); delete " +
+          "the option from the spec")
     SourceSpec(
       tpe = tpe,
       path = str(sp, "path").getOrElse(""),

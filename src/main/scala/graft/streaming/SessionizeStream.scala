@@ -22,9 +22,9 @@ final case class SessionRow(
 
 /** Streaming gap-sessionization: the stateful, incremental counterpart
   * of the batch [[graft.operators.Relational.sessionize]], built on
-  * `flatMapGroupsWithState` with **event-time timeout** — the third
-  * custom-state shape in this repo next to LsnDedup (exactly-once
-  * ordering) and EventRollup (watermarked windows).
+  * `flatMapGroupsWithState` with **event-time timeout** — one of the
+  * two stateful operators in this repo, next to EventRollup (watermarked
+  * windows); the CDC pipelines keep no keyed state.
   *
   * Semantics are IDENTICAL to the batch operator (splits on gaps
   * strictly greater than `gapSeconds`, microsecond-exact), which the
@@ -55,8 +55,8 @@ final case class SessionRow(
   *    enabled here because seq continuity is part of the operator's
   *    contract (ADVICE r5).
   *
-  * At 10^10-event scale this runs on the RocksDB state store exactly
-  * like LsnDedup (off-heap, disk-backed), and OutputMode.Append means a
+  * At 10^10-event scale this runs on the RocksDB state store
+  * (off-heap, disk-backed; `Sessions.local`), and OutputMode.Append means a
   * session row is written exactly once — safe for immutable sinks.
   */
 object SessionizeStream {

@@ -19,8 +19,8 @@ object Sessions {
     *    level paid ~2 s/batch more (a second wave of RocksDB instance
     *    open/commit per stateful stage: 48.5 s vs 38.6 s wall);
     *    partitions ≪ cpus idles a stateful stage. A stateful query's
-    *    checkpoint pins its state partitions on resume; the parquet →
-    *    lake replay keeps no state, so its resume at another cpu count
+    *    checkpoint pins its state partitions on resume; the CDC
+    *    pipelines keep no state, so their resume at another cpu count
     *    moves nothing.
     *  - raw local FS for file:// paths. Hadoop's default LocalFileSystem
     *    is a ChecksumFileSystem: every file create (state changelog,
@@ -29,10 +29,9 @@ object Sessions {
     *    the lake's atomic snapshot commit (and, on a cluster, the DFS
     *    block layer) already provides.
     *  - the RocksDB keyed state store (BENCH.md "State store") for the
-    *    stateful pipelines: `LsnDedup` on jsonl sources and JDBC targets
-    *    (one Long per live key), `SessionizeStream` and `EventRollup`.
-    *    The in-memory HDFS provider holds all of it on heap; RocksDB
-    *    bounds memory at any key count.
+    *    two stateful operators, `SessionizeStream` and `EventRollup`
+    *    (no CDC pipeline keeps keyed state). The in-memory HDFS provider
+    *    holds all of it on heap; RocksDB bounds memory at any key count.
     *    Changelog checkpointing commits each batch's state changelog and
     *    leaves full snapshots to background maintenance. The raw FS needs
     *    it: RocksDB's snapshot upload goes through Hadoop's

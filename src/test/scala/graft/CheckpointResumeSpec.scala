@@ -107,4 +107,17 @@ class CheckpointResumeSpec extends SparkSpec {
     // refused before anything is written: no table was created
     assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(root, "lake")))
   }
+
+  test("a jsonl checkpoint holding state/ is refused the same way") {
+    val root = tmpDir("stateful-jsonl-ckpt")
+    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(root, "ckpt", "state"))
+    val job = CdcJob(spark, CdcJobConfig(logDir = s"$root/log",
+      tablePath = s"$root/lake", checkpointDir = s"$root/ckpt",
+      dlqDir = Some(s"$root/dlq"), format = "jsonl"))
+    val e = intercept[IllegalStateException](job.start())
+    assert(e.getMessage.contains("state/") &&
+      e.getMessage.contains("new checkpointDir") &&
+      e.getMessage.contains("new checkpointId"), e.getMessage)
+    assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(root, "lake")))
+  }
 }

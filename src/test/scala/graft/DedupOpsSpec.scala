@@ -1,86 +1,11 @@
 package graft
 
-import graft.envelope.ChangeEvent
-import graft.dedup.LsnDedup
 import graft.textops.{Dedup, TextAnalysis}
 import graft.simops.{Multimodal, Similarity}
 import org.apache.spark.sql.functions._
 
 class DedupOpsSpec extends SparkSpec {
   import scala.jdk.CollectionConverters._
-
-  private def ev(lsn: Long, op: String, repo: String, path: String,
-      content: String = "c"): ChangeEvent =
-    ChangeEvent(lsn, op, new java.sql.Timestamp(0), repo, path,
-      "0" * 40, "scala", content, Map.empty)
-
-  test("LsnDedup.batch: duplicates and stale out-of-order events dropped") {
-    import spark.implicits._
-    val events = Seq(
-      ev(1, "insert", "r", "a", "v1"),
-      ev(1, "insert", "r", "a", "v1"), // exact redelivery
-      ev(3, "delete", "r", "a", ""),
-      ev(2, "update", "r", "a", "v2"), // stale after lsn 3? emitted if sorted asc
-      ev(5, "update", "r", "b", "v5")).toDS()
-    val out = LsnDedup.batch(events).collect().sortBy(_.lsn)
-    // within one batch, sorted by lsn: 1,2,3 emitted for key a (each > last)
-    assert(out.map(_.lsn).toSeq === Seq(1L, 2L, 3L, 5L))
-  }
-
-  test("delete-before-insert across batches is suppressed by state semantics") {
-    import spark.implicits._
-    // batch semantics proxy: second call sees only stale lsn
-    val b1 = Seq(ev(9, "delete", "r", "a", "")).toDS()
-    val out1 = LsnDedup.batch(b1).collect()
-    assert(out1.map(_.lsn).toSeq === Seq(9L))
-    // the streaming path (GroupState) is exercised e2e in CdcReplaySpec via
-    // the generator's forced delete-before-insert pairs; here check the
-    // group function directly with pre-seeded state
-    val state = new TestGroupState(Some(graft.dedup.KeyProgress(9L)))
-    val late = LsnDedup.dedupGroup(("r", "a"),
-      Iterator(ev(5, "insert", "r", "a", "late")), state)
-    assert(late.isEmpty, "stale insert after delete must be dropped")
-  }
-
-  test("equal-lsn delete passes dedup so the lake tie-break can apply") {
-    // state already emitted lsn 7 (an upsert); a delete at the SAME lsn
-    // must still flow downstream — the lake's delete-wins tie-break makes
-    // final state batching-independent only if it sees the tombstone
-    val state = new TestGroupState(Some(graft.dedup.KeyProgress(7L)))
-    val out = LsnDedup.dedupGroup(("r", "a"),
-      Iterator(ev(7, "delete", "r", "a", "")), state).toSeq
-    assert(out.map(e => (e.lsn, e.op)) === Seq((7L, "delete")))
-    // ...but an equal-lsn upsert redelivery stays suppressed
-    val dup = LsnDedup.dedupGroup(("r", "a"),
-      Iterator(ev(7, "update", "r", "a", "v")), state).toSeq
-    assert(dup.isEmpty)
-    // within one group-batch, delete wins the equal-lsn pair
-    val both = LsnDedup.dedupGroup(("r", "b"),
-      Iterator(ev(3, "update", "r", "b", "v"), ev(3, "delete", "r", "b", "")),
-      new TestGroupState(None)).toSeq
-    assert(both.map(_.op) === Seq("delete"))
-  }
-
-  test("preCombine: per-partition winners only, capped map still correct") {
-    import spark.implicits._
-    val events = (0 until 5000).map { i =>
-      ev(i.toLong, if (i % 7 == 3) "delete" else "update", "r", s"p${i % 11}",
-        s"v$i")
-    } :+ ev(4999L, "delete", "r", "p3x", "") :+ ev(4999L, "update", "r", "p3x", "v")
-    val ds = events.toDS().repartition(2)
-    val combined = LsnDedup.preCombine(ds, cap = 64).collect()
-    // per key, the global winner must survive somewhere in the output
-    val winners = combined.groupBy(e => (e.repo, e.path)).map { case (k, es) =>
-      k -> es.maxBy(e => (e.lsn, if (e.op == "delete") 1 else 0))
-    }
-    assert(winners(("r", "p3x")).op === "delete") // equal-lsn tie: delete wins
-    (0 until 11).foreach { p =>
-      val maxLsn = events.filter(e => e.path == s"p$p").map(_.lsn).max
-      assert(winners(("r", s"p$p")).lsn === maxLsn)
-    }
-    // the combiner reduced volume (5002 in, far fewer out)
-    assert(combined.length < events.size)
-  }
 
   test("exact dedup keeps min-id per identical text") {
     import spark.implicits._
@@ -418,25 +343,4 @@ class DedupOpsSpec extends SparkSpec {
     val img = rows.find(_.modality == "image").get
     assert(img.decoded_units === (64L + img.media_id % 64) * 64L)
   }
-}
-
-/** Minimal GroupState stub for unit-testing the dedup group function. */
-class TestGroupState[S](initial: Option[S])
-    extends org.apache.spark.sql.streaming.GroupState[S] {
-  private var cur: Option[S] = initial
-  private var updated = false
-  override def exists: Boolean = cur.isDefined
-  override def get: S = cur.get
-  override def getOption: Option[S] = cur
-  override def update(s: S): Unit = { cur = Some(s); updated = true }
-  override def remove(): Unit = { cur = None }
-  override def hasTimedOut: Boolean = false
-  override def setTimeoutDuration(d: Long): Unit = ()
-  override def setTimeoutDuration(d: String): Unit = ()
-  override def setTimeoutTimestamp(t: Long): Unit = ()
-  override def setTimeoutTimestamp(t: Long, additional: String): Unit = ()
-  override def setTimeoutTimestamp(t: java.sql.Date): Unit = ()
-  override def setTimeoutTimestamp(t: java.sql.Date, additional: String): Unit = ()
-  override def getCurrentWatermarkMs(): Long = 0L
-  override def getCurrentProcessingTimeMs(): Long = 0L
 }

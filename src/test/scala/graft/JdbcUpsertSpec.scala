@@ -200,8 +200,8 @@ class JdbcUpsertSpec extends SparkSpec {
     val stats = job.runToCompletion()
     assert(stats.size === 2 && stats.forall(!_.skippedAsApplied),
       "one applied micro-batch per segment")
-    // the upsert has no lsn to compare: only the dedup state, which
-    // remembers A's lsn 5 from batch 0, keeps the stale lsn 3 out
+    // no dedup state: the guarded UPDATE finds the stored lsn 5 newer
+    // and the INSERT's duplicate key is swallowed
     assert(queryAll(url, "SELECT \"path\", \"content\" FROM \"repos\"") ===
       Seq(Seq("A", "v5")))
   }
@@ -226,5 +226,41 @@ class JdbcUpsertSpec extends SparkSpec {
         s"state=$state vendor=$vendor")
     }
     assert(!JdbcUpsert.isDuplicateKey(new java.sql.SQLException("no state")))
+  }
+
+  test("streaming jdbc sink: a tombstone keeps a deleted key absent across batches and replays") {
+    import spark.implicits._
+    val root = tmpDir("jdbc-tombstone")
+    val url = freshUrl("tombstone")
+    Seq(
+      // batch 0 deletes only: the tombstones must hold without a row
+      Seq(ChangeEvent(5, "delete", ts(5), "r", "A", "c5", "scala", "", Map.empty),
+        ChangeEvent(4, "delete", ts(4), "r", "C", "c4", "scala", "", Map.empty)),
+      // a stale insert of A, and B's first row
+      Seq(ChangeEvent(3, "insert", ts(3), "r", "A", "c3", "scala", "a-stale", Map.empty),
+        ChangeEvent(2, "insert", ts(2), "r", "B", "c2", "scala", "b2", Map.empty)),
+      // an insert of C at its delete's lsn: the delete wins the tie
+      Seq(ChangeEvent(4, "insert", ts(4), "r", "C", "c4", "scala", "c-tie", Map.empty),
+        ChangeEvent(7, "update", ts(7), "r", "B", "c7", "scala", "b7", Map.empty)),
+      // a stale delete of B: the stored lsn 7 is newer
+      Seq(ChangeEvent(6, "delete", ts(6), "r", "B", "c6", "scala", "", Map.empty)))
+      .zipWithIndex.foreach { case (es, seg) =>
+        val dir = new java.io.File(s"$root/log/seg=$seg")
+        es.toDS().coalesce(1).write.parquet(dir.getPath)
+        dir.listFiles().foreach(_.setLastModified(1000000000000L + seg * 2000L))
+      }
+    def run(ckpt: String): Seq[graft.lake.MergeStats] =
+      graft.job.CdcJob(spark, graft.job.CdcJobConfig(
+        logDir = s"$root/log", tablePath = "", checkpointDir = s"$root/$ckpt",
+        maxFilesPerTrigger = 1, checkpointId = ckpt,
+        jdbcSink = Some(JdbcUpsert.Config(url, "repos",
+          keyColumns = Seq("repo", "path"))))).runToCompletion()
+    val sql = "SELECT \"path\", \"content\", \"lsn\" FROM \"repos\" ORDER BY \"path\""
+    assert(run("tomb").size === 4, "one applied micro-batch per segment")
+    assert(queryAll(url, sql) === Seq(Seq("B", "b7", 7L)))
+    // the whole log again under a fresh checkpointId: the ledger skips
+    // nothing, the guards keep every key where it is
+    assert(run("tomb-replay").forall(!_.skippedAsApplied))
+    assert(queryAll(url, sql) === Seq(Seq("B", "b7", 7L)))
   }
 }

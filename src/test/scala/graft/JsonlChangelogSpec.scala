@@ -9,8 +9,9 @@ import org.apache.spark.sql.types.StructType
 /** JSONL-codec changelog: raw text + JSON codec with malformed lines
   * routed to a real DLQ (the reference logs-and-drops,
   * `internal/source/kafka.go:93-97`; its configured DLQ is never written).
-  * This path keeps `LsnDedup`'s keyed state; the last two specs pin what
-  * that state carries across micro-batches.
+  * The pipeline keeps no keyed state: the DLQ holds each malformed line
+  * once across batches, replays and crashes (`graft.sinks.Dlq`), and the
+  * lake's max-`__lsn` merge drops stale events.
   */
 class JsonlChangelogSpec extends SparkSpec {
 
@@ -84,15 +85,15 @@ class JsonlChangelogSpec extends SparkSpec {
       dlqDir = Some(s"$root/dlq"), format = "jsonl", maxFilesPerTrigger = 1,
       numBuckets = 2))
     assert(job.runToCompletion().size === 2, "one micro-batch per segment")
-    // both copies key on the line's hash at lsn 0: the state drops the
-    // second one, which a per-batch dedup alone would let through
+    // batch 1's anti-join leaves out the line batch 0's file holds, which
+    // a per-batch dedup alone would let through
     assert(spark.read.parquet(s"$root/dlq").select("raw").collect()
       .map(_.getString(0)).toSeq === Seq(bad))
     assert(job.lake.read().select("content").collect()
       .map(_.getString(0)).toSeq === Seq("a2"))
   }
 
-  test("a batch the lake's ledger already holds still commits its dedup state") {
+  test("a ledger-held batch is skipped; a later stale event loses at read") {
     // the crash window between the lake commit and the engine's batch
     // commit: the ledger holds batch 0, the checkpoint does not
     val root = tmpDir("jl-ledger-hit")
@@ -110,11 +111,58 @@ class JsonlChangelogSpec extends SparkSpec {
 
     val stats = job.runToCompletion()
     assert(stats.map(_.skippedAsApplied) === Seq(true, false))
-    // the skipped batch still ran through the state, so the stale A in
-    // the next batch is dropped before it reaches the lake
+    // no state drops the stale A of the next batch: it is stored as a
+    // delta row and loses to lsn 5 at read
     assert(job.lake.readRaw().filter(col("path") === "A").select("__lsn")
-      .collect().map(_.getLong(0)).toSeq === Seq(5L))
+      .collect().map(_.getLong(0)).toSeq.sorted === Seq(3L, 5L))
     assert(job.lake.read().orderBy("path").select("content").collect()
       .map(_.getString(0)).toSeq === Seq("a5", "b7"))
+  }
+
+  private def dlqLines(dir: String): Seq[String] =
+    spark.read.parquet(dir).select("raw").collect().map(_.getString(0)).toSeq
+
+  test("a crash between the DLQ write and the lake commit leaves the line in the DLQ once") {
+    val root = tmpDir("jl-dlq-crash")
+    val bad = "{\"oops\": crash"
+    writeLines(s"$root/log", 0, json(ev(1, "insert", "A", "a1")) :+ bad)
+    val cfg = CdcJobConfig(logDir = s"$root/log", tablePath = s"$root/lake",
+      checkpointDir = s"$root/ckpt", dlqDir = Some(s"$root/dlq"),
+      format = "jsonl", maxFilesPerTrigger = 1, numBuckets = 2,
+      checkpointId = "jl-crash")
+    // the crash state: batch 0's DLQ file is written, neither the lake
+    // nor the checkpoint holds batch 0
+    import spark.implicits._
+    assert(graft.sinks.Dlq.write(Seq(bad).toDF("raw"), s"$root/dlq",
+      cfg.checkpointId, 0L) === 1L)
+    val job = CdcJob(spark, cfg)
+    assert(job.runToCompletion().map(_.skippedAsApplied) === Seq(false))
+    assert(dlqLines(s"$root/dlq") === Seq(bad))
+    assert(job.lake.read().select("content").collect()
+      .map(_.getString(0)).toSeq === Seq("a1"))
+  }
+
+  test("a replayed all-malformed batch, which commits no ledger entry, adds no second copy") {
+    val root = tmpDir("jl-dlq-allbad")
+    val bad = Seq("{\"oops\": one", "{\"oops\": two")
+    writeLines(s"$root/log", 0, bad)
+    writeLines(s"$root/log", 1, json(ev(1, "insert", "A", "a1")))
+    val cfg = CdcJobConfig(logDir = s"$root/log", tablePath = s"$root/lake",
+      checkpointDir = s"$root/ckpt", dlqDir = Some(s"$root/dlq"),
+      format = "jsonl", maxFilesPerTrigger = 1, numBuckets = 2,
+      checkpointId = "jl-allbad")
+    // batch 0 ran to its (empty) merge, which wrote no ledger entry, and
+    // the engine crashed before its batch commit
+    import spark.implicits._
+    graft.sinks.Dlq.write(bad.toDF("raw"), s"$root/dlq", cfg.checkpointId, 0L)
+    val job = CdcJob(spark, cfg)
+    job.lake.createIfAbsent(StructType(ChangeEvent.schema.fields.filter(f =>
+      ChangeEvent.lakeCols.contains(f.name))))
+    val empty = job.lake.merge(Seq.empty[ChangeEvent].toDS().toDF(), cfg.checkpointId, 0L)
+    assert(!empty.skippedAsApplied && job.lake.currentSnapshot.get.appliedUpTo.isEmpty)
+    assert(job.runToCompletion().size === 2, "one micro-batch per segment")
+    assert(dlqLines(s"$root/dlq").sorted === bad.sorted)
+    assert(job.lake.read().select("content").collect()
+      .map(_.getString(0)).toSeq === Seq("a1"))
   }
 }

@@ -456,9 +456,8 @@ class LakeTableMorSpec extends SparkSpec {
   }
 
   test("merging an empty batch commits no version; the next batch id commits") {
-    // empty batches reach merge from the deduped jsonl pipeline: a batch
-    // whose lines are all malformed, or one whose events LsnDedup dropped
-    // as stale
+    // empty batches reach merge from a jsonl changelog: a batch whose
+    // lines are all malformed (they go to the DLQ)
     import spark.implicits._
     val dir = tmpDir("mor-empty")
     val lake = LakeTable(spark, dir, Seq("repo", "path"), 2)

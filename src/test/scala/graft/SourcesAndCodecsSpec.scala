@@ -117,4 +117,30 @@ class SourcesAndCodecsSpec extends SparkSpec {
     assert(bad.count() === 1L)
     assert(bad.select("raw").head().getString(0).startsWith("""{"a": broken"""))
   }
+
+  test("a re-run jsonl import writes each malformed line to the DLQ once") {
+    import spark.implicits._
+    val dir = tmpDir("jsonl-import-dlq")
+    Seq("""{"a": 1, "b": "x"}""", """{"a": broken""", """{"a": 2, "b": "y"}""",
+      """{"b": also broken""")
+      .toDF("value").coalesce(1).write.text(s"$dir/in")
+    val spec = graft.spec.PipelineSpec.fromYaml(
+      s"""stream:
+         |  name: jsonl-import
+         |  instance:
+         |    source: { type: jsonl, specs: { path: $dir/in } }
+         |    target: { type: lake, specs: { path: $dir/lake, keyColumns: [__key], numBuckets: 2 } }
+         |    dlq: { type: files, specs: { path: $dir/dlq } }
+         |""".stripMargin)
+    // one import, run twice with the same batch id (what `start` does)
+    val runs = (1 to 2).map { _ =>
+      graft.Main.importBatch(spark, graft.Main.jsonlImport(spark, spec, 7L), spec, 7L)
+    }
+    assert(runs.map(_.skippedAsApplied) === Seq(false, true))
+    val dlq = spark.read.parquet(s"$dir/dlq")
+    assert(dlq.columns.toSet === Set("raw", "dlq_ts"))
+    assert(dlq.select("raw").collect().map(_.getString(0)).toSeq.sorted ===
+      Seq("""{"a": broken""", """{"b": also broken"""))
+    assert(graft.lake.LakeTable(spark, s"$dir/lake").read().count() === 2L)
+  }
 }
