@@ -251,7 +251,8 @@ object Main {
       |        # jdbc target only (streaming CDC apply or batch import):
       |        # url: jdbc:derby:/data/db;create=true
       |        # table: repos
-      |        # mode: replace        # replace (last-write-wins) | insertIfAbsent
+      |        # mode: replace        # replace (last-write-wins) | insertIfAbsent (batch import only)
+      |        # batchSize: 100       # rows per partition commit
       |    dlq:
       |      type: files
       |      specs:
@@ -368,10 +369,7 @@ object Main {
         require(tgt.tpe == "lake" || tgt.tpe == "jdbc",
           s"streaming source requires lake or jdbc target, got ${tgt.tpe}")
         val jdbcSink =
-          if (tgt.tpe == "jdbc")
-            Some(graft.sinks.JdbcUpsert.Config(tgt.url, tgt.table,
-              keyColumns = tgt.keyColumns, mode = tgt.mode))
-          else None
+          if (tgt.tpe == "jdbc") Some(jdbcConfig(tgt, cdc = true)) else None
         val dlqDir = spec.instance.dlq.map(_.path).filter(_.nonEmpty)
         require(dlqDir.isEmpty || format == "jsonl",
           "dlq configured but source format is parquet (typed segments " +
@@ -445,18 +443,10 @@ object Main {
           // FileStreamSink metadata probe) and drop the seg partition col
           val raw = cfg.format match {
             case "jsonl" =>
-              // decode the raw lines like the stream does (same codec
-              // dispatch); malformed lines (DLQ-bound) carry no envelope
-              // and drop out here too
-              val lines0 = spark.read.text(logDir + "/seg=*")
-              val lines =
-                if (cfg.codec == "yaml") CdcJob.yamlToJsonLines(spark, lines0)
-                else lines0
-              lines
-                .withColumn("__p", CdcJob.decodeEnvelope(cfg.codec, col("value")))
-                .filter(col("__p.lsn").isNotNull && col("__p.op").isNotNull &&
-                  col("__p.repo").isNotNull && col("__p.path").isNotNull)
-                .select("__p.*")
+              // the stream's own decode; malformed (DLQ-bound) lines
+              // drop out here too
+              CdcJob.decodeLines(spark.read.text(logDir + "/seg=*"), cfg.codec)
+                .filter(col("op") =!= CdcJob.DlqOp)
             case _ =>
               spark.read.parquet(logDir).drop("seg")
           }
@@ -469,6 +459,19 @@ object Main {
           println(s"[graft] oracle check: ${if (diff == 0) "CONVERGED" else s"DIVERGED ($diff rows)"}")
           if (diff != 0) sys.exit(1)
         }
+  }
+
+  /** The sink config of a `jdbc` target, for a batch import or (`cdc`)
+    * a streaming CDC apply. A CDC target refuses `insertIfAbsent`: the
+    * CDC apply is max-lsn-wins per key and has no first-write-wins mode.
+    */
+  private[graft] def jdbcConfig(t: graft.spec.TargetSpec,
+      cdc: Boolean): graft.sinks.JdbcUpsert.Config = {
+    require(!cdc || t.mode != graft.sinks.JdbcUpsert.InsertIfAbsent,
+      s"jdbc mode ${t.mode} does not apply to a CDC target: the CDC apply " +
+        "is max-lsn-wins per key (use mode: replace)")
+    graft.sinks.JdbcUpsert.Config(t.url, t.table, keyColumns = t.keyColumns,
+      mode = t.mode, batchSize = t.batchSize)
   }
 
   private def batchTarget(spark: SparkSession,
@@ -514,8 +517,7 @@ object Main {
       // examples (`examples/example-6`, csv → pgsql with md5 `__key`);
       // --batch-id gives whole-import idempotence via the DB-side ledger
       val t = spec.instance.target
-      val jcfg = graft.sinks.JdbcUpsert.Config(t.url, t.table,
-        keyColumns = t.keyColumns, mode = t.mode, batchSize = t.batchSize)
+      val jcfg = jdbcConfig(t, cdc = false)
       val bid = flag(args, "--batch-id").map(_.toLong).getOrElse(0L)
       if (graft.sinks.JdbcUpsert.isApplied(t.url, spec.name, bid))
         println(s"[graft] import batch $bid already applied (exactly-once no-op)")

@@ -1,7 +1,6 @@
 package graft.envelope
 
-import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.{Encoder, Encoders}
 import org.apache.spark.sql.types._
 
 /** The CDC change-event envelope — the "binlog record" the flagship job
@@ -45,27 +44,4 @@ object ChangeEvent {
 
   /** Fixed (non-drift) lake columns. */
   val lakeCols: Seq[String] = Seq("repo", "path", "commit", "lang", "content")
-
-  /** Parse a raw JSON-lines change feed into (good envelopes, DLQ rows).
-    * Draethos logs-and-skips malformed events and never writes its
-    * configured DLQ (`internal/source/kafka.go:93-97`); we route them to a
-    * real DLQ DataFrame instead.
-    */
-  def parseJson(spark: SparkSession, raw: DataFrame): (Dataset[ChangeEvent], DataFrame) = {
-    import spark.implicits._
-    val parsed = raw
-      .withColumn("__parsed", from_json(col("value"), schema))
-      .cache()
-    val good = parsed
-      .filter(col("__parsed.lsn").isNotNull && col("__parsed.op").isNotNull &&
-        col("__parsed.repo").isNotNull && col("__parsed.path").isNotNull)
-      .select(col("__parsed.*"))
-      .withColumn("extra", coalesce(col("extra"), map()))
-      .as[ChangeEvent]
-    val bad = parsed
-      .filter(col("__parsed.lsn").isNull || col("__parsed.op").isNull ||
-        col("__parsed.repo").isNull || col("__parsed.path").isNull)
-      .select(col("value").as("raw"), current_timestamp().as("dlq_ts"))
-    (good, bad)
-  }
 }

@@ -96,11 +96,6 @@ class CdcJob(spark: SparkSession, cfg: CdcJobConfig) {
       case None => r.option("maxFilesPerTrigger", cfg.maxFilesPerTrigger)
     }
 
-  /** Marker op of a malformed text-changelog line riding the stream to
-    * the DLQ split; such rows never reach a sink.
-    */
-  private val DlqOp = "__dlq"
-
   /** Build (but do not await) the streaming query, after refusing a
     * checkpoint that the stateful pipeline wrote.
     *
@@ -115,7 +110,8 @@ class CdcJob(spark: SparkSession, cfg: CdcJobConfig) {
     refuseStatefulCheckpoint()
     val events = cfg.format match {
       case "parquet" => parquetEvents
-      case "jsonl" => jsonlEvents
+      case "jsonl" =>
+        CdcJob.decodeLines(bounded(spark.readStream).text(s"${cfg.logDir}/seg=*"), cfg.codec)
       case other =>
         throw new IllegalArgumentException(s"changelog format $other not implemented")
     }
@@ -164,7 +160,7 @@ class CdcJob(spark: SparkSession, cfg: CdcJobConfig) {
     * is materialized once so the DLQ split and the sink share one decode.
     */
   private def dropMalformed(batch: DataFrame, batchId: Long): DataFrame = {
-    val bad = col("op") === DlqOp
+    val bad = col("op") === CdcJob.DlqOp
     cfg.dlqDir.fold(batch) { dir =>
       val df = graft.util.Materialize.barrier(batch)
       graft.sinks.Dlq.write(df.filter(bad).select(col("content").as("raw")),
@@ -173,74 +169,38 @@ class CdcJob(spark: SparkSession, cfg: CdcJobConfig) {
     }.filter(!bad)
   }
 
-  /** Text changelog lines decoded by `codec`: raw text + codec ≙ the
-    * draethos kafka-source + codec path (`internal/source/kafka.go:130`,
-    * `internal/codec/{json,xml,yaml}.go`). A line that fails to decode
-    * becomes a DLQ-tagged event instead of being logged-and-dropped like
-    * the reference (`kafka.go:93-97`). json/xml decode through native
-    * expressions (codegen'd); yaml — which has no SQL expression —
-    * transcodes to JSON lines per partition and rides the same path, so
-    * malformed yaml reaches the DLQ as the original line too.
-    */
-  private def jsonlEvents: DataFrame = {
-    val raw0 = bounded(spark.readStream)
-      .text(s"${cfg.logDir}/seg=*")
-    val raw =
-      if (cfg.codec == "yaml") CdcJob.yamlToJsonLines(spark, raw0) else raw0
-    raw
-      .withColumn("__p", CdcJob.decodeEnvelope(cfg.codec, col("value")))
-      .select(
-        col("__p.lsn").as("lsn"),
-        when(valid, col("__p.op")).otherwise(lit(DlqOp)).as("op"),
-        coalesce(col("__p.ts"), lit(new java.sql.Timestamp(0))).as("ts"),
-        col("__p.repo").as("repo"),
-        col("__p.path").as("path"),
-        coalesce(col("__p.commit"), lit("")).as("commit"),
-        coalesce(col("__p.lang"), lit("")).as("lang"),
-        when(valid, coalesce(col("__p.content"), lit("")))
-          .otherwise(col("value")).as("content"),
-        coalesce(col("__p.extra"), map()).as("extra"))
-  }
-
-  /** JDBC micro-batch apply ≙ a reference pgsql/mysql Flush: lift drift
-    * fields out of `extra` into top-level columns (they become ALTERed
-    * columns, `pgsql.go:162-238`), then the lsn-guarded upsert + delete.
-    * A batch id the ledger already holds is a skipped no-op, as in
-    * `LakeTable.merge`. The ledger row is recorded after the data commit
-    * — same sink-before-offsets order as the reference, exactly-once at
-    * batch granularity, residual overlap absorbed by the lsn guards.
+  /** JDBC micro-batch apply ≙ a reference pgsql/mysql Flush: one
+    * aggregate counts the batch and finds its drift keys, which are
+    * lifted out of `extra` into top-level columns (they become ALTERed
+    * columns, `pgsql.go:162-238`); then the one-pass lsn-guarded apply.
+    * A batch runs three Spark actions: this aggregate, the sink's length
+    * probe and its write. A batch id the ledger already holds is a
+    * skipped no-op, as in `LakeTable.merge`. The ledger row is recorded
+    * after the data commit — same sink-before-offsets order as the
+    * reference, exactly-once at batch granularity, residual overlap
+    * absorbed by the lsn guards.
     */
   private def applyJdbc(batch: DataFrame, j: graft.sinks.JdbcUpsert.Config,
       batchId: Long): MergeStats = {
     if (graft.sinks.JdbcUpsert.isApplied(j.url, cfg.checkpointId, batchId))
       return MergeStats(-1L, batchId, skippedAsApplied = true, 0L, 0L, 0L, 0, Nil)
-    val driftKeys: Seq[String] =
-      if (!batch.columns.contains("extra")) Nil
-      else batch
-        .select(explode(map_keys(coalesce(col("extra"), map()))).as("k"))
-        .distinct().collect().map(_.getString(0)).toSeq.sorted
-        // a drift key named like an envelope/key column (lsn, op, repo, …)
-        // must not overwrite it — that would corrupt the winner reduction
-        // and the JDBC key columns. Same guard as the lake side, where
-        // base columns always win over the extra map.
-        .filterNot(batch.columns.contains)
+    // the drift-key expression of LakeTable.merge's observe()
+    val agg = batch.agg(count(lit(1)),
+      array_distinct(flatten(collect_set(map_keys(col("extra")))))).head()
+    val n = agg.getLong(0)
+    val driftKeys = agg.getSeq[String](1).sorted
+      // a drift key named like an envelope/key column (lsn, op, repo, …)
+      // must not overwrite it — that would corrupt the winner reduction
+      // and the JDBC key columns. Same guard as the lake side, where
+      // base columns always win over the extra map.
+      .filterNot(batch.columns.contains)
     val lifted = driftKeys.foldLeft(batch) { (d, k) =>
       d.withColumn(k, element_at(col("extra"), k))
     }.drop("extra")
-    val n = batch.count()
     val (up, del) = graft.sinks.JdbcUpsert.applyCdcBatch(lifted, j)
     graft.sinks.JdbcUpsert.recordApplied(j.url, cfg.checkpointId, batchId)
     MergeStats(-1L, batchId, skippedAsApplied = false, n, up, del, 0, driftKeys)
   }
-
-  /** A parsed text-changelog line is a valid envelope iff the required
-    * fields came through non-null (≙ dispatcher validation the reference
-    * lacks).
-    */
-  private def valid =
-    col("__p").isNotNull && col("__p.lsn").isNotNull &&
-      col("__p.op").isNotNull && col("__p.repo").isNotNull &&
-      col("__p.path").isNotNull
 
   /** Run to end-of-log (AvailableNow) and block until done. */
   def runToCompletion(): Seq[MergeStats] = {
@@ -333,14 +293,45 @@ class CdcJob(spark: SparkSession, cfg: CdcJobConfig) {
 object CdcJob {
   def apply(spark: SparkSession, cfg: CdcJobConfig): CdcJob = new CdcJob(spark, cfg)
 
-  /** Envelope decode column for a text changelog line, by codec —
-    * json/xml are native, codegen'd expressions; yaml lines must be
-    * transcoded first (`yamlToJsonLines`) and then parse as json.
+  /** Marker op of a malformed text-changelog line; such rows go to the
+    * DLQ and never reach a sink.
     */
-  def decodeEnvelope(codec: String, raw: org.apache.spark.sql.Column)
-      : org.apache.spark.sql.Column = codec match {
-    case "xml" => graft.sources.Codecs.decode("xml", raw, ChangeEvent.schema)
-    case _ => from_json(raw, ChangeEvent.schema)
+  val DlqOp = "__dlq"
+
+  /** Text changelog lines (a `value` column, batch or streaming) decoded
+    * by `codec` into envelope rows: raw text + codec ≙ the draethos
+    * kafka-source + codec path (`internal/source/kafka.go:130`,
+    * `internal/codec/{json,xml,yaml}.go`). A line that fails to decode,
+    * or lacks `lsn`, `op`, `repo` or `path` (≙ dispatcher validation the
+    * reference lacks), becomes a [[DlqOp]] row carrying the line as its
+    * `content`, instead of being logged-and-dropped like the reference
+    * (`kafka.go:93-97`). json/xml decode through native expressions
+    * (codegen'd); yaml — which has no SQL expression — transcodes to JSON
+    * lines per partition and rides the same path, so malformed yaml
+    * reaches the DLQ as the original line too.
+    */
+  def decodeLines(lines: DataFrame, codec: String): DataFrame = {
+    val raw = if (codec == "yaml") yamlToJsonLines(lines) else lines
+    val envelope = codec match {
+      case "xml" => graft.sources.Codecs.decode("xml", col("value"), ChangeEvent.schema)
+      case _ => from_json(col("value"), ChangeEvent.schema)
+    }
+    val valid = col("__p").isNotNull && col("__p.lsn").isNotNull &&
+      col("__p.op").isNotNull && col("__p.repo").isNotNull &&
+      col("__p.path").isNotNull
+    raw
+      .withColumn("__p", envelope)
+      .select(
+        col("__p.lsn").as("lsn"),
+        when(valid, col("__p.op")).otherwise(lit(DlqOp)).as("op"),
+        coalesce(col("__p.ts"), lit(new java.sql.Timestamp(0))).as("ts"),
+        col("__p.repo").as("repo"),
+        col("__p.path").as("path"),
+        coalesce(col("__p.commit"), lit("")).as("commit"),
+        coalesce(col("__p.lang"), lit("")).as("lang"),
+        when(valid, coalesce(col("__p.content"), lit("")))
+          .otherwise(col("value")).as("content"),
+        coalesce(col("__p.extra"), map()).as("extra"))
   }
 
   /** YAML→JSON transcode, one line per record: snakeyaml parse + jackson
@@ -350,7 +341,8 @@ object CdcJob {
     * downstream `from_json` rejects it into the DLQ carrying the
     * original bytes. Works on batch and streaming inputs alike.
     */
-  def yamlToJsonLines(spark: SparkSession, raw: DataFrame): DataFrame = {
+  private def yamlToJsonLines(raw: DataFrame): DataFrame = {
+    val spark = raw.sparkSession
     import spark.implicits._
     raw.select(col("value").cast("string")).as[String].mapPartitions { it =>
       val yaml = new org.yaml.snakeyaml.Yaml()

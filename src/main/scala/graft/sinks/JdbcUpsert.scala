@@ -14,18 +14,20 @@ import java.sql.{Connection, DriverManager, PreparedStatement}
   * (pgsql `ON CONFLICT (key) DO NOTHING`, `pgsql.go:22-33`) or
   * last-write-wins (mysql `REPLACE INTO`, `mysql.go:22-35`).
   *
-  * Spark-native shape: the single mutex-serialized writer of the
-  * reference (`pgsql.go:108,121,128`) becomes a distributed write —
-  * the batch is hash-repartitioned on the key columns so each key lands
-  * on exactly one task, then every partition opens its own connection and
-  * writes its disjoint key range in parallel (the same executor-side
-  * pattern as Spark's own JDBC writer). No cross-task conflict is
-  * possible, so UPDATE-then-INSERT needs no retry loop. Delivery is the
-  * reference's model exactly: at-least-once transport + key-idempotent
-  * writes = converged final state (plus an optional applied-batch ledger
-  * for exactly-once skip of whole replayed batches). The CDC apply adds
-  * per-key monotonicity in the database itself: lsn-guarded writes and a
-  * tombstone table ([[applyCdcBatch]]).
+  * Spark-native shape: the single mutex-serialized statement loop of the
+  * reference (`pgsql.go:108,121,128`) becomes one loop per partition —
+  * the batch is hash-partitioned on the key columns so each key lands on
+  * exactly one task (a batch import repartitions; the CDC apply reuses
+  * its winner window's exchange), then every partition opens its own
+  * connection and writes its disjoint key range in parallel (the same
+  * executor-side pattern as Spark's own JDBC writer). No cross-task
+  * conflict is possible, so UPDATE-then-INSERT needs no retry loop.
+  * Delivery is the reference's model exactly: at-least-once transport +
+  * key-idempotent writes = converged final state (plus an optional
+  * applied-batch ledger for exactly-once skip of whole replayed batches).
+  * The CDC apply adds per-key monotonicity in the database itself:
+  * lsn-guarded upserts and deletes in that same loop, and a tombstone
+  * table ([[applyCdcBatch]]).
   *
   * Type ladder (≙ the value-sniffing ladder `pgsql.go:170-229`, but
   * driven by the DataFrame schema — we have one, the reference doesn't):
@@ -49,72 +51,43 @@ object JdbcUpsert {
       url: String,
       table: String,
       keyColumns: Seq[String] = Seq("key"),
+      // a batch import's write mode; the CDC apply is always max-lsn-wins
       mode: String = Replace,
-      batchSize: Int = 500,
-      // string columns whose longest batch value exceeds this become CLOB
-      textThreshold: Int = 255) {
+      batchSize: Int = DefaultBatchSize) {
     require(Modes(mode), s"jdbc mode $mode not implemented (${Modes.mkString("|")})")
     require(keyColumns.nonEmpty, "jdbc sink requires at least one key column")
   }
+
+  /** Rows per partition transaction commit ≙ the reference's flush size
+    * (`specs.batchSize`).
+    */
+  val DefaultBatchSize = 100
+
+  /** String columns whose longest batch value exceeds this become CLOB
+    * (≙ the len>255 TEXT predicate, `pgsql.go:326-330`).
+    */
+  private val TextThreshold = 255
 
   /** Upsert `df` into the target table: normalize complex columns to JSON
     * text, create/evolve the table DDL, repartition on the key, write all
     * partitions in parallel. Returns the number of rows written.
     */
-  def write(df: DataFrame, cfg: Config): Long = writeRows(df, cfg, guarded = false)
-
-  /** [[write]]; `guarded` rows carry an `lsn` and only replace an older
-    * stored row of a key no newer tombstone covers (see [[applyCdcBatch]]).
-    */
-  private def writeRows(df: DataFrame, cfg: Config, guarded: Boolean): Long = {
-    require(cfg.keyColumns.forall(df.columns.contains),
-      s"key columns ${cfg.keyColumns.mkString(",")} missing from " +
-        s"batch columns ${df.columns.mkString(",")}")
+  def write(df: DataFrame, cfg: Config): Long = {
     val flat = normalize(df)
-    val longText = longStringCols(flat, cfg.textThreshold)
-    val schema = flat.schema
-
-    // driver-side DDL, once per batch ≙ the interleaved DDL of a
-    // reference flush (`pgsql.go:139-144`) hoisted out of the data loop
-    withConnection(cfg.url) { conn =>
-      ensureTable(conn, cfg, schema)
-      ensureColumns(conn, cfg, schema, longText)
-    }
-
-    val written = df.sparkSession.sparkContext.longAccumulator("jdbc_rows")
-    val cols = schema.fields.map(_.name).toSeq
-    val url = cfg.url; val table = cfg.table; val keyCols = cfg.keyColumns
-    val mode = cfg.mode; val commitEvery = cfg.batchSize
-    flat
-      .repartition(keyCols.map(col): _*)
-      .foreachPartition { (it: Iterator[Row]) =>
-        if (it.hasNext) {
-          val conn = DriverManager.getConnection(url)
-          try {
-            conn.setAutoCommit(false)
-            val w = new PartitionWriter(conn, table, cols, keyCols, mode, guarded)
-            var n = 0
-            it.foreach { row =>
-              w.upsert(row)
-              n += 1
-              if (n % commitEvery == 0) conn.commit()
-            }
-            conn.commit()
-            w.close()
-            written.add(n)
-          } finally conn.close()
-        }
-      }
-    written.value
+    prepareTable(flat, flat, cfg)
+    writePartitions(flat.repartition(cfg.keyColumns.map(col): _*), cfg, cdc = false)._1
   }
 
-  /** CDC apply ≙ the flagship merge, against a JDBC table: per-batch
-    * winner per key (same delete-wins-on-equal-lsn tie-break as
-    * LakeTable), then writes guarded by lsn, so each key moves only
-    * forward across batches, replays and redeliveries — the pipeline
-    * keeps no dedup state. The table stores each row's `lsn` (only `op`
-    * is dropped), and the tombstone table `graft_tombstones`, kept next
-    * to the ledger, holds the highest lsn a delete of each key carried:
+  /** CDC apply ≙ the flagship merge, against a JDBC table, in one pass:
+    * the per-batch winner per key (same delete-wins-on-equal-lsn
+    * tie-break as LakeTable) goes straight into one statement loop per
+    * partition — the window's exchange already puts each key in one
+    * partition — and every write is guarded by lsn, so each key moves
+    * only forward across batches, replays and redeliveries, and the
+    * pipeline keeps no dedup state. The table stores each row's `lsn`
+    * (only `op` is dropped), and the tombstone table `graft_tombstones`,
+    * kept next to the ledger, holds the highest lsn a delete of each key
+    * carried:
     *
     *  - an upsert is `UPDATE … WHERE <keys> AND "lsn" < ?`; when that
     *    updates nothing it is skipped if the key's tombstone is at or
@@ -124,67 +97,76 @@ object JdbcUpsert {
     *    wins an equal-lsn tie) and raises the key's tombstone, also when
     *    no row is there.
     *
-    * JdbcUpsertSpec pins both across micro-batches.
+    * The DDL runs once, before the write, on the winners' columns; the
+    * CLOB probe reads the whole batch (losers included), so a long string
+    * that only a losing duplicate carries makes its column CLOB too.
+    * Returns (upsert winners, rows deleted). JdbcUpsertSpec pins both
+    * across micro-batches, and the Spark actions of one CdcJob batch.
     */
   def applyCdcBatch(batch: DataFrame, cfg: Config): (Long, Long) = {
     import org.apache.spark.sql.expressions.Window
     val w = Window.partitionBy(cfg.keyColumns.map(col): _*)
       .orderBy(col(LsnCol).desc, (col("op") === "delete").desc, col("op").desc)
-    // checkpoint the winner set: upserts and deletes below are two
-    // separate actions, and without materialization each would re-execute
-    // the window (a key-shuffle + sort) over the batch
-    val winners = graft.util.Materialize.barrier(
-      batch.withColumn("__rn", row_number().over(w))
-        .filter(col("__rn") === 1).drop("__rn"))
-    val deletes = winners.filter(col("op") === "delete")
-      .select((cfg.keyColumns :+ LsnCol).map(col): _*)
-    val upserts = winners.filter(col("op") =!= "delete").drop("op")
+    val flat = normalize(batch)
+    val winners = flat.withColumn("__rn", row_number().over(w))
+      .filter(col("__rn") === 1).drop("__rn")
     withConnection(cfg.url)(ensureTombstones)
-    // winners are one-per-key, so upsert/delete key sets are disjoint and
-    // order within the batch is free; upserts go first because their DDL
-    // pass creates the table on the very first batch, even a delete-only one
-    val nUp = writeRows(upserts, cfg.copy(mode = Replace), guarded = true)
-    val nDel = delete(deletes, cfg)
-    (nUp, nDel)
+    prepareTable(winners.drop("op"), flat, cfg)
+    writePartitions(winners, cfg, cdc = true)
   }
 
-  /** Guarded delete by key (see [[applyCdcBatch]], whose upsert pass has
-    * created the table), distributed like `write`. A key absent from the
-    * table deletes 0 rows, matching MERGE WHEN MATCHED DELETE semantics,
-    * and still raises its tombstone.
+  /** Driver-side DDL, once per batch ≙ the interleaved DDL of a reference
+    * flush (`pgsql.go:139-144`) hoisted out of the data loop: create the
+    * table and ADD/widen the columns of `rows`, with CLOB for the string
+    * columns whose values in `probed` run long.
     */
-  private def delete(keys: DataFrame, cfg: Config): Long = {
-    val deleted = keys.sparkSession.sparkContext.longAccumulator("jdbc_deletes")
+  private def prepareTable(rows: DataFrame, probed: DataFrame, cfg: Config): Unit = {
+    require(cfg.keyColumns.forall(rows.columns.contains),
+      s"key columns ${cfg.keyColumns.mkString(",")} missing from " +
+        s"batch columns ${rows.columns.mkString(",")}")
+    val longText = longStringCols(probed)
+    withConnection(cfg.url) { conn =>
+      ensureTable(conn, cfg, rows.schema)
+      ensureColumns(conn, cfg, rows.schema, longText)
+    }
+  }
+
+  /** The one statement loop: each partition opens its own connection and
+    * writes its disjoint key range in one transaction, committed every
+    * `batchSize` rows. `cdc` rows carry `lsn` and `op` and are applied by
+    * their `op` (see [[applyCdcBatch]]). Returns (rows upserted, rows
+    * deleted).
+    */
+  private def writePartitions(rows: DataFrame, cfg: Config, cdc: Boolean): (Long, Long) = {
+    val sc = rows.sparkSession.sparkContext
+    val upserted = sc.longAccumulator("jdbc_rows")
+    val deleted = sc.longAccumulator("jdbc_deletes")
+    val cols = rows.columns.toSeq.filterNot(c => cdc && c == "op")
     val url = cfg.url; val table = cfg.table; val keyCols = cfg.keyColumns
-    val commitEvery = cfg.batchSize
-    keys.repartition(keyCols.map(col): _*)
-      .foreachPartition { (it: Iterator[Row]) =>
-        if (it.hasNext) {
-          val conn = DriverManager.getConnection(url)
-          try {
-            conn.setAutoCommit(false)
-            val st = conn.prepareStatement(
-              s"DELETE FROM ${q(table)} WHERE ${keyMatch(keyCols)} AND ${q(LsnCol)} <= ?")
-            val tombstones = new Tombstones(conn, table, keyCols)
-            var n = 0
-            var issued = 0
-            it.foreach { row =>
-              // typed bind like PartitionWriter — a string bind against
-              // e.g. a BIGINT key would lean on driver-specific coercion
-              bind(st, keyCols :+ LsnCol, row)
-              n += st.executeUpdate()
-              tombstones.raise(row)
-              issued += 1
-              // cadence counts statements, not matched rows: a run of
-              // absent keys must not commit per miss (0 % k == 0)
-              if (issued % commitEvery == 0) conn.commit()
-            }
-            conn.commit(); st.close(); tombstones.close()
-            deleted.add(n)
-          } finally conn.close()
-        }
+    val mode = cfg.mode; val commitEvery = cfg.batchSize
+    rows.foreachPartition { (it: Iterator[Row]) =>
+      if (it.hasNext) {
+        val conn = DriverManager.getConnection(url)
+        try {
+          conn.setAutoCommit(false)
+          val w = new PartitionWriter(conn, table, cols, keyCols, mode, cdc)
+          var n = 0
+          it.foreach { row =>
+            if (cdc && row.getAs[String]("op") == "delete") deleted.add(w.guardedDelete(row))
+            else { w.upsert(row); upserted.add(1) }
+            n += 1
+            if (n % commitEvery == 0) conn.commit()
+          }
+          conn.commit()
+          w.close()
+        } catch {
+          // roll back before close: a driver refuses to close a
+          // connection whose transaction is open, which would hide `e`
+          case e: Throwable => scala.util.Try(conn.rollback()); throw e
+        } finally conn.close()
       }
-    deleted.value
+    }
+    (upserted.value, deleted.value)
   }
 
   /** Exactly-once batch ledger in the target DB itself (analog of the
@@ -232,12 +214,11 @@ object JdbcUpsert {
       }
     }
 
-  /** String columns whose longest value in this batch exceeds the
-    * threshold — they get CLOB DDL (≙ the len>255 TEXT predicate,
-    * `pgsql.go:326-330`, decided per batch like the reference decides per
-    * value). One cheap aggregate job over the batch.
+  /** String columns whose longest value in this batch exceeds
+    * [[TextThreshold]] — they get CLOB DDL (decided per batch like the
+    * reference decides per value). One cheap aggregate job over the batch.
     */
-  private[sinks] def longStringCols(df: DataFrame, threshold: Int): Set[String] = {
+  private[sinks] def longStringCols(df: DataFrame): Set[String] = {
     val strCols = df.schema.fields.collect {
       case f if f.dataType == StringType => f.name
     }
@@ -246,7 +227,7 @@ object JdbcUpsert {
       val row = df.select(strCols.map(c =>
         coalesce(max(length(col(c))), lit(0)).as(c)).toIndexedSeq: _*).head()
       strCols.zipWithIndex.collect {
-        case (c, i) if row.getInt(i) > threshold => c
+        case (c, i) if row.getInt(i) > TextThreshold => c
       }.toSet
     }
   }
@@ -440,26 +421,38 @@ object JdbcUpsert {
       if (raising.executeUpdate() == 0) {
         inserting.setString(1, table); inserting.setString(2, h)
         inserting.setLong(3, lsn)
-        try inserting.executeUpdate()
-        catch { case e: java.sql.SQLException if isDuplicateKey(e) => () }
+        ignoringDuplicateKey(conn)(inserting.executeUpdate())
       }
     }
 
     def close(): Unit = { covering.close(); raising.close(); inserting.close() }
   }
 
+  /** Run `write` inside a savepoint of `conn`'s open transaction and
+    * swallow its duplicate-key error by rolling back to the savepoint.
+    * PostgreSQL aborts the whole transaction on a failed statement (every
+    * later statement fails until a rollback); Derby rolls back only the
+    * statement. The savepoint keeps the transaction usable on both.
+    */
+  private def ignoringDuplicateKey(conn: Connection)(write: => Unit): Unit = {
+    val sp = conn.setSavepoint()
+    try { write; conn.releaseSavepoint(sp) }
+    catch { case e: java.sql.SQLException if isDuplicateKey(e) => conn.rollback(sp) }
+  }
+
   /** Per-partition writer: UPDATE-then-INSERT for last-write-wins,
     * INSERT-swallow-duplicate for insert-if-absent. Keys are disjoint
-    * across partitions (hash repartition on key), so no retry loop.
-    * `guarded` (CDC apply, Replace only): the UPDATE also requires an
-    * older stored `lsn`, and an INSERT happens only when no tombstone
-    * covers the key.
+    * across partitions (hash partitioning on the key), so no retry loop.
+    * `cdc` (the CDC apply, always last-write-wins): the UPDATE also
+    * requires an older stored `lsn`, an INSERT happens only when no
+    * tombstone covers the key, and [[guardedDelete]] applies a delete
+    * winner.
     */
   private final class PartitionWriter(conn: Connection, table: String,
-      cols: Seq[String], keyCols: Seq[String], mode: String, guarded: Boolean) {
+      cols: Seq[String], keyCols: Seq[String], mode: String, cdc: Boolean) {
 
     private val dataCols = cols.filterNot(keyCols.contains)
-    private val guardCols = if (guarded) Seq(LsnCol) else Nil
+    private val guardCols = if (cdc) Seq(LsnCol) else Nil
     private val insertSql = s"INSERT INTO ${q(table)} (" +
       cols.map(q).mkString(", ") + ") VALUES (" +
       cols.map(_ => "?").mkString(", ") + ")"
@@ -472,27 +465,42 @@ object JdbcUpsert {
     private val update =
       if (updateSql.isEmpty) null else conn.prepareStatement(updateSql)
     private val tombstones =
-      if (guarded) new Tombstones(conn, table, keyCols) else null
+      if (cdc) new Tombstones(conn, table, keyCols) else null
+    private val deleting =
+      if (cdc) conn.prepareStatement(
+        s"DELETE FROM ${q(table)} WHERE ${keyMatch(keyCols)} AND ${q(LsnCol)} <= ?")
+      else null
 
-    def upsert(row: Row): Unit = mode match {
-      case Replace if update == null =>
+    def upsert(row: Row): Unit =
+      if (update == null) {
         // key-only table: a present key IS the converged state, so
         // replace degenerates to insert-if-absent
         insertIfAbsent(row)
-      case Replace =>
+      } else if (cdc || mode == Replace) {
         bind(update, dataCols ++ keyCols ++ guardCols, row)
         if (update.executeUpdate() == 0) {
-          if (!guarded) doInsert(row)
+          if (!cdc) doInsert(row)
           // nothing updated: the key is absent, or stored with a newer
           // lsn (then the INSERT's duplicate key is swallowed)
           else if (!tombstones.covers(row)) insertIfAbsent(row)
         }
-      case _ => insertIfAbsent(row) // first write wins ≙ ON CONFLICT DO NOTHING
+      } else insertIfAbsent(row) // first write wins ≙ ON CONFLICT DO NOTHING
+
+    /** Guarded delete by key; returns the rows deleted. A key absent from
+      * the table (or stored newer) deletes 0 rows, matching MERGE WHEN
+      * MATCHED DELETE semantics, and still raises its tombstone.
+      */
+    def guardedDelete(row: Row): Int = {
+      // typed bind — a string bind against e.g. a BIGINT key would lean
+      // on driver-specific coercion
+      bind(deleting, keyCols :+ LsnCol, row)
+      val n = deleting.executeUpdate()
+      tombstones.raise(row)
+      n
     }
 
     private def insertIfAbsent(row: Row): Unit =
-      try doInsert(row)
-      catch { case e: java.sql.SQLException if isDuplicateKey(e) => () }
+      ignoringDuplicateKey(conn)(doInsert(row))
 
     private def doInsert(row: Row): Unit = {
       bind(insert, cols, row)
@@ -502,7 +510,7 @@ object JdbcUpsert {
     def close(): Unit = {
       insert.close()
       if (update != null) update.close()
-      if (tombstones != null) tombstones.close()
+      if (cdc) { tombstones.close(); deleting.close() }
     }
   }
 }

@@ -51,7 +51,7 @@ final case class TargetSpec(
     keyColumns: Seq[String] = Seq("repo", "path"),
     numBuckets: Int = 32,
     codec: String = "json",
-    batchSize: Int = 100,
+    batchSize: Int = graft.sinks.JdbcUpsert.DefaultBatchSize,
     prefix: String = "",
     lineBreak: String = "\n",
     // rollup target only: watermarked tumbling-window aggregation
@@ -179,7 +179,7 @@ object PipelineSpec {
       keyColumns = strSeq(sp, "keyColumns", Seq("repo", "path")),
       numBuckets = int(sp, "numBuckets").getOrElse(32),
       codec = str(sp, "codec").getOrElse("json"),
-      batchSize = int(sp, "batchSize").getOrElse(100),
+      batchSize = int(sp, "batchSize").getOrElse(graft.sinks.JdbcUpsert.DefaultBatchSize),
       prefix = str(sp, "prefix").getOrElse(""),
       lineBreak = str(sp, "lineBreak").getOrElse("\n"),
       window = str(sp, "window").getOrElse("1 hour"),

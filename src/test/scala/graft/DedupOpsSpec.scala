@@ -175,7 +175,12 @@ class DedupOpsSpec extends SparkSpec {
     (0 until 64).map(i =>
       (i.toLong, Array.tabulate(8)(d => ((i * 7 + d * 3) % 13 - 6).toFloat)))
       .toDF("vec_id", "embedding").write.mode("overwrite").parquet(dir)
-    val vecs = spark.read.parquet(dir)
+    // AQE materializes query stages as separate jobs — an isolated
+    // session with it off makes one action = one job, so the count
+    // measures DATA PASSES; it shares the SparkContext the listener watches
+    val iso = spark.newSession()
+    iso.conf.set("spark.sql.adaptive.enabled", "false")
+    val vecs = iso.read.parquet(dir)
     vecs.count() // file listing/footer work settles outside the counted window
     val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
     val listener = new org.apache.spark.scheduler.SparkListener {
@@ -195,11 +200,7 @@ class DedupOpsSpec extends SparkSpec {
     }
     try {
       settle(); jobs.set(0)
-      // AQE materializes query stages as separate jobs — disable so one
-      // action = one job and the count measures DATA PASSES
-      spark.conf.set("spark.sql.adaptive.enabled", "false")
-      try Similarity.ivfCentroidsKmeans(vecs, "vec_id", "embedding", 8, iters = 2)
-      finally spark.conf.set("spark.sql.adaptive.enabled", "true")
+      Similarity.ivfCentroidsKmeans(vecs, "vec_id", "embedding", 8, iters = 2)
       val n = settle()
       // 1 seed collect + 1 sum-aggregation per round; the returned
       // centroid frame itself is lazy

@@ -263,4 +263,77 @@ class JdbcUpsertSpec extends SparkSpec {
     assert(run("tomb-replay").forall(!_.skippedAsApplied))
     assert(queryAll(url, sql) === Seq(Seq("B", "b7", 7L)))
   }
+
+  test("a swallowed duplicate key leaves the partition's transaction usable, " +
+      "as PostgreSQL needs") {
+    AbortingJdbcDriver.register()
+    // one shuffle partition: each batch is one task, one transaction
+    val one = spark.newSession()
+    one.conf.set("spark.sql.shuffle.partitions", "1")
+    import one.implicits._
+    val url = AbortingJdbcDriver.Prefix + "memory:swallow;create=true"
+    val firstWins = JdbcUpsert.Config(url, "t_swallow", keyColumns = Seq("k"),
+      mode = JdbcUpsert.InsertIfAbsent)
+    JdbcUpsert.write(Seq(("a", "first")).toDF("k", "v"), firstWins)
+    JdbcUpsert.write(Seq(("a", "second"), ("b", "first"), ("c", "first"))
+      .toDF("k", "v"), firstWins)
+    assert(queryAll("jdbc:derby:memory:swallow",
+      "SELECT \"k\", \"v\" FROM \"t_swallow\" ORDER BY \"k\"") ===
+      Seq(Seq("a", "first"), Seq("b", "first"), Seq("c", "first")))
+    // the CDC apply swallows a stale insert's duplicate key the same way
+    val cdc = JdbcUpsert.Config(url, "t_swallow_cdc", keyColumns = Seq("repo", "path"))
+    def apply(rows: (Long, String, String, String, String)*) =
+      JdbcUpsert.applyCdcBatch(rows.toDF("lsn", "op", "repo", "path", "content"), cdc)
+    apply((5L, "insert", "r", "a", "a5"))
+    apply((3L, "insert", "r", "a", "a3"), (4L, "insert", "r", "b", "b4"),
+      (6L, "insert", "r", "c", "c6"))
+    assert(queryAll("jdbc:derby:memory:swallow",
+      "SELECT \"path\", \"content\" FROM \"t_swallow_cdc\" ORDER BY \"path\"") ===
+      Seq(Seq("a", "a5"), Seq("b", "b4"), Seq("c", "c6")))
+  }
+
+  test("a parquet -> JDBC micro-batch through CdcJob runs at most 3 Spark actions") {
+    import spark.implicits._
+    val root = tmpDir("jdbc-actions")
+    val url = freshUrl("actions")
+    // one segment: A's insert (drift key stars) loses to its update,
+    // B's insert (drift key forks) loses to its delete of an absent row
+    Seq(
+      ChangeEvent(1, "insert", ts(1), "r", "A", "c1", "scala", "a1", Map("stars" -> "1")),
+      ChangeEvent(2, "update", ts(2), "r", "A", "c2", "scala", "a2", Map.empty),
+      ChangeEvent(3, "insert", ts(3), "r", "B", "c3", "go", "b3", Map("forks" -> "2")),
+      ChangeEvent(4, "delete", ts(4), "r", "B", "c4", "go", "", Map.empty))
+      .toDS().coalesce(1).write.parquet(s"$root/log/seg=0")
+    // an isolated session with AQE off: AQE runs each query stage as its
+    // own job, so one action = one job only without it. The session
+    // shares the SparkContext, so the listener sees its jobs.
+    val iso = spark.newSession()
+    iso.conf.set("spark.sql.adaptive.enabled", "false")
+    val job = graft.job.CdcJob(iso, graft.job.CdcJobConfig(
+      logDir = s"$root/log", tablePath = "", checkpointDir = s"$root/ckpt",
+      checkpointId = "jdbc-actions",
+      jdbcSink = Some(JdbcUpsert.Config(url, "repos", keyColumns = Seq("repo", "path")))))
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        jobs.incrementAndGet(); ()
+      }
+    }
+    org.apache.spark.ListenerBusBridge.drain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(listener)
+    val stats =
+      try {
+        val s = job.runToCompletion()
+        org.apache.spark.ListenerBusBridge.drain(spark.sparkContext)
+        s
+      } finally spark.sparkContext.removeSparkListener(listener)
+    assert(stats.map(s => (s.inputRows, s.upserted, s.deleted, s.newColumns)) ===
+      Seq((4L, 1L, 0L, Seq("forks", "stars"))))
+    val n = jobs.get
+    assert(n <= 3, s"one parquet -> JDBC micro-batch must run at most 3 Spark " +
+      s"actions (stats, length probe, write), saw $n")
+    assert(queryAll(url, "SELECT \"path\", \"content\", \"stars\" FROM \"repos\"") ===
+      Seq(Seq("A", "a2", null)))
+  }
 }

@@ -415,9 +415,15 @@ class LakeTableMorSpec extends SparkSpec {
   }
 
   test("a non-compacting merge commit runs exactly ONE Spark job") {
-    import spark.implicits._
+    // AQE materializes each query stage as its own job, which makes the
+    // job count a stage count; an isolated session with it off makes one
+    // action = one job, so the assertion measures ACTIONS (data passes
+    // over the batch). It shares the SparkContext the listener watches.
+    val iso = spark.newSession()
+    iso.conf.set("spark.sql.adaptive.enabled", "false")
+    import iso.implicits._
     val dir = tmpDir("mor-onejob")
-    val lake = LakeTable(spark, dir, Seq("repo", "path"), 2, maxFilesPerBucket = 8)
+    val lake = LakeTable(iso, dir, Seq("repo", "path"), 2, maxFilesPerBucket = 8)
     lake.createIfAbsent(StructType.fromDDL(baseDdl))
     lake.merge(Seq(ev(1, "insert", 1)).toDS().toDF(), "t", 0L)
     // warm batch done; now count jobs during a steady-state merge. The
@@ -440,13 +446,7 @@ class LakeTableMorSpec extends SparkSpec {
           .toDS().toDF().localCheckpoint()
         org.apache.spark.ListenerBusBridge.drain(spark.sparkContext)
         jobs.set(0)
-        // AQE materializes each query stage as its own job, which makes
-        // the job count a stage count; disable it here so one action = one
-        // job and the assertion measures ACTIONS (data passes over the
-        // batch)
-        spark.conf.set("spark.sql.adaptive.enabled", "false")
-        try lake.merge(batch, "t", batchId)
-        finally spark.conf.set("spark.sql.adaptive.enabled", "true")
+        lake.merge(batch, "t", batchId)
         org.apache.spark.ListenerBusBridge.drain(spark.sparkContext)
         val n = jobs.get
         assert(n === 1,

@@ -179,10 +179,36 @@ class SpecAndConnectorsSpec extends SparkSpec {
     val bad = """{"this is": "not an envelope"}"""
     val notJson = """{{{"""
     val raw = Seq(good, bad, notJson).toDF("value")
-    val (ok, dlq) = graft.envelope.ChangeEvent.parseJson(spark, raw)
+    // the changelog stream's decoder: DLQ-bound lines carry the DlqOp marker
+    val decoded = graft.job.CdcJob.decodeLines(raw, "json")
+    val ok = decoded.filter(col("op") =!= graft.job.CdcJob.DlqOp)
+      .as[graft.envelope.ChangeEvent]
+    val dlq = decoded.filter(col("op") === graft.job.CdcJob.DlqOp)
     assert(ok.count() === 1L)
     assert(ok.head().repo === "r")
     assert(dlq.count() === 2L)
+  }
+
+  test("a jdbc target's sink config is built once: the spec's batchSize " +
+      "reaches it, and a CDC target refuses insertIfAbsent") {
+    def spec(source: String, mode: String) = PipelineSpec.fromYaml(
+      s"""stream:
+         |  name: x
+         |  instance:
+         |    source: $source
+         |    target:
+         |      type: jdbc
+         |      specs: { url: "jdbc:derby:memory:x", table: t, mode: $mode, batchSize: 7 }
+         |""".stripMargin).instance.target
+    val changelog = "{ type: changelog, specs: { path: /log } }"
+    val cdc = Main.jdbcConfig(spec(changelog, "replace"), cdc = true)
+    assert((cdc.batchSize, cdc.mode) === ((7, "replace")))
+    val imported = Main.jdbcConfig(
+      spec("{ type: jsonl, specs: { path: /in } }", "insertIfAbsent"), cdc = false)
+    assert((imported.batchSize, imported.mode) === ((7, "insertIfAbsent")))
+    val e = intercept[IllegalArgumentException](
+      Main.jdbcConfig(spec(changelog, "insertIfAbsent"), cdc = true))
+    assert(e.getMessage.contains("max-lsn-wins"))
   }
 
   test("flag-driven config-template generates a spec that fromYaml round-trips " +
