@@ -266,8 +266,7 @@ object Main {
     val specPath = flag(args, "-f").getOrElse {
       System.err.println("start: -f pipeline.yaml required"); sys.exit(2); ""
     }
-    val spec = PipelineSpec.fromYaml(
-      java.nio.file.Files.readString(java.nio.file.Paths.get(specPath)))
+    val spec = PipelineSpec.fromYamlFile(specPath)
     val spark = session(s"graft-${spec.name}")
     spec.instance.source.tpe match {
       case "changelog" if spec.instance.target.tpe == "rollup" =>

@@ -183,7 +183,7 @@ class CdcJob(spark: SparkSession, cfg: CdcJobConfig) {
   private def applyJdbc(batch: DataFrame, j: graft.sinks.JdbcUpsert.Config,
       batchId: Long): MergeStats = {
     if (graft.sinks.JdbcUpsert.isApplied(j.url, cfg.checkpointId, batchId))
-      return MergeStats(-1L, batchId, skippedAsApplied = true, 0L, 0L, 0L, 0, Nil)
+      return MergeStats(-1L, batchId, skippedAsApplied = true, 0L, 0L, 0L, Nil)
     // the drift-key expression of LakeTable.merge's observe()
     val agg = batch.agg(count(lit(1)),
       array_distinct(flatten(collect_set(map_keys(col("extra")))))).head()
@@ -199,7 +199,7 @@ class CdcJob(spark: SparkSession, cfg: CdcJobConfig) {
     }.drop("extra")
     val (up, del) = graft.sinks.JdbcUpsert.applyCdcBatch(lifted, j)
     graft.sinks.JdbcUpsert.recordApplied(j.url, cfg.checkpointId, batchId)
-    MergeStats(-1L, batchId, skippedAsApplied = false, n, up, del, 0, driftKeys)
+    MergeStats(-1L, batchId, skippedAsApplied = false, n, up, del, driftKeys)
   }
 
   /** Run to end-of-log (AvailableNow) and block until done. */
@@ -313,7 +313,7 @@ object CdcJob {
   def decodeLines(lines: DataFrame, codec: String): DataFrame = {
     val raw = if (codec == "yaml") yamlToJsonLines(lines) else lines
     val envelope = codec match {
-      case "xml" => graft.sources.Codecs.decode("xml", col("value"), ChangeEvent.schema)
+      case "xml" => from_xml(col("value"), ChangeEvent.schema)
       case _ => from_json(col("value"), ChangeEvent.schema)
     }
     val valid = col("__p").isNotNull && col("__p.lsn").isNotNull &&

@@ -39,8 +39,6 @@ final case class Snapshot(
     // Streaming batchIds are monotone per checkpoint, so one Long per
     // checkpoint suffices at any scale (no unbounded applied-set).
     appliedUpTo: Map[String, Long],
-    // per-partition lineage: bucket -> max applied LSN watermark
-    lineage: Map[String, Long],
     parentVersion: Long,
     // the creation-time user columns; columns in schemaDdl beyond these
     // (and the meta columns) are DRIFT columns whose values ride in the
@@ -76,24 +74,23 @@ final case class MergeStats(
     version: Long,
     batchId: Long,
     skippedAsApplied: Boolean,
+    // events in the batch, before the per-key winner reduction
     inputRows: Long,
     upserted: Long,
     deleted: Long,
-    touchedBuckets: Int,
     newColumns: Seq[String])
 
 /** `LakeTable` — an Iceberg-*semantics* merge-on-read table format over
   * plain Parquet (no Iceberg jar ships in this sandbox; SURVEY.md §7):
   *
   *  - versioned JSON snapshots (`_snapshots/snapshot-N.json`) carrying the
-  *    evolving schema, the exactly-once batch ledger, per-bucket
-  *    applied-LSN lineage, and a MANIFEST CHAIN (`_manifests/m-V-*.json`)
-  *    instead of an inline file list — Iceberg's snapshot→manifest split:
-  *    each commit writes one manifest describing only the files it added/
-  *    removed (with sizes, so planning never stats data files), and the
-  *    chain is consolidated into a base manifest every `ManifestChainMax`
-  *    commits. Commit metadata cost is O(files touched), not
-  *    O(table files);
+  *    evolving schema, the exactly-once batch ledger, and a MANIFEST
+  *    CHAIN (`_manifests/m-V-*.json`) instead of an inline file list —
+  *    Iceberg's snapshot→manifest split: each commit writes one manifest
+  *    describing only the files it added/removed (with sizes, so
+  *    planning never stats data files), and the chain is consolidated
+  *    into a base manifest every `ManifestChainMax` commits. Commit
+  *    metadata cost is O(files touched), not O(table files);
   *  - atomic commit via write-temp-then-rename of a `_current` pointer;
   *  - **bucketed merge-on-read**: rows are hash-partitioned into
   *    `numBuckets` buckets on the key columns; a merge APPENDS its batch
@@ -112,15 +109,13 @@ final case class MergeStats(
   *    would be thousands);
   *  - **the merge commit is ONE Spark job**: the delta write carries an
   *    `observe()` side-channel for EVERY driver-side fact the commit
-  *    needs — row/upsert counts, drift keys, and the per-bucket lineage
-  *    watermarks (the executor-side [[graft.functions.BucketMaxLsn]]
-  *    aggregate; exact `__lsn` max per bucket, no extra job, and no
-  *    driver-side parquet footer reads, which at thousands of buckets
-  *    cost ~15-20 ms of metadata IO each). The previous shapes (eager
-  *    `localCheckpoint` + a stats job + the write = three jobs per
-  *    micro-batch; then one job + footer reads) put serial driver floors
-  *    under every batch — the first capped replay scaling efficiency at
-  *    ~0.59 (BENCH.md);
+  *    needs — the batch's event count, winner/upsert counts and drift
+  *    keys — so no extra job and no driver-side parquet footer reads
+  *    (at thousands of buckets ~15-20 ms of metadata IO each). The
+  *    previous shapes (eager `localCheckpoint` + a stats job + the
+  *    write = three jobs per micro-batch; then one job + footer reads)
+  *    put serial driver floors under every batch — the first capped
+  *    replay scaling efficiency at ~0.59 (BENCH.md);
   *  - schema evolution ≙ draethos auto-ALTER (`internal/target/pgsql.go:
   *    162-238`): new drift fields become appended nullable string columns
   *    in the snapshot schema; their VALUES stay in the delta files' stored
@@ -272,7 +267,7 @@ class LakeTable(
       schemaDdl = StructType(baseSchema.fields ++ metaFields).toDDL,
       numBuckets = requestedNumBuckets,
       keyCols = requestedKeyCols, manifests = Nil, appliedUpTo = Map.empty,
-      lineage = Map.empty, parentVersion = -1L,
+      parentVersion = -1L,
       baseCols = baseSchema.fieldNames.toSeq)
     commitSnapshot(s)
     s
@@ -548,8 +543,8 @@ class LakeTable(
     }
 
   /** Raw rows of every referenced file, unresolved (deltas + tombstones
-    * as stored, including the `extra` drift carrier) — lineage checks,
-    * compaction internals, tests.
+    * as stored, including the `extra` drift carrier) — compaction
+    * internals, tests.
     */
   def readRaw(): DataFrame = currentSnapshot match {
     case None => spark.emptyDataFrame
@@ -619,7 +614,7 @@ class LakeTable(
     * readers rely on: `resolveFiles` scans a single-file bucket without
     * the window, and `lookup` takes at most one candidate per file. The hot
     * path costs ONE Spark job (the delta write — see the class doc's "one
-    * Spark job" bullet for how stats/lineage/drift discovery piggyback on
+    * Spark job" bullet for how stats and drift discovery piggyback on
     * it).
     *
     * @param batch   envelope rows: keyCols ++ value cols ++ lsn, op, extra
@@ -632,7 +627,7 @@ class LakeTable(
     if (cur.appliedUpTo.get(checkpointId).exists(batchId <= _)) {
       // replayed batch after crash/restart — exactly-once no-op
       return MergeStats(cur.version, batchId, skippedAsApplied = true,
-        0L, 0L, 0L, 0, Nil)
+        0L, 0L, 0L, Nil)
     }
     val oldSchema = StructType.fromDDL(cur.schemaDdl)
     val baseCols: Seq[String] =
@@ -674,9 +669,8 @@ class LakeTable(
     val w = Window
       .partitionBy((partCols ++ cur.keyCols.map(col)): _*)
       .orderBy(col(lsnCol).desc, (col(opCol) === "delete").desc, col(opCol).desc)
-    val winners = bucketed
-      .withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") === 1).drop("__rn")
+    val ranked = bucketed.withColumn("__rn", row_number().over(w))
+    val win = col("__rn") === 1
 
     // 2. delta row shape: user columns the batch carries (missing base
     //    columns → typed nulls; drift columns it doesn't carry stay in
@@ -686,7 +680,7 @@ class LakeTable(
       !baseCols.contains(ExtraMeta)
     val userCols = oldSchema.fieldNames.toSeq
       .filterNot(c => c == LsnMeta || c == DeletedMeta)
-    val withMeta = winners
+    val withMeta = ranked
       .withColumn(LsnMeta, col(lsnCol))
       .withColumn(DeletedMeta, col(opCol) === "delete")
     val outCols: Seq[Column] =
@@ -698,10 +692,12 @@ class LakeTable(
         (if (hasExtra) Seq(col(ExtraMeta)) else Nil) ++
         Seq(col(LsnMeta), col(DeletedMeta), col("__bucket"))
 
-    // 3. observe() rides the write: row/upsert counts and the distinct
-    //    drift keys (auto-ALTER ≙ pgsql.go:162-238; bounded by schema
-    //    width — tiny) are accumulated DURING the single write job, so the
-    //    commit needs no separate stats job and no localCheckpoint pass.
+    // 3. observe() rides the write: the batch's event count, the
+    //    winner/upsert counts and the winners' distinct drift keys
+    //    (auto-ALTER ≙ pgsql.go:162-238; bounded by schema width — tiny)
+    //    are accumulated DURING the single write job, so the commit needs
+    //    no separate stats job and no localCheckpoint pass. It sits
+    //    between the window and the winner filter, so `n` counts events.
     // stable metric name (fresh instance per call): Observation() invents
     // a UUID name, which lands in the CollectMetrics plan node and makes
     // every micro-batch's write plan textually unique — defeating plan/
@@ -709,18 +705,15 @@ class LakeTable(
     val obs = Observation("graft_merge")
     val obsExprs: Seq[Column] = Seq(
       count(lit(1)).as("n"),
-      sum(when(!col(DeletedMeta), 1L).otherwise(0L)).as("ups"),
-      // per-bucket lineage watermarks computed BY THE EXECUTORS while
-      // they write the delta (a ≤numBuckets-entry map) — no second job,
-      // no driver-side parquet footer reads at commit time
-      graft.functions.BucketMaxLsn
-        .bucketMaxLsn(col("__bucket"), col(LsnMeta), cur.numBuckets).as("lin")) ++
+      sum(when(win, 1L).otherwise(0L)).as("wins"),
+      sum(when(win && !col(DeletedMeta), 1L).otherwise(0L)).as("ups")) ++
       (if (hasExtra)
-        Seq(array_distinct(flatten(collect_set(map_keys(col(ExtraMeta)))))
-          .as("ks"))
+        Seq(array_distinct(flatten(collect_set(
+          when(win, map_keys(col(ExtraMeta)))))).as("ks"))
       else Nil)
     val projected = withMeta
       .observe(obs, obsExprs.head, obsExprs.tail: _*)
+      .filter(win)
       .select(outCols: _*)
 
     // 4. append the delta, one file per touched bucket. Write parallelism
@@ -754,14 +747,14 @@ class LakeTable(
     val deltaFiles = enumerateBucketEntries(deltaRel)
 
     // 5. driver-side commit facts, ALL from the observed metrics of the
-    //    one write job: counts, drift keys, and the per-bucket lineage
-    //    watermarks (computed executor-side by the bucket_max_lsn
-    //    aggregate — zero driver footer reads, zero extra jobs).
+    //    one write job: counts and drift keys (zero driver footer reads,
+    //    zero extra jobs).
     val m = obs.get
-    val nRows = m.get("n").map(_.asInstanceOf[Long]).getOrElse(0L)
-    val nUpserts = Option(m.getOrElse("ups", null))
-      .map(_.asInstanceOf[Long]).getOrElse(0L)
-    val nDeletes = nRows - nUpserts
+    def observedLong(k: String): Long =
+      Option(m.getOrElse(k, null)).map(_.asInstanceOf[Long]).getOrElse(0L)
+    val nRows = observedLong("n")
+    val nUpserts = observedLong("ups")
+    val nDeletes = observedLong("wins") - nUpserts
     val driftKeys: Seq[String] =
       if (!hasExtra) Nil
       else Option(m.getOrElse("ks", null))
@@ -775,16 +768,9 @@ class LakeTable(
     // delta dir is reused by the next real merge's SaveMode.Overwrite.
     if (nRows == 0 && newCols.isEmpty)
       return MergeStats(cur.version, batchId, skippedAsApplied = false,
-        0L, 0L, 0L, 0, Nil)
+        0L, 0L, 0L, Nil)
     val newSchema = StructType(oldSchema.fields ++
       newCols.map(c => StructField(c, StringType, nullable = true)))
-    val batchLineage: Map[String, Long] =
-      Option(m.getOrElse("lin", null))
-        .map(_.asInstanceOf[scala.collection.Map[Any, Any]].map {
-          case (b, mx) => b.toString -> mx.asInstanceOf[Long]
-        }.toMap)
-        .getOrElse(Map.empty)
-    val touched = deltaFiles.keySet
 
     // 6. budgeted MINOR compaction (LSM-style): a bucket whose file count
     //    exceeds the budget merges only its SMALL-FILE TAIL — the largest
@@ -868,13 +854,11 @@ class LakeTable(
       schemaDdl = newSchema.toDDL,
       manifests = manifestChain,
       appliedUpTo = cur.appliedUpTo + (checkpointId -> batchId),
-      lineage = cur.lineage ++ batchLineage.map { case (b, mx) =>
-        b -> math.max(mx, cur.lineage.getOrElse(b, Long.MinValue)) },
       parentVersion = cur.version,
       baseCols = baseCols)
     commitSnapshot(next)
     MergeStats(newVersion, batchId, skippedAsApplied = false,
-      nRows, nUpserts, nDeletes, touched.size, newCols)
+      nRows, nUpserts, nDeletes, newCols)
   }
 
   /** Children of a directory with the stream CLOSED — `Files.list` leaks

@@ -32,26 +32,6 @@ object Sources {
     renamed.withColumn("__key", md5RowKey(renamed, renamed.columns.toSeq))
   }
 
-  /** JSONL source ≙ `internal/source/jsonl.go:40-130`: one JSON object per
-    * line, key = md5(raw line) (`jsonl.go:110`). We read `text` first so
-    * the key is over the exact raw bytes, then parse.
-    */
-  def jsonl(spark: SparkSession, path: String,
-      schema: org.apache.spark.sql.types.StructType): DataFrame = {
-    spark.read.text(path)
-      .withColumn("__key", md5(col("value")))
-      .withColumn("__rec", from_json(col("value"), schema))
-      .select(col("__key"), col("__rec.*"))
-  }
-
-  /** Schema-inferred variant (two passes, like the reference's schemaless
-    * map — acceptable for batch imports; the streaming path uses explicit
-    * envelope schemas).
-    */
-  def jsonlInferred(spark: SparkSession, path: String): DataFrame = {
-    jsonl(spark, path, inferJsonlSchema(spark, path))
-  }
-
   /** Inferred line schema minus Spark's synthetic corrupt-record column
     * (malformed lines are routed by `jsonlSplit`, not carried as a field).
     */
@@ -60,7 +40,8 @@ object Sources {
     org.apache.spark.sql.types.StructType(
       spark.read.json(path).schema.fields.filterNot(_.name == "_corrupt_record"))
 
-  /** JSONL batch read split into (parsed rows, malformed lines): the DLQ
+  /** JSONL batch read split into (parsed rows, malformed lines), each
+    * keyed by md5(raw line) ≙ `internal/source/jsonl.go:110`. The DLQ
     * path for batch imports — the reference logs-and-drops bad records
     * (`internal/source/kafka.go:93-97`) and never writes its configured
     * DLQ; we route them for real.
@@ -86,19 +67,12 @@ object Sources {
   /** The reference's date/datetime regex ladder, applied at sink-write time
     * to pick column DDL (`internal/target/pgsql.go:326-363`):
     * `YYYY-MM-DD` → DATE; ISO datetime (T or space separated, optional
-    * fraction) → TIMESTAMP; len > 255 → TEXT; else VARCHAR.
+    * fraction) → TIMESTAMP. Its len > 255 → TEXT rung is the JDBC sink's
+    * CLOB probe (`JdbcUpsert.longStringCols`).
     */
   private val DateRe = "^\\d{4}-\\d{2}-\\d{2}$"
   private val DateTimeRe =
     "^\\d{4}-\\d{2}-\\d{2}[T ]\\d{2}:\\d{2}:\\d{2}(\\.\\d+)?(Z)?$"
-
-  /** Sniff the draethos-inferred type of one string value. */
-  def sniffType(v: String): String =
-    if (v == null) "varchar"
-    else if (v.matches(DateRe)) "date"
-    else if (v.matches(DateTimeRe)) "timestamp"
-    else if (v.length > 255) "text"
-    else "varchar"
 
   /** Apply the type ladder to every string column of a DataFrame: a column
     * whose non-null values ALL match the date (resp. datetime) regex is

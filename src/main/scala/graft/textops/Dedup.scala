@@ -130,17 +130,6 @@ object Dedup {
       }
   }
 
-  /** LSH candidate pairs via banding: signature split into `bands` bands
-    * of `rowsPerBand`, band value hashed to a bucket key; documents
-    * sharing any band bucket become a candidate pair. The self-join runs
-    * per bucket (shuffle on bucket key), never across the whole corpus.
-    */
-  def minhashCandidates(df: DataFrame, idCol: String, textCol: String,
-      n: Int = 3, bands: Int = 16, rowsPerBand: Int = 4): DataFrame =
-    candidatesFromShingles(
-      df.select(col(idCol).as("__id"), wordShingles(col(textCol), n).as("__sh")),
-      bands, rowsPerBand)
-
   /** Candidate pairs from a precomputed (`__id`, `__sh` array) frame —
     * lets `minhashNearDups` share one materialized shingle pass between
     * the signature stage and the verify joins.

@@ -6,7 +6,7 @@ import graft.log.ChangeLogGenerator
 import org.apache.spark.sql.functions._
 
 /** North-rule scenario: kill mid-replay, restart from checkpoint, assert
-  * no lost or duplicated effects and monotone lineage.
+  * no lost or duplicated effects.
   */
 class CheckpointResumeSpec extends SparkSpec {
 
@@ -54,14 +54,6 @@ class CheckpointResumeSpec extends SparkSpec {
       sha2(col("content"), 256).as("sha"))
     assert(got.count() === want.count())
     assert(got.exceptAll(want).count() + want.exceptAll(got).count() === 0L)
-
-    // lineage monotone across the resume
-    val s1 = job2.lake.snapshot(v1)
-    val s2 = job2.lake.currentSnapshot.get
-    s1.lineage.foreach { case (b, lsn1) =>
-      assert(s2.lineage.getOrElse(b, Long.MinValue) >= lsn1,
-        s"bucket $b lineage went backwards")
-    }
   }
 
   test("merge is idempotent: re-applying a batchId is a no-op") {

@@ -89,7 +89,7 @@ class CrashResumeSpec extends SparkSpec {
     assert(p2.waitFor() === 0, s"restart failed:\n${out.takeRight(4000)}")
     assert(out.contains("[graft] oracle check: CONVERGED"),
       s"no convergence after crash-resume:\n${out.takeRight(4000)}")
-    // and it genuinely resumed (kept the pre-crash commits' lineage)
+    // and it genuinely resumed (kept the pre-crash commits' history)
     assert(version > vAtCrash, s"no further commits after resume (v$vAtCrash)")
   }
 }

@@ -1,32 +1,23 @@
 package graft
 
-import graft.sources.{Codecs, Sources}
+import graft.sources.Sources
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-/** The §2 corners the round-1 verdict flagged untested: the value-based
-  * type-sniffing ladder (≙ `internal/target/pgsql.go:326-363`), the
-  * datetime `'T'`→`' '` normalization (pgsql.go:288-290), and the XML
-  * codec round-trip (the reference's xml→yaml dispatcher bug NOT copied,
-  * `internal/context/codec.go:21-22`).
+/** The value-based type-sniffing ladder (≙ `internal/target/pgsql.go:
+  * 326-363`), the datetime `'T'`→`' '` normalization (pgsql.go:288-290),
+  * and the batch imports. Streaming xml/yaml decoding is covered by
+  * XmlYamlChangelogSpec.
   */
 class SourcesAndCodecsSpec extends SparkSpec {
-
-  test("sniffType: the reference regex ladder per value") {
-    assert(Sources.sniffType("2024-01-31") === "date")
-    assert(Sources.sniffType("2024-01-31T12:30:00") === "timestamp")
-    assert(Sources.sniffType("2024-01-31 12:30:00.123Z") === "timestamp")
-    assert(Sources.sniffType("not a date") === "varchar")
-    assert(Sources.sniffType("x" * 256) === "text")
-    assert(Sources.sniffType(null) === "varchar")
-  }
 
   test("sniffTypes: all-match columns cast; nulls ignored; mixed stays string") {
     import spark.implicits._
     val df = Seq(
       ("2024-01-01", "2024-01-01T10:00:00", "2024-01-01", null.asInstanceOf[String]),
       ("2024-02-02", "2024-02-02 11:00:00", "oops", null.asInstanceOf[String]),
-      ("2024-03-03", null, "2024-03-03", null.asInstanceOf[String]))
+      ("2024-03-03", null, "2024-03-03", null.asInstanceOf[String]),
+      ("2024-04-04", "2024-01-31 12:30:00.123Z", "2024-04-04", null.asInstanceOf[String]))
       .toDF("d", "t", "mixed", "allnull")
     val out = Sources.sniffTypes(df)
     assert(out.schema("d").dataType === DateType)
@@ -44,42 +35,6 @@ class SourcesAndCodecsSpec extends SparkSpec {
     val out = Sources.sniffTypes(empty)
     assert(out.schema("a").dataType === StringType)
     assert(out.count() === 0L)
-  }
-
-  test("xml codec: encode/decode round-trip; dispatcher stays strict") {
-    import spark.implicits._
-    val df = Seq((1L, "alpha"), (2L, "beta & <gamma>")).toDF("id", "name")
-    val xml = df.select(Codecs.encodeXml(struct(col("id"), col("name"))).as("x"))
-    val schema = StructType(Seq(
-      StructField("id", LongType), StructField("name", StringType)))
-    val back = xml.select(Codecs.decode("xml", col("x"), schema).as("r"))
-      .select(col("r.id"), col("r.name"))
-      .collect().map(r => (r.getLong(0), r.getString(1))).toSet
-    assert(back === Set((1L, "alpha"), (2L, "beta & <gamma>")))
-    // Supported is exactly what decode dispatches (yaml is typed-map only)
-    Codecs.Supported.foreach { c =>
-      Codecs.decode(c, col("x"), schema) // must not throw
-    }
-    intercept[IllegalArgumentException] {
-      Codecs.decode("yaml", col("x"), schema)
-    }
-    intercept[IllegalArgumentException] {
-      Codecs.decode("avro", col("x"), schema)
-    }
-  }
-
-  test("yaml typed-map decode and encode round-trip") {
-    import spark.implicits._
-    val df = Seq("a: 1\nb: two", "c: 3.5").toDF("raw")
-    val out = Codecs.yamlToMap(df, "raw").collect()
-      .map(_.getMap[String, String](0))
-    assert(out(0).get("a").contains("1") && out(0).get("b").contains("two"))
-    assert(out(1).get("c").contains("3.5"))
-    // encode → decode round-trips the map
-    val m = Seq(Map("k1" -> "v1", "k2" -> "v2")).toDF("record")
-    val y = Codecs.mapToYaml(m, "record")
-    val back = Codecs.yamlToMap(y, "yaml").head().getMap[String, String](0)
-    assert(back.get("k1").contains("v1") && back.get("k2").contains("v2"))
   }
 
   test("batch import into the lake: keyed upsert, idempotent, later batch wins") {

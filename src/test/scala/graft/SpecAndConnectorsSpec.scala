@@ -85,6 +85,9 @@ class SpecAndConnectorsSpec extends SparkSpec {
     val e3 = intercept[IllegalArgumentException](
       PipelineSpec.fromYamlFile("/tmp/pipeline.json"))
     assert(e3.getMessage.contains("extension"))
+    val badCodec = yaml.replace("maxFilesPerTrigger: 7", "maxFilesPerTrigger: 7\n        codec: avro")
+    val e4 = intercept[IllegalArgumentException](PipelineSpec.fromYaml(badCodec))
+    assert(e4.getMessage.contains("codec avro not implemented"))
   }
 
   test("http source + jdbc target spec fields parse; jdbc validation fails fast") {
@@ -147,7 +150,8 @@ class SpecAndConnectorsSpec extends SparkSpec {
     val l1 = """{"a":1,"b":"x"}"""
     val l2 = """{"a":2,"b":"y","c":true}"""
     java.nio.file.Files.writeString(f.toPath, l1 + "\n" + l2 + "\n")
-    val df = Sources.jsonlInferred(spark, f.getAbsolutePath)
+    val (df, _) = Sources.jsonlSplit(spark, f.getAbsolutePath,
+      Sources.inferJsonlSchema(spark, f.getAbsolutePath))
     val rows = df.orderBy("a").collect()
     assert(rows.length === 2)
     def md5hex(s: String) = java.security.MessageDigest.getInstance("MD5")
