@@ -1,6 +1,7 @@
 package graft.envelope
 
-import org.apache.spark.sql.{Encoder, Encoders}
+import org.apache.spark.sql.{Column, Encoder, Encoders}
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types._
 
 /** The CDC change-event envelope — the "binlog record" the flagship job
@@ -38,6 +39,14 @@ object ChangeEvent {
 
   /** Envelope schema, fixed part. Drift fields ride in `extra`. */
   val schema: StructType = encoder.schema
+
+  /** Per-key winner order of a batch, the one both CDC sinks rank by:
+    * max `lsn` first; on an equal-lsn tie the delete wins (the lake's
+    * cross-file resolve and the JDBC sink's `lsn <= ?` delete break it
+    * the same way), then `op` descending so any other tie is decided too.
+    */
+  val winnerOrder: Seq[Column] =
+    Seq(col("lsn").desc, (col("op") === Delete).desc, col("op").desc)
 
   /** Lake-table key columns, per BASELINE.json input_hint. */
   val keyCols: Seq[String] = Seq("repo", "path")

@@ -319,10 +319,14 @@ class LakeTable(
     * Old files missing evolved columns surface them as NULL —
     * schema-on-read evolution.
     */
-  def read(): DataFrame = readMeta() match {
-    case df if df.columns.isEmpty => df
-    case df => df.filter(!col(DeletedMeta)).drop(LsnMeta, DeletedMeta)
-  }
+  def read(): DataFrame =
+    currentSnapshot.fold(spark.emptyDataFrame)(liveRows)
+
+  /** A snapshot's live rows, user columns: the MOR resolve minus
+    * tombstones. The one filter behind [[read]] and [[readVersion]].
+    */
+  private def liveRows(s: Snapshot): DataFrame =
+    resolveFiles(s, filesOf(s)).filter(!col(DeletedMeta)).drop(LsnMeta, DeletedMeta)
 
   /** Read including the internal meta columns: the MOR resolve — one
     * winner per key (max `__lsn`, tombstones included so callers can see
@@ -350,26 +354,29 @@ class LakeTable(
     */
   private def resolveFiles(s: Snapshot,
       files: Map[String, Seq[String]]): DataFrame = {
-    val sch = StructType.fromDDL(s.schemaDdl)
-    val ext = extendedSchema(s, sch)
     val (multi, single) = files.partition(_._2.size > 1)
-    if (multi.isEmpty)
-      liftDrift(s, readFiles(ext, files.values.flatten.toSeq))
-    else if (single.isEmpty)
-      resolve(s, liftDrift(s, readFiles(ext, multi.values.flatten.toSeq)))
-    else
-      liftDrift(s, readFiles(ext, single.values.flatten.toSeq)).unionByName(
-        resolve(s, liftDrift(s, readFiles(ext, multi.values.flatten.toSeq))))
+    def scan(fs: Map[String, Seq[String]]) = scanFiles(s, fs.values.flatten.toSeq)
+    if (multi.isEmpty) scan(files)
+    else if (single.isEmpty) resolve(s, scan(multi))
+    else scan(single).unionByName(resolve(s, scan(multi)))
   }
+
+  /** The one file scan: `paths` read under the snapshot's schema, drift
+    * columns lifted out of the `extra` carrier.
+    */
+  private def scanFiles(s: Snapshot, paths: Seq[String]): DataFrame =
+    liftDrift(s, readFiles(s, paths))
 
   /** Read schema for raw table files: snapshot schema + the stored `extra`
     * drift carrier (delta files have it; compacted files — and tables
     * whose base schema already claims the name — don't, and read null).
     */
-  private def extendedSchema(s: Snapshot, sch: StructType): StructType =
+  private def extendedSchema(s: Snapshot): StructType = {
+    val sch = StructType.fromDDL(s.schemaDdl)
     if (sch.fieldNames.contains(ExtraMeta)) sch
     else StructType(sch.fields :+
       StructField(ExtraMeta, MapType(StringType, StringType), nullable = true))
+  }
 
   /** Drift columns = snapshot schema minus creation-time base columns and
     * the meta columns. For legacy snapshots without `baseCols` every user
@@ -471,7 +478,7 @@ class LakeTable(
       val h = new org.apache.spark.sql.catalyst.expressions.XxHash64(keyLits)
         .eval(null).asInstanceOf[Long]
       val b = java.lang.Math.floorMod(h, s.numBuckets.toLong).toString
-      val r = fileReader(extendedSchema(s, sch))
+      val r = fileReader(extendedSchema(s))
       val isKey = Predicate.createInterpreted(s.keyCols.zip(keyLits)
         .map { case (c, v) =>
           EqualTo(BoundReference(r.schema.fieldIndex(c), v.dataType, nullable = true), v)
@@ -548,16 +555,11 @@ class LakeTable(
     */
   def readRaw(): DataFrame = currentSnapshot match {
     case None => spark.emptyDataFrame
-    case Some(s) => readFiles(extendedSchema(s, StructType.fromDDL(s.schemaDdl)),
-      filesOf(s).values.flatten.toSeq)
+    case Some(s) => readFiles(s, filesOf(s).values.flatten.toSeq)
   }
 
   /** Time travel: read the table as of a given snapshot version. */
-  def readVersion(version: Long): DataFrame = {
-    val s = snapshot(version)
-    resolveFiles(s, filesOf(s))
-      .filter(!col(DeletedMeta)).drop(LsnMeta, DeletedMeta)
-  }
+  def readVersion(version: Long): DataFrame = liveRows(snapshot(version))
 
   /** MOR winner resolution: per key, highest `__lsn` wins; on an equal-lsn
     * delete/upsert pair the tombstone wins (same tie-break as the merge's
@@ -579,10 +581,13 @@ class LakeTable(
         .filter(col("__rrn") === 1).drop("__rrn")
     }
 
-  private def readFiles(sch: StructType, rel: Seq[String]): DataFrame =
+  /** Raw rows of `rel` under the snapshot's [[extendedSchema]]. */
+  private def readFiles(s: Snapshot, rel: Seq[String]): DataFrame = {
+    val sch = extendedSchema(s)
     if (rel.isEmpty) spark.createDataFrame(
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], sch)
     else spark.read.schema(sch).parquet(rel.map(r => s"$tablePath/$r"): _*)
+  }
 
   // -- merge (the sink) --------------------------------------------------------
 
@@ -668,7 +673,7 @@ class LakeTable(
     val bucketed = keyed.repartition(writeParts, partCols: _*)
     val w = Window
       .partitionBy((partCols ++ cur.keyCols.map(col)): _*)
-      .orderBy(col(lsnCol).desc, (col(opCol) === "delete").desc, col(opCol).desc)
+      .orderBy(graft.envelope.ChangeEvent.winnerOrder: _*)
     val ranked = bucketed.withColumn("__rn", row_number().over(w))
     val win = col("__rn") === 1
 
@@ -738,13 +743,7 @@ class LakeTable(
     //    window (step 1) — the same exchange serves both, and the
     //    projection preserves its partitioning, so the write job starts
     //    directly from the windowed partitions.
-    val newVersion = cur.version + 1
-    val deltaRel = s"data/v$newVersion/delta"
-    projected
-      .write.mode(SaveMode.Overwrite)
-      .partitionBy("__bucket")
-      .parquet(s"$tablePath/$deltaRel")
-    val deltaFiles = enumerateBucketEntries(deltaRel)
+    val deltaFiles = writeBuckets(projected, s"data/v${cur.version + 1}/delta")
 
     // 5. driver-side commit facts, ALL from the observed metrics of the
     //    one write job: counts and drift keys (zero driver footer reads,
@@ -797,68 +796,72 @@ class LakeTable(
         b -> (curEntries.getOrElse(b, Nil) ++ deltaFiles.getOrElse(b, Nil))
       }.toMap
     val keepLargest = math.max(1, maxFilesPerBucket / 2)
-    val tails: Map[String, Seq[ManifestFile]] = grown
+    val tails: Map[String, Seq[String]] = grown
       .filter(_._2.size > maxFilesPerBucket)
       .map { case (b, fs) =>
-        b -> fs.sortBy(f => -f.size).drop(keepLargest)
+        b -> fs.sortBy(f => -f.size).drop(keepLargest).map(_.path)
       }
       .filter(_._2.size > 1) // a 1-file tail has nothing to merge
-    val (finalEntries: Map[String, Seq[ManifestFile]],
-         rewriteAdded: Seq[ManifestFile],
-         removedPaths: Seq[String]) =
-      if (tails.isEmpty) (grown, Nil, Nil)
-      else {
-        val rewriteRel = s"data/v$newVersion/rewrite"
-        val afterSnapshot = cur.copy(schemaDdl = newSchema.toDDL)
-        resolve(afterSnapshot, liftDrift(afterSnapshot,
-            readFiles(extendedSchema(afterSnapshot, newSchema),
-              tails.values.flatten.map(_.path).toSeq)))
-          .withColumn("__bucket", bucketExpr(cur))
-          .repartition(tails.size, col("__bucket"))
-          .write.mode(SaveMode.Overwrite)
-          .partitionBy("__bucket")
-          .parquet(s"$tablePath/$rewriteRel")
-        val rewritten = enumerateBucketEntries(rewriteRel)
-        val removed = tails.values.flatten.map(_.path).toSeq
-        val fin = grown.map { case (b, fs) =>
-          tails.get(b) match {
-            case Some(tail) =>
-              val rm = tail.map(_.path).toSet
-              b -> (fs.filterNot(f => rm(f.path)) ++ rewritten.getOrElse(b, Nil))
-            case None => b -> fs
-          }
-        }
-        (fin, rewritten.values.flatten.toSeq, removed)
-      }
+    val rewritten =
+      if (tails.isEmpty) Map.empty[String, Seq[ManifestFile]]
+      else rewrite(cur, resolveFiles(cur.copy(schemaDdl = newSchema.toDDL), tails),
+        tails.size)
+    val removed = tails.values.flatten.toSeq
+    val rm = removed.toSet
+    val live = grown.map { case (b, fs) =>
+      b -> (fs.filterNot(f => rm(f.path)) ++ rewritten.getOrElse(b, Nil))
+    }
 
-    // 7. manifest: O(files touched by this commit) of metadata — or a
-    //    base manifest carrying the full live set when the chain needs
-    //    consolidating (amortized O(live/ManifestChainMax) per commit)
-    val manifestChain: Seq[String] =
-      if (cur.manifests.size >= ManifestChainMax)
-        Seq(writeManifest(Manifest(newVersion, base = true,
-          added = finalEntries.values.flatten.toSeq, removed = Nil)))
-      else {
-        // a delta file can be minor-compacted away within its OWN commit
-        // (it landed in the tail) — the fold applies removed-then-added,
-        // so `added` must list only files still live after the rewrite
-        val rm = removedPaths.toSet
-        cur.manifests :+ writeManifest(Manifest(newVersion, base = false,
-          added = (deltaFiles.values.flatten.filterNot(f => rm(f.path)) ++
-            rewriteAdded).toSeq,
-          removed = removedPaths))
-      }
-
-    val next = cur.copy(
-      version = newVersion,
-      schemaDdl = newSchema.toDDL,
-      manifests = manifestChain,
-      appliedUpTo = cur.appliedUpTo + (checkpointId -> batchId),
-      parentVersion = cur.version,
-      baseCols = baseCols)
-    commitSnapshot(next)
-    MergeStats(newVersion, batchId, skippedAsApplied = false,
+    // 7. commit: the manifest of what this commit touched, then the snapshot
+    val next = commit(cur, live, (deltaFiles.values ++ rewritten.values).flatten.toSeq,
+      removed, forceBase = false)(_.copy(
+        schemaDdl = newSchema.toDDL,
+        appliedUpTo = cur.appliedUpTo + (checkpointId -> batchId),
+        baseCols = baseCols))
+    MergeStats(next.version, batchId, skippedAsApplied = false,
       nRows, nUpserts, nDeletes, newCols)
+  }
+
+  /** The one bucket writer: `rows` (carrying `__bucket`) written under
+    * `rel` as one directory per bucket, one file per bucket per task,
+    * then listed into manifest entries.
+    */
+  private def writeBuckets(rows: DataFrame, rel: String): Map[String, Seq[ManifestFile]] = {
+    rows.write.mode(SaveMode.Overwrite).partitionBy("__bucket").parquet(s"$tablePath/$rel")
+    enumerateBucketEntries(rel)
+  }
+
+  /** The one bucket rewrite, shared by minor compaction (a merge's
+    * over-budget tails) and major compaction (every bucket): resolved
+    * `rows` hashed back into their buckets over `buckets` tasks, so each
+    * bucket lands in one file under the next version's `rewrite/` dir.
+    */
+  private def rewrite(s: Snapshot, rows: DataFrame, buckets: Int)
+      : Map[String, Seq[ManifestFile]] =
+    writeBuckets(rows.withColumn("__bucket", bucketExpr(s))
+      .repartition(buckets, col("__bucket")), s"data/v${s.version + 1}/rewrite")
+
+  /** The one commit: the parent's snapshot with `change` applied becomes
+    * version parent+1. Its manifest lists only `added` and `removed` (a
+    * file added and removed by the same commit — a delta minor-compacted
+    * in its own merge — is left out, as the fold applies removed first),
+    * or is a base manifest of all `live` entries when `forceBase` is set
+    * (major compaction) or the chain has reached `ManifestChainMax`
+    * (amortized O(live/ManifestChainMax) per commit).
+    */
+  private def commit(parent: Snapshot, live: Map[String, Seq[ManifestFile]],
+      added: Seq[ManifestFile], removed: Seq[String], forceBase: Boolean)(
+      change: Snapshot => Snapshot): Snapshot = {
+    val version = parent.version + 1
+    val base = forceBase || parent.manifests.size >= ManifestChainMax
+    val rm = removed.toSet
+    val manifest =
+      if (base) Manifest(version, base, live.values.flatten.toSeq, removed = Nil)
+      else Manifest(version, base, added.filterNot(f => rm(f.path)), removed)
+    val next = change(parent).copy(version = version, parentVersion = parent.version,
+      manifests = (if (base) Nil else parent.manifests) :+ writeManifest(manifest))
+    commitSnapshot(next)
+    next
   }
 
   /** Children of a directory with the stream CLOSED — `Files.list` leaks
@@ -937,10 +940,9 @@ class LakeTable(
       // `/data/vN/delta/` path component — a table rooted under a
       // directory that itself matches the pattern (e.g.
       // `/x/data/v2/delta/mytable`) must not mislabel every row's version
-      liftDrift(cur, readFiles(extendedSchema(cur, sch), rel)
-        .withColumn("__version",
-          regexp_extract(col("_metadata.file_path"), ".*/data/v(\\d+)/delta/", 1)
-            .cast(LongType)))
+      scanFiles(cur, rel).withColumn("__version",
+        regexp_extract(col("_metadata.file_path"), ".*/data/v(\\d+)/delta/", 1)
+          .cast(LongType))
   }
 
   /** Expire old snapshots and vacuum their orphaned data files — the GC
@@ -1038,7 +1040,8 @@ class LakeTable(
   }
   private val VersionDirRe = "^data/v(\\d+)/".r
 
-  /** Compact the table: rewrite every bucket into one file, materializing
+  /** Compact the table: rewrite every bucket into one file under the new
+    * version's `rewrite/` dir (the minor compaction's layout), materializing
     * drift columns (and dropping the delta-side `extra` carrier). With
     * `dropTombstones=true` also garbage-collects deleted keys.
     * PRECONDITION of `dropTombstones = true`, not checked: no event for a
@@ -1072,8 +1075,6 @@ class LakeTable(
   def compact(dropTombstones: Boolean = false): Snapshot = {
     val cur = currentSnapshot.getOrElse(
       throw new IllegalStateException("no table"))
-    val newVersion = cur.version + 1
-    val dataRel = s"data/v$newVersion"
     val all = resolveFiles(cur, filesOf(cur))
     val base = if (dropTombstones) all.filter(!col(DeletedMeta)) else all
     val sniffable = driftCols(cur).filter(c =>
@@ -1081,23 +1082,14 @@ class LakeTable(
     val typed =
       if (sniffable.isEmpty) base
       else graft.sources.Sources.sniffTypes(base, Some(sniffable))
-    typed.withColumn("__bucket", bucketExpr(cur))
-      .repartition(cur.numBuckets, col("__bucket"))
-      .write.mode(SaveMode.Overwrite).partitionBy("__bucket")
-      .parquet(s"$tablePath/$dataRel")
-    val newBucketFiles = enumerateBucketEntries(dataRel)
+    val rewritten = rewrite(cur, typed, cur.numBuckets)
     // snapshot schema follows the sniffed types (order unchanged)
     val newDdl = StructType(StructType.fromDDL(cur.schemaDdl).fields.map { f =>
       typed.schema.find(_.name == f.name)
         .map(t => f.copy(dataType = t.dataType)).getOrElse(f)
     }).toDDL
-    // major compaction naturally resets the manifest chain to one base
-    val manifest = writeManifest(Manifest(newVersion, base = true,
-      added = newBucketFiles.values.flatten.toSeq, removed = Nil))
-    val next = cur.copy(version = newVersion, schemaDdl = newDdl,
-      manifests = Seq(manifest), parentVersion = cur.version)
-    commitSnapshot(next)
-    next
+    // major compaction resets the manifest chain to one base
+    commit(cur, rewritten, Nil, Nil, forceBase = true)(_.copy(schemaDdl = newDdl))
   }
 }
 

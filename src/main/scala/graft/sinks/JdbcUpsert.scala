@@ -106,7 +106,7 @@ object JdbcUpsert {
   def applyCdcBatch(batch: DataFrame, cfg: Config): (Long, Long) = {
     import org.apache.spark.sql.expressions.Window
     val w = Window.partitionBy(cfg.keyColumns.map(col): _*)
-      .orderBy(col(LsnCol).desc, (col("op") === "delete").desc, col("op").desc)
+      .orderBy(graft.envelope.ChangeEvent.winnerOrder: _*)
     val flat = normalize(batch)
     val winners = flat.withColumn("__rn", row_number().over(w))
       .filter(col("__rn") === 1).drop("__rn")

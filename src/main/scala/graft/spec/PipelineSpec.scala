@@ -12,7 +12,6 @@ import scala.jdk.CollectionConverters._
 final case class SourceSpec(
     tpe: String, // changelog | csv | jsonl | http
     path: String = "",
-    topic: String = "",
     // http source only ≙ reference SourceSpecs endpoint/method
     // (`stream.go:31-38`); `path` doubles as the spool dir
     endpoint: String = "/ingest",
@@ -31,8 +30,7 @@ final case class SourceSpec(
     maxFilesPerTrigger: Int = 2,
     // byte-bounded micro-batches (overrides maxFilesPerTrigger when set):
     // the backpressure knob that stays meaningful across segment layouts
-    maxBytesPerTrigger: Option[Long] = None,
-    configurations: Map[String, String] = Map.empty) {
+    maxBytesPerTrigger: Option[Long] = None) {
 
   /** Tail interval in ms when trigger is processingTime, else None. */
   def processingTimeMs: Option[Long] = trigger match {
@@ -45,7 +43,7 @@ final case class TargetSpec(
     tpe: String, // lake | files | jdbc | rollup
     table: String = "",
     path: String = "",
-    // jdbc target only ≙ reference TargetSpecs database/configurations
+    // jdbc target only ≙ reference TargetSpecs database
     url: String = "",
     mode: String = "replace", // replace (mysql REPLACE) | insertIfAbsent (pgsql DO NOTHING)
     keyColumns: Seq[String] = Seq("repo", "path"),
@@ -56,8 +54,7 @@ final case class TargetSpec(
     lineBreak: String = "\n",
     // rollup target only: watermarked tumbling-window aggregation
     window: String = "1 hour",
-    watermark: String = "10 minutes",
-    configurations: Map[String, String] = Map.empty)
+    watermark: String = "10 minutes")
 
 final case class InstanceSpec(
     source: SourceSpec,
@@ -140,7 +137,6 @@ object PipelineSpec {
     SourceSpec(
       tpe = tpe,
       path = str(sp, "path").getOrElse(""),
-      topic = str(sp, "topic").getOrElse(""),
       endpoint = str(sp, "endpoint").getOrElse("/ingest"),
       methods = strSeq(sp, "methods", Seq("GET", "POST")).map(_.toUpperCase),
       batchSize = int(sp, "batchSize").getOrElse(100),
@@ -149,8 +145,7 @@ object PipelineSpec {
       format = format,
       trigger = trigger,
       maxFilesPerTrigger = int(sp, "maxFilesPerTrigger").getOrElse(2),
-      maxBytesPerTrigger = str(sp, "maxBytesPerTrigger").map(_.toLong),
-      configurations = strMap(sp, "configurations"))
+      maxBytesPerTrigger = str(sp, "maxBytesPerTrigger").map(_.toLong))
   }
 
   private def parseTarget(t: scala.collection.Map[String, Object]): TargetSpec = {
@@ -183,8 +178,7 @@ object PipelineSpec {
       prefix = str(sp, "prefix").getOrElse(""),
       lineBreak = str(sp, "lineBreak").getOrElse("\n"),
       window = str(sp, "window").getOrElse("1 hour"),
-      watermark = str(sp, "watermark").getOrElse("10 minutes"),
-      configurations = strMap(sp, "configurations"))
+      watermark = str(sp, "watermark").getOrElse("10 minutes"))
   }
 
   // -- snakeyaml helpers -------------------------------------------------------
@@ -202,8 +196,4 @@ object PipelineSpec {
       case Some(l: java.util.List[_]) => l.asScala.map(_.toString).toSeq
       case _ => dflt
     }
-  private def strMap(m: scala.collection.Map[String, Object], k: String)
-      : Map[String, String] =
-    sub(m, k).map(_.map { case (a, b) => a -> String.valueOf(b) }.toMap)
-      .getOrElse(Map.empty)
 }

@@ -59,10 +59,6 @@ object Dedup {
     array_distinct(transform(idx, i => concat_ws(" ", slice(toks, i + 1, lit(n)))))
   }
 
-  /** 64-bit hashes of the shingles. */
-  def shingleHashes(text: Column, n: Int): Column =
-    transform(wordShingles(text, n), s => xxhash64(s))
-
   // -- MinHash + LSH -----------------------------------------------------------
 
   /** Mersenne prime modulus for the affine permutation family. 2^31−1:
@@ -79,37 +75,6 @@ object Dedup {
     ((0x9e3779b97f4a7c15L * (2L * j + 1)) >>> 33) | 1L
   private[graft] def coefB(j: Int): Long =
     (0xc2b2ae3d27d4eb4fL * (j + 1)) >>> 33
-
-  /** k-permutation MinHash signature, expression-only: for each j,
-    * min over shingles of ((a_j * h31 + b_j) mod P). No UDF, no explode —
-    * the per-row cost is O(shingles × k) inside codegen.
-    */
-  def minhashSignature(text: Column, n: Int, k: Int): Column = {
-    val hs = transform(shingleHashes(text, n), h => pmod(h, lit(P)))
-    array((0 until k).map { j =>
-      aggregate(hs, lit(Long.MaxValue),
-        (acc, h) => least(acc, pmod(h * coefA(j) + coefB(j), lit(P))))
-    }: _*)
-  }
-
-  /** MinHash signatures via explode + 64 codegen'd `min` aggregates.
-    * The higher-order-function variant (`minhashSignature`) is interpreted
-    * per array element by Catalyst (ArrayAggregate has no codegen) and is
-    * ~100x slower at corpus scale; this shape keeps every operator inside
-    * whole-stage codegen and, at 100 TB, bounds the shuffle at one partial
-    * aggregate row per (doc × k) via map-side combine.
-    */
-  def minhashSignatures(df: DataFrame, idCol: String, textCol: String,
-      n: Int, k: Int): DataFrame = {
-    val exploded = df
-      .select(col(idCol).as("id"),
-        explode(wordShingles(col(textCol), n)).as("g"))
-      .withColumn("h", pmod(xxhash64(col("g")), lit(P)))
-    exploded.groupBy("id").agg(
-      min(pmod(col("h") * coefA(0) + coefB(0), lit(P))).as("m0"),
-      (1 until k).map(j =>
-        min(pmod(col("h") * coefA(j) + coefB(j), lit(P))).as(s"m$j")): _*)
-  }
 
   /** Choose `(bands, rowsPerBand)` for a `k`-permutation signature so the
     * banded-LSH S-curve's 50%-recall point `(1/bands)^(1/rowsPerBand)`
@@ -183,8 +148,8 @@ object Dedup {
     * The shingle arrays are materialized ONCE ([[graft.util.Materialize]]
     * barrier) and shared by the signature stage AND both verify-join
     * sides — the HOF shingling is the dominant per-row cost, and the
-    * un-materialized shape re-evaluated it three times per run (once in
-    * `minhashSignatures`, once per verify side).
+    * un-materialized shape re-evaluated it three times per run (once for
+    * the signatures, once per verify side).
     */
   def minhashNearDups(df: DataFrame, idCol: String, textCol: String,
       n: Int = 3, bands: Int = 16, rowsPerBand: Int = 4,

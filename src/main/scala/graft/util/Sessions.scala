@@ -29,14 +29,17 @@ object Sessions {
     *    the lake's atomic snapshot commit (and, on a cluster, the DFS
     *    block layer) already provides.
     *  - the RocksDB keyed state store (BENCH.md "State store") for the
-    *    two stateful operators, `SessionizeStream` and `EventRollup`
-    *    (no CDC pipeline keeps keyed state). The in-memory HDFS provider
-    *    holds all of it on heap; RocksDB bounds memory at any key count.
-    *    Changelog checkpointing commits each batch's state changelog and
-    *    leaves full snapshots to background maintenance. The raw FS needs
-    *    it: RocksDB's snapshot upload goes through Hadoop's
-    *    `FileSystem.getLocal`, which casts the file:// implementation to
-    *    `LocalFileSystem`, so with it off every commit fails.
+    *    one stateful operator, `EventRollup` (no CDC pipeline keeps keyed
+    *    state). The in-memory HDFS provider holds all of it on heap;
+    *    RocksDB bounds memory at any key count. Changelog checkpointing
+    *    commits each batch's state changelog and leaves full snapshots to
+    *    background maintenance. The raw FS needs it: RocksDB's snapshot
+    *    upload goes through Hadoop's `FileSystem.getLocal`, which casts
+    *    the file:// implementation to `LocalFileSystem`, so with it off
+    *    every commit fails. Both settings stay even for one operator:
+    *    Spark restores the provider class from a checkpoint's offset log
+    *    but not the changelog flag, so a rollup checkpoint written under
+    *    RocksDB would fail its first commit on resume without the flag.
     */
   def local(cpus: Int, name: String): SparkSession.Builder =
     SparkSession.builder()

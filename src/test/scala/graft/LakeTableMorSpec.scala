@@ -76,6 +76,40 @@ class LakeTableMorSpec extends SparkSpec {
     assert(lake.readMeta().filter("path = 'p3'").count() === 1L)
   }
 
+  test("every live file lies under data/v<N>/(delta|rewrite)/__bucket=<b>/ of the version that wrote it") {
+    import spark.implicits._
+    val dir = tmpDir("mor-layout")
+    val lake = LakeTable(spark, dir, Seq("repo", "path"), 2, maxFilesPerBucket = 3)
+    lake.createIfAbsent(StructType.fromDDL(baseDdl))
+    val layout = "data/v(\\d+)/(delta|rewrite)/__bucket=(\\d+)/[^/]+\\.parquet".r
+    var writer = Map.empty[String, Long] // live path -> version it first appeared in
+    def check(): Unit = {
+      val s = lake.currentSnapshot.get
+      lake.entriesOf(s).values.flatten.foreach { f =>
+        val v = writer.getOrElse(f.path, s.version)
+        writer += f.path -> v
+        f.path match {
+          case layout(n, _, b) =>
+            assert(n.toLong === v, s"${f.path} written by v$v")
+            assert(b === f.bucket, s"${f.path} listed in bucket ${f.bucket}")
+          case other => fail(s"$other is outside data/v<N>/(delta|rewrite)/__bucket=<b>/")
+        }
+      }
+    }
+    def mergeAt(i: Int): Unit = {
+      lake.merge(Seq(ev(100 + i, "update", 1), ev(200 + i, "update", 2))
+        .toDS().toDF(), "t", i.toLong)
+      check()
+    }
+    (0 until 5).foreach(mergeAt)
+    assert(lake.filesOf(lake.currentSnapshot.get).values.flatten
+      .exists(_.contains("/rewrite/")), "the merges never ran a minor compaction")
+    lake.compact()
+    check()
+    mergeAt(5)
+    assert(lake.read().count() === 2L)
+  }
+
   test("equal-lsn delete/upsert pair resolves the same for any batching") {
     import spark.implicits._
     def finalKeys(batches: Seq[Seq[ChangeEvent]]): Set[String] = {
